@@ -208,6 +208,7 @@ def main():
     )
     with open(detail_path, "w") as f:
         json.dump({**record, "spread": spread}, f, indent=1)
+        f.write("\n")
     spark.stop()
     # compact single line, LAST thing on stdout, nothing after it; 2-decimal
     # per-query values keep the worst-case line ~1.8k chars, inside the

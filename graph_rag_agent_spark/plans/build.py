@@ -2,20 +2,35 @@
 
 The reference's hard-coded Python orchestration (integrations/build/main.py:
 process_all → KnowledgeGraphBuilder → IndexCommunityBuilder → ChunkIndexBuilder)
-becomes a sequence of DataFrame stages, each materialized to a catalog table
-(the checkpoint) with a row in ``build_metrics`` (per-stage row counts +
-durations + run id — the per-partition lineage the north rule requires).
+becomes one list of DataFrame stages, defined once here and shared by the
+three entry points:
 
-Resumability: every stage reads its input from the previous stage's table;
-``resume=True`` skips stages whose output table already exists, and the
-extraction stage is always incremental via the extraction_cache anti-join.
+  chunk_stage → extract_stage → graph_stage (records → occurrences /
+  edges_raw → nodes_raw / mentions_raw) → canonical_stage (embed +
+  canonicalize) → community_stages (detect → memberships + hierarchy →
+  rank → summaries → PageRank) → registry_stage
+
+Each stage hands its outputs to a ``materialize(name, df) -> df`` callable
+that decides where they live:
+
+- ``BuildPipeline._save`` writes the catalog table (the checkpoint) with a
+  row in ``build_metrics`` (per-stage row counts + durations + run id — the
+  per-partition lineage the north rule requires). ``BuildPipeline.run`` and
+  ``IncrementalUpdatePipeline.run_once`` both use it.
+- ``_checkpoint`` keeps everything lazy except the records and entity
+  embeddings, which it localCheckpoints — ``run_kg_build_in_memory``, the
+  benchmarking path.
+
+Resumability: ``resume=True`` skips the corpus and chunk stages whose
+tables already exist, and the extraction stage is always incremental via
+the extraction_cache anti-join.
 
 Tables written (SURVEY.md §1.4):
-  corpus, chunks, extraction_cache, records, nodes_raw, edges_raw,
-  mentions_raw,
-  entity_embeddings, similar, wcc, nodes, edges, mentions,
-  entity_communities, communities, community_hierarchy,
-  community_summaries, registry, build_metrics
+  corpus, chunks, extraction_cache, records, occurrences, nodes_raw,
+  edges_raw, mentions_raw, entity_embeddings, similar, wcc, nodes, edges,
+  mentions, entity_communities, communities, community_hierarchy,
+  community_summaries, entity_pagerank, chunk_embeddings, graph_quality,
+  registry, build_metrics
 """
 
 from __future__ import annotations
@@ -35,10 +50,36 @@ from graph_rag_agent_spark.operators.communities import (
     community_rank,
     detect_communities,
     summarize_communities,
+    weighted_projection,
 )
-from graph_rag_agent_spark.operators.embeddings import embed_entities
+from graph_rag_agent_spark.operators.embeddings import embed_chunks, embed_entities
 from graph_rag_agent_spark.operators.extraction import extract_chunks
+from graph_rag_agent_spark.operators.graph_metrics import graph_quality_report
+from graph_rag_agent_spark.operators.pagerank import pagerank_projection
+from graph_rag_agent_spark.operators.parsing import (
+    derive_nodes,
+    occurrences_from_records,
+    parse_records,
+    relationships_from_records,
+)
 from graph_rag_agent_spark.sources.catalog import TableCatalog
+
+# table -> the build_metrics stage that materializes it
+STAGES = {
+    "corpus": "corpus", "chunks": "chunk", "extraction_cache": "extract",
+    "records": "parse_records", "occurrences": "parse_occurrences",
+    "edges_raw": "parse_edges", "nodes_raw": "parse_nodes",
+    "mentions_raw": "parse_mentions", "entity_embeddings": "embed",
+    "similar": "similar_join", "wcc": "wcc", "nodes": "canonicalize_nodes",
+    "edges": "canonicalize_edges", "mentions": "canonicalize_mentions",
+    "lpa_membership": "communities_lpa",
+    "entity_communities": "communities_detect",
+    "communities": "communities_membership",
+    "community_hierarchy": "communities_hierarchy",
+    "community_summaries": "communities_summarize",
+    "entity_pagerank": "pagerank", "chunk_embeddings": "embed_chunks",
+    "graph_quality": "graph_quality", "registry": "registry",
+}
 
 
 def salted_corpus_repartition(corpus: DataFrame, n_partitions: int) -> DataFrame:
@@ -51,50 +92,153 @@ def salted_corpus_repartition(corpus: DataFrame, n_partitions: int) -> DataFrame
     )
 
 
-def run_kg_build_in_memory(spark, corpus, config=None, extractor=None):
-    """BuildPipeline's dataflow with localCheckpoint stage boundaries instead
-    of catalog writes — the benchmarking path. Without stage
-    materialization, canonicalize's convergence actions would recompute the
-    whole upstream (chunk→extract→parse→embed) once per action."""
-    from graph_rag_agent_spark.operators.parsing import (
-        derive_nodes,
-        occurrences_from_records,
-        parse_records,
-        relationships_from_records,
+# -- stages ----------------------------------------------------------------
+def chunk_stage(corpus, cfg, materialize, kept_chunks=None):
+    """corpus → chunks. `kept_chunks` (incremental): the surviving docs'
+    chunks, which join the changed docs' in the table."""
+    chunks = chunk_documents(corpus, cfg.chunk_size, cfg.overlap, cfg.max_text_length)
+    if kept_chunks is not None:
+        chunks = chunks.unionByName(kept_chunks)
+    return materialize("chunks", chunks)
+
+
+def extract_stage(chunks, cfg, extractor=None, cache=None):
+    """chunks → (chunk_id, raw_result), lazy. `cache` is the
+    extraction_cache table; its hits skip the extractor."""
+    return extract_chunks(
+        chunks, extractor=extractor, cache=cache, max_gleanings=cfg.max_gleanings
     )
 
-    cfg = config or PipelineConfig()
-    # chunking pipelines INTO extraction AND record discovery in one pass
-    # (no materialization of the text-heavy chunks or raw-results frames —
-    # chunk text serialization is pure I/O and doesn't core-scale): the
-    # single checkpointed frame out of the burn phase is the tagged RECORDS
-    # table, after which every downstream derivation (edges, occurrences,
-    # nodes, mentions) is a regex-free split/aggregate over it. This
-    # matters doubly on thermally-throttled hosts: whatever runs right
-    # after the all-core extraction burn crawls (BENCH.md), so the
-    # post-burn phase must be as few and as cheap jobs as possible.
-    chunks = chunk_documents(corpus, cfg.chunk_size, cfg.overlap, cfg.max_text_length)
-    results = extract_chunks(
-        chunks, extractor=extractor, max_gleanings=cfg.max_gleanings
-    )
-    records = parse_records(results).localCheckpoint(eager=True)
-    occurrences = occurrences_from_records(records)
-    # edges derive lazily from the checkpointed records (cheap codegen'd
-    # splits — no regex, no extra checkpoint barrier)
-    edges = relationships_from_records(records)
-    # nodes stay lazy: the node groupBy pipelines into the embed job (one
-    # barrier instead of two); downstream consumers re-derive it from the
-    # checkpointed records — a cheap partial-agg shuffle
-    nodes = derive_nodes(occurrences)
-    # occurrences are one-row-per-(chunk, entity) since their fused
-    # aggregation (round 6) — mentions is a projection, not a re-dedup
-    mentions = occurrences.select("chunk_id", "entity_id")
-    embeddings = embed_entities(nodes, dim=cfg.embedding_dim).localCheckpoint(eager=True)
+
+def graph_stage(results, materialize, kept_records=None):
+    """results → records → occurrences / edges_raw → nodes_raw /
+    mentions_raw; → (nodes_raw, edges_raw, mentions_raw).
+
+    ONE regex pass: the tagged records table; every downstream parse table
+    derives from it via regex-free splits/aggregates. `kept_records`
+    (incremental): the surviving chunks' records — records are
+    chunk-provenanced, so GC + union is exactly a full rebuild's records."""
+    records = parse_records(results)
+    if kept_records is not None:
+        records = records.unionByName(kept_records)
+    records = materialize("records", records)
+    occurrences = materialize("occurrences", occurrences_from_records(records))
+    edges_raw = materialize("edges_raw", relationships_from_records(records))
+    # lazy under _checkpoint: the node groupBy pipelines into the embed job
+    nodes_raw = materialize("nodes_raw", derive_nodes(occurrences))
+    # occurrences are one row per (chunk, entity) — mentions is a projection
+    mentions_raw = materialize("mentions_raw", occurrences.select("chunk_id", "entity_id"))
+    return nodes_raw, edges_raw, mentions_raw
+
+
+def canonical_stage(nodes_raw, edges_raw, mentions_raw, cfg, materialize, existing=None):
+    """embed → canonicalize; → CanonicalizationResult (lazy). `existing` is
+    the prior entity_embeddings table; unchanged texts keep their vectors."""
+    embeddings = embed_entities(nodes_raw, existing=existing, dim=cfg.embedding_dim)
+    if existing is not None:
+        # materialize before overwriting the table being lazily read
+        embeddings = embeddings.localCheckpoint(eager=True)
+    embeddings = materialize("entity_embeddings", embeddings)
     return canonicalize(
-        nodes, edges, mentions, embeddings,
+        nodes_raw, edges_raw, mentions_raw, embeddings,
         cutoff=cfg.similarity_cutoff, topk=cfg.similarity_topk,
         max_edit_distance=cfg.word_edit_distance,
     )
+
+
+def community_stages(nodes, edges, mentions, cfg, materialize, summarizer=None,
+                     prior_lpa=None, prior_summaries=None, prior_ranks=None) -> dict:
+    """canonical graph → communities, summaries and PageRank.
+
+    The warm starts are the incremental run's, None on a full build:
+    `prior_lpa` = (old weighted projection, old lpa_membership) re-detects
+    only the delta-touched components; `prior_summaries` reuses the summary
+    of every community whose stringified info is unchanged; `prior_ranks`
+    seeds the PageRank fixpoint."""
+    nodes = materialize("nodes", nodes)
+    edges = materialize("edges", edges)
+    mentions = materialize("mentions", mentions)
+    if cfg.community_method == "lpa":
+        # component-local detector: persists the flat membership so an
+        # incremental run can re-detect ONLY delta-touched components (the
+        # modularity default divides by the global 2m, so it re-detects
+        # wholesale)
+        from graph_rag_agent_spark.operators.communities import (
+            incremental_communities,
+            label_propagation,
+            lpa_entity_communities,
+        )
+
+        wedges = weighted_projection(edges).localCheckpoint(eager=True)
+
+        def detect(v, e):
+            return label_propagation(v, e, max_iter=cfg.community_max_iter)
+
+        if prior_lpa is not None:
+            lpa_memb = incremental_communities(prior_lpa[0], wedges, prior_lpa[1], detect)
+        else:
+            verts = (
+                wedges.select(F.col("s").alias("id"))
+                .unionByName(wedges.select(F.col("d").alias("id")))
+                .distinct()
+            )
+            lpa_memb = detect(verts, wedges)
+        entity_comms = lpa_entity_communities(materialize("lpa_membership", lpa_memb))
+    else:
+        entity_comms = detect_communities(
+            nodes, edges, max_levels=cfg.community_max_levels,
+            max_iter=cfg.community_max_iter,
+        )
+    entity_comms = materialize("entity_communities", entity_comms)
+    membership = materialize("communities", community_membership(entity_comms))
+    materialize("community_hierarchy", community_hierarchy(entity_comms))
+    rank = community_rank(membership, mentions)
+    summaries = materialize("community_summaries", summarize_communities(
+        membership, nodes, edges, rank, summarizer=summarizer, prior=prior_summaries,
+    ))
+    # entity PageRank (tol-mode fixpoint) — the table the next incremental
+    # run warm-starts from
+    materialize("entity_pagerank", pagerank_projection(
+        weighted_projection(edges), tol=cfg.pagerank_tol,
+        n_iter=cfg.pagerank_max_iter, initial_ranks=prior_ranks,
+    ))
+    return {
+        "nodes": nodes, "edges": edges, "mentions": mentions,
+        "communities": membership, "community_summaries": summaries,
+    }
+
+
+def registry_stage(corpus, materialize):
+    """The per-file content hashes the next incremental run diffs against."""
+    return materialize("registry", corpus.select(
+        "repo", "path",
+        F.sha2("content", 256).alias("content_sha256"),
+        F.current_timestamp().alias("processed_at"),
+    ))
+
+
+IN_MEMORY_CHECKPOINTS = ("records", "entity_embeddings")
+
+
+def _checkpoint(name: str, df: DataFrame) -> DataFrame:
+    """The in-memory materializer. Chunking pipelines INTO extraction and
+    record discovery in one pass, so the one checkpointed frame out of the
+    burn phase is the records table; every later derivation is a regex-free
+    split/aggregate over it. Whatever runs right after the all-core
+    extraction burn crawls on thermally-throttled hosts (BENCH.md), so the
+    post-burn phase must be as few and as cheap jobs as possible. The
+    embeddings checkpoint keeps canonicalize's convergence actions from
+    recomputing chunk→extract→parse→embed once per action."""
+    return df.localCheckpoint(eager=True) if name in IN_MEMORY_CHECKPOINTS else df
+
+
+def run_kg_build_in_memory(spark, corpus, config=None, extractor=None):
+    """BuildPipeline's stages through canonicalize, with localCheckpoint
+    stage boundaries instead of catalog writes — the benchmarking path."""
+    cfg = config or PipelineConfig()
+    chunks = chunk_stage(corpus, cfg, _checkpoint)
+    raw = graph_stage(extract_stage(chunks, cfg, extractor), _checkpoint)
+    return canonical_stage(*raw, cfg, _checkpoint)
 
 
 class BuildPipeline:
@@ -114,18 +258,9 @@ class BuildPipeline:
         self.summarizer = summarizer
         self.run_id = run_id or uuid.uuid4().hex[:12]
         self._metrics: list = []
+        self._t0 = time.time()
 
     # -- lineage -----------------------------------------------------------
-    def _record(self, stage: str, df: DataFrame, t0: float) -> None:
-        self._metrics.append(
-            (stage, int(df.count()), int((time.time() - t0) * 1000), self.run_id)
-        )
-
-    def _record_value(self, stage: str, n: int, t0: float) -> None:
-        self._metrics.append(
-            (stage, int(n), int((time.time() - t0) * 1000), self.run_id)
-        )
-
     def flush_metrics(self) -> None:
         mdf = self.spark.createDataFrame(
             self._metrics, "stage string, row_count bigint, duration_ms bigint, run_id string"
@@ -133,209 +268,88 @@ class BuildPipeline:
         self.catalog.write(mdf, "build_metrics", mode="append" if self.catalog.exists("build_metrics") else "overwrite")
         self._metrics = []
 
-    def _save(self, df: DataFrame, name: str, stage: str, t0: float,
-              partition_by=None, extra_metrics: Optional[dict] = None) -> DataFrame:
-        """Write a stage table and record its lineage row count FROM THE
-        WRITE JOB ITSELF via Observation — no read-back count() job per
-        stage (round-2's per-stage lineage scans were a measured chunk of
-        the small-stage tail that capped scaling efficiency).
-        `extra_metrics` maps metric-stage names to aggregate Columns
-        piggybacked on the same pass (e.g. embed-failure counts)."""
+    def _save(self, name: str, df: DataFrame) -> DataFrame:
+        """The catalog materializer: write a stage table once and read it
+        back. The lineage row count comes FROM THE WRITE JOB ITSELF via
+        Observation — no read-back count() job per stage (round-2's
+        per-stage lineage scans were a measured chunk of the small-stage
+        tail that capped scaling efficiency) — and the stage's duration
+        runs from the previous save. A table with an `embed_failed` flag
+        also records its failure count on the same pass: a systemically
+        failing embedder (bad credentials, dead endpoint) zero-vectors
+        every row, and the rate distinguishes 'no duplicates found' from
+        'embedder down' (reference per-row logging)."""
+        stage = STAGES[name]
         obs = Observation(f"save_{name}_{uuid.uuid4().hex[:8]}")
-        aggs = [F.count(F.lit(1)).alias("_rows")]
-        for metric_name, col in (extra_metrics or {}).items():
-            aggs.append(col.alias(metric_name))
-        self.catalog.write(df.observe(obs, *aggs), name, partition_by=partition_by)
-        got = obs.get
-        self._record_value(stage, got["_rows"], t0)
-        for metric_name in (extra_metrics or {}):
-            self._record_value(metric_name, int(got[metric_name] or 0), t0)
-        return self.catalog.read(name)
+        aggs = [F.count(F.lit(1)).alias("rows")]
+        if "embed_failed" in df.columns:
+            aggs.append(F.sum(F.col("embed_failed").cast("int")).alias("failures"))
+        out = self.catalog.write(df.observe(obs, *aggs), name)
+        got, now = obs.get, time.time()
+        ms = int((now - self._t0) * 1000)
+        self._metrics.append((stage, int(got["rows"]), ms, self.run_id))
+        if "failures" in got:
+            self._metrics.append(
+                (f"{stage}_failures", int(got["failures"] or 0), ms, self.run_id)
+            )
+        self._t0 = now
+        return out
 
-    # -- stages -------------------------------------------------------------
     def run(self, corpus: DataFrame, resume: bool = False) -> dict:
         """corpus(repo, path, commit, lang, content) → all graph tables.
 
         The corpus is repartitioned by repo-hash first (hot-repo skew: one
         repo can hold half the rows — salting by hash spreads its files)."""
-        cat, cfg = self.catalog, self.config
+        cat, cfg, save = self.catalog, self.config, self._save
+        self._t0 = time.time()
 
-        t0 = time.time()
-        corpus = salted_corpus_repartition(
-            corpus, int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        )
-        if not (resume and cat.exists("corpus")):
-            self._save(corpus, "corpus", "corpus", t0)
-        corpus = cat.read("corpus")
+        if resume and cat.exists("corpus"):
+            corpus = cat.read("corpus")
+        else:
+            corpus = save("corpus", salted_corpus_repartition(
+                corpus, int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+            ))
+        if resume and cat.exists("chunks"):
+            chunks = cat.read("chunks")
+        else:
+            chunks = chunk_stage(corpus, cfg, save)
 
-        t0 = time.time()
-        if not (resume and cat.exists("chunks")):
-            chunks = chunk_documents(
-                corpus, cfg.chunk_size, cfg.overlap, cfg.max_text_length
-            )
-            self._save(chunks, "chunks", "chunk", t0)
-        chunks = cat.read("chunks")
-
-        t0 = time.time()
         cache = cat.read("extraction_cache") if cat.exists("extraction_cache") else None
-        results = extract_chunks(
-            chunks, extractor=self.extractor, cache=cache,
-            max_gleanings=cfg.max_gleanings,
-        )
+        results = extract_stage(chunks, cfg, self.extractor, cache)
         if cache is not None:
             # materialize before overwriting the parquet we are lazily reading
             results = results.localCheckpoint(eager=True)
-        self._save(
+        results = save(
+            "extraction_cache",
             results.select(F.col("chunk_id").alias("chunk_sha1"), "raw_result"),
-            "extraction_cache", "extract", t0,
-        )
-        results = cat.read("extraction_cache").select(
-            F.col("chunk_sha1").alias("chunk_id"), "raw_result"
-        )
+        ).select(F.col("chunk_sha1").alias("chunk_id"), "raw_result")
 
-        t0 = time.time()
-        from graph_rag_agent_spark.operators.parsing import (
-            derive_nodes,
-            occurrences_from_records,
-            parse_records,
-            relationships_from_records,
-        )
-
-        # ONE regex pass: the tagged records table; every downstream parse
-        # table derives from it via regex-free splits/aggregates
-        records = self._save(parse_records(results), "records", "parse_records", t0)
-        t0 = time.time()
-        occurrences = self._save(
-            occurrences_from_records(records), "occurrences", "parse_occurrences", t0
-        )
-        t0 = time.time()
-        edges_raw = self._save(
-            relationships_from_records(records), "edges_raw", "parse_edges", t0
-        )
-        t0 = time.time()
-        nodes_raw = self._save(derive_nodes(occurrences), "nodes_raw", "parse_nodes", t0)
-        t0 = time.time()
-        # occurrences stage table is unique per (chunk, entity) — project
-        mentions_raw = self._save(
-            occurrences.select("chunk_id", "entity_id"),
-            "mentions_raw", "parse_mentions", t0,
-        )
-
-        t0 = time.time()
-        existing_emb = (
+        raw = graph_stage(results, save)
+        existing = (
             cat.read("entity_embeddings") if (resume and cat.exists("entity_embeddings")) else None
         )
-        embeddings = embed_entities(nodes_raw, existing=existing_emb, dim=cfg.embedding_dim)
-        if existing_emb is not None:
-            # materialize before overwriting the parquet being lazily read
-            embeddings = embeddings.localCheckpoint(eager=True)
-        # embed-failure count piggybacks on the write pass: a systemically
-        # failing embedder (bad credentials, dead endpoint) zero-vectors
-        # every row; surfacing the rate distinguishes 'no duplicates found'
-        # from 'embedder down' (reference per-row logging)
-        embeddings = self._save(
-            embeddings, "entity_embeddings", "embed", t0,
-            extra_metrics={"embed_failures": F.sum(F.col("embed_failed").cast("int"))},
+        result = canonical_stage(*raw, cfg, save, existing)
+        save("similar", result.similar)
+        save("wcc", result.wcc)
+        out = community_stages(
+            result.nodes, result.edges, result.mentions, cfg, save,
+            summarizer=self.summarizer,
         )
-
-        t0 = time.time()
-        result = canonicalize(
-            nodes_raw, edges_raw, mentions_raw, embeddings,
-            cutoff=cfg.similarity_cutoff, topk=cfg.similarity_topk,
-            max_edit_distance=cfg.word_edit_distance,
-        )
-        self._save(result.similar, "similar", "similar_join", t0)
-        t0 = time.time()
-        self._save(result.wcc, "wcc", "wcc", t0)
-        t0 = time.time()
-        nodes = self._save(result.nodes, "nodes", "canonicalize_nodes", t0)
-        t0 = time.time()
-        edges = self._save(result.edges, "edges", "canonicalize_edges", t0)
-        t0 = time.time()
-        mentions = self._save(result.mentions, "mentions", "canonicalize_mentions", t0)
-
-        t0 = time.time()
-        if cfg.community_method == "lpa":
-            # component-local detector: persists the flat membership so the
-            # incremental plan can re-detect ONLY delta-touched components
-            # (communities.incremental_communities — r4 judge ask #4)
-            from graph_rag_agent_spark.operators.communities import (
-                label_propagation,
-                lpa_entity_communities,
-                weighted_projection,
-            )
-
-            wedges = weighted_projection(edges).localCheckpoint(eager=True)
-            verts = (
-                wedges.select(F.col("s").alias("id"))
-                .unionByName(wedges.select(F.col("d").alias("id")))
-                .distinct()
-            )
-            lpa_memb = label_propagation(verts, wedges, max_iter=cfg.community_max_iter)
-            lpa_memb = self._save(lpa_memb, "lpa_membership", "communities_lpa", t0)
-            entity_comms = lpa_entity_communities(lpa_memb)
-        else:
-            entity_comms = detect_communities(
-                nodes, edges, max_levels=cfg.community_max_levels,
-                max_iter=cfg.community_max_iter,
-            )
-        entity_comms = self._save(entity_comms, "entity_communities", "communities_detect", t0)
-        t0 = time.time()
-        membership = community_membership(entity_comms)
-        membership = self._save(membership, "communities", "communities_membership", t0)
-        t0 = time.time()
-        hierarchy = community_hierarchy(entity_comms)
-        self._save(hierarchy, "community_hierarchy", "communities_hierarchy", t0)
-        t0 = time.time()
-        rank = community_rank(membership, mentions)
-        summaries = summarize_communities(
-            membership, nodes, edges, rank, summarizer=self.summarizer
-        )
-        summaries = self._save(summaries, "community_summaries", "communities_summarize", t0)
 
         # chunk embeddings (I2, reference ChunkIndexBuilder — build step 3)
-        t0 = time.time()
-        from graph_rag_agent_spark.operators.embeddings import embed_chunks
-
         existing_cemb = (
             cat.read("chunk_embeddings") if (resume and cat.exists("chunk_embeddings")) else None
         )
         chunk_embs = embed_chunks(chunks, existing=existing_cemb, dim=cfg.embedding_dim)
         if existing_cemb is not None:
             chunk_embs = chunk_embs.localCheckpoint(eager=True)
-        self._save(chunk_embs, "chunk_embeddings", "embed_chunks", t0)
-
-        # entity PageRank table (tol-mode fixpoint) — the rank table the
-        # incremental plan warm-starts from (pagerank initial_ranks)
-        t0 = time.time()
-        from graph_rag_agent_spark.operators.communities import weighted_projection
-        from graph_rag_agent_spark.operators.pagerank import pagerank_projection
-
-        ranks = pagerank_projection(
-            weighted_projection(edges),
-            tol=cfg.pagerank_tol, n_iter=cfg.pagerank_max_iter,
-        )
-        self._save(ranks, "entity_pagerank", "pagerank", t0)
-
+        save("chunk_embeddings", chunk_embs)
         # graph-quality metrics (reference evaluation framework analogue)
-        t0 = time.time()
-        from graph_rag_agent_spark.operators.graph_metrics import graph_quality_report
-
-        quality = graph_quality_report(nodes, edges, mentions, chunks, membership)
-        self._save(quality, "graph_quality", "graph_quality", t0)
-
+        save("graph_quality", graph_quality_report(
+            out["nodes"], out["edges"], out["mentions"], chunks, out["communities"]
+        ))
         # registry snapshot for incremental diffs (N1)
-        t0 = time.time()
-        registry = corpus.select(
-            "repo", "path",
-            F.sha2("content", 256).alias("content_sha256"),
-            F.current_timestamp().alias("processed_at"),
-        )
-        self._save(registry, "registry", "registry", t0)
+        registry_stage(corpus, save)
 
         self.flush_metrics()
-        return {
-            "chunks": chunks, "nodes": nodes, "edges": edges,
-            "mentions": mentions, "communities": membership,
-            "community_summaries": summaries,
-        }
+        return {"chunks": chunks, **out}

@@ -2,36 +2,41 @@
 
 Order mirrors the reference: detect changes → rebuild changed partitions →
 GC deleted docs → refresh embeddings (anti-join incremental) →
-consistency validate/repair → re-detect communities only if changes.
+consistency validate/repair → re-detect communities.
 
-Everything flows through the TableCatalog (Iceberg MERGE INTO when a real
-catalog is configured; anti-join+rewrite parquet emulation otherwise), and
-every stage appends lineage rows to build_metrics.
+The incremental-only steps live here; they feed plans/build.py's shared
+stages, which materialize every table through BuildPipeline's catalog saver
+(Iceberg MERGE INTO when a real catalog is configured; anti-join+rewrite
+parquet emulation otherwise), one build_metrics lineage row per stage.
 """
 
 from __future__ import annotations
 
-import time
 import uuid
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from graph_rag_agent_spark.config import PipelineConfig
-from graph_rag_agent_spark.operators.canonicalize import canonicalize
-from graph_rag_agent_spark.operators.chunker import chunk_documents
-from graph_rag_agent_spark.operators.communities import (
-    community_membership,
-    community_rank,
-    detect_communities,
-    summarize_communities,
-)
+from graph_rag_agent_spark.operators.communities import weighted_projection
 from graph_rag_agent_spark.operators.consistency import repair, validation_report
-from graph_rag_agent_spark.operators.embeddings import embed_entities
-from graph_rag_agent_spark.operators.extraction import extract_chunks
 from graph_rag_agent_spark.operators.incremental import (
-    chunks_of_docs,
     detect_changes,
+    upsert_edges,
+    upsert_nodes,
+)
+from graph_rag_agent_spark.operators.manual_edits import (
+    ensure_edit_columns,
+    preserve_manual_edits,
+)
+from graph_rag_agent_spark.plans.build import (
+    BuildPipeline,
+    canonical_stage,
+    chunk_stage,
+    community_stages,
+    extract_stage,
+    graph_stage,
+    registry_stage,
 )
 from graph_rag_agent_spark.sources.catalog import TableCatalog
 
@@ -53,46 +58,52 @@ class IncrementalUpdatePipeline:
         self.run_id = uuid.uuid4().hex[:12]
 
     def run_once(self, corpus: DataFrame) -> dict:
-        """One incremental pass against the current catalog state."""
+        """One incremental pass against the current catalog state.
+
+        Every table a full build writes is refreshed except these, which
+        keep describing the previous corpus: ``corpus`` (the registry holds
+        its hashes), canonicalization's diagnostic ``similar`` and ``wcc``,
+        and ``chunk_embeddings`` and ``graph_quality``. Refreshing the last
+        two costs about 1.0-1.2 s and 1.9-2.6 s (warm, 4 cores, the 200-file
+        benchmark corpus with a 2% delta of each kind) — roughly 15% of the
+        pass — so it is left to a separate, measured change."""
         cat, cfg = self.catalog, self.config
-        registry = cat.read("registry")
-        changes = detect_changes(corpus, registry)
+        changes = detect_changes(corpus, cat.read("registry"))
         n_added = changes.added.count()
         n_modified = changes.modified.count()
         n_deleted = changes.deleted.count()
         stats = {"added": n_added, "modified": n_modified, "deleted": n_deleted}
         if not (n_added or n_modified or n_deleted):
             return {**stats, "changed": False}
+        build = BuildPipeline(self.spark, cat, cfg, run_id=self.run_id)
+        save = build._save
 
-        t0 = time.time()
+        # --- snapshot the prior state this run reads AND overwrites, before
+        # any rebuild. Checkpointed eagerly: lazy frames would read the NEW
+        # data once the catalog tables are rewritten.
         old_chunks = cat.read("chunks")
-        occurrences = cat.read("occurrences")
-        edges_raw = cat.read("edges_raw")
+        gone_docs = changes.deleted.unionByName(changes.modified.select("repo", "path"))
+        # N6 GC by chunk provenance: a chunk dies only if no surviving doc
+        # shares its text (chunk_id = sha1(text) dedups across docs)
+        kept_chunks = old_chunks.join(
+            gone_docs, on=["repo", "path"], how="left_anti"
+        ).localCheckpoint(eager=True)
+        kept_ids = kept_chunks.select("chunk_id")
+        kept_records = cat.read("records").join(
+            kept_ids, on="chunk_id", how="left_semi"
+        ).localCheckpoint(eager=True)
 
-        # --- manual-edit sync (reference manual_edit_manager.process):
-        # BEFORE any rebuild, snapshot prior canonical state that must
-        # survive this run: manually-edited/protected nodes+edges, the
-        # previous rank table (pagerank warm start), and — in LPA mode —
-        # the previous projection + membership (scoped re-detection).
-        # Checkpointed eagerly: the catalog parquet files get overwritten
-        # below and lazy frames would read the NEW data.
+        # manual-edit sync (reference manual_edit_manager.process):
+        # manually-edited/protected nodes+edges must survive this run
         prior_nodes = cat.read("nodes") if cat.exists("nodes") else None
         manual_nodes = None
         n_preserved = 0
         if prior_nodes is not None and (
             "manual_edit" in prior_nodes.columns or "protected" in prior_nodes.columns
         ):
-            from graph_rag_agent_spark.operators.manual_edits import (
-                ensure_edit_columns,
-                preserve_manual_edits,
-            )
-
-            changed_docs = changes.deleted.unionByName(
-                changes.modified.select("repo", "path")
-            ).unionByName(changes.added.select("repo", "path"))
             prior_nodes = preserve_manual_edits(
-                ensure_edit_columns(prior_nodes),
-                cat.read("mentions"), old_chunks, changed_docs,
+                ensure_edit_columns(prior_nodes), cat.read("mentions"), old_chunks,
+                gone_docs.unionByName(changes.added.select("repo", "path")),
             )
             manual_nodes = prior_nodes.filter(
                 F.col("manual_edit") | F.col("protected")
@@ -104,231 +115,74 @@ class IncrementalUpdatePipeline:
             manual_edges = prior_edges.filter(
                 F.coalesce(F.col("manual_edit"), F.lit(False))
             ).localCheckpoint(eager=True)
+
+        # warm starts: the previous rank table (PageRank seed), summaries
+        # (content-addressed reuse: the summarizer runs only on communities
+        # whose stringified info changed) and, in LPA mode, the previous
+        # projection + membership (scoped re-detection)
         prior_ranks = (
             cat.read("entity_pagerank").localCheckpoint(eager=True)
             if cat.exists("entity_pagerank") else None
         )
-        old_wedges = old_lpa_memb = None
-        if cfg.community_method == "lpa" and cat.exists("lpa_membership"):
-            from graph_rag_agent_spark.operators.communities import (
-                weighted_projection,
+        prior_summaries = (
+            cat.read("community_summaries").localCheckpoint(eager=True)
+            if self.summarizer is not None and cat.exists("community_summaries")
+            else None
+        )
+        prior_lpa = None
+        if (cfg.community_method == "lpa" and cat.exists("lpa_membership")
+                and prior_edges is not None):
+            prior_lpa = (
+                weighted_projection(prior_edges).localCheckpoint(eager=True),
+                cat.read("lpa_membership").localCheckpoint(eager=True),
             )
 
-            if prior_edges is not None:
-                old_wedges = weighted_projection(prior_edges).localCheckpoint(
-                    eager=True
-                )
-                old_lpa_memb = cat.read("lpa_membership").localCheckpoint(
-                    eager=True
-                )
-
-        # --- N6: GC deleted + modified docs' old state by chunk provenance.
-        # A chunk dies only if no surviving doc shares its text (chunk_id =
-        # sha1(text) dedups across docs).
-        gone_docs = changes.deleted.unionByName(
-            changes.modified.select("repo", "path")
-        ).dropDuplicates(["repo", "path"])
-        kept_chunks = old_chunks.join(gone_docs, on=["repo", "path"], how="left_anti")
-        doomed_chunk_ids = (
-            chunks_of_docs(old_chunks, gone_docs)
-            .select("chunk_id")
-            .dropDuplicates()
-            .join(kept_chunks.select("chunk_id").dropDuplicates(), on="chunk_id", how="left_anti")
-        )
-        occurrences = occurrences.join(doomed_chunk_ids, on="chunk_id", how="left_anti")
-        edges_raw = edges_raw.join(doomed_chunk_ids, on="chunk_id", how="left_anti")
-
-        # --- N2: rebuild changed partitions only ---------------------------
-        changed_corpus = changes.added.unionByName(changes.modified)
-        new_chunks = chunk_documents(
-            changed_corpus, cfg.chunk_size, cfg.overlap, cfg.max_text_length
+        # --- N2: rebuild changed partitions only. Only chunk texts the
+        # surviving docs lack are extracted and parsed; the rest of their
+        # graph rows are already in kept_records.
+        chunks = chunk_stage(
+            changes.added.unionByName(changes.modified), cfg, save, kept_chunks
         )
         cache = cat.read("extraction_cache") if cat.exists("extraction_cache") else None
-        new_results = extract_chunks(
-            new_chunks, extractor=self.extractor, cache=cache,
-            max_gleanings=cfg.max_gleanings,
-        )
-        # chunks whose text (= chunk_id) already exists in surviving docs are
-        # already materialized — only genuinely fresh chunk ids contribute
-        # new graph rows (keeps incremental ≡ full rebuild, no double rows)
-        fresh_results = new_results.join(
-            kept_chunks.select("chunk_id").dropDuplicates(["chunk_id"]),
-            on="chunk_id",
-            how="left_anti",
+        results = extract_stage(
+            chunks.join(kept_ids, on="chunk_id", how="left_anti"),
+            cfg, self.extractor, cache,
         ).localCheckpoint(eager=True)
-
-        # --- N3/N4: occurrences + edges are chunk-provenanced → plain union
-        # after GC is exact; nodes/mentions re-derive from the merged
-        # occurrences with the same order-independent rule as a full build
-        from graph_rag_agent_spark.operators.parsing import (
-            derive_mentions,
-            derive_nodes,
-            occurrences_from_records,
-            parse_records,
-            relationships_from_records,
-        )
-
-        all_chunks = kept_chunks.unionByName(new_chunks).localCheckpoint(eager=True)
-        # one regex pass over the fresh delta; both unions derive from it
-        fresh_records = parse_records(fresh_results).localCheckpoint(eager=True)
-        occurrences = (
-            occurrences.unionByName(occurrences_from_records(fresh_records))
-            .localCheckpoint(eager=True)
-        )
-        edges_raw = (
-            edges_raw.unionByName(relationships_from_records(fresh_records))
-            .localCheckpoint(eager=True)
-        )
-        nodes_raw = derive_nodes(occurrences).localCheckpoint(eager=True)
-        mentions_raw = derive_mentions(occurrences).localCheckpoint(eager=True)
-
-        # --- N8 consistency repair -----------------------------------------
-        report = validation_report(nodes_raw, edges_raw, mentions_raw, all_chunks)
-        nodes_raw, edges_raw, mentions_raw = repair(
-            nodes_raw, edges_raw, mentions_raw, all_chunks
-        )
-
-        # --- embeddings (I4 anti-join incremental) + canonicalize ----------
-        existing_emb = cat.read("entity_embeddings") if cat.exists("entity_embeddings") else None
-        embeddings = embed_entities(nodes_raw, existing=existing_emb, dim=cfg.embedding_dim)
-        embeddings = embeddings.join(
-            nodes_raw.select("entity_id"), on="entity_id", how="left_semi"
-        ).localCheckpoint(eager=True)
-        result = canonicalize(
-            nodes_raw, edges_raw, mentions_raw, embeddings,
-            cutoff=cfg.similarity_cutoff, topk=cfg.similarity_topk,
-            max_edit_distance=cfg.word_edit_distance,
-        )
-
-        # --- persist new state ----------------------------------------------
-        if cache is not None:
-            new_results = new_results.localCheckpoint(eager=True)
         cat.upsert(
             "extraction_cache",
-            new_results.select(F.col("chunk_id").alias("chunk_sha1"), "raw_result"),
+            results.select(F.col("chunk_id").alias("chunk_sha1"), "raw_result"),
             keys=["chunk_sha1"],
         )
-        cat.write(all_chunks, "chunks")
-        cat.write(occurrences, "occurrences")
-        cat.write(nodes_raw, "nodes_raw")
-        cat.write(edges_raw, "edges_raw")
-        cat.write(mentions_raw, "mentions_raw")
-        cat.write(embeddings, "entity_embeddings")
-        nodes_out = result.nodes
+        raw = graph_stage(results, save, kept_records)
+
+        # --- N8 consistency repair: a no-op on a consistent delta. The
+        # repaired frames feed embed + canonicalize, whose actions and
+        # table writes would each re-run the repair joins
+        report = validation_report(*raw, chunks)
+        raw = [df.localCheckpoint(eager=True) for df in repair(*raw, chunks)]
+
+        existing = cat.read("entity_embeddings") if cat.exists("entity_embeddings") else None
+        result = canonical_stage(*raw, cfg, save, existing)
+        nodes, edges = result.nodes, result.edges
         n_conflicts = 0
         if manual_nodes is not None:
             # auto rebuild vs manual edits: flagged rows are never silently
             # overwritten — upsert_nodes routes through resolve_conflicts
             # with the configured strategy; manual rows the rebuild dropped
             # are re-inserted (protected from GC)
-            from graph_rag_agent_spark.operators.incremental import upsert_nodes
-
-            nodes_out = upsert_nodes(
-                manual_nodes, nodes_out, conflict_strategy=cfg.conflict_strategy
-            )
+            nodes = upsert_nodes(manual_nodes, nodes, conflict_strategy=cfg.conflict_strategy)
             n_conflicts = manual_nodes.join(
                 result.nodes.select("entity_id"), on="entity_id", how="left_semi"
             ).count()
-        cat.write(nodes_out.localCheckpoint(eager=True), "nodes")
-        edges_out = result.edges
         if manual_edges is not None:
-            from graph_rag_agent_spark.operators.incremental import upsert_edges
+            edges = upsert_edges(manual_edges, edges)
 
-            edges_out = upsert_edges(manual_edges, edges_out)
-        edges_out = edges_out.localCheckpoint(eager=True)
-        cat.write(edges_out, "edges")
-        mentions_out = result.mentions.localCheckpoint(eager=True)
-        cat.write(mentions_out, "mentions")
-
-        # --- communities only when the graph changed (reference order).
-        # LPA mode + a prior membership → SCOPED re-detection: only the
-        # components the edge delta touched re-run the detector; untouched
-        # components keep their prior rows verbatim (r4 judge ask #4 — the
-        # reference re-detects wholesale every run). The modularity default
-        # is NOT component-local (gain rule divides by global 2m), so it
-        # falls back to wholesale detect_communities.
-        if cfg.community_method == "lpa":
-            from graph_rag_agent_spark.operators.communities import (
-                incremental_communities,
-                label_propagation,
-                lpa_entity_communities,
-                weighted_projection,
-            )
-
-            new_wedges = weighted_projection(edges_out).localCheckpoint(eager=True)
-
-            def _detect(v, e):
-                return label_propagation(v, e, max_iter=cfg.community_max_iter)
-
-            if old_wedges is not None and old_lpa_memb is not None:
-                lpa_memb = incremental_communities(
-                    old_wedges, new_wedges, old_lpa_memb, _detect
-                )
-            else:
-                verts = (
-                    new_wedges.select(F.col("s").alias("id"))
-                    .unionByName(new_wedges.select(F.col("d").alias("id")))
-                    .distinct()
-                )
-                lpa_memb = _detect(verts, new_wedges)
-            lpa_memb = lpa_memb.localCheckpoint(eager=True)
-            cat.write(lpa_memb, "lpa_membership")
-            entity_comms = lpa_entity_communities(lpa_memb)
-        else:
-            entity_comms = detect_communities(
-                cat.read("nodes"), cat.read("edges"),
-                max_levels=cfg.community_max_levels, max_iter=cfg.community_max_iter,
-            )
-        cat.write(entity_comms.localCheckpoint(eager=True), "entity_communities")
-        membership = community_membership(cat.read("entity_communities"))
-        cat.write(membership, "communities")
-        rank = community_rank(cat.read("communities"), cat.read("mentions"))
-        # content-addressed summary reuse (G9 × S8): a community whose
-        # stringified info is byte-identical to last run's — the usual case
-        # for every community the delta didn't touch — keeps its summary;
-        # the (LLM) summarizer runs only on the misses
-        prior = (
-            cat.read("community_summaries")
-            if self.summarizer is not None and cat.exists("community_summaries")
-            else None
+        community_stages(
+            nodes, edges, result.mentions, cfg, save, summarizer=self.summarizer,
+            prior_lpa=prior_lpa, prior_summaries=prior_summaries, prior_ranks=prior_ranks,
         )
-        summaries = summarize_communities(
-            cat.read("communities"), cat.read("nodes"), cat.read("edges"), rank,
-            summarizer=self.summarizer, prior=prior,
-        )
-        cat.write(summaries.localCheckpoint(eager=True), "community_summaries")
-
-        # --- PageRank warm start (r4 judge ask #8): tol-mode power
-        # iteration seeded from the previous run's rank table — same unique
-        # fixpoint, fewer sweeps after a small delta (LAST_ITERATIONS
-        # pytest-gated). Wired exactly like summary reuse above.
-        from graph_rag_agent_spark.operators.communities import weighted_projection
-        from graph_rag_agent_spark.operators.pagerank import pagerank_projection
-
-        ranks_out = pagerank_projection(
-            weighted_projection(edges_out),
-            tol=cfg.pagerank_tol, n_iter=cfg.pagerank_max_iter,
-            initial_ranks=prior_ranks,
-        )
-        cat.write(ranks_out.localCheckpoint(eager=True), "entity_pagerank")
-
-        # --- registry refresh + lineage -------------------------------------
-        new_registry = corpus.select(
-            "repo", "path",
-            F.sha2("content", 256).alias("content_sha256"),
-            F.current_timestamp().alias("processed_at"),
-        ).localCheckpoint(eager=True)
-        cat.write(new_registry, "registry")
-
-        metrics = self.spark.createDataFrame(
-            [
-                ("incremental", int(cat.read("edges").count()),
-                 int((time.time() - t0) * 1000), self.run_id),
-            ],
-            "stage string, row_count bigint, duration_ms bigint, run_id string",
-        ).withColumn("recorded_at", F.current_timestamp())
-        cat.write(metrics, "build_metrics", mode="append")
-
+        registry_stage(corpus, save)
+        build.flush_metrics()
         return {
             **stats,
             "changed": True,

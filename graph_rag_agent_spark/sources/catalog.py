@@ -55,18 +55,21 @@ class TableCatalog:
 
     # -- IO ----------------------------------------------------------------
     def write(self, df: DataFrame, name: str, partition_by: Optional[List[str]] = None,
-              mode: str = "overwrite") -> None:
+              mode: str = "overwrite") -> DataFrame:
+        """Write the table; → the table as written. Parquet reads it back
+        with the frame's own schema, which starts no schema-inference job."""
         if self.iceberg_catalog:
             writer = df.writeTo(self._qualified(name)).using("iceberg")
             if mode == "overwrite":
                 writer.createOrReplace()
             else:
                 writer.append()
-            return
+            return self.read(name)
         w = df.write.mode(mode)
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(self._path(name))
+        return self.spark.read.schema(df.schema).parquet(self._path(name))
 
     def read(self, name: str) -> DataFrame:
         if self.iceberg_catalog:
@@ -101,8 +104,7 @@ class TableCatalog:
         merged = kept.unionByName(source.select(*target.columns))
         # rewrite through a temp dir: parquet can't overwrite its own input
         tmp = name + "__tmp"
-        self.write(merged, tmp, partition_by=partition_by)
-        out = self.read(tmp).localCheckpoint(eager=True)
+        out = self.write(merged, tmp, partition_by=partition_by).localCheckpoint(eager=True)
         self.drop(name)
         self.write(out, name, partition_by=partition_by)
         self.drop(tmp)
@@ -114,8 +116,7 @@ class TableCatalog:
         target = self.read(name)
         kept = target.join(keys_df.select(*keys).dropDuplicates(keys), on=keys, how="left_anti")
         tmp = name + "__tmp"
-        self.write(kept, tmp)
-        out = self.read(tmp).localCheckpoint(eager=True)
+        out = self.write(kept, tmp).localCheckpoint(eager=True)
         self.drop(name)
         self.write(out, name)
         self.drop(tmp)

@@ -98,6 +98,31 @@ def test_upsert_and_latest_wins(spark):
         assert latest_wins(tie, ["key"]).collect()[0].v == "a"
 
 
+# every table a full build and an incremental pass both write
+EQUIVALENT_TABLES = (
+    "chunks", "occurrences", "nodes_raw", "edges_raw", "mentions_raw",
+    "nodes", "edges", "mentions", "entity_communities", "communities",
+    "community_hierarchy", "community_summaries", "entity_pagerank", "registry",
+)
+INCREMENTAL_STAGES = {
+    "chunk", "parse_records", "parse_occurrences", "parse_edges",
+    "parse_nodes", "parse_mentions", "embed", "embed_failures",
+    "canonicalize_nodes", "canonicalize_edges", "canonicalize_mentions",
+    "communities_detect", "communities_membership", "communities_hierarchy",
+    "communities_summarize", "pagerank", "registry",
+}
+
+
+def _stable_rows(df):
+    """Row multiset of the non-volatile columns (run timestamps and
+    embedding vectors excluded), by column name."""
+    cols = [
+        c for c, t in df.dtypes
+        if not (t.startswith("timestamp") or t == "array<double>")
+    ]
+    return sorted(tuple(r) for r in df.select(*cols).collect())
+
+
 def test_incremental_equals_full_rebuild(spark):
     base = generate_corpus_pdf(40, seed=42)
     # v2: drop 5 docs, modify 3, add 4 new ones
@@ -112,21 +137,23 @@ def test_incremental_equals_full_rebuild(spark):
          tempfile.TemporaryDirectory(prefix="graft_full_") as wh2:
         cat1 = TableCatalog(spark, wh1)
         BuildPipeline(spark, cat1).run(_corpus_df(spark, base))
-        res = IncrementalUpdatePipeline(spark, cat1).run_once(_corpus_df(spark, v2))
+        incr = IncrementalUpdatePipeline(spark, cat1)
+        res = incr.run_once(_corpus_df(spark, v2))
         assert res["changed"]
         assert res["added"] == 4 and res["modified"] == 3 and res["deleted"] == 5
-        incr = {
-            (r.subj, r.pred, r.obj)
-            for r in cat1.read("edges").select("subj", "pred", "obj").collect()
+        # one lineage row per stage the pass materialized
+        stages = {
+            r.stage for r in cat1.read("build_metrics")
+            .filter(F.col("run_id") == incr.run_id).collect()
         }
+        assert stages == INCREMENTAL_STAGES
 
         cat2 = TableCatalog(spark, wh2)
         BuildPipeline(spark, cat2).run(_corpus_df(spark, v2))
-        full = {
-            (r.subj, r.pred, r.obj)
-            for r in cat2.read("edges").select("subj", "pred", "obj").collect()
-        }
-        assert incr == full
+        for table in EQUIVALENT_TABLES:
+            got, want = cat1.read(table), cat2.read(table)
+            assert got.columns == want.columns, table
+            assert _stable_rows(got) == _stable_rows(want), table
 
         # second pass with identical corpus → no-op
         res2 = IncrementalUpdatePipeline(spark, cat1).run_once(_corpus_df(spark, v2))
