@@ -18,7 +18,7 @@ from __future__ import annotations
 import hashlib
 import re
 from dataclasses import dataclass
-from typing import List
+from typing import Iterator, List
 
 from graph_rag_agent_spark.config import (
     CHUNK_SIZE,
@@ -200,3 +200,18 @@ def chunk_records(
         )
         prev_id = cid
     return records
+
+
+def first_chunk_rows(batches: Iterator) -> Iterator:
+    """Streaming dedup of a partition's pandas batches by ``chunk_id``:
+    yields each batch without the rows whose chunk_id came earlier in the
+    stream. Exact when equal chunk_ids are hash-partitioned together, so a
+    stage needs one shuffle, not a dropDuplicates shuffle plus its own."""
+    seen: set = set()
+    for pdf in batches:
+        keep = [
+            j
+            for j, cid in enumerate(pdf["chunk_id"])
+            if cid not in seen and not seen.add(cid)
+        ]
+        yield pdf if len(keep) == len(pdf) else pdf.iloc[keep]

@@ -57,6 +57,7 @@ from graph_rag_agent_spark.functions.similarity_kernel import (
     pairs_for_block,
 )
 from graph_rag_agent_spark.operators.connected_components import connected_components
+from graph_rag_agent_spark.session import local_frame
 
 # Spark-side normalized name — MUST mirror functions/blocking.normalize_name
 _NORMALIZE_PATTERN = r"[^0-9a-z一-鿿]+"
@@ -507,7 +508,7 @@ def _canonicalize_driver(
     mm = merge_map_of(wcc, max_edit_distance=max_edit_distance, adjudicator=adjudicator)
 
     map_schema = "entity_id string, canonical_id string"
-    mm_df = spark.createDataFrame(sorted(mm.items()), map_schema)
+    mm_df = local_frame(spark, sorted(mm.items()), map_schema)
     bmerge = F.broadcast(mm_df)
     edges_m = (
         edges.join(bmerge.withColumnRenamed("entity_id", "subj").withColumnRenamed("canonical_id", "_cs"), on="subj", how="left")
@@ -524,16 +525,16 @@ def _canonicalize_driver(
 
     dmap = disambig_map_of(wcc, mm, degrees, resolver=resolver)
     combined = compose_maps(mm, dmap)
-    combined_df = spark.createDataFrame(sorted(combined.items()), map_schema)
+    combined_df = local_frame(spark, sorted(combined.items()), map_schema)
     nodes2, edges2, mentions2 = apply_canonical_map(nodes, edges, mentions, combined_df)
 
     return CanonicalizationResult(
         nodes=nodes2,
         edges=edges2,
         mentions=mentions2,
-        similar=spark.createDataFrame(pairs, "src string, dst string, score double"),
-        wcc=spark.createDataFrame(sorted(wcc.items()), "entity_id string, component string"),
+        similar=local_frame(spark, pairs, "src string, dst string, score double"),
+        wcc=local_frame(spark, sorted(wcc.items()), "entity_id string, component string"),
         merge_map=mm_df,
-        disambig_map=spark.createDataFrame(sorted(dmap.items()), map_schema),
+        disambig_map=local_frame(spark, sorted(dmap.items()), map_schema),
         canonical_map=combined_df,
     )

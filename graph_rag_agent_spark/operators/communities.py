@@ -42,6 +42,7 @@ from graph_rag_agent_spark.config import (
     COMMUNITY_TOP_SUMMARIES,
 )
 from graph_rag_agent_spark.functions.iterative import loop_checkpoint
+from graph_rag_agent_spark.session import local_frame
 
 
 def weighted_projection(edges: DataFrame) -> DataFrame:
@@ -349,8 +350,8 @@ def detect_communities(
             rows = [
                 (v, [int(lv[v]) for lv in levels]) for v in sorted(node_ids)
             ]
-            return nodes.sparkSession.createDataFrame(
-                rows, "entity_id string, communities array<bigint>"
+            return local_frame(
+                nodes.sparkSession, rows, "entity_id string, communities array<bigint>"
             )
 
     # ---- distributed Leiden-shaped hierarchy loop ----
@@ -549,8 +550,8 @@ def overlapping_label_propagation(
                 max_iter,
                 min_association,
             )
-            return spark.createDataFrame(
-                rows, "id string, label string, strength double"
+            return local_frame(
+                spark, rows, "id string, label string, strength double"
             )
     sym = (
         wedges.select(F.col("s").alias("a"), F.col("d").alias("b"), "weight")

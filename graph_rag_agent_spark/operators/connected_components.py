@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from graph_rag_agent_spark.config import CC_DRIVER_THRESHOLD, CC_MAX_ITERATIONS
 from graph_rag_agent_spark.functions.iterative import loop_checkpoint
+from graph_rag_agent_spark.session import local_frame
 
 
 def connected_components(
@@ -79,11 +80,9 @@ def _driver_union_find(
                 ra, rb = rb, ra
             parent[rb] = ra
     pairs = [(v, find(v)) for v in parent]
-    spark = vertices.sparkSession
-    if pairs:
-        active = spark.createDataFrame(pairs, f"{vertex_col} string, component string")
-    else:
-        active = spark.createDataFrame([], f"{vertex_col} string, component string")
+    active = local_frame(
+        vertices.sparkSession, pairs, f"{vertex_col} string, component string"
+    )
     return (
         vertices.select(F.col(vertex_col).alias("id"))
         .join(active.withColumnRenamed(vertex_col, "id"), on="id", how="left")

@@ -12,6 +12,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from graph_rag_agent_spark.session import local_frame
+
 
 def audit_orphan_entities(nodes: DataFrame, mentions: DataFrame) -> DataFrame:
     """Entities with no MENTIONS provenance (validator: orphan entities)."""
@@ -83,9 +85,7 @@ def validation_report(
     for c in counted[1:]:
         merged = merged.unionByName(c)
     # audits with zero violations produce no row → re-seed with 0
-    names = nodes.sparkSession.createDataFrame(
-        [(n,) for n, _ in audits], "check string"
-    )
+    names = local_frame(nodes.sparkSession, [(n,) for n, _ in audits], "check string")
     return (
         names.join(merged, on="check", how="left")
         .withColumn("violation_count", F.coalesce("violation_count", F.lit(0)))

@@ -15,6 +15,8 @@ from typing import Dict, Tuple
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql import types as T
 
+from graph_rag_agent_spark.session import local_frame
+
 HASH_SPACE = 16 ** 8  # first 8 hex chars of md5
 
 
@@ -327,9 +329,8 @@ def filter_blocked_sources(
     with no match, and NULL never equi-matches a blocklist entry).
     """
     if not isinstance(blocked, DataFrame):
-        spark = docs.sparkSession
-        blocked = spark.createDataFrame(
-            [(v,) for v in blocked], f"{source_col} string"
+        blocked = local_frame(
+            docs.sparkSession, [(v,) for v in blocked], f"{source_col} string"
         )
     bl = blocked.select(F.col(source_col).alias("_blocked_src")).distinct()
     return docs.join(
@@ -631,13 +632,8 @@ def learn_bpe(
     )
     table = [(r.w, r.c) for r in counts.collect()]
     merges = bpe_merges(table, n_merges)
-    spark = docs.sparkSession
-    if not merges:
-        return spark.createDataFrame(
-            [], "rank int, left string, right string, pair_count long"
-        )
-    return spark.createDataFrame(
-        merges, "rank int, left string, right string, pair_count long"
+    return local_frame(
+        docs.sparkSession, merges, "rank int, left string, right string, pair_count long"
     )
 
 

@@ -28,6 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from graph_rag_agent_spark.config import EMBEDDING_DIM
+from graph_rag_agent_spark.functions.chunking import first_chunk_rows
 from graph_rag_agent_spark.functions.embedder import embed_text
 
 
@@ -164,7 +165,7 @@ def embed_chunks(
     the stored embed_version additionally invalidates rows produced by a
     DIFFERENT embedder — same needs_reembedding semantics as entities."""
     ver = embedder_fingerprint(embedder, dim)
-    distinct = chunks.select("chunk_id", "text").dropDuplicates(["chunk_id"])
+    todo = chunks.select("chunk_id", "text")
     if existing is not None:
         if "embed_version" in existing.columns:
             existing = existing.filter(F.col("embed_version") == ver)
@@ -175,12 +176,12 @@ def embed_chunks(
         # same retry-on-failure semantics as entities: flagged rows drop out
         # of the reusable set, so the anti-join re-embeds them
         existing = existing.filter(~F.col("embed_failed"))
-        todo = distinct.join(existing.select("chunk_id"), on="chunk_id", how="left_anti")
-    else:
-        todo = distinct
+        todo = todo.join(existing.select("chunk_id"), on="chunk_id", how="left_anti")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+        # equal chunk_ids land in one partition of the hash repartition
+        # below, so the per-partition dedup is exact
+        for pdf in first_chunk_rows(batches):
             embs, failed = _embed_rows(pdf["text"].fillna(""), dim, embedder)
             yield pd.DataFrame(
                 {
@@ -191,7 +192,10 @@ def embed_chunks(
                 }
             )
 
-    fresh = todo.mapInPandas(
+    # one shuffle at one partition per core, as embed_entities: a
+    # dropDuplicates shuffle would be coalesced by AQE into one task
+    n_part = chunks.sparkSession.sparkContext.defaultParallelism
+    fresh = todo.repartition(n_part, "chunk_id").mapInPandas(
         run,
         schema="chunk_id string, embedding array<double>, embed_version string, "
                "embed_failed boolean",

@@ -27,6 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from graph_rag_agent_spark.config import MAX_GLEANINGS
+from graph_rag_agent_spark.functions.chunking import first_chunk_rows
 from graph_rag_agent_spark.functions.extractor import (
     DeterministicCodeExtractor,
     Extractor,
@@ -76,18 +77,9 @@ def extract_chunks(
         misses, hits = selected, None
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # per-partition streaming dedup: rows with equal chunk_id always land
-        # in the same partition (hash repartition key), batches stream
-        # through one generator per partition → `seen` is exact
-        seen: set = set()
-        for pdf in batches:
-            keep = [
-                j
-                for j, cid in enumerate(pdf["chunk_id"])
-                if cid not in seen and not seen.add(cid)
-            ]
-            if len(keep) != len(pdf):
-                pdf = pdf.iloc[keep]
+        # rows with equal chunk_id always land in the same partition (hash
+        # repartition key), so the per-partition dedup is exact
+        for pdf in first_chunk_rows(batches):
             texts = list(pdf["text"].fillna(""))
             ids = list(pdf["chunk_id"])
             results: list = []

@@ -37,6 +37,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from graph_rag_agent_spark.session import local_frame
+
 
 def _undirected(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
     """→ (a, b): distinct undirected pairs, self-loops dropped, a < b."""
@@ -153,7 +155,7 @@ def triangle_counts(
 
 
 def _one(spark, name: str, value: float) -> DataFrame:
-    return spark.createDataFrame([(name, float(value))], "metric string, value double")
+    return local_frame(spark, [(name, float(value))], "metric string, value double")
 
 
 def entity_coverage(nodes: DataFrame, mentions: DataFrame) -> DataFrame:
@@ -359,10 +361,7 @@ def k_core(
         rows = [
             (v, sum(1 for u in adj[v] if u in alive)) for v in sorted(alive)
         ]
-        spark = edges.sparkSession
-        if rows:
-            return spark.createDataFrame(rows, "entity_id string, core_degree int")
-        return spark.createDataFrame([], "entity_id string, core_degree int")
+        return local_frame(edges.sparkSession, rows, "entity_id string, core_degree int")
 
     global KCORE_LAST_ROUNDS
     sym = pairs.select(F.col("a").alias("s"), F.col("b").alias("d")).unionByName(

@@ -23,6 +23,8 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from graph_rag_agent_spark.session import local_frame
+
 
 def dense_ids(
     distinct_df: DataFrame,
@@ -54,7 +56,7 @@ def dense_ids(
     for r in counts:
         offsets.append((int(r._pid), acc))
         acc += int(r._cnt)
-    off_df = spark.createDataFrame(offsets, "_pid int, _off bigint")
+    off_df = local_frame(spark, offsets, "_pid int, _off bigint")
     return (
         local.join(F.broadcast(off_df), on="_pid")
         .withColumn(id_col, (F.col("_off") + F.col("_lrn") - 1).cast("bigint"))

@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from graph_rag_agent_spark.config import PAGERANK_DRIVER_THRESHOLD
 from graph_rag_agent_spark.functions.iterative import loop_checkpoint
+from graph_rag_agent_spark.session import local_frame
 
 # which path the last pagerank() call took — observability for tests,
 # same pattern as connected_components.LAST_DISTRIBUTED_ROUNDS
@@ -256,7 +257,7 @@ def _driver_pagerank(
     idx = {v: i for i, v in enumerate(vert_ids)}
     n = len(vert_ids)
     if n == 0:
-        return spark.createDataFrame([], "id string, pagerank double")
+        return local_frame(spark, [], "id string, pagerank double")
 
     tw: dict = {}
     for s, _, w in edge_rows:
@@ -305,7 +306,8 @@ def _driver_pagerank(
         r = new_r
         if tol is not None and delta < tol:
             break
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(v, float(r[i])) for i, v in enumerate(vert_ids)],
         "id string, pagerank double",
     )

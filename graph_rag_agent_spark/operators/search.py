@@ -16,6 +16,8 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from graph_rag_agent_spark.session import local_frame
+
 TOP_CHUNKS = 3
 TOP_COMMUNITIES = 3
 TOP_RELATIONSHIPS = 10
@@ -164,12 +166,9 @@ def seed_hop_distance(
             if not nxt:
                 break
             frontier = nxt
-        spark = projection.sparkSession
-        if best:
-            return spark.createDataFrame(
-                sorted(best.items()), "entity_id string, hops int"
-            )
-        return spark.createDataFrame([], "entity_id string, hops int")
+        return local_frame(
+            projection.sparkSession, sorted(best.items()), "entity_id string, hops int"
+        )
 
     sym = loop_checkpoint(sym)
     dist = loop_checkpoint(dist)
@@ -220,9 +219,7 @@ def sampled_neighborhood(
     frontier = loop_checkpoint(frontier)
     visited = frontier
     spark = projection.sparkSession
-    sampled = spark.createDataFrame(
-        [], "src string, dst string, hop int, weight double"
-    )
+    sampled = local_frame(spark, [], "src string, dst string, hop int, weight double")
     w = Window.partitionBy("src").orderBy(F.desc("weight"), F.asc("dst"))
     for k in range(1, hops + 1):
         cand = sym.join(

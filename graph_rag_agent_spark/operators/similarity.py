@@ -13,6 +13,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
+from graph_rag_agent_spark.session import local_frame
+
 
 def _dot(a: F.Column, b: F.Column) -> F.Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
@@ -200,9 +202,7 @@ def ivf_topk(
         .collect()
     )
     if not sample:
-        return embeddings.sparkSession.createDataFrame(
-            [], "vec_id string, score double"
-        )
+        return local_frame(embeddings.sparkSession, [], "vec_id string, score double")
     mat = np.array([r.emb for r in sample], dtype=np.float64)
     centroids = _kmeans_centroids(mat, n_lists, seed)
     qv = np.asarray(query_vec, dtype=np.float64)
@@ -482,8 +482,8 @@ def semantic_dedup(
     jaccard/substring dedup."""
     assigned = _semantic_assign(embeddings, n_clusters, id_col, vec_col)
     if assigned is None:
-        return embeddings.sparkSession.createDataFrame(
-            [], "vec_id long, cluster_id long, keep boolean"
+        return local_frame(
+            embeddings.sparkSession, [], "vec_id long, cluster_id long, keep boolean"
         )
 
     def per_cluster(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -543,8 +543,8 @@ def semantic_dedup_blocked(
     any corpus size. → (vec_id long, cluster_id long, keep boolean)."""
     assigned = _semantic_assign(embeddings, n_clusters, id_col, vec_col)
     if assigned is None:
-        return embeddings.sparkSession.createDataFrame(
-            [], "vec_id long, cluster_id long, keep boolean"
+        return local_frame(
+            embeddings.sparkSession, [], "vec_id long, cluster_id long, keep boolean"
         )
     if n_blocks is None:
         mx = (

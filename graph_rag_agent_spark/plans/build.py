@@ -62,6 +62,7 @@ from graph_rag_agent_spark.operators.parsing import (
     parse_records,
     relationships_from_records,
 )
+from graph_rag_agent_spark.session import local_frame
 from graph_rag_agent_spark.sources.catalog import TableCatalog
 
 # table -> the build_metrics stage that materializes it
@@ -262,8 +263,9 @@ class BuildPipeline:
 
     # -- lineage -----------------------------------------------------------
     def flush_metrics(self) -> None:
-        mdf = self.spark.createDataFrame(
-            self._metrics, "stage string, row_count bigint, duration_ms bigint, run_id string"
+        mdf = local_frame(
+            self.spark, self._metrics,
+            "stage string, row_count bigint, duration_ms bigint, run_id string",
         ).withColumn("recorded_at", F.current_timestamp())
         self.catalog.write(mdf, "build_metrics", mode="append" if self.catalog.exists("build_metrics") else "overwrite")
         self._metrics = []

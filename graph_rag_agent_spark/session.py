@@ -1,4 +1,4 @@
-"""SparkSession factory.
+"""SparkSession factory, and the driver-rows → DataFrame helper.
 
 Local-mode defaults sized from the host (``SPARK_GRAFT_CPUS`` cores, a
 driver heap derived from the memory actually available) but every setting
@@ -9,9 +9,17 @@ cluster), UTC timezone pinned so DuckDB-oracle comparisons are stable.
 
 from __future__ import annotations
 
+import logging
 import os
+from typing import Iterable, Sequence
 
-from pyspark.sql import SparkSession
+import pandas as pd
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
+
+log = logging.getLogger(__name__)
 
 # per-core allowance left outside the heap for the Python workers (pandas +
 # Arrow batches) and the JVM's own off-heap (netty, codegen, metaspace)
@@ -91,3 +99,31 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence] | pd.DataFrame, ddl: str
+) -> DataFrame:
+    """Driver-side rows (tuples in ``ddl`` column order, or a pandas frame
+    with the ``ddl`` columns) → DataFrame.
+
+    ``spark.createDataFrame(<list>, ddl)`` plans as ``parallelize`` plus a
+    PythonRDD re-pickle map, which runs under a different worker key than
+    the ``mapInPandas`` stages and so starts a second ``pyspark.daemon``
+    with its own workers. The rows are built into a typed ``pyarrow.Table``
+    instead, which plans as a ``LocalTableScan`` with no Python worker. In
+    tuples ``None`` stays null and ``NaN`` stays NaN; a pandas frame
+    converts as pandas does, reading NaN as null."""
+    schema = StructType.fromDDL(ddl)
+    arrow_schema = to_arrow_schema(schema)
+    if isinstance(rows, pd.DataFrame):
+        table = pa.Table.from_pandas(rows, schema=arrow_schema, preserve_index=False)
+    else:
+        rows = list(rows)
+        columns = zip(*rows) if rows else [()] * len(arrow_schema)
+        table = pa.Table.from_arrays(
+            [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+            schema=arrow_schema,
+        )
+    log.info("local_frame: %d rows, Arrow LocalTableScan", table.num_rows)
+    return spark.createDataFrame(table, schema)

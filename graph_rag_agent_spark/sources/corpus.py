@@ -23,6 +23,8 @@ from typing import Dict, List
 
 import pandas as pd
 
+from graph_rag_agent_spark.session import local_frame
+
 CORPUS_COLUMNS = ["repo", "path", "commit", "lang", "content"]
 
 # base entity names + near-duplicate variants (levenshtein(lower) < 3)
@@ -143,7 +145,7 @@ def generate_corpus_pdf(n_rows: int, seed: int = 42) -> pd.DataFrame:
 
 
 def generate_corpus(spark, n_rows: int, seed: int = 42, partitions: int = 32):
-    """Corpus as a Spark DataFrame (Arrow-path createDataFrame)."""
+    """Corpus as a Spark DataFrame (a driver frame, see session.local_frame)."""
     pdf = generate_corpus_pdf(n_rows, seed)
     schema = "repo string, path string, commit string, lang string, content string"
-    return spark.createDataFrame(pdf, schema=schema).repartition(partitions, "repo", "path")
+    return local_frame(spark, pdf, schema).repartition(partitions, "repo", "path")
