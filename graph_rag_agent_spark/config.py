@@ -70,21 +70,20 @@ COMMUNITY_GAMMA = 1.0          # Leiden resolution (reference gds.leiden gamma)
 # reference's gds.leiden is likewise in-JVM single-machine); above it, the
 # distributed weighted-LPA + contraction approximation runs
 COMMUNITY_DRIVER_THRESHOLD = 2_000_000
+SLLPA_DRIVER_THRESHOLD = 50_000  # ≤ this many edges and vertices → driver SLLPA sweeps
 
 # ---- connected components -----------------------------------------------------
 CC_MAX_ITERATIONS = 50    # safety bound; similarity clusters have tiny diameter
 CC_CHECKPOINT_EVERY = 3   # localCheckpoint cadence to cut lineage
-CC_DRIVER_THRESHOLD = 1_000_000  # ≤ this many edges → driver union-find (one job)
 # ≤ this many entities → whole canonical-map computation on the driver
 # (shared numpy/union-find kernels; the GDS-in-memory analogue). Above it,
 # the distributed blocked-join + DataFrame-CC path runs.
 CANON_DRIVER_THRESHOLD = 200_000
 
-# ---- pagerank -----------------------------------------------------------------
-# ≤ this many edges → driver numpy power iteration (one job instead of
-# ~2 actions per damped iteration); above it, the distributed two-shuffle
-# loop runs. Same size-adaptive pattern as CC_DRIVER_THRESHOLD.
-PAGERANK_DRIVER_THRESHOLD = 1_000_000
+# ---- driver graph kernels -----------------------------------------------------
+# ≤ this many edges (and vertices) → CC, PageRank, hop BFS and k-core run as
+# one driver kernel over the collect_if_fits table; above it, distributed loops
+DRIVER_MAX_EDGES = 1_000_000
 
 # ---- misc ---------------------------------------------------------------------
 SEED = 42

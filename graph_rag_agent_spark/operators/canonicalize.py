@@ -34,6 +34,7 @@ from typing import Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window, functions as F
 
 from graph_rag_agent_spark.config import (
@@ -57,7 +58,7 @@ from graph_rag_agent_spark.functions.similarity_kernel import (
     pairs_for_block,
 )
 from graph_rag_agent_spark.operators.connected_components import connected_components
-from graph_rag_agent_spark.session import local_frame
+from graph_rag_agent_spark.session import collect_if_fits, local_frame
 
 # Spark-side normalized name — MUST mirror functions/blocking.normalize_name
 _NORMALIZE_PATTERN = r"[^0-9a-z一-鿿]+"
@@ -394,19 +395,14 @@ def canonicalize(
     entity_disambiguation.py:158-276), run as one Arrow-batched call per
     group in the distributed path; None = the deterministic rules."""
     spark = nodes.sparkSession
-    # counts-first fit probe: decide driver-vs-distributed from a COUNT of a
-    # limited projection, and collect rows only when they actually fit. The
-    # previous take(T+1) form materialized 200k embedding Rows (hundreds of
-    # MB of Python heap) on the distributed path just to learn "too big".
-    emb_proj = embeddings.select("entity_id", "embedding")
-    fits = (
-        emb_proj.limit(driver_threshold_entities + 1).count()
-        <= driver_threshold_entities
+    emb = collect_if_fits(
+        embeddings.select("entity_id", "embedding"),
+        driver_threshold_entities,
+        "canonicalize embeddings",
     )
-    if fits:
-        emb_rows = emb_proj.collect()
+    if emb is not None:
         return _canonicalize_driver(
-            spark, nodes, edges, mentions, emb_rows, cutoff, topk,
+            spark, nodes, edges, mentions, emb, cutoff, topk,
             max_edit_distance, adjudicator, resolver,
         )
 
@@ -488,7 +484,7 @@ def _canonicalize_driver(
     nodes: DataFrame,
     edges: DataFrame,
     mentions: DataFrame,
-    emb_rows,
+    emb: pa.Table,
     cutoff: float,
     topk: float,
     max_edit_distance: int,
@@ -498,9 +494,9 @@ def _canonicalize_driver(
     """Driver fast path: similarity pairs + WCC + duplicate groups + map
     composition via the shared kernels; degrees and the final application
     stay distributed (the edge table is never collected)."""
-    ids = [r.entity_id for r in emb_rows]
+    ids = emb.column("entity_id").to_pylist()
     embs = (
-        np.array([r.embedding for r in emb_rows], dtype=np.float64)
+        np.array(emb.column("embedding").to_pylist(), dtype=np.float64)
         if ids else np.zeros((0, 1), np.float64)
     )
     pairs = pairs_all(ids, embs, cutoff=cutoff, topk=topk)

@@ -40,9 +40,10 @@ from graph_rag_agent_spark.config import (
     COMMUNITY_MAX_ITER,
     COMMUNITY_MAX_LEVELS,
     COMMUNITY_TOP_SUMMARIES,
+    SLLPA_DRIVER_THRESHOLD,
 )
 from graph_rag_agent_spark.functions.iterative import loop_checkpoint
-from graph_rag_agent_spark.session import local_frame
+from graph_rag_agent_spark.session import collect_if_fits, local_frame
 
 
 def weighted_projection(edges: DataFrame) -> DataFrame:
@@ -316,17 +317,12 @@ def detect_communities(
     wedges = weighted_projection(edges).transform(loop_checkpoint)
 
     if method != "lpa":
-        # fit probe with CHEAP COUNTS (limit(T+1).count() scans ≤ T+1 rows
-        # and materializes nothing on the driver — the round-2 advisory:
-        # take(T+1) pulled up to ~4M Row objects of Python heap even when
-        # the graph did NOT fit); edge AND vertex set must both fit — a
-        # graph can have few edges but a huge isolated-node population
+        # edge AND vertex set must both fit — a graph can have few edges
+        # but a huge isolated-node population
         t = driver_threshold_edges
-        fits = (
-            wedges.limit(t + 1).count() <= t
-            and verts.limit(t + 1).count() <= t
-        )
-        if method == "leiden" and not fits:
+        e_tab = collect_if_fits(wedges.select("s", "d", "weight"), t, "leiden edges")
+        v_tab = None if e_tab is None else collect_if_fits(verts, t, "leiden vertices")
+        if method == "leiden" and v_tab is None:
             # forcing the driver kernel on a graph the probe says does NOT
             # fit would collect the whole projected graph onto the driver
             # (r4 judge flag) — refuse instead of OOMing at 10^9 edges
@@ -337,12 +333,11 @@ def detect_communities(
                 "distributed path, or raise driver_threshold_edges if the "
                 "driver genuinely has the memory."
             )
-        if fits:
+        if v_tab is not None:
             from graph_rag_agent_spark.functions.leiden_kernel import leiden_levels
 
-            # collect only once the graph is KNOWN to fit
-            edge_list = [(r.s, r.d, float(r.weight)) for r in wedges.collect()]
-            node_ids = [r.id for r in verts.collect()]
+            edge_list = [(s, d, float(w)) for s, d, w in zip(*e_tab.to_pydict().values())]
+            node_ids = v_tab.column("id").to_pylist()
             levels = leiden_levels(
                 node_ids, edge_list, gamma=gamma,
                 max_levels=max_levels, max_sweeps=max_iter,
@@ -522,7 +517,7 @@ def overlapping_label_propagation(
     wedges: DataFrame,
     max_iter: int = COMMUNITY_MAX_ITER,
     min_association: float = 0.3,
-    driver_threshold: int = 50_000,
+    driver_threshold: int = SLLPA_DRIVER_THRESHOLD,
 ) -> DataFrame:
     """G4: SLLPA-style OVERLAPPING communities (reference
     community/detector/sllpa.py:10-89, gds.sllpa with
@@ -532,27 +527,21 @@ def overlapping_label_propagation(
     sweeps a node belongs to every label holding ≥ min_association of its
     memory. → (id, label, strength) — possibly multiple rows per node.
 
-    SIZE-ADAPTIVE (round 6, the CC/canonicalize counts-first pattern):
-    below `driver_threshold` edges+vertices the sweeps run in the shared
-    pure-Python kernel — each distributed sweep is 1 materialization + 2
+    SIZE-ADAPTIVE (``collect_if_fits``, the CC/canonicalize gate): when
+    edges and vertices each fit in `driver_threshold` rows the sweeps run
+    in the shared pure-Python kernel — each distributed sweep is 1 materialization + 2
     window shuffles of a graph that fits in one hand, all scheduler
     latency. The distributed loop below is unchanged for real graphs."""
     spark = vertices.sparkSession
-    e_probe = wedges.select("s", "d", "weight").limit(driver_threshold + 1)
-    v_probe = vertices.select("id").limit(driver_threshold + 1)
-    e_rows = e_probe.collect()
-    if len(e_rows) <= driver_threshold:
-        v_rows = v_probe.collect()
-        if len(v_rows) <= driver_threshold:
-            rows = _sllpa_driver_kernel(
-                [r["id"] for r in v_rows],
-                [(r["s"], r["d"], r["weight"]) for r in e_rows],
-                max_iter,
-                min_association,
-            )
-            return local_frame(
-                spark, rows, "id string, label string, strength double"
-            )
+    t = driver_threshold
+    e_tab = collect_if_fits(wedges.select("s", "d", "weight"), t, "sllpa edges")
+    v_tab = None if e_tab is None else collect_if_fits(vertices.select("id"), t, "sllpa vertices")
+    if v_tab is not None:
+        rows = _sllpa_driver_kernel(
+            v_tab.column("id").to_pylist(), list(zip(*e_tab.to_pydict().values())),
+            max_iter, min_association,
+        )
+        return local_frame(spark, rows, "id string, label string, strength double")
     sym = (
         wedges.select(F.col("s").alias("a"), F.col("d").alias("b"), "weight")
         .unionByName(wedges.select(F.col("d").alias("a"), F.col("s").alias("b"), "weight"))

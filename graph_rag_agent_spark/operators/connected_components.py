@@ -29,11 +29,12 @@ Scale notes:
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
-from graph_rag_agent_spark.config import CC_DRIVER_THRESHOLD, CC_MAX_ITERATIONS
+from graph_rag_agent_spark.config import CC_MAX_ITERATIONS, DRIVER_MAX_EDGES
 from graph_rag_agent_spark.functions.iterative import loop_checkpoint
-from graph_rag_agent_spark.session import local_frame
+from graph_rag_agent_spark.session import collect_if_fits, local_frame
 
 
 def connected_components(
@@ -43,27 +44,25 @@ def connected_components(
     src_col: str = "src",
     dst_col: str = "dst",
     max_iterations: int = CC_MAX_ITERATIONS,
-    driver_threshold: int = CC_DRIVER_THRESHOLD,
+    driver_threshold: int = DRIVER_MAX_EDGES,
 ) -> DataFrame:
     """→ (id, component) with component = min reachable vertex id.
 
-    Size-adaptive: below `driver_threshold` edges the component graph is
-    collected and solved with a union-find on the driver (one job instead
-    of ~3 per iteration — near-duplicate pair graphs are tiny relative to
-    the corpus, exactly like GDS solves WCC in memory); above it, the
+    Size-adaptive: ≤ `driver_threshold` edges (``collect_if_fits``) are
+    solved with a union-find on the driver (one job instead of ~3 per
+    iteration — near-duplicate pair graphs are tiny relative to the
+    corpus, exactly like GDS solves WCC in memory); above it, the
     distributed min-label-propagation loop runs. Both produce identical
     labels (min vertex id per component)."""
-    # one job decides the path AND fetches the edges when small: take(N+1)
-    # either proves the edge set exceeds the threshold or returns it whole
-    sample = edges.select(src_col, dst_col).take(driver_threshold + 1)
-    if len(sample) <= driver_threshold:
-        return _driver_union_find(vertices, sample, vertex_col, src_col, dst_col)
+    table = collect_if_fits(
+        edges.select(src_col, dst_col), driver_threshold, "connected_components edges"
+    )
+    if table is not None:
+        return _driver_union_find(vertices, table, vertex_col)
     return _distributed_cc(vertices, edges, vertex_col, src_col, dst_col, max_iterations)
 
 
-def _driver_union_find(
-    vertices: DataFrame, edge_rows, vertex_col: str, src_col: str, dst_col: str
-) -> DataFrame:
+def _driver_union_find(vertices: DataFrame, edges: pa.Table, vertex_col: str) -> DataFrame:
     parent: dict = {}
 
     def find(x: str) -> str:
@@ -73,8 +72,8 @@ def _driver_union_find(
             x = parent[x]
         return x
 
-    for row in edge_rows:
-        ra, rb = find(row[src_col]), find(row[dst_col])
+    for a, b in zip(edges.column(0).to_pylist(), edges.column(1).to_pylist()):
+        ra, rb = find(a), find(b)
         if ra != rb:
             if rb < ra:
                 ra, rb = rb, ra

@@ -37,7 +37,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from graph_rag_agent_spark.session import local_frame
+from graph_rag_agent_spark.config import DRIVER_MAX_EDGES
+from graph_rag_agent_spark.session import collect_if_fits, local_frame
 
 
 def _undirected(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
@@ -323,7 +324,7 @@ def k_core(
     src_col: str = "subj",
     dst_col: str = "obj",
     max_rounds: int = 8,
-    driver_threshold: int = 1_000_000,
+    driver_threshold: int = DRIVER_MAX_EDGES,
 ) -> DataFrame:
     """→ (entity_id, core_degree): the k-core of the undirected distinct-pair
     graph — the maximal subgraph where every vertex keeps degree ≥ k — with
@@ -334,9 +335,9 @@ def k_core(
     Simultaneous-removal peeling: each round drops every vertex whose
     degree within the surviving subgraph is < k; the fixpoint is the
     unique k-core regardless of removal order. Size-adaptive (the
-    CC/pagerank pattern): under ``driver_threshold`` undirected pairs
-    (counts-first probe) an adjacency-dict peel runs on the driver in one
-    job; above it, a distributed loop of one join + one degree
+    CC/pagerank pattern): ≤ ``driver_threshold`` undirected pairs
+    (``collect_if_fits``) are peeled as an adjacency dict on the driver;
+    above it, a distributed loop of one join + one degree
     aggregation per round (``loop_checkpoint`` each, convergence checked
     with a cheap count — rounds are bounded by ``max_rounds``, the form
     the SQL oracle unrolls; the gated data converges well inside it,
@@ -347,11 +348,12 @@ def k_core(
 
     pairs = _undirected(edges, src_col, dst_col)
 
-    if pairs.limit(driver_threshold + 1).count() <= driver_threshold:
+    table = collect_if_fits(pairs, driver_threshold, "k_core pairs")
+    if table is not None:
         adj: dict = {}
-        for r in pairs.collect():
-            adj.setdefault(r["a"], set()).add(r["b"])
-            adj.setdefault(r["b"], set()).add(r["a"])
+        for a, b in zip(table.column("a").to_pylist(), table.column("b").to_pylist()):
+            adj.setdefault(a, set()).add(b)
+            adj.setdefault(b, set()).add(a)
         alive = set(adj)
         while True:
             doomed = [v for v in alive if sum(1 for u in adj[v] if u in alive) < k]

@@ -43,9 +43,9 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, functions as F
 
-from graph_rag_agent_spark.config import PAGERANK_DRIVER_THRESHOLD
+from graph_rag_agent_spark.config import DRIVER_MAX_EDGES
 from graph_rag_agent_spark.functions.iterative import loop_checkpoint
-from graph_rag_agent_spark.session import local_frame
+from graph_rag_agent_spark.session import collect_if_fits, local_frame
 
 # which path the last pagerank() call took — observability for tests,
 # same pattern as connected_components.LAST_DISTRIBUTED_ROUNDS
@@ -69,7 +69,7 @@ def pagerank(
     weight_col: Optional[str] = None,
     reset: Optional[DataFrame] = None,
     initial_ranks: Optional[DataFrame] = None,
-    driver_threshold: int = PAGERANK_DRIVER_THRESHOLD,
+    driver_threshold: int = DRIVER_MAX_EDGES,
 ) -> DataFrame:
     """→ (id, pagerank) over the DIRECTED graph ``edges``; symmetrize first
     for an undirected projection (see ``pagerank_projection``).
@@ -89,13 +89,14 @@ def pagerank(
     Missing vertices start at their teleport mass; the vector is
     renormalized to total mass 1.
 
-    Size-adaptive (the CC/canonicalize pattern): when both the edge and
-    vertex tables fit under ``driver_threshold`` rows the whole power
-    iteration runs as one numpy kernel on the driver (one probe job per
-    table instead of ~2 actions per damped iteration — at entity-graph
-    sizes the distributed loop is pure scheduler overhead); above it the
-    distributed two-shuffle-per-iteration loop runs. Both paths implement
-    the identical recurrence (equality pytest-gated)."""
+    Size-adaptive (the CC/canonicalize pattern): when ``collect_if_fits``
+    fetches the edge, vertex and any seed / initial-rank tables within
+    ``driver_threshold`` rows each, the whole power iteration runs as one
+    numpy kernel on the driver (one fetch job per table instead of ~2
+    actions per damped iteration — at entity-graph sizes the distributed
+    loop is pure scheduler overhead); otherwise the distributed
+    two-shuffle-per-iteration loop runs. Both paths implement the
+    identical recurrence (equality pytest-gated)."""
     global LAST_PATH
     verts = vertices.select(F.col(vertex_col).alias("id")).distinct()
     w = (
@@ -107,35 +108,20 @@ def pagerank(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst"), w.alias("w")
     )
 
-    # counts-first fit probe (the canonicalize pattern): decide with
-    # bounded limit().count() jobs, collect rows only when fitting — the
-    # non-fit path never materializes driver_threshold rows on the driver
-    if (
-        g.limit(driver_threshold + 1).count() <= driver_threshold
-        and verts.limit(driver_threshold + 1).count() <= driver_threshold
-    ):
-        seed_rows = None
-        if reset is not None:
-            seed_rows = [
-                r[0] for r in reset.select(reset.columns[0]).distinct().collect()
-            ]
-        init_map = None
-        if initial_ranks is not None:
-            ic = initial_ranks.columns
-            init_map = {
-                r[0]: float(r[1])
-                for r in initial_ranks.select(ic[0], ic[1]).collect()
-            }
+    probes = {"edges": g, "vertices": verts}
+    if reset is not None:
+        probes["seeds"] = reset.select(reset.columns[0]).distinct()
+    if initial_ranks is not None:
+        probes["initial ranks"] = initial_ranks.select(*initial_ranks.columns[:2])
+    tables = {}
+    for what, df in probes.items():
+        tables[what] = collect_if_fits(df, driver_threshold, f"pagerank {what}")
+        if tables[what] is None:
+            break
+    else:
         LAST_PATH = "driver"
         return _driver_pagerank(
-            vertices.sparkSession,
-            [r["id"] for r in verts.collect()],
-            [(r["src"], r["dst"], r["w"]) for r in g.collect()],
-            seed_rows,
-            init_map,
-            damping=damping,
-            n_iter=n_iter,
-            tol=tol,
+            vertices.sparkSession, tables, damping=damping, n_iter=n_iter, tol=tol
         )
     LAST_PATH = "distributed"
 
@@ -168,12 +154,9 @@ def pagerank(
     ).transform(loop_checkpoint)
 
     # dangling vertices: in the teleport term every iteration; detect once
-    has_dangling = (
-        base.join(outw.withColumnRenamed("src", "id"), on="id", how="left_anti")
-        .limit(1)
-        .count()
-        > 0
-    )
+    has_dangling = not base.join(
+        outw.withColumnRenamed("src", "id"), on="id", how="left_anti"
+    ).isEmpty()
 
     if initial_ranks is not None:
         ic = initial_ranks.columns
@@ -238,10 +221,7 @@ def pagerank(
 
 def _driver_pagerank(
     spark,
-    vert_ids,
-    edge_rows,
-    seed_ids,
-    init_map,
+    tables: dict,
     *,
     damping: float,
     n_iter: int,
@@ -254,6 +234,13 @@ def _driver_pagerank(
     their mass re-entering through the teleport vector."""
     import numpy as np
 
+    vert_ids = tables["vertices"].column(0).to_pylist()
+    edge_rows = list(zip(*tables["edges"].to_pydict().values()))
+    seed_ids = tables["seeds"].column(0).to_pylist() if "seeds" in tables else None
+    init = tables.get("initial ranks")
+    init_map = None if init is None else dict(
+        zip(init.column(0).to_pylist(), map(float, init.column(1).to_pylist()))
+    )
     idx = {v: i for i, v in enumerate(vert_ids)}
     n = len(vert_ids)
     if n == 0:

@@ -16,7 +16,8 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from graph_rag_agent_spark.session import local_frame
+from graph_rag_agent_spark.config import DRIVER_MAX_EDGES
+from graph_rag_agent_spark.session import collect_if_fits, local_frame
 
 TOP_CHUNKS = 3
 TOP_COMMUNITIES = 3
@@ -119,7 +120,7 @@ def seed_hop_distance(
     projection: DataFrame,
     seeds: DataFrame,
     max_hops: int = 3,
-    driver_threshold: int = 1_000_000,
+    driver_threshold: int = DRIVER_MAX_EDGES,
 ) -> DataFrame:
     """→ (entity_id, hops): minimum hop count from ANY seed over the
     undirected weighted projection ``(s, d, weight)``, bounded at
@@ -134,9 +135,9 @@ def seed_hop_distance(
     round one key-partitioned join + one min-aggregation over the distance
     table, ``loop_checkpoint`` per round (stats-compounding fix). Bounded
     rounds means bounded shuffles at any graph size — hop limits in
-    retrieval are small constants. Size-adaptive like CC/pagerank: under
-    ``driver_threshold`` edges (counts-first probe) the BFS runs as one
-    driver kernel; equality across paths is pytest-gated."""
+    retrieval are small constants. Size-adaptive like CC/pagerank: with
+    edges and seeds each within ``driver_threshold`` rows (``collect_if_fits``)
+    the BFS runs as one driver kernel; equality across paths is pytest-gated."""
     from graph_rag_agent_spark.functions.iterative import loop_checkpoint
 
     sym = projection.select(
@@ -146,15 +147,16 @@ def seed_hop_distance(
         F.col(seeds.columns[0]).alias("id"), F.lit(0).alias("hops")
     ).distinct()
 
-    if (
-        projection.limit(driver_threshold + 1).count() <= driver_threshold
-    ):
-        # driver BFS: adjacency dict + frontier expansion, one job to fetch
+    t = driver_threshold
+    e_tab = collect_if_fits(projection.select("s", "d"), t, "hop BFS edges")
+    s_tab = None if e_tab is None else collect_if_fits(dist.select("id"), t, "hop BFS seeds")
+    if s_tab is not None:
+        # driver BFS: adjacency dict + frontier expansion
         adj: dict = {}
-        for r in projection.select("s", "d").collect():
-            adj.setdefault(r["s"], []).append(r["d"])
-            adj.setdefault(r["d"], []).append(r["s"])
-        best = {r["id"]: 0 for r in dist.collect()}
+        for s, d in zip(e_tab.column("s").to_pylist(), e_tab.column("d").to_pylist()):
+            adj.setdefault(s, []).append(d)
+            adj.setdefault(d, []).append(s)
+        best = dict.fromkeys(s_tab.column("id").to_pylist(), 0)
         frontier = list(best)
         for h in range(1, max_hops + 1):
             nxt = []

@@ -1,4 +1,5 @@
-"""SparkSession factory, and the driver-rows → DataFrame helper.
+"""SparkSession factory, and the driver-rows helpers in (``local_frame``)
+and out (``collect_if_fits``).
 
 Local-mode defaults sized from the host (``SPARK_GRAFT_CPUS`` cores, a
 driver heap derived from the memory actually available) but every setting
@@ -127,3 +128,22 @@ def local_frame(
         )
     log.info("local_frame: %d rows, Arrow LocalTableScan", table.num_rows)
     return spark.createDataFrame(table, schema)
+
+
+def collect_if_fits(df: DataFrame, max_rows: int, what: str) -> pa.Table | None:
+    """``df``'s rows as an Arrow table when there are at most ``max_rows``,
+    else None: the size gate choosing a graph kernel's driver or
+    distributed path.
+
+    One ``limit(max_rows + 1).toArrow()`` job measures and fetches at once.
+    It holds at most ``max_rows + 1`` rows, as Arrow buffers rather than
+    Python ``Row`` objects, so learning that a graph does not fit costs no
+    more driver memory than the driver kernel that runs when it does. A
+    0-row table is falsy: test the result with ``is None``."""
+    table = df.limit(max_rows + 1).toArrow()
+    fits = table.num_rows <= max_rows
+    log.info(
+        "collect_if_fits: %s %d rows (max %d) -> %s",
+        what, table.num_rows, max_rows, "driver" if fits else "distributed",
+    )
+    return table if fits else None
