@@ -1,8 +1,9 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 entry(spark)  — flagship: full KG build (chunk → extract → parse →
-                canonicalize) over sf0.001 documents, returns the canonical
-                (subj, pred, obj) edge table.
+                canonicalize, the plans.build stages) over sf0.001
+                documents, returns the canonical (subj, pred, obj) edge
+                table.
 queries()     — one entry per implemented operator family (SURVEY.md §2 +
                 the training-data ops); each callable (spark, sf_dir) → DF.
 oracle_sql()  — DuckDB-equivalent ANSI SQL per query where SQL-expressible;
@@ -13,12 +14,12 @@ oracle_sql()  — DuckDB-equivalent ANSI SQL per query where SQL-expressible;
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from graph_rag_agent_spark.config import PipelineConfig
 from graph_rag_agent_spark.functions.extractor import KeywordCooccurrenceExtractor
-from graph_rag_agent_spark.operators.canonicalize import canonicalize
-from graph_rag_agent_spark.operators.chunker import chunk_documents
 from graph_rag_agent_spark.operators.dedup import (
     dedup_groups,
     duplicate_spans,
@@ -28,17 +29,6 @@ from graph_rag_agent_spark.operators.dedup import (
     simhash_near_duplicates,
     simhash_signatures,
     strip_duplicate_spans,
-)
-from graph_rag_agent_spark.operators.embeddings import embed_entities
-from graph_rag_agent_spark.operators.extraction import extract_chunks
-from graph_rag_agent_spark.operators.parsing import (
-    build_graph_tables,
-    derive_mentions,
-    occurrences_from_records,
-    parse_entities,
-    parse_records,
-    parse_relationships,
-    relationships_from_records,
 )
 from graph_rag_agent_spark.operators.curation import (
     PII_PATTERNS,
@@ -65,6 +55,13 @@ from graph_rag_agent_spark.operators.text_analysis import (
     repetition_scores,
     token_counts,
 )
+from graph_rag_agent_spark.plans.build import (
+    canonical_stage,
+    chunk_stage,
+    extract_stage,
+    graph_stage,
+)
+from graph_rag_agent_spark.session import local_frame
 
 SF_DEFAULT = "/root/testdata/sf0.001"
 
@@ -101,35 +98,9 @@ def _crafted_corpus(spark: SparkSession) -> DataFrame:
     rows = [
         ("crafted", f"doc/{i}", f"commit{i}", "en", text) for i, text in CRAFTED_DOCS
     ]
-    return spark.createDataFrame(
-        rows, "repo string, path string, commit string, lang string, content string"
+    return local_frame(
+        spark, rows, "repo string, path string, commit string, lang string, content string"
     )
-
-
-def _crafted_tables(spark: SparkSession):
-    def make():
-        corpus = _crafted_corpus(spark)
-        chunks = chunk_documents(corpus)
-        results = extract_chunks(
-            chunks, extractor=KeywordCooccurrenceExtractor()
-        ).localCheckpoint(eager=True)
-        nodes, edges, mentions = build_graph_tables(results)
-        return (
-            nodes.localCheckpoint(eager=True),
-            edges.localCheckpoint(eager=True),
-            mentions,
-        )
-
-    return _memo(spark, "crafted_tables", make)
-
-
-def _crafted_canonical(spark: SparkSession):
-    def make():
-        nodes, edges, mentions = _crafted_tables(spark)
-        emb = embed_entities(nodes)
-        return canonicalize(nodes, edges, mentions, emb)
-
-    return _memo(spark, "crafted_canonical", make)
 
 
 def _read_spread(spark: SparkSession, sf_dir: str, name: str, key: str) -> DataFrame:
@@ -185,10 +156,10 @@ def _docs_as_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # per-session memo of deterministic intermediates: many queries() share the
-# chunk→extract prefix (and the crafted canonicalization); materializing it
-# once per session is exactly what the production build plan does with its
-# stage tables, and keeps the driver harness from re-running the pipeline
-# once per query
+# KG stage frames of the sf corpus (and of the crafted fixture);
+# materializing them once per session is what the production build plan
+# does with its stage tables, and keeps the driver harness from re-running
+# the pipeline once per query
 _MEMO: dict = {}
 
 
@@ -199,27 +170,65 @@ def _memo(spark: SparkSession, key: str, make):
     return _MEMO[full_key]
 
 
-def _sf_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
+# the KG frames with several consumers across queries(), pinned once per
+# session; mentions_raw is a projection of the occurrences checkpoint, and
+# the extraction results pipeline straight into the records checkpoint
+_KG_CHECKPOINTS = frozenset(
+    {"chunks", "records", "occurrences", "edges_raw", "nodes_raw", "entity_embeddings"}
+)
+
+
+def _record(tables: dict, name: str, df: DataFrame) -> DataFrame:
+    """The entry file's plans.build materializer: checkpoint the shared
+    frames and keep every named stage frame in `tables`."""
+    if name in _KG_CHECKPOINTS:
+        df = df.localCheckpoint(eager=True)
+    tables[name] = df
+    return df
+
+
+def _kg(spark: SparkSession, key: str, corpus) -> dict:
+    """One corpus's KG stage frames by name, built once per session through
+    plans.build's chunk → extract → graph stages with the keyword
+    extractor. `corpus` is (spark) → corpus frame. ``entity_embeddings``
+    joins the dict once _canonical has run."""
     def make():
-        corpus = _docs_as_corpus(spark, sf_dir)
-        return chunk_documents(corpus).localCheckpoint(eager=True)
+        tables: dict = {}
+        cfg, record = PipelineConfig(), partial(_record, tables)
+        chunks = chunk_stage(corpus(spark), cfg, record)
+        graph_stage(extract_stage(chunks, cfg, KeywordCooccurrenceExtractor()), record)
+        return tables
 
-    return _memo(spark, f"chunks:{sf_dir}", make)
+    return _memo(spark, f"kg:{key}", make)
 
 
-def _raw_results(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LAZY extraction over the chunks checkpoint. Single consumer
-    (_sf_records), so the extract pass pipelines straight into the records
-    checkpoint — materializing the bulky wire-text frame separately was one
-    whole extra write+read of it per session (round 6, guide §2.4)."""
-    return extract_chunks(
-        _sf_chunks(spark, sf_dir), extractor=KeywordCooccurrenceExtractor()
-    )
+def _canonical(spark: SparkSession, key: str, corpus):
+    """canonical_stage over _kg's frames → CanonicalizationResult. The
+    result frames are lazy views over the canonical-map rewrite, so edges
+    and mentions — read by the community, rank, search and quality
+    queries — are checkpointed once here; nodes stay lazy."""
+    def make():
+        kg = _kg(spark, key, corpus)
+        res = canonical_stage(
+            kg["nodes_raw"], kg["edges_raw"], kg["mentions_raw"],
+            PipelineConfig(), partial(_record, kg),
+        )
+        return res._replace(
+            edges=res.edges.localCheckpoint(eager=True),
+            mentions=res.mentions.localCheckpoint(eager=True),
+        )
+
+    return _memo(spark, f"canonical:{key}", make)
+
+
+def _sf(spark: SparkSession, sf_dir: str, stage=_kg):
+    """`stage` (_kg or _canonical) over the sf documents corpus."""
+    return stage(spark, sf_dir, lambda s: _docs_as_corpus(s, sf_dir))
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: canonicalized triple table from the sf0.001 documents."""
-    res = _sf_canonical(spark, SF_DEFAULT)
+    res = _sf(spark, SF_DEFAULT, _canonical)
     return res.edges.select("subj", "pred", "obj", "weight", "support")
 
 
@@ -229,20 +238,14 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def _q_kg_triples_raw(spark, sf_dir):
     """Pre-canonicalization distinct triples — SQL-checkable because every
-    sf document fits in one chunk (≤553 chars < chunk window). Derives
-    from the shared _sf_records checkpoint (one regex pass per session)."""
-    from graph_rag_agent_spark.operators.parsing import (
-        relationships_from_records,
-    )
-
-    rels = relationships_from_records(_sf_records(spark, sf_dir))
-    return rels.select("subj", "pred", "obj").distinct()
+    sf document fits in one chunk (≤553 chars < chunk window)."""
+    return _sf(spark, sf_dir)["edges_raw"].select("subj", "pred", "obj").distinct()
 
 
 def _q_kg_entities(spark, sf_dir):
     from graph_rag_agent_spark.operators.parsing import entities_from_records
 
-    ents = entities_from_records(_sf_records(spark, sf_dir))
+    ents = entities_from_records(_sf(spark, sf_dir)["records"])
     return ents.select("entity_id", "entity_type").distinct()
 
 
@@ -257,7 +260,7 @@ def _q_kg_entity_degree(spark, sf_dir):
 
 
 def _q_kg_mention_counts(spark, sf_dir):
-    _, _, mentions = _sf_graph_tables(spark, sf_dir)
+    mentions = _sf(spark, sf_dir)["mentions_raw"]
     return mentions.groupBy("entity_id").agg(
         F.countDistinct("chunk_id").alias("n_chunks")
     )
@@ -270,15 +273,10 @@ def _q_kg_lineage_report(spark, sf_dir):
     twin of the per-stage Observation counters plans/build.py emits
     (reference prints the same per-stage totals from its build timers,
     build_graph.py:334-345)."""
-    chunks = _sf_chunks(spark, sf_dir).select("chunk_id", "doc_id", "repo")
-    # ONE tagged-records scan feeds both the triple and the mention rollups
-    # (parse_relationships + a lazy mentions branch would each re-scan the
-    # wire text — two full parse passes per evaluation); the checkpoint
-    # materializes the slim records frame once, the production analogue of
-    # the parsed-records stage table.
-    records = _sf_records(spark, sf_dir)
-    rels = relationships_from_records(records).select("chunk_id", "subj", "pred", "obj")
-    mentions = derive_mentions(occurrences_from_records(records))
+    kg = _sf(spark, sf_dir)
+    chunks = kg["chunks"].select("chunk_id", "doc_id", "repo")
+    rels = kg["edges_raw"].select("chunk_id", "subj", "pred", "obj")
+    mentions = kg["mentions_raw"]
     base = chunks.groupBy("repo").agg(
         F.countDistinct("doc_id").alias("n_docs"),
         F.countDistinct("chunk_id").alias("n_chunks"),
@@ -314,119 +312,36 @@ def _q_kg_lineage_report(spark, sf_dir):
     )
 
 
-def _sf_records(spark, sf_dir):
-    """Memoized tagged-records frame — the ONLY regex discovery scan in the
-    sf parse phase. Every parse consumer (graph tables, lineage, mention
-    derivations) is a codegen'd split()/groupBy over this checkpoint, so
-    the regex pass runs once per session instead of once per consumer."""
-    def make():
-        return parse_records(_raw_results(spark, sf_dir)).localCheckpoint(
-            eager=True
-        )
-
-    return _memo(spark, f"records:{sf_dir}", make)
-
-
-def _sf_graph_tables(spark, sf_dir):
-    """Raw (pre-canonicalization) nodes/edges/mentions, node+edge frames
-    checkpointed once per session — shared by the canonical chain and the
-    entity-linking queries. All three derive from the _sf_records
-    checkpoint and all three are materialized: mentions feeds rank, the
-    summary chain, mention counts and the manual-edit plan — leaving it
-    lazy re-ran the occurrence distinct per consumer (measured 1-2.5s
-    apiece at sf1.0, vs one ~1s materialization here)."""
-    def make():
-        from graph_rag_agent_spark.operators.parsing import (
-            derive_mentions,
-            derive_nodes,
-            occurrences_from_records,
-            relationships_from_records,
-        )
-
-        records = _sf_records(spark, sf_dir)
-        # edges first, then occurrences DERIVE from the materialized edge
-        # table (one R-record split pass instead of two); occurrences come
-        # back one-row-per-(chunk, entity) from their single fused
-        # aggregation, so mentions is a free PROJECTION of the occurrence
-        # checkpoint — the former derive_mentions dropDuplicates shuffle
-        # re-deduped rows that are already unique (round 6, guide §2.4)
-        edges = relationships_from_records(records).localCheckpoint(eager=True)
-        occ = occurrences_from_records(records, edges=edges).localCheckpoint(
-            eager=True
-        )
-        return (
-            derive_nodes(occ).localCheckpoint(eager=True),
-            edges,
-            occ.select("chunk_id", "entity_id"),
-        )
-
-    return _memo(spark, f"graph_tables:{sf_dir}", make)
-
-
-def _sf_entity_embeddings(spark, sf_dir):
-    """Raw-entity embeddings materialized ONCE: canonicalize's fit probe is
-    a count and the driver path collects afterwards — uncached, each action
-    would re-run the embedding UDF (the production plan materializes the
-    embeddings stage table for the same reason, plans/build.py)."""
-    def make():
-        nodes, _, _ = _sf_graph_tables(spark, sf_dir)
-        return embed_entities(nodes).localCheckpoint(eager=True)
-
-    return _memo(spark, f"entity_embeddings:{sf_dir}", make)
-
-
-def _sf_canonical(spark, sf_dir):
-    def make():
-        nodes, edges, mentions = _sf_graph_tables(spark, sf_dir)
-        emb = _sf_entity_embeddings(spark, sf_dir)
-        res = canonicalize(nodes, edges, mentions, emb)
-        # the RESULT frames are lazy views over the broadcast-map rewrite;
-        # every downstream action (community CC probe, dense ids, rank, the
-        # intra-edge joins) would re-run the EDGE rewrite per action. One
-        # eager checkpoint of res.edges collapses ~6 recomputations to 1 —
-        # the production analogue is the materialized canonical_edges stage
-        # table (plans/build.py). mentions joined the checkpoint club in
-        # round 6: community rank, top-communities weight, the local-search
-        # branches and the quality report each re-ran its rewrite (~0.5s a
-        # pass at sf1.0). nodes stay lazy (single cheap consumer).
-        return res._replace(
-            edges=res.edges.localCheckpoint(eager=True),
-            mentions=res.mentions.localCheckpoint(eager=True),
-        )
-
-    return _memo(spark, f"sf_canonical:{sf_dir}", make)
-
-
 def _q_kg_canonical_triples(spark, sf_dir):
     """Full pipeline incl. canonicalization, DuckDB-oracle-checked end to
     end (the SQL twin reproduces the sha256-trigram embedding, the blocked
     cosine KNN, WCC, the levenshtein merge and the degree disambiguation —
     see _canon_body); exact-parity also gated by tests/test_parity.py."""
-    return _sf_canonical(spark, sf_dir).edges.select("subj", "pred", "obj")
+    return _sf(spark, sf_dir, _canonical).edges.select("subj", "pred", "obj")
 
 
 def _q_kg_similar_pairs(spark, sf_dir):
     """D2: SIMILAR candidate pairs (blocked trigram-cosine KNN) on the
     crafted merge fixture — non-empty, score-checked to 6 decimals."""
-    res = _crafted_canonical(spark)
+    res = _canonical(spark, "crafted", _crafted_corpus)
     return res.similar.select("src", "dst", F.round("score", 6).alias("score"))
 
 
 def _q_kg_wcc(spark, sf_dir):
     """D3: connected components over SIMILAR pairs (min-id labels)."""
-    res = _crafted_canonical(spark)
+    res = _canonical(spark, "crafted", _crafted_corpus)
     return res.wcc.select("entity_id", "component")
 
 
 def _q_kg_merge_map(spark, sf_dir):
     """D4/D6: within-WCC edit-distance duplicate groups → min-id rep."""
-    res = _crafted_canonical(spark)
+    res = _canonical(spark, "crafted", _crafted_corpus)
     return res.merge_map.select("entity_id", "canonical_id")
 
 
 def _q_kg_disambig_map(spark, sf_dir):
     """D10: max-degree disambiguation of surviving WCC co-members."""
-    res = _crafted_canonical(spark)
+    res = _canonical(spark, "crafted", _crafted_corpus)
     return res.disambig_map.select("entity_id", "canonical_id")
 
 
@@ -434,7 +349,7 @@ def _q_kg_canonical_crafted(spark, sf_dir):
     """Full D2-D14 chain on the crafted fixture — canonical triples where
     merges actually rewire edges (unlike the sf corpus, which has no
     near-duplicate names)."""
-    res = _crafted_canonical(spark)
+    res = _canonical(spark, "crafted", _crafted_corpus)
     return res.edges.select("subj", "pred", "obj")
 
 
@@ -443,8 +358,8 @@ def _q_alignment_conflicts(spark, sf_dir):
     crafted fixture has one object-only merged entity → jaccard 0 rows)."""
     from graph_rag_agent_spark.operators.canonicalize import alignment_conflicts
 
-    _, edges, _ = _crafted_tables(spark)
-    res = _crafted_canonical(spark)
+    edges = _kg(spark, "crafted", _crafted_corpus)["edges_raw"]
+    res = _canonical(spark, "crafted", _crafted_corpus)
     # conflicts are judged on PRE-merge outgoing rel types (the reference
     # adjudicates candidate groups before merging, entity_alignment.py:81-123)
     return alignment_conflicts(res.canonical_map, edges).select(
@@ -457,17 +372,9 @@ def _q_top_chunks_for_seeds(spark, sf_dir):
     """Q1 retrieval: seeds = top-5 raw-graph degree entities; chunks ranked
     by distinct seed mentions. Chunk key = sha256 of chunk text (sha1 chunk
     ids are not reproducible in DuckDB 1.0)."""
-    from graph_rag_agent_spark.operators.parsing import (
-        relationships_from_records,
-    )
-
-    chunks = _sf_chunks(spark, sf_dir)
-    _, _, mentions = _sf_graph_tables(spark, sf_dir)
-    triples = (
-        relationships_from_records(_sf_records(spark, sf_dir))
-        .select("subj", "pred", "obj")
-        .distinct()
-    )
+    kg = _sf(spark, sf_dir)
+    chunks, mentions = kg["chunks"], kg["mentions_raw"]
+    triples = kg["edges_raw"].select("subj", "pred", "obj").distinct()
     degree = (
         triples.select(F.col("subj").alias("entity_id"))
         .unionAll(triples.select(F.col("obj").alias("entity_id")))
@@ -495,16 +402,17 @@ def _q_consistency_report(spark, sf_dir):
     """N8: the five graph audits as one aggregated report."""
     from graph_rag_agent_spark.operators.consistency import validation_report
 
-    chunks = _sf_chunks(spark, sf_dir)
-    nodes, edges, mentions = _sf_graph_tables(spark, sf_dir)
-    return validation_report(nodes, edges, mentions, chunks)
+    kg = _sf(spark, sf_dir)
+    return validation_report(
+        kg["nodes_raw"], kg["edges_raw"], kg["mentions_raw"], kg["chunks"]
+    )
 
 
 def _q_kg_graph_projection(spark, sf_dir):
     """G1: undirected weighted projection of the canonical edge table."""
     from graph_rag_agent_spark.operators.communities import weighted_projection
 
-    res = _sf_canonical(spark, sf_dir)
+    res = _sf(spark, sf_dir, _canonical)
     return weighted_projection(res.edges).select("s", "d", "weight")
 
 
@@ -524,9 +432,9 @@ def _q_link_mention(spark, sf_dir):
     oracle-check the rerank stage, not just recall."""
     from graph_rag_agent_spark.operators.entity_linking import link_mention
 
-    nodes, _, _ = _sf_graph_tables(spark, sf_dir)
-    emb = _sf_entity_embeddings(spark, sf_dir)
-    return link_mention(nodes, emb, "tables")
+    _sf(spark, sf_dir, _canonical)  # records entity_embeddings in the _kg dict
+    kg = _sf(spark, sf_dir)
+    return link_mention(kg["nodes_raw"], kg["entity_embeddings"], "tables")
 
 
 def _sf_communities(spark, sf_dir):
@@ -547,7 +455,7 @@ def _sf_communities(spark, sf_dir):
     )
 
     def make():
-        res = _sf_canonical(spark, sf_dir)
+        res = _sf(spark, sf_dir, _canonical)
         wp = weighted_projection(res.edges)
         verts = res.nodes.select(F.col("entity_id").alias("id"))
         cc = connected_components(verts, wp, src_col="s", dst_col="d")
@@ -585,9 +493,9 @@ def _q_graph_quality_report(spark, sf_dir):
     the shared canonical/community CTE chain."""
     from graph_rag_agent_spark.operators.graph_metrics import graph_quality_report
 
-    res = _sf_canonical(spark, sf_dir)
+    res = _sf(spark, sf_dir, _canonical)
     membership, _ = _sf_communities(spark, sf_dir)
-    chunks = _sf_chunks(spark, sf_dir)
+    chunks = _sf(spark, sf_dir)["chunks"]
     rep = graph_quality_report(res.nodes, res.edges, res.mentions, chunks, membership)
     return rep.select("metric", F.round("value", 6).alias("value"))
 
@@ -597,7 +505,7 @@ def _sf_seed_entities(spark, sf_dir):
     SQL twin derives the identical set from canon_triples)."""
     from graph_rag_agent_spark.operators.canonicalize import degree_table
 
-    res = _sf_canonical(spark, sf_dir)
+    res = _sf(spark, sf_dir, _canonical)
     return (
         degree_table(res.edges)
         .orderBy(F.desc("degree"), F.asc("entity_id"))
@@ -614,7 +522,7 @@ def _q_top_communities_for_seeds(spark, sf_dir):
     from graph_rag_agent_spark.operators.search import top_communities_for_seeds
 
     membership, summaries = _sf_communities(spark, sf_dir)
-    res = _sf_canonical(spark, sf_dir)
+    res = _sf(spark, sf_dir, _canonical)
     out = top_communities_for_seeds(
         membership, summaries, res.mentions, _sf_seed_entities(spark, sf_dir)
     )
@@ -635,7 +543,7 @@ def _q_seed_relationships(spark, sf_dir):
     (weight, subj, obj) ordering is fully reproduced."""
     from graph_rag_agent_spark.operators.search import seed_relationships
 
-    res = _sf_canonical(spark, sf_dir)
+    res = _sf(spark, sf_dir, _canonical)
     seeds = _sf_seed_entities(spark, sf_dir)
     inside, outside = seed_relationships(res.edges, seeds)
     pick = lambda df, side: df.select(
@@ -655,7 +563,7 @@ def _q_seed_hop_distance(spark, sf_dir):
     from graph_rag_agent_spark.operators.communities import weighted_projection
     from graph_rag_agent_spark.operators.search import seed_hop_distance
 
-    res = _sf_canonical(spark, sf_dir)
+    res = _sf(spark, sf_dir, _canonical)
     proj = weighted_projection(res.edges)
     return seed_hop_distance(
         proj, _sf_seed_entities(spark, sf_dir), max_hops=_SEED_HOPS
@@ -673,7 +581,7 @@ def _q_seed_neighborhood_sample(spark, sf_dir):
     from graph_rag_agent_spark.operators.communities import weighted_projection
     from graph_rag_agent_spark.operators.search import sampled_neighborhood
 
-    res = _sf_canonical(spark, sf_dir)
+    res = _sf(spark, sf_dir, _canonical)
     proj = weighted_projection(res.edges)
     return sampled_neighborhood(
         proj, _sf_seed_entities(spark, sf_dir), fanout=_NBR_FANOUT, hops=_NBR_HOPS
@@ -694,7 +602,7 @@ def _q_retrieval_eval(spark, sf_dir):
     from graph_rag_agent_spark.operators.communities import weighted_projection
     from graph_rag_agent_spark.operators.retrieval_metrics import retrieval_metrics
 
-    res = _sf_canonical(spark, sf_dir)
+    res = _sf(spark, sf_dir, _canonical)
     proj = weighted_projection(res.edges)
     g = proj.select(F.col("s").alias("src"), F.col("d").alias("dst"), "weight").unionByName(
         proj.select(F.col("d").alias("src"), F.col("s").alias("dst"), "weight")
@@ -854,9 +762,9 @@ def _q_local_search_context(spark, sf_dir):
     array_sort-over-collect_list (no partition-less window)."""
     from graph_rag_agent_spark.operators.search import local_search_context
 
-    res = _sf_canonical(spark, sf_dir)
+    res = _sf(spark, sf_dir, _canonical)
     membership, summaries = _sf_communities(spark, sf_dir)
-    chunks = _sf_chunks(spark, sf_dir)
+    chunks = _sf(spark, sf_dir)["chunks"]
     # mentions feed THREE section branches (chunk freq, community hit,
     # community weight) — served by the canonical memo's mention
     # checkpoint since round 6 (no second materialization here)
@@ -893,9 +801,9 @@ def _q_sllpa_overlap(spark, sf_dir):
     )
 
     nodes = sorted({v for e in _SLLPA_EDGES for v in e})
-    verts = spark.createDataFrame([(v,) for v in nodes], "id string")
-    wedges = spark.createDataFrame(
-        [(s, d, 1.0) for s, d in _SLLPA_EDGES], "s string, d string, weight double"
+    verts = local_frame(spark, [(v,) for v in nodes], "id string")
+    wedges = local_frame(
+        spark, [(s, d, 1.0) for s, d in _SLLPA_EDGES], "s string, d string, weight double"
     )
     return overlapping_label_propagation(
         verts, wedges, max_iter=_SLLPA_SWEEPS, min_association=_SLLPA_MIN_ASSOC
@@ -920,7 +828,7 @@ def _q_incremental_sllpa(spark, sf_dir):
         weighted_projection,
     )
 
-    res = _sf_canonical(spark, sf_dir)
+    res = _sf(spark, sf_dir, _canonical)
     # reused three times (delta diff, old-graph run, scoped run) — pin it
     proj = weighted_projection(res.edges).localCheckpoint(eager=True)
     # s < d in every pair, so min(s) is the globally-least vertex id
@@ -1285,14 +1193,14 @@ def _q_graph_structure_report(spark, sf_dir):
     quality, graph_metrics.py:332-355) over the full canonical graph."""
     from graph_rag_agent_spark.operators.graph_metrics import graph_structure_report
 
-    res = _sf_canonical(spark, sf_dir)
+    res = _sf(spark, sf_dir, _canonical)
     return graph_structure_report(res.nodes, res.edges)
 
 
 def _q_triangle_counts(spark, sf_dir):
     from graph_rag_agent_spark.operators.graph_metrics import triangle_counts
 
-    res = _sf_canonical(spark, sf_dir)
+    res = _sf(spark, sf_dir, _canonical)
     return triangle_counts(res.edges)
 
 
@@ -1308,7 +1216,7 @@ def _q_k_core(spark, sf_dir):
     extra unrolled rounds are fixpoint no-ops)."""
     from graph_rag_agent_spark.operators.graph_metrics import k_core
 
-    res = _sf_canonical(spark, sf_dir)
+    res = _sf(spark, sf_dir, _canonical)
     return k_core(res.edges, k=_KCORE_K, max_rounds=_KCORE_ROUNDS)
 
 
@@ -1326,7 +1234,7 @@ def _q_entity_pagerank(spark, sf_dir):
     from graph_rag_agent_spark.operators.communities import weighted_projection
     from graph_rag_agent_spark.operators.pagerank import pagerank_projection
 
-    res = _sf_canonical(spark, sf_dir)
+    res = _sf(spark, sf_dir, _canonical)
     proj = weighted_projection(res.edges)
     return pagerank_projection(
         proj, damping=_PAGERANK_DAMPING, n_iter=_PAGERANK_ITERS
@@ -1341,7 +1249,7 @@ def _q_seed_ppr(spark, sf_dir):
     from graph_rag_agent_spark.operators.communities import weighted_projection
     from graph_rag_agent_spark.operators.pagerank import pagerank_projection
 
-    res = _sf_canonical(spark, sf_dir)
+    res = _sf(spark, sf_dir, _canonical)
     proj = weighted_projection(res.edges)
     return pagerank_projection(
         proj,
@@ -1541,8 +1449,8 @@ def _q_manual_edit_survivors(spark, sf_dir):
     from graph_rag_agent_spark.operators.incremental import gc_deleted_docs
     from graph_rag_agent_spark.operators.manual_edits import mark_manual_edits
 
-    nodes, edges, mentions = _sf_graph_tables(spark, sf_dir)
-    chunks = _sf_chunks(spark, sf_dir)
+    kg = _sf(spark, sf_dir)
+    nodes, chunks = kg["nodes_raw"], kg["chunks"]
     manual_ids = nodes.filter(
         F.length("entity_id") >= _MANUAL_MIN_LEN
     ).select("entity_id")
@@ -1553,7 +1461,9 @@ def _q_manual_edit_survivors(spark, sf_dir):
         F.col("source").alias("repo"),
         F.concat(F.lit("doc/"), F.col("doc_id").cast("string")).alias("path"),
     )
-    nodes2, _, _ = gc_deleted_docs(marked, edges, mentions, chunks, deleted)
+    nodes2, _, _ = gc_deleted_docs(
+        marked, kg["edges_raw"], kg["mentions_raw"], chunks, deleted
+    )
     return nodes2.select("entity_id", "manual_edit")
 
 
@@ -1569,7 +1479,7 @@ def _q_incremental_pagerank_warm(spark, sf_dir):
     from graph_rag_agent_spark.operators.communities import weighted_projection
     from graph_rag_agent_spark.operators.pagerank import pagerank_projection
 
-    res = _sf_canonical(spark, sf_dir)
+    res = _sf(spark, sf_dir, _canonical)
     proj = weighted_projection(res.edges).localCheckpoint(eager=True)
     seed = proj.agg(F.min("s").alias("m")).collect()[0]["m"]
     old = proj.filter((F.col("s") != seed) & (F.col("d") != seed))

@@ -7,9 +7,10 @@ MENTIONS provenance came only from deleted chunks
 (incremental_graph_builder.py:572-676).
 
 Spark mapping:
-- N1 change detection → full-outer join of the current corpus snapshot
-  against the ``registry`` table on (repo, path), comparing
-  ``sha2(content, 256)`` — the same per-row invariant the P/R gate checks.
+- N1 change detection → the current corpus snapshot and the ``registry``
+  table grouped together by (repo, path), comparing each document's
+  sorted ``sha2(content, 256)`` array — the same per-row invariant the
+  P/R gate checks.
 - N2 partition-scoped rebuild → the build DAG filtered to changed rows
   (predicate pushdown prunes the scan to touched repo/path partitions).
 - N6 deleted-file GC → mentions refcount: entities whose every mentioning
@@ -27,30 +28,55 @@ from pyspark.sql import DataFrame, functions as F
 
 
 class ChangeSet(NamedTuple):
-    added: DataFrame      # corpus rows new since the registry snapshot
-    modified: DataFrame   # corpus rows whose content sha changed
-    deleted: DataFrame    # registry rows with no corpus counterpart (repo, path)
+    added: DataFrame      # corpus rows of documents new since the registry snapshot
+    modified: DataFrame   # corpus rows of documents whose content changed
+    deleted: DataFrame    # (repo, path) of registry documents gone from the corpus
 
 
 def detect_changes(corpus: DataFrame, registry: DataFrame) -> ChangeSet:
-    """N1: corpus snapshot vs registry(repo, path, content_sha256)."""
-    cur = corpus.withColumn("_sha", F.sha2("content", 256))
-    reg = registry.select(
-        "repo", "path", F.col("content_sha256").alias("_reg_sha")
+    """N1: corpus snapshot vs registry(repo, path, content_sha256).
+
+    A document is its (repo, path) key, and its content is the sorted array
+    of the content hashes of its rows: two commits of one path are one
+    document with two hashes. A row with null content counts as absent, so
+    a key whose rows are all null is no document at all. A key is added
+    when only the corpus has it, deleted when only the registry has it, and
+    modified when the two arrays differ. ``added`` and ``modified`` are the
+    key's corpus rows with non-null content. The registry is written from
+    the same rows (plans.build.registry_stage), so rerunning on an
+    unchanged corpus finds no change.
+
+    The per-key verdict is one shuffle, checkpointed: an incremental run
+    reads each side of the change set several times."""
+    def hashes(df: DataFrame, sha: F.Column, cur: bool) -> DataFrame:
+        return df.select("repo", "path", sha.alias("_sha"), F.lit(cur).alias("_cur"))
+
+    def sorted_shas(cur: bool) -> F.Column:
+        return F.array_sort(F.collect_list(F.when(F.col("_cur") == cur, F.col("_sha"))))
+
+    docs = (
+        hashes(corpus, F.sha2("content", 256), True)
+        .unionByName(hashes(registry, F.col("content_sha256"), False))
+        .filter(F.col("_sha").isNotNull())
+        .groupBy("repo", "path")
+        .agg(sorted_shas(True).alias("_shas"), sorted_shas(False).alias("_reg_shas"))
     )
-    joined = cur.join(reg, on=["repo", "path"], how="full_outer")
-    added = joined.filter(F.col("_reg_sha").isNull() & F.col("_sha").isNotNull())
-    modified = joined.filter(
-        F.col("_reg_sha").isNotNull()
-        & F.col("_sha").isNotNull()
-        & (F.col("_sha") != F.col("_reg_sha"))
-    )
-    deleted = joined.filter(F.col("_sha").isNull() & F.col("_reg_sha").isNotNull())
-    drop_cols = ["_sha", "_reg_sha"]
+    verdict = docs.select(
+        "repo", "path",
+        F.when(F.size("_reg_shas") == 0, "added")
+        .when(F.size("_shas") == 0, "deleted")
+        .when(F.col("_shas") != F.col("_reg_shas"), "modified")
+        .alias("_change"),
+    ).filter(F.col("_change").isNotNull()).localCheckpoint(eager=True)
+
+    def keys(change: str) -> DataFrame:
+        return verdict.filter(F.col("_change") == change).select("repo", "path")
+
+    rows = corpus.filter(F.col("content").isNotNull())
     return ChangeSet(
-        added=added.drop(*drop_cols),
-        modified=modified.drop(*drop_cols),
-        deleted=deleted.select("repo", "path"),
+        added=rows.join(keys("added"), on=["repo", "path"], how="left_semi"),
+        modified=rows.join(keys("modified"), on=["repo", "path"], how="left_semi"),
+        deleted=keys("deleted"),
     )
 
 

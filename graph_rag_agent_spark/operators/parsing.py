@@ -9,8 +9,9 @@ every chunk's node set becomes MENTIONS provenance.
 Spark mapping — everything JVM-side (regexp_extract_all + explode inside
 whole-stage codegen; no Python in this stage):
 
-- E4/E5 parse      → regexp_extract_all(raw, pattern, 0) → explode →
-                     regexp_extract per group
+- E4/E5 parse      → parse_records: both regexp_extract_all discovery
+                     scans in one pass → explode → split() field
+                     extraction per record kind
 - E6/E7/E8         → one per-chunk *occurrences* table (declared entity
                      records flag 0; relationship endpoints flag 1 with the
                      未知 placeholder props), from which
@@ -21,7 +22,8 @@ whole-stage codegen; no Python in this stage):
                                 the reference's thread-completion-order
                                 first-wins cache (documented deviation; the
                                 pure-Python oracle applies the same rule), and
-                     mentions = distinct (chunk_id, entity_id).
+                     mentions = the (chunk_id, entity_id) projection,
+                                already distinct.
                      Order-independence is what makes incremental GC exact:
                      occurrences are chunk-provenanced, so deleting a doc =
                      anti-join its chunks and re-derive — identical to a
@@ -155,9 +157,7 @@ def relationships_from_records(records: DataFrame) -> DataFrame:
     )
 
 
-def occurrences_from_records(
-    records: DataFrame, edges: DataFrame | None = None
-) -> DataFrame:
+def occurrences_from_records(records: DataFrame) -> DataFrame:
     """records → occurrences(chunk_id, entity_id, placeholder, entity_type,
     description): EXACTLY one row per (chunk, entity), carrying the
     min-struct over every candidate the chunk contributed — declared entity
@@ -169,14 +169,12 @@ def occurrences_from_records(
     record per chunk before the min, which could diverge when one chunk
     re-declares an entity with differing props). One shuffle total, where
     the union of two separately-deduped sides cost three (round 6,
-    guide §2.4). Pass `edges` to reuse an already-materialized
-    relationship table instead of re-splitting the R records."""
+    guide §2.4)."""
     entities = _entity_fields(records).select(
         "chunk_id", "entity_id", F.lit(0).alias("placeholder"),
         "entity_type", "description",
     )
-    if edges is None:
-        edges = relationships_from_records(records)
+    edges = relationships_from_records(records)
     endpoints = (
         edges.select("chunk_id", F.col("subj").alias("entity_id"))
         .unionByName(edges.select("chunk_id", F.col("obj").alias("entity_id")))
@@ -202,33 +200,6 @@ def occurrences_from_records(
     )
 
 
-def parse_entities(results: DataFrame) -> DataFrame:
-    """(chunk_id, raw_result) → (chunk_id, entity_id, entity_type, description),
-    one row per entity record, first occurrence per (chunk, entity) kept."""
-    rec = F.explode(
-        F.regexp_extract_all(F.col("raw_result"), F.lit(ENTITY_PATTERN), F.lit(0))
-    ).alias("rec")
-    return entities_from_records(
-        results.select("chunk_id", F.lit("E").alias("kind"), rec)
-    )
-
-
-def parse_relationships(results: DataFrame) -> DataFrame:
-    """(chunk_id, raw_result) → edges(subj, pred, obj, description, weight, chunk_id)."""
-    rec = F.explode(
-        F.regexp_extract_all(F.col("raw_result"), F.lit(RELATIONSHIP_PATTERN), F.lit(0))
-    ).alias("rec")
-    return relationships_from_records(
-        results.select("chunk_id", F.lit("R").alias("kind"), rec)
-    )
-
-
-def parse_occurrences(results: DataFrame) -> DataFrame:
-    """(chunk_id, raw_result) → occurrences — single-regex-pass form of
-    occurrences_from_records (both record kinds discovered in one scan)."""
-    return occurrences_from_records(parse_records(results))
-
-
 def derive_nodes(occurrences: DataFrame) -> DataFrame:
     """occurrences → nodes(entity_id, entity_type, description): declared
     props beat placeholder props, then lexicographic min — order-independent
@@ -244,22 +215,3 @@ def derive_nodes(occurrences: DataFrame) -> DataFrame:
             F.col("_p.description").alias("description"),
         )
     )
-
-
-def derive_mentions(occurrences: DataFrame) -> DataFrame:
-    """occurrences → mentions(chunk_id, entity_id): every entity a chunk
-    declared or referenced (E8 provenance)."""
-    return occurrences.select("chunk_id", "entity_id").dropDuplicates(
-        ["chunk_id", "entity_id"]
-    )
-
-
-def build_graph_tables(
-    results: DataFrame,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(chunk_id, raw_result) → (nodes, edges, mentions) — all three from
-    ONE tagged-records scan (parse_records)."""
-    records = parse_records(results)
-    occurrences = occurrences_from_records(records)
-    edges = relationships_from_records(records)
-    return derive_nodes(occurrences), edges, derive_mentions(occurrences)

@@ -2,8 +2,8 @@
 
 The reference's hard-coded Python orchestration (integrations/build/main.py:
 process_all → KnowledgeGraphBuilder → IndexCommunityBuilder → ChunkIndexBuilder)
-becomes one list of DataFrame stages, defined once here and shared by the
-three entry points:
+becomes one list of DataFrame stages, defined once here and shared by
+four callers:
 
   chunk_stage → extract_stage → graph_stage (records → occurrences /
   edges_raw → nodes_raw / mentions_raw) → canonical_stage (embed +
@@ -20,6 +20,9 @@ that decides where they live:
 - ``_checkpoint`` keeps everything lazy except the records and entity
   embeddings, which it localCheckpoints — ``run_kg_build_in_memory``, the
   benchmarking path.
+- ``__spark_entry__._record`` localCheckpoints the frames its queries
+  share and keeps every named frame in a per-session memo — the driver
+  contract's KG build, which the oracle-checked queries read.
 
 Resumability: ``resume=True`` skips the corpus and chunk stages whose
 tables already exist, and the extraction stage is always incremental via

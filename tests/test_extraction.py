@@ -18,7 +18,7 @@ from graph_rag_agent_spark.functions.wire_format import (
 )
 from graph_rag_agent_spark.operators.chunker import chunk_documents
 from graph_rag_agent_spark.operators.extraction import extract_chunks
-from graph_rag_agent_spark.operators.parsing import build_graph_tables
+from graph_rag_agent_spark.plans.build import graph_stage
 
 SAMPLE = '''"""Module sample_mod。 demo"""
 
@@ -119,7 +119,7 @@ def test_build_graph_tables_placeholders_and_first_wins(spark):
     results = spark.createDataFrame(
         [("c1", raw1), ("c2", raw2)], "chunk_id string, raw_result string"
     )
-    nodes, edges, mentions = build_graph_tables(results)
+    nodes, edges, mentions = graph_stage(results, lambda name, df: df)
     nd = {r.entity_id: r for r in nodes.collect()}
     # Ghost + B never declared → placeholder 未知 (graph_writer.py:74-98)
     assert nd["Ghost"].entity_type == UNKNOWN_ENTITY_TYPE
@@ -150,10 +150,11 @@ def test_spark_parse_matches_regex_on_delimiter_bearing_descriptions(spark):
         emit_relationship("E2", "E3", "calls", 'a" : 9', 0.5),
     ])
     results = spark.createDataFrame([("c1", raw)], "chunk_id string, raw_result string")
+    records = sp.parse_records(results)
 
     got_ents = {
         (r.entity_id, r.entity_type, r.description)
-        for r in sp.parse_entities(results).collect()
+        for r in sp.entities_from_records(records).collect()
     }
     want_ents = {(e, t, d) for e, t, d in parse_entities(raw)}
     assert got_ents == want_ents
@@ -161,7 +162,7 @@ def test_spark_parse_matches_regex_on_delimiter_bearing_descriptions(spark):
 
     got_rels = {
         (r.subj, r.obj, r.pred, r.description, r.weight)
-        for r in sp.parse_relationships(results).collect()
+        for r in sp.relationships_from_records(records).collect()
     }
     want_rels = {(s, t, p, d, w) for s, t, p, d, w in parse_relationships(raw)}
     assert got_rels == want_rels

@@ -4,7 +4,10 @@
 import tempfile
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
+
+from graph_rag_agent_spark.config import MAX_TEXT_LENGTH
 
 from graph_rag_agent_spark.operators.incremental import (
     detect_changes,
@@ -158,6 +161,69 @@ def test_incremental_equals_full_rebuild(spark):
         # second pass with identical corpus → no-op
         res2 = IncrementalUpdatePipeline(spark, cat1).run_once(_corpus_df(spark, v2))
         assert res2["changed"] is False
+
+
+def _source(i, hub=False):
+    return "\n".join([
+        f'"""Module m{i}。"""', "",
+        *(["import hub_core"] if hub else []),
+        f"import mod_{i}", "",
+        f"class Thing{i}(Base{i}):",
+        f"    def run_{i}(self):",
+        "        return 1", "",
+    ])
+
+
+def _row(path, content, commit="c0"):
+    return ("r", path, commit, "py", content)
+
+
+_EDIT = "\nEDITED_LIMIT = 7\n"
+# one char past the pre-split cap, so the large-text path runs
+_BIG = (_source(9) + ("# filler line of comment text\n" * 20_000))[: MAX_TEXT_LENGTH + 1]
+_HUB = [_row(f"m{i}.py", _source(i, hub=True)) for i in range(6)]
+
+# the north star's hostile inputs: (corpus, the same corpus after one edit)
+HOSTILE = {
+    "empty": ([], [_row("a.py", _source(0))]),
+    "null_content": (
+        [_row("a.py", _source(0)), _row("b.py", None)],
+        [_row("a.py", _source(0) + _EDIT), _row("b.py", None)],
+    ),
+    "duplicate_repo_path": (
+        [_row("a.py", _source(0)), _row("a.py", _source(1), "c1")],
+        [_row("a.py", _source(0)), _row("a.py", _source(1) + _EDIT, "c1")],
+    ),
+    "text_cap": (
+        [_row("a.py", _source(0)), _row("big.py", _BIG)],
+        [_row("a.py", _source(0) + _EDIT), _row("big.py", _BIG)],
+    ),
+    "hub_entity": (_HUB, [_row("m0.py", _source(0, hub=True) + _EDIT), *_HUB[1:]]),
+}
+
+
+@pytest.mark.parametrize("case", sorted(HOSTILE))
+def test_hostile_corpus_fixed_point_and_incremental_equals_full(spark, case):
+    """A rerun on an unchanged corpus is a no-op, and one edit applied
+    incrementally gives a full rebuild's tables."""
+    v1, v2 = (
+        spark.createDataFrame(rows, CORPUS_SCHEMA) for rows in HOSTILE[case]
+    )
+    with tempfile.TemporaryDirectory(prefix="graft_incr_") as wh1, \
+         tempfile.TemporaryDirectory(prefix="graft_full_") as wh2:
+        cat1 = TableCatalog(spark, wh1)
+        BuildPipeline(spark, cat1).run(v1)
+        assert IncrementalUpdatePipeline(spark, cat1).run_once(v1)["changed"] is False
+        res = IncrementalUpdatePipeline(spark, cat1).run_once(v2)
+        assert res["changed"] and res["added"] + res["modified"] > 0
+        assert IncrementalUpdatePipeline(spark, cat1).run_once(v2)["changed"] is False
+
+        cat2 = TableCatalog(spark, wh2)
+        BuildPipeline(spark, cat2).run(v2)
+        for table in EQUIVALENT_TABLES:
+            got, want = cat1.read(table), cat2.read(table)
+            assert got.columns == want.columns, table
+            assert _stable_rows(got) == _stable_rows(want), table
 
 
 def test_catalog_upsert_matches_merge_into_semantics(spark, tmp_path):

@@ -1,7 +1,8 @@
 """Rows between the driver and Spark: ``session.local_frame`` round-trips
 typed rows as an Arrow LocalTableScan at any size and is the only place the
-package calls ``createDataFrame``; ``session.collect_if_fits`` is the one
-bounded Arrow fetch behind every driver-kernel size gate."""
+package or the entry file calls ``createDataFrame``;
+``session.collect_if_fits`` is the one bounded Arrow fetch behind every
+driver-kernel size gate."""
 
 import inspect
 import logging
@@ -15,6 +16,7 @@ from graph_rag_agent_spark import session
 from graph_rag_agent_spark.session import collect_if_fits, local_frame
 
 PACKAGE = pathlib.Path(session.__file__).parent
+ENTRY = PACKAGE.parent / "__spark_entry__.py"
 
 
 def _plan(df) -> str:
@@ -22,7 +24,10 @@ def _plan(df) -> str:
 
 
 def test_create_dataframe_only_inside_local_frame():
-    calls = {p: p.read_text().count("createDataFrame(") for p in PACKAGE.rglob("*.py")}
+    calls = {
+        p: p.read_text().count("createDataFrame(")
+        for p in [*PACKAGE.rglob("*.py"), ENTRY]
+    }
     assert {p.name for p, n in calls.items() if n} == {"session.py"}
     assert calls[PACKAGE / "session.py"] == inspect.getsource(local_frame).count(
         "createDataFrame("

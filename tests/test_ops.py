@@ -1,5 +1,5 @@
 """Training-data ops: dedup (exact/jaccard/simhash/minhash), similarity
-search, text analysis, multimodal plumbing — vs numpy/python oracles."""
+search, text analysis — vs numpy/python oracles."""
 
 import numpy as np
 import pandas as pd
@@ -13,12 +13,6 @@ from graph_rag_agent_spark.operators.dedup import (
     ngram_jaccard_pairs,
     simhash_near_duplicates,
     simhash_signatures,
-)
-from graph_rag_agent_spark.operators.multimodal import (
-    byte_histogram_decode,
-    extract_features,
-    media_metadata_stats,
-    sample_frames,
 )
 from graph_rag_agent_spark.operators.similarity import (
     brute_force_topk,
@@ -163,115 +157,6 @@ def test_pairwise_topk_per_label(spark, vectors):
     for vid, neigh in by_vec.items():
         assert len(neigh) <= 3
         assert all(labels[n.neighbor_id] == labels[vid] for n in neigh)
-
-
-def test_multimodal_plumbing(spark):
-    rows = [
-        ("m1", "image", bytearray(b"\x00\x10\x20\x30"), {"width": 4, "height": 1, "duration_ms": None, "codec": "raw"}),
-        ("m2", "video", bytearray(b"\xff" * 8), {"width": 16, "height": 9, "duration_ms": 3500, "codec": "fake"}),
-    ]
-    media = spark.createDataFrame(
-        rows,
-        "media_id string, kind string, payload binary, "
-        "meta struct<width:int, height:int, duration_ms:int, codec:string>",
-    )
-    # default decode is a stub → NotImplementedError surfaces in the task
-    with pytest.raises(Exception):
-        extract_features(media).collect()
-    feats = {r.media_id: r for r in extract_features(media, byte_histogram_decode).collect()}
-    assert feats["m1"].n_bytes == 4 and len(feats["m1"].feature) == 16
-    assert abs(sum(feats["m1"].feature) - 1.0) < 1e-6
-    stats = {r.kind: r for r in media_metadata_stats(media).collect()}
-    assert stats["video"].total_bytes == 8
-    frames = sample_frames(media, every_ms=1000, decode_fn=byte_histogram_decode).collect()
-    assert [r.frame_ms for r in frames] == [0, 1000, 2000, 3000]
-
-
-def _ppm_bytes(w, h, pixels):
-    return b"P6\n%d %d\n255\n" % (w, h) + bytes(pixels)
-
-
-def _bmp_bytes(w, h, rows_rgb):
-    # uncompressed 24-bit bottom-up BMP
-    stride = (w * 3 + 3) & ~3
-    pix = b""
-    for row in reversed(rows_rgb):  # bottom-up storage
-        line = b"".join(bytes([b, g, r]) for r, g, b in row)
-        pix += line + b"\x00" * (stride - len(line))
-    header_size, data_offset = 40, 54
-    size = data_offset + len(pix)
-    return (
-        b"BM" + size.to_bytes(4, "little") + b"\x00\x00\x00\x00"
-        + data_offset.to_bytes(4, "little")
-        + header_size.to_bytes(4, "little")
-        + w.to_bytes(4, "little") + h.to_bytes(4, "little")
-        + (1).to_bytes(2, "little") + (24).to_bytes(2, "little")
-        + (0).to_bytes(4, "little") + len(pix).to_bytes(4, "little")
-        + b"\x00" * 16 + pix
-    )
-
-
-def _wav_bytes(rate, samples):
-    data = b"".join(int(s * 32767).to_bytes(2, "little", signed=True) for s in samples)
-    fmt = (
-        (1).to_bytes(2, "little") + (1).to_bytes(2, "little")
-        + rate.to_bytes(4, "little") + (rate * 2).to_bytes(4, "little")
-        + (2).to_bytes(2, "little") + (16).to_bytes(2, "little")
-    )
-    body = b"WAVE" + b"fmt " + len(fmt).to_bytes(4, "little") + fmt \
-        + b"data" + len(data).to_bytes(4, "little") + data
-    return b"RIFF" + len(body).to_bytes(4, "little") + body
-
-
-def test_real_decoders_roundtrip():
-    from graph_rag_agent_spark.operators.multimodal import (
-        decode_bmp,
-        decode_ppm,
-        decode_wav,
-        real_decode,
-    )
-
-    # 2×2 PPM: exact pixel recovery
-    pixels = [255, 0, 0, 0, 255, 0, 0, 0, 255, 10, 20, 30]
-    img = decode_ppm(_ppm_bytes(2, 2, pixels))
-    assert img.shape == (2, 2, 3)
-    assert img.reshape(-1).tolist() == pixels
-
-    # 2×2 BMP: same image through the BMP container (padding + BGR + flip)
-    rows = [[(255, 0, 0), (0, 255, 0)], [(0, 0, 255), (10, 20, 30)]]
-    img2 = decode_bmp(_bmp_bytes(2, 2, rows))
-    assert img2.tolist() == [[[255, 0, 0], [0, 255, 0]], [[0, 0, 255], [10, 20, 30]]]
-
-    # WAV: rate + samples recovered
-    rate, samples, ch = decode_wav(_wav_bytes(8000, [0.0, 0.5, -0.5, 1.0]))
-    assert rate == 8000 and ch == 1 and len(samples) == 4
-    assert abs(samples[1] - 0.5) < 1e-3
-
-    # dispatch: image features = 16-bin luminance hist + dims
-    feat = real_decode("image", _ppm_bytes(2, 2, pixels))
-    assert len(feat) == 18 and abs(float(feat[:16].sum()) - 1.0) < 1e-6
-    afeat = real_decode("audio", _wav_bytes(8000, [0.0, 0.5, -0.5, 1.0]))
-    assert len(afeat) == 18 and afeat[17] == pytest.approx(4 / 8000)
-
-
-def test_extract_features_with_real_decoder(spark):
-    from graph_rag_agent_spark.operators.multimodal import real_decode
-
-    rows = [
-        ("img1", "image", bytearray(_ppm_bytes(2, 2, [255, 0, 0] * 4)),
-         {"width": 2, "height": 2, "duration_ms": None, "codec": "ppm"}),
-        ("aud1", "audio", bytearray(_wav_bytes(8000, [0.25] * 16)),
-         {"width": None, "height": None, "duration_ms": 2, "codec": "pcm16"}),
-    ]
-    media = spark.createDataFrame(
-        rows,
-        "media_id string, kind string, payload binary, "
-        "meta struct<width:int, height:int, duration_ms:int, codec:string>",
-    )
-    feats = {r.media_id: r for r in extract_features(media, real_decode).collect()}
-    assert len(feats["img1"].feature) == 18
-    assert feats["img1"].feature[17] == pytest.approx(0.002)  # height 2/1000
-    assert feats["aud1"].feature[17] == pytest.approx(16 / 8000)  # duration
 
 
 def test_ivf_topk_recall(spark, vectors):

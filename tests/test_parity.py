@@ -57,14 +57,14 @@ def test_distributed_path_matches_driver_path(spark):
     from graph_rag_agent_spark.operators.chunker import chunk_documents
     from graph_rag_agent_spark.operators.embeddings import embed_entities
     from graph_rag_agent_spark.operators.extraction import extract_chunks
-    from graph_rag_agent_spark.operators.parsing import build_graph_tables
+    from graph_rag_agent_spark.plans.build import graph_stage
 
     pdf = generate_corpus_pdf(40, seed=42)
     corpus = spark.createDataFrame(
         pdf, schema="repo string, path string, commit string, lang string, content string"
     )
     results = extract_chunks(chunk_documents(corpus)).localCheckpoint(eager=True)
-    nodes, edges, mentions = build_graph_tables(results)
+    nodes, edges, mentions = graph_stage(results, lambda name, df: df)
     nodes = nodes.localCheckpoint(eager=True)
     edges = edges.localCheckpoint(eager=True)
     emb = embed_entities(nodes).localCheckpoint(eager=True)
@@ -87,14 +87,14 @@ def test_distributed_path_materializes_no_embedding_rows(spark, monkeypatch):
     from graph_rag_agent_spark.operators.chunker import chunk_documents
     from graph_rag_agent_spark.operators.embeddings import embed_entities
     from graph_rag_agent_spark.operators.extraction import extract_chunks
-    from graph_rag_agent_spark.operators.parsing import build_graph_tables
+    from graph_rag_agent_spark.plans.build import graph_stage
 
     pdf = generate_corpus_pdf(12, seed=42)
     corpus = spark.createDataFrame(
         pdf, schema="repo string, path string, commit string, lang string, content string"
     )
     results = extract_chunks(chunk_documents(corpus)).localCheckpoint(eager=True)
-    nodes, edges, mentions = build_graph_tables(results)
+    nodes, edges, mentions = graph_stage(results, lambda name, df: df)
     nodes = nodes.localCheckpoint(eager=True)
     edges = edges.localCheckpoint(eager=True)
     emb = embed_entities(nodes).localCheckpoint(eager=True)
