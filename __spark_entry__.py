@@ -656,27 +656,21 @@ def _q_answer_eval(spark, sf_dir):
     deterministic fixture: per 5 smallest-doc_id documents, prediction =
     first 120 chars, golden = the same 120 chars for the first doc (EM=1)
     and the first 100 for the rest (EM=0, fractional similarity/F1)."""
-    from pyspark.sql import Window
-
     from graph_rag_agent_spark.operators.retrieval_metrics import answer_metrics
 
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("string").alias("doc_id"), "text"
     )
-    # literal partition key: the frame is 5 rows post-limit either way, but
-    # an unpartitioned window trips WindowExec's all-to-one-partition WARN
-    # on every bench run, polluting the log scale audit (round-5 verdict #2)
-    five = (
-        docs.orderBy("doc_id")
-        .limit(5)
-        .withColumn(
-            "_rn", F.row_number().over(Window.partitionBy(F.lit(0)).orderBy("doc_id"))
-        )
-    )
+    # the first doc is flagged by an equi-join to the 5 rows' min(doc_id):
+    # any window over the limit output, even one keyed on a literal, logs
+    # WindowExec's "No Partition Defined" warning
+    five = docs.orderBy("doc_id").limit(5)
+    first = five.agg(F.min("doc_id").alias("doc_id")).withColumn("_first", F.lit(True))
+    five = five.join(first, "doc_id", "left")
     samples = five.select(
         F.col("doc_id").alias("query_id"),
         F.substring("text", 1, 120).alias("prediction"),
-        F.when(F.col("_rn") == 1, F.substring("text", 1, 120))
+        F.when(F.col("_first"), F.substring("text", 1, 120))
         .otherwise(F.substring("text", 1, 100))
         .alias("golden"),
     )
@@ -899,9 +893,7 @@ def _q_ann_topk(spark, sf_dir):
 
 def _q_knn_per_label(spark, sf_dir):
     """Exact per-label KNN via the vectorized per-block matmul operator
-    (chunked — a hot label costs O(chunk×|label|) memory, not O(|label|²));
-    the distributed block-pair variant (pairwise_topk_blocked) is the path
-    for labels too large for one task and is equality-tested in pytest."""
+    (chunked — a hot label costs O(chunk×|label|) memory, not O(|label|²))."""
     from graph_rag_agent_spark.operators.similarity import pairwise_topk_per_label
 
     emb = _embeddings(spark, sf_dir)
@@ -1033,8 +1025,7 @@ def _q_windowed_event_counts(spark, sf_dir):
 
 def _q_embedding_near_dups(spark, sf_dir):
     """Embedding-cosine near-duplicate pairs (exact, distributed block-pair
-    matmul; the web-scale path prefilters with hyperplane LSH — see
-    operators/similarity.cosine_pairs_blocked)."""
+    matmul — operators/similarity.cosine_pairs_blocked)."""
     from graph_rag_agent_spark.operators.similarity import cosine_pairs_blocked
 
     emb = _embeddings(spark, sf_dir)

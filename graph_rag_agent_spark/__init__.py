@@ -8,13 +8,13 @@ Arrow-UDF pipelines over partitioned Iceberg/parquet tables. See SURVEY.md
 for the operator-by-operator mapping.
 
 Layout:
-    config         — closed type vocabularies, chunking/canonicalization thresholds
+    config         — chunking/canonicalization/community thresholds, PipelineConfig
     session        — SparkSession factory tuned for the pipeline
     functions/     — pure deterministic kernels (tokenizer, wire format, embedder, ...)
     sources/       — corpus generator, table catalog (Iceberg-or-parquet), registry
-    operators/     — the pipeline stages + training-data ops (dedup, ANN, text analysis)
+    operators/     — the pipeline stages + training-data ops (dedup, similarity, text analysis)
     plans/         — end-to-end build orchestration with lineage metrics
-    streaming/     — batch-incremental / Trigger.AvailableNow wrappers
+    streaming/     — streaming extraction, stateful dedup and windowed rollups
     oracle/        — pure-Python reference-faithful builder for P/R parity tests
 """
 

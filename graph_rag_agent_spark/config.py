@@ -8,7 +8,7 @@ the Spark pipeline and the pure-Python oracle agree bit-for-bit.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 # ---- chunking (reference settings.py:98-100) --------------------------------
 CHUNK_SIZE = 500          # tokens per chunk window
@@ -38,15 +38,6 @@ MAX_GLEANINGS = 1
 # (reference graph_writer.py:81,94 uses "未知")
 UNKNOWN_ENTITY_TYPE = "未知"
 UNKNOWN_ENTITY_DESCRIPTION = "No additional data"
-
-# closed vocabularies injected into the extractor (reference settings.py:70-88
-# has 6 entity types / 8 relationship types + catch-all; ours are re-keyed for
-# the source-code corpus of BASELINE.json input_hint)
-ENTITY_TYPES = ("module", "class", "function", "constant", "repo", "person")
-RELATIONSHIP_TYPES = (
-    "imports", "inherits", "calls", "defines",
-    "contains", "references", "depends_on", "其它",
-)
 
 # ---- embeddings (reference entity_indexer.py:170,189-205) --------------------
 EMBEDDING_DIM = 64        # deterministic hash-projection embedder dimension
@@ -103,8 +94,6 @@ class PipelineConfig:
     max_gleanings: int = MAX_GLEANINGS
     community_max_levels: int = COMMUNITY_MAX_LEVELS
     community_max_iter: int = COMMUNITY_MAX_ITER
-    entity_types: tuple = field(default=ENTITY_TYPES)
-    relationship_types: tuple = field(default=RELATIONSHIP_TYPES)
     seed: int = SEED
     # community detector for the BUILD/INCREMENTAL plans: 'auto' = the
     # size-adaptive modularity detector (detect_communities);

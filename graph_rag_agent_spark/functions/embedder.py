@@ -13,7 +13,7 @@ from __future__ import annotations
 import hashlib
 import re
 from functools import lru_cache
-from typing import List, Tuple
+from typing import Tuple
 
 import numpy as np
 
@@ -71,14 +71,3 @@ def embed_text(text: str, dim: int = EMBEDDING_DIM) -> np.ndarray:
     if norm > 0:
         vec /= norm
     return vec
-
-
-def embed_texts(texts: List[str], dim: int = EMBEDDING_DIM) -> np.ndarray:
-    return np.stack([embed_text(t, dim) for t in texts]) if texts else np.zeros((0, dim), np.float64)
-
-
-def cosine(a: np.ndarray, b: np.ndarray) -> float:
-    na, nb = float(np.linalg.norm(a)), float(np.linalg.norm(b))
-    if na == 0 or nb == 0:
-        return 0.0
-    return float(np.dot(a, b) / (na * nb))

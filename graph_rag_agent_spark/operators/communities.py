@@ -60,27 +60,6 @@ def weighted_projection(edges: DataFrame) -> DataFrame:
     )
 
 
-def degree_filtered_projection(
-    wedges: DataFrame, max_nodes: int
-) -> DataFrame:
-    """G2 (reference projections.py:49-98, detector/base.py:44-52): when the
-    node count exceeds the memory-derived limit, keep only the top-degree
-    nodes' edges. Config-gated; off by default for parity — at 10^9 entities
-    it bounds the community-detection working set."""
-    degree = (
-        wedges.select(F.col("s").alias("id"))
-        .unionByName(wedges.select(F.col("d").alias("id")))
-        .groupBy("id")
-        .agg(F.count("*").alias("degree"))
-    )
-    keep = degree.orderBy(F.desc("degree"), F.asc("id")).limit(max_nodes).select("id")
-    return (
-        wedges.join(keep.withColumnRenamed("id", "s"), on="s", how="left_semi")
-        .join(keep.withColumnRenamed("id", "d"), on="d", how="left_semi")
-        .select("s", "d", "weight")
-    )
-
-
 def label_propagation(
     vertices: DataFrame,
     wedges: DataFrame,

@@ -12,7 +12,8 @@ needs document-level dedup. Four strategies, cheapest-first:
                  band bucket — the classic web-scale near-dup join
                  (one shuffle on band keys, no all-pairs).
 
-All JVM-side except the numpy minhash kernel (Arrow-batched).
+All JVM-side except the Arrow-batched numpy kernels of simhash and the
+jaccard profile path.
 """
 
 from __future__ import annotations
@@ -38,12 +39,6 @@ def exact_duplicates(docs: DataFrame, text_col: str = "text", id_col: str = "doc
         )
         .filter(F.col("dup_count") > 1)
     )
-
-
-def dedup_exact(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Keep one row per distinct text (min id wins — deterministic)."""
-    w = Window.partitionBy(F.sha2(F.col(text_col), 256)).orderBy(F.col(id_col))
-    return docs.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
 
 
 # ---------------------------------------------------------------------------
@@ -660,7 +655,6 @@ def minhash_lsh_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     seed: int = 42,
-    production_hash: bool = False,
 ) -> DataFrame:
     """→ candidate near-dup pairs (doc_a, doc_b) sharing ≥ 1 LSH band.
 
@@ -668,159 +662,63 @@ def minhash_lsh_pairs(
     With K=64, B=16 (rows/band = 4) the S-curve threshold sits at
     ≈ (1/16)^(1/4) ≈ 0.5 jaccard.
 
-    `production_hash=False` (default) hashes each distinct shingle STRING
-    with md5 — the form the DuckDB oracle replays literally. Since round 6
-    this path is PURE JVM (guide §4.1: built-ins over Python): shingles by
-    arrays_zip of shifted slices, shingle hash `conv(substr(md5(s),1,8))`,
-    the K mins as ONE partial-aggregating groupBy, band keys as in-row md5
-    folds — bit-identical to the old mapInPandas form (same md5-first-4-
-    bytes hash, same exact int64 (a·h+b) mod M, same "band:m,m,m,m" md5
-    key) with zero Python-boundary crossings and map-side combine on the
-    only shuffle. `production_hash=True` is the Arrow path: per-word crc32
-    then a VECTORIZED polynomial window hash over the word-hash array —
-    for corpora where JVM md5-per-shingle is the bottleneck. Identical LSH
-    statistics (uniform 31-bit shingle hashes either way; recall equality
-    asserted in pytest), different hash family, so it is a throughput
-    path, not the oracle twin."""
+    Each distinct shingle STRING is hashed with md5 — the form the DuckDB
+    oracle replays literally — and the whole operator is JVM built-ins
+    with no Python-boundary crossing: shingles by arrays_zip of shifted
+    slices, shingle hash `conv(substr(md5(s),1,8))`, the K mins as ONE
+    partial-aggregating groupBy, band keys as in-row md5 folds of
+    "band:m,m,m,m", and map-side combine on the only shuffle."""
     assert num_hashes % bands == 0
     rows_per_band = num_hashes // bands
     ha, hb = _minhash_params(num_hashes, seed)
 
-    if not production_hash:
-        # JVM oracle-twin path: mirrors the DuckDB CTE expression for
-        # expression (split(trim(lower)), md5 first 8 hex chars, exact
-        # int64 affine mins, "band:…" md5 band keys)
-        ws = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-        m = F.greatest(F.size(ws) - (shingle - 1), F.lit(0))
-        zipped = F.arrays_zip(*[F.slice(ws, i + 1, m) for i in range(shingle)])
-        grams = F.transform(
-            zipped, lambda s: F.concat_ws(" ", *[s[str(i)] for i in range(shingle)])
-        )
-        # docs with < shingle words contribute the single empty shingle
-        # (the mapInPandas form's `or {""}`); null text ⇒ size() is NULL
-        # ⇒ same branch
-        sh = F.when(F.size(ws) >= shingle, F.array_distinct(grams)).otherwise(
-            F.array(F.lit(""))
-        )
-        hv = docs.select(
-            F.col(id_col).cast("string").alias("id"), F.explode(sh).alias("s")
-        ).select(
-            "id",
-            (
-                F.conv(F.substring(F.md5("s"), 1, 8), 16, 10).cast("long")
-                % _MERSENNE
-            ).alias("h"),
-        )
-        mins = hv.groupBy("id").agg(
-            *[
-                F.min(
-                    (F.lit(int(ha[i])) * F.col("h") + F.lit(int(hb[i]))) % _MERSENNE
-                ).alias(f"m{i}")
-                for i in range(num_hashes)
-            ]
-        )
-        band_keys = [
-            F.md5(
-                F.concat_ws(
-                    ":",
-                    F.lit(str(band)),
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.col(f"m{band * rows_per_band + j}").cast("string")
-                            for j in range(rows_per_band)
-                        ],
-                    ),
-                )
-            )
-            for band in range(bands)
+    # mirrors the DuckDB CTE expression for expression (split(trim(lower)),
+    # md5 first 8 hex chars, exact int64 affine mins, "band:…" md5 band keys)
+    ws = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
+    m = F.greatest(F.size(ws) - (shingle - 1), F.lit(0))
+    zipped = F.arrays_zip(*[F.slice(ws, i + 1, m) for i in range(shingle)])
+    grams = F.transform(
+        zipped, lambda s: F.concat_ws(" ", *[s[str(i)] for i in range(shingle)])
+    )
+    # docs with < shingle words contribute the single empty shingle; null
+    # text ⇒ size() is NULL ⇒ same branch
+    sh = F.when(F.size(ws) >= shingle, F.array_distinct(grams)).otherwise(
+        F.array(F.lit(""))
+    )
+    hv = docs.select(
+        F.col(id_col).cast("string").alias("id"), F.explode(sh).alias("s")
+    ).select(
+        "id",
+        (
+            F.conv(F.substring(F.md5("s"), 1, 8), 16, 10).cast("long")
+            % _MERSENNE
+        ).alias("h"),
+    )
+    mins = hv.groupBy("id").agg(
+        *[
+            F.min(
+                (F.lit(int(ha[i])) * F.col("h") + F.lit(int(hb[i]))) % _MERSENNE
+            ).alias(f"m{i}")
+            for i in range(num_hashes)
         ]
-        banded = mins.select("id", F.explode(F.array(*band_keys)).alias("band"))
-        a, b = banded.alias("a"), banded.alias("b")
-        return (
-            a.join(b, on=[F.col("a.band") == F.col("b.band"), F.col("a.id") < F.col("b.id")])
-            .select(F.col("a.id").alias("doc_a"), F.col("b.id").alias("doc_b"))
-            .dropDuplicates(["doc_a", "doc_b"])
+    )
+    band_keys = [
+        F.md5(
+            F.concat_ws(
+                ":",
+                F.lit(str(band)),
+                F.concat_ws(
+                    ",",
+                    *[
+                        F.col(f"m{band * rows_per_band + j}").cast("string")
+                        for j in range(rows_per_band)
+                    ],
+                ),
+            )
         )
-
-    def md5_shingle_hashes(words, shingle_cache) -> np.ndarray:
-        shingles = {
-            " ".join(words[i : i + shingle])
-            for i in range(max(0, len(words) - shingle + 1))
-        } or {""}
-        # shingle hash = first 4 md5 bytes mod M (31-bit) — a*h+b
-        # then fits int64 exactly; same formula the SQL oracle runs
-        hv = np.empty(len(shingles), dtype=np.int64)
-        for i, s in enumerate(shingles):
-            h = shingle_cache.get(s)
-            if h is None:
-                h = (
-                    int.from_bytes(hashlib.md5(s.encode()).digest()[:4], "big")
-                    % _MERSENNE
-                )
-                shingle_cache[s] = h
-            hv[i] = h
-        return hv
-
-    _POLY_P = 1_000_003  # acc < M=2³¹, acc·P + w < 2⁵² — exact in int64
-
-    def poly_shingle_hashes(words, word_cache) -> np.ndarray:
-        import zlib
-
-        n = len(words)
-        if n < shingle:
-            return np.array([0], dtype=np.int64)
-        wh = np.empty(n, dtype=np.int64)
-        for i, w in enumerate(words):
-            h = word_cache.get(w)
-            if h is None:
-                h = zlib.crc32(w.encode()) % _MERSENNE
-                word_cache[w] = h
-            wh[i] = h
-        # sliding-window polynomial, fully vectorized over positions
-        m = n - shingle + 1
-        acc = np.zeros(m, dtype=np.int64)
-        for j in range(shingle):
-            acc = (acc * _POLY_P + wh[j : j + m]) % _MERSENNE
-        return np.unique(acc)
-
-    def sig_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # near-duplicate corpora repeat shingles/words heavily across docs;
-        # the per-batch cache turns hashing cost from O(Σ occurrences)
-        # into O(distinct) CPU per batch
-        cache: dict = {}
-        for pdf in batches:
-            if len(cache) > 2_000_000:  # bound task memory ~200 MB
-                cache.clear()
-            out_ids, out_bands = [], []
-            for did, text in zip(pdf["id"], pdf["text"]):
-                words = (text or "").lower().split()
-                if production_hash:
-                    hv = poly_shingle_hashes(words, cache)
-                else:
-                    hv = md5_shingle_hashes(words, cache)
-                mins = ((ha[:, None] * hv[None, :] + hb[:, None]) % _MERSENNE).min(axis=1)
-                if production_hash:
-                    # numeric band fold — no per-band md5/string formatting
-                    segs = mins.reshape(bands, rows_per_band)
-                    acc = np.zeros(bands, dtype=np.int64)
-                    for j in range(rows_per_band):
-                        acc = (acc * _POLY_P + segs[:, j]) % _MERSENNE
-                    for band in range(bands):
-                        out_ids.append(did)
-                        out_bands.append(f"{band}:{acc[band]}")
-                else:
-                    for band in range(bands):
-                        seg = mins[band * rows_per_band : (band + 1) * rows_per_band]
-                        key = hashlib.md5(
-                            (str(band) + ":" + ",".join(map(str, seg))).encode()
-                        ).hexdigest()
-                        out_ids.append(did)
-                        out_bands.append(key)
-            yield pd.DataFrame({"id": out_ids, "band": out_bands})
-
-    base = docs.select(F.col(id_col).cast("string").alias("id"), F.col(text_col).alias("text"))
-    banded = base.mapInPandas(sig_batches, schema="id string, band string")
+        for band in range(bands)
+    ]
+    banded = mins.select("id", F.explode(F.array(*band_keys)).alias("band"))
     a, b = banded.alias("a"), banded.alias("b")
     return (
         a.join(b, on=[F.col("a.band") == F.col("b.band"), F.col("a.id") < F.col("b.id")])

@@ -13,11 +13,10 @@ metrics as distributed DataFrame plans:
   density past 1.0); here density uses DISTINCT undirected pairs — the
   standard simple-graph definition, bounded in [0, 1] — with the raw
   triple count reported alongside as `n_triples`.
-- `graph_quality_report` (+ its five components below) — the
-  build-time graph-quality metrics: EntityCoverageMetric:1009,
-  RelationshipUtilizationMetric:1302, GraphCoverageMetric:635,
-  SubgraphQualityMetric:242, CommunityRelevanceMetric:6 — each a
-  one-row (metric, value) DataFrame composing with unionByName (the
+- `graph_quality_report` — the five build-time graph-quality metrics
+  (EntityCoverageMetric:1009, RelationshipUtilizationMetric:1302,
+  GraphCoverageMetric:635, SubgraphQualityMetric:242,
+  CommunityRelevanceMetric:6) as one (metric, value) DataFrame (the
   reference scores retrieval results; these score the GRAPH itself).
 - `triangle_counts` — per-vertex triangle counts + local clustering
   coefficients. The reference probes connectedness with bounded-path
@@ -155,84 +154,6 @@ def triangle_counts(
     return out.withColumn("clustering", clustering)
 
 
-def _one(spark, name: str, value: float) -> DataFrame:
-    return local_frame(spark, [(name, float(value))], "metric string, value double")
-
-
-def entity_coverage(nodes: DataFrame, mentions: DataFrame) -> DataFrame:
-    """Fraction of mentioned entity ids that exist in the nodes table
-    (EntityCoverageMetric semantics: how much of what the corpus mentions
-    the graph actually models)."""
-    spark = nodes.sparkSession
-    mentioned = mentions.select("entity_id").distinct()
-    covered = mentioned.join(nodes.select("entity_id").distinct(), on="entity_id", how="left_semi")
-    total = mentioned.count()
-    return _one(spark, "entity_coverage", (covered.count() / total) if total else 1.0)
-
-
-def relationship_utilization(nodes: DataFrame, edges: DataFrame) -> DataFrame:
-    """Fraction of entities participating in ≥1 relationship
-    (RelationshipUtilizationMetric: isolated entities are dead weight)."""
-    spark = nodes.sparkSession
-    endpoints = (
-        edges.select(F.col("subj").alias("entity_id"))
-        .unionByName(edges.select(F.col("obj").alias("entity_id")))
-        .distinct()
-    )
-    used = nodes.join(endpoints, on="entity_id", how="left_semi")
-    total = nodes.count()
-    return _one(spark, "relationship_utilization", (used.count() / total) if total else 1.0)
-
-
-def graph_coverage(chunks: DataFrame, mentions: DataFrame) -> DataFrame:
-    """Fraction of chunks contributing ≥1 mention (GraphCoverageMetric:
-    silent chunks mean extraction missed content)."""
-    spark = chunks.sparkSession
-    all_chunks = chunks.select("chunk_id").distinct()
-    covered = all_chunks.join(
-        mentions.select("chunk_id").distinct(), on="chunk_id", how="left_semi"
-    )
-    total = all_chunks.count()
-    return _one(spark, "graph_coverage", (covered.count() / total) if total else 1.0)
-
-
-def community_relevance(membership: DataFrame, edges: DataFrame) -> DataFrame:
-    """Mean intra-community edge ratio at level 0 (CommunityRelevanceMetric
-    analogue: how much of the edge mass falls inside communities)."""
-    spark = membership.sparkSession
-    m = membership.filter(F.col("level") == 0).select(
-        F.col("member_id"), F.col("community_id")
-    )
-    total = edges.count()
-    if not total:
-        return _one(spark, "community_relevance", 1.0)
-    intra = (
-        edges.join(m.withColumnRenamed("member_id", "subj"), on="subj")
-        .join(
-            m.withColumnRenamed("member_id", "obj").withColumnRenamed("community_id", "_c2"),
-            on="obj",
-        )
-        .filter(F.col("community_id") == F.col("_c2"))
-        .count()
-    )
-    return _one(spark, "community_relevance", intra / total)
-
-
-def subgraph_quality(nodes: DataFrame, edges: DataFrame) -> DataFrame:
-    """Weighted mean of placeholder-free node ratio and parallel-edge-free
-    edge ratio (SubgraphQualityMetric analogue: structural cleanliness)."""
-    from graph_rag_agent_spark.config import UNKNOWN_ENTITY_TYPE
-
-    spark = nodes.sparkSession
-    n_total = nodes.count()
-    n_known = nodes.filter(F.col("entity_type") != UNKNOWN_ENTITY_TYPE).count()
-    e_total = edges.count()
-    e_distinct = edges.select("subj", "pred", "obj").distinct().count()
-    node_ratio = (n_known / n_total) if n_total else 1.0
-    edge_ratio = (e_distinct / e_total) if e_total else 1.0
-    return _one(spark, "subgraph_quality", 0.5 * node_ratio + 0.5 * edge_ratio)
-
-
 def graph_quality_report(
     nodes: DataFrame,
     edges: DataFrame,
@@ -240,14 +161,21 @@ def graph_quality_report(
     chunks: DataFrame,
     membership: DataFrame,
 ) -> DataFrame:
-    """All five metrics as one (metric, value) DataFrame — computed in ONE
-    distributed plan. The per-metric functions above are the readable
-    single-metric API, but each runs 1-2 driver-side ``.count()`` jobs plus
-    Python branching; composing them would cost ~9 driver round-trips per
-    build (the anti-pattern the consistency report shed in round 2). Here
-    every input feeds a single-row aggregate branch, the branches cross-join
-    (1×1, no wide shuffle), the empty-input fallbacks become ``when()``
-    guards, and ``stack`` unpivots the wide row — one action, same values.
+    """The five graph-quality metrics as one (metric, value) DataFrame:
+
+    - entity_coverage — share of mentioned entity ids that are nodes;
+    - relationship_utilization — share of nodes that are an edge endpoint;
+    - graph_coverage — share of chunks with ≥ 1 mention;
+    - community_relevance — share of edges whose endpoints share a level-0
+      community;
+    - subgraph_quality — 0.5 × share of nodes with a known type + 0.5 ×
+      share of edges that are distinct (subj, pred, obj) triples.
+
+    An empty denominator scores 1.0. Computed in ONE distributed plan, not
+    one driver-side ``.count()`` per ratio: every input feeds a single-row
+    aggregate branch, the branches cross-join (1×1, no wide shuffle), the
+    empty-input fallbacks are ``when()`` guards, and ``stack`` unpivots the
+    wide row.
     """
     from graph_rag_agent_spark.config import UNKNOWN_ENTITY_TYPE
 
@@ -289,7 +217,7 @@ def graph_quality_report(
     for b in branches[1:]:
         wide = wide.crossJoin(b)
 
-    def ratio(num: str, den: str) -> F.Column:  # empty input → 1.0 (as above)
+    def ratio(num: str, den: str) -> F.Column:  # empty input → 1.0
         return F.when(F.col(den) > 0, F.col(num) / F.col(den)).otherwise(F.lit(1.0))
 
     node_ratio = ratio("nodes_known", "nodes_total")

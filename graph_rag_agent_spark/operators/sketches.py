@@ -9,11 +9,6 @@ estimator is a pure function of the k-th order statistic, the WHOLE sketch
 — not just its error bound — is deterministic and value-checked against a
 DuckDB twin, something an HLL register array can never be.
 
-Spark's production-grade counterpart, ``approx_count_distinct`` (HLL++,
-map-side partial aggregation, tunable rsd), is exposed alongside for the
-cases where a ±2% answer at lower shuffle cost beats checkability; the
-pytest bounds its error against exact counts.
-
 Scale shape: kmv first DISTINCTs (group, id) — one shuffle that also
 dedups — then sorts only within each group's distinct-hash set to take the
 k smallest (row_number window). On a real deployment with extreme groups a
@@ -105,15 +100,4 @@ def kmv_distinct(
                 6,
             ).alias("estimate"),
         )
-    )
-
-
-def hll_distinct(
-    df: DataFrame, group_col: str, id_col: str, rsd: float = 0.02
-) -> DataFrame:
-    """→ (group, approx_distinct): Spark's native HLL++ — map-side partial
-    aggregation, O(registers) state, the production path when a bounded
-    relative error beats the KMV's exact checkability."""
-    return df.groupBy(group_col).agg(
-        F.approx_count_distinct(id_col, rsd).alias("approx_distinct")
     )

@@ -1,48 +1,23 @@
-"""Streaming wrappers.
+"""Streaming operators.
 
 The reference has NO stream processing — its nearest analogue is the
 polling incremental-update daemon (incremental_update_scheduler.py, N9),
-which we map to batch-incremental runs. These helpers put Structured
-Streaming plumbing around that mapping:
+which maps to batch-incremental `IncrementalUpdatePipeline.run_once`
+runs. These operators run on a Structured Streaming frame and on a
+static one alike:
 
-- ``corpus_stream`` + ``run_incremental_stream``: watch a corpus directory
-  with Trigger.AvailableNow; each micro-batch drives the same
-  IncrementalUpdatePipeline.run_once the batch path uses (foreachBatch =
-  exactly-once per-batch semantics against the catalog tables).
-- ``windowed_event_counts``: watermarked sliding-window aggregation over an
-  events stream — the standard late-data-tolerant rollup shape, exercised
-  in tests via the memory sink on the driver's events table.
+- ``streaming_triples``: corpus stream → triples as one stateless append
+  plan (chunk → extract → parse);
+- ``streaming_first_seen``: stateful first-occurrence dedup by key;
+- ``windowed_event_counts`` / ``sessionized_event_counts``: watermarked
+  sliding-window and gap-session aggregation over an events stream;
+- ``cascading_rollup`` / ``refresh_rollup``: multi-resolution rollups and
+  their delta refresh.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-
-CORPUS_SCHEMA = "repo string, path string, commit string, lang string, content string"
-
-
-def corpus_stream(spark: SparkSession, path: str) -> DataFrame:
-    return spark.readStream.schema(CORPUS_SCHEMA).parquet(path)
-
-
-def run_incremental_stream(spark: SparkSession, path: str, pipeline, checkpoint: str):
-    """Trigger.AvailableNow over a corpus directory; each batch is one
-    incremental pipeline pass. Returns the finished StreamingQuery."""
-
-    def on_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        pipeline.run_once(batch_df)
-
-    q = (
-        corpus_stream(spark, path)
-        .writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+from pyspark.sql import DataFrame, functions as F
 
 
 def streaming_triples(
@@ -61,9 +36,7 @@ def streaming_triples(
     within-batch chunk dedup the batch path does still happens (equal
     chunk_ids co-partition in the extraction shuffle); cross-batch
     re-extraction of already-seen texts is suppressed by composing
-    ``streaming_first_seen`` on chunk_id after chunking, or by the
-    extraction-cache anti-join in the foreachBatch path — both stay
-    available, this is the latency-shaped alternative."""
+    ``streaming_first_seen`` on chunk_id after chunking."""
     from graph_rag_agent_spark.operators.chunker import chunk_documents
     from graph_rag_agent_spark.operators.extraction import extract_chunks
     from graph_rag_agent_spark.operators.parsing import (

@@ -40,20 +40,6 @@ def test_label_propagation_two_cliques(spark):
     assert labels["a1"] != labels["b1"]
 
 
-def test_degree_filtered_projection(spark):
-    from graph_rag_agent_spark.operators.communities import (
-        degree_filtered_projection,
-    )
-
-    # star around 'hub' plus an isolated pair → top-3 nodes are hub + 2 spokes
-    rows = [("hub", "s1"), ("hub", "s2"), ("hub", "s3"), ("p1", "p2")]
-    wp = weighted_projection(_edges(spark, rows))
-    kept = degree_filtered_projection(wp, max_nodes=4)
-    nodes_kept = {r.s for r in kept.collect()} | {r.d for r in kept.collect()}
-    assert "hub" in nodes_kept
-    assert kept.count() <= 4
-
-
 def test_overlapping_label_propagation(spark):
     from graph_rag_agent_spark.operators.communities import (
         overlapping_label_propagation,

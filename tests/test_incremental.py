@@ -15,7 +15,7 @@ from graph_rag_agent_spark.operators.incremental import (
     latest_wins,
     upsert_nodes,
 )
-from graph_rag_agent_spark.plans.build import BuildPipeline
+from graph_rag_agent_spark.plans.build import BuildPipeline, run_kg_build_in_memory
 from graph_rag_agent_spark.plans.incremental_update import IncrementalUpdatePipeline
 from graph_rag_agent_spark.sources.catalog import TableCatalog
 from graph_rag_agent_spark.sources.corpus import CORPUS_COLUMNS, generate_corpus_pdf
@@ -202,10 +202,21 @@ HOSTILE = {
 }
 
 
+def _assert_in_memory_build_matches(spark, corpus, catalog):
+    """run_kg_build_in_memory gives the nodes, edges and mentions that
+    BuildPipeline.run wrote to `catalog` for the same corpus."""
+    canonical = run_kg_build_in_memory(spark, corpus)
+    for table in ("nodes", "edges", "mentions"):
+        got, want = getattr(canonical, table), catalog.read(table)
+        assert got.columns == want.columns, table
+        assert _stable_rows(got) == _stable_rows(want), table
+
+
 @pytest.mark.parametrize("case", sorted(HOSTILE))
 def test_hostile_corpus_fixed_point_and_incremental_equals_full(spark, case):
-    """A rerun on an unchanged corpus is a no-op, and one edit applied
-    incrementally gives a full rebuild's tables."""
+    """A rerun on an unchanged corpus is a no-op, one edit applied
+    incrementally gives a full rebuild's tables, and the in-memory build
+    gives the full build's canonical graph on both corpora."""
     v1, v2 = (
         spark.createDataFrame(rows, CORPUS_SCHEMA) for rows in HOSTILE[case]
     )
@@ -213,6 +224,7 @@ def test_hostile_corpus_fixed_point_and_incremental_equals_full(spark, case):
          tempfile.TemporaryDirectory(prefix="graft_full_") as wh2:
         cat1 = TableCatalog(spark, wh1)
         BuildPipeline(spark, cat1).run(v1)
+        _assert_in_memory_build_matches(spark, v1, cat1)
         assert IncrementalUpdatePipeline(spark, cat1).run_once(v1)["changed"] is False
         res = IncrementalUpdatePipeline(spark, cat1).run_once(v2)
         assert res["changed"] and res["added"] + res["modified"] > 0
@@ -220,6 +232,7 @@ def test_hostile_corpus_fixed_point_and_incremental_equals_full(spark, case):
 
         cat2 = TableCatalog(spark, wh2)
         BuildPipeline(spark, cat2).run(v2)
+        _assert_in_memory_build_matches(spark, v2, cat2)
         for table in EQUIVALENT_TABLES:
             got, want = cat1.read(table), cat2.read(table)
             assert got.columns == want.columns, table

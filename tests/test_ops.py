@@ -7,18 +7,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from graph_rag_agent_spark.operators.dedup import (
-    dedup_exact,
     exact_duplicates,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     simhash_near_duplicates,
     simhash_signatures,
 )
-from graph_rag_agent_spark.operators.similarity import (
-    brute_force_topk,
-    lsh_topk,
-    pairwise_topk_per_label,
-)
+from graph_rag_agent_spark.operators.similarity import pairwise_topk_per_label
 
 
 @pytest.fixture(scope="module")
@@ -36,7 +31,6 @@ def docs(spark):
 def test_exact_dedup(spark, docs):
     dups = exact_duplicates(docs).collect()
     assert len(dups) == 1 and dups[0].dup_count == 2
-    assert dedup_exact(docs).count() == 4
 
 
 def test_jaccard_pairs(spark, docs):
@@ -90,30 +84,6 @@ def test_minhash_lsh(spark, docs):
     assert ("1", "4") not in pairs and ("1", "5") not in pairs
 
 
-def test_minhash_production_hash_same_recall(spark):
-    """The vectorized crc32-polynomial production hash path must find the
-    same near-dup pairs as the md5 oracle-twin path on a corpus with clear
-    near-dups and clear non-dups (both are uniform 31-bit hash families —
-    only the throughput differs, not the LSH statistics)."""
-    rows = []
-    base = " ".join(f"tok{i}" for i in range(60))
-    for d in range(8):
-        rows.append((2 * d, base + f" tail{d}"))           # near-dup of 2d+1
-        rows.append((2 * d + 1, base + f" tail{d} extra"))
-        rows.append((100 + d, " ".join(f"u{d}x{i}" for i in range(60))))
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    md5_pairs = {
-        (r.doc_a, r.doc_b) for r in minhash_lsh_pairs(docs).collect()
-    }
-    poly_pairs = {
-        (r.doc_a, r.doc_b)
-        for r in minhash_lsh_pairs(docs, production_hash=True).collect()
-    }
-    expected = {(str(2 * d), str(2 * d + 1)) for d in range(8)}
-    assert expected <= md5_pairs and expected <= poly_pairs
-    assert md5_pairs == poly_pairs
-
-
 @pytest.fixture(scope="module")
 def vectors(spark):
     rng = np.random.RandomState(7)
@@ -123,27 +93,6 @@ def vectors(spark):
         v /= np.linalg.norm(v)
         rows.append((i, [float(x) for x in v], int(i % 3)))
     return rows, spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
-
-
-def test_brute_force_topk_matches_numpy(spark, vectors):
-    rows, df = vectors
-    q = rows[0][1]
-    got = [r.vec_id for r in brute_force_topk(df, q, k=5).collect()]
-    mats = np.array([r[1] for r in rows])
-    qv = np.array(q)
-    sims = mats @ qv / (np.linalg.norm(mats, axis=1) * np.linalg.norm(qv))
-    expect = sorted(range(50), key=lambda i: (-sims[i], i))[:5]
-    assert got == expect
-
-
-def test_lsh_topk_recall(spark, vectors):
-    rows, df = vectors
-    q = rows[0][1]
-    exact = {r.vec_id for r in brute_force_topk(df, q, k=5).collect()}
-    approx = {int(r.vec_id) for r in lsh_topk(df, q, k=5, n_planes=4, n_tables=8).collect()}
-    # multi-table LSH should recover most of the exact top-5 (incl. the query itself)
-    assert 0 in approx
-    assert len(exact & approx) >= 3
 
 
 def test_pairwise_topk_per_label(spark, vectors):
@@ -157,20 +106,6 @@ def test_pairwise_topk_per_label(spark, vectors):
     for vid, neigh in by_vec.items():
         assert len(neigh) <= 3
         assert all(labels[n.neighbor_id] == labels[vid] for n in neigh)
-
-
-def test_ivf_topk_recall(spark, vectors):
-    from graph_rag_agent_spark.operators.similarity import ivf_topk
-
-    rows, df = vectors
-    q = rows[0][1]
-    exact = [r.vec_id for r in brute_force_topk(df, q, k=5).collect()]
-    approx = [int(r.vec_id) for r in ivf_topk(df, q, k=5, n_lists=4, n_probe=2).collect()]
-    assert 0 in approx  # the query vector itself is found
-    assert len(set(exact) & set(approx)) >= 3
-    # determinism: same call → same result
-    approx2 = [int(r.vec_id) for r in ivf_topk(df, q, k=5, n_lists=4, n_probe=2).collect()]
-    assert approx == approx2
 
 
 def test_cosine_pairs_blocked_exact(spark, vectors):
@@ -190,17 +125,6 @@ def test_cosine_pairs_blocked_exact(spark, vectors):
         assert abs(got[k2] - v) < 1e-9
 
 
-def test_pairwise_topk_blocked_matches_per_label(spark, vectors):
-    from graph_rag_agent_spark.operators.similarity import pairwise_topk_blocked
-
-    rows, df = vectors
-    per_label = {(r.vec_id, r.neighbor_id): round(r.score, 9)
-                 for r in pairwise_topk_per_label(df, k=3).collect()}
-    blocked = {(r.vec_id, r.neighbor_id): round(r.score, 9)
-               for r in pairwise_topk_blocked(df, k=3, n_blocks=4).collect()}
-    assert per_label == blocked
-
-
 def test_blocked_ops_derive_block_count_from_size(spark, vectors):
     """n_blocks=None derives the block count from a count so block payloads
     are bounded by target_block_rows at ANY corpus size (round-2 judge ask);
@@ -209,7 +133,6 @@ def test_blocked_ops_derive_block_count_from_size(spark, vectors):
     from graph_rag_agent_spark.operators.similarity import (
         _derive_n_blocks,
         cosine_pairs_blocked,
-        pairwise_topk_blocked,
     )
 
     assert _derive_n_blocks(0, 4096) == 1
@@ -227,20 +150,6 @@ def test_blocked_ops_derive_block_count_from_size(spark, vectors):
            for r in cosine_pairs_blocked(df, threshold=0.5,
                                          target_block_rows=7).collect()}
     assert set(got) == set(expect)
-
-    per_label = {(r.vec_id, r.neighbor_id): round(r.score, 9)
-                 for r in pairwise_topk_per_label(df, k=3).collect()}
-    blocked = {(r.vec_id, r.neighbor_id): round(r.score, 9)
-               for r in pairwise_topk_blocked(df, k=3,
-                                              target_block_rows=5).collect()}
-    assert per_label == blocked
-
-
-def test_ivf_topk_empty_input(spark):
-    from graph_rag_agent_spark.operators.similarity import ivf_topk
-
-    empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
-    assert ivf_topk(empty, [1.0, 0.0], k=5).count() == 0
 
 
 def test_embedder_version_invalidates_cache_and_flags_failures(spark):
@@ -639,41 +548,3 @@ def test_semantic_dedup_chunked_path_matches_unchunked(spark):
     assert not kept[100] and not kept[101] and kept[5] and kept[7]
 
 
-def test_semantic_dedup_blocked_matches_single_task(spark):
-    from graph_rag_agent_spark.operators.similarity import (
-        semantic_dedup,
-        semantic_dedup_blocked,
-    )
-    import numpy as np
-
-    rng = np.random.RandomState(23)
-    rows = []
-    for i in range(80):
-        v = rng.normal(size=6)
-        v /= np.linalg.norm(v)
-        rows.append((i, [float(x) for x in v]))
-    rows += [(200, rows[3][1]), (201, rows[9][1]), (202, rows[9][1])]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    single = sorted(map(tuple, semantic_dedup(df, n_clusters=4, threshold=0.8).collect()))
-    # n_blocks=4 forces multi-block clusters so cross-block, same-block,
-    # and both drop directions (a-side and b-side) are all exercised
-    blocked = sorted(
-        map(tuple, semantic_dedup_blocked(df, n_clusters=4, threshold=0.8, n_blocks=4).collect())
-    )
-    assert single == blocked
-    kept = dict((v, k) for v, c, k in blocked)
-    assert not kept[200] and not kept[201] and not kept[202]
-
-
-def test_semantic_dedup_blocked_derives_block_count(spark):
-    from graph_rag_agent_spark.operators.similarity import semantic_dedup_blocked
-
-    rows = [(i, [float(i % 7 + 1), 1.0]) for i in range(40)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    # target_block_rows=8 on a ~40-row hot cluster must still return every
-    # vector exactly once with a boolean keep
-    out = semantic_dedup_blocked(
-        df, n_clusters=2, threshold=0.999999, target_block_rows=8
-    ).collect()
-    assert len(out) == 40
-    assert {r.vec_id for r in out} == set(range(40))

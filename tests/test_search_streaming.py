@@ -184,16 +184,13 @@ def test_streaming_triples_matches_batch(spark, tmp_path):
         relationships_from_records,
     )
     from graph_rag_agent_spark.sources.corpus import generate_corpus
-    from graph_rag_agent_spark.streaming.incremental_stream import (
-        CORPUS_SCHEMA,
-        streaming_triples,
-    )
+    from graph_rag_agent_spark.streaming.incremental_stream import streaming_triples
 
     corpus = generate_corpus(spark, 20)
     src = str(tmp_path / "corpus_in")
     corpus.write.parquet(src)
 
-    stream = spark.readStream.schema(CORPUS_SCHEMA).parquet(src)
+    stream = spark.readStream.schema(corpus.schema).parquet(src)
     q = (
         streaming_triples(stream)
         .writeStream.outputMode("append")

@@ -1,8 +1,8 @@
-"""KMV / HLL distinct-count sketches."""
+"""KMV distinct-count sketches."""
 
 from pyspark.sql import functions as F
 
-from graph_rag_agent_spark.operators.sketches import hll_distinct, kmv_distinct
+from graph_rag_agent_spark.operators.sketches import kmv_distinct
 
 
 def test_kmv_exact_below_capacity(spark):
@@ -33,12 +33,6 @@ def test_kmv_duplicate_ids_do_not_inflate(spark):
     a = kmv_distinct(dup, "g", "id", k=128).collect()[0].estimate
     b = kmv_distinct(uniq, "g", "id", k=128).collect()[0].estimate
     assert a == b  # the distinct() stage makes multiplicity invisible
-
-
-def test_hll_error_bound(spark):
-    df = spark.createDataFrame([("g", i) for i in range(20000)], "g string, id long")
-    got = hll_distinct(df, "g", "id", rsd=0.02).collect()[0].approx_distinct
-    assert abs(got - 20000) / 20000 < 0.1
 
 
 def test_kmv_xxhash_production_path_error_bound(spark):

@@ -135,10 +135,12 @@ def main():
     # pure SQL (no Python eval), and the site/ownership re-join is an equi
     # join — never a quadratic product
     # (the queries() entry is memo-checkpointed, which would hide the plan —
-    # gate the operator's own frame)
+    # gate the frame the query checkpoints: its window, xxhash64 keys)
     from graph_rag_agent_spark.operators.dedup import duplicate_spans
 
-    p12 = plan_of(duplicate_spans(entry_mod._docs(spark, sf), window=8))
+    p12 = plan_of(duplicate_spans(
+        entry_mod._docs(spark, sf), window=entry_mod._SPAN_WINDOW, production_hash=True
+    ))
     if "BatchEvalPython" in p12 or "ArrowEvalPython" in p12:
         failures.append("duplicate_spans: Python UDF in the plan")
     for bad in ("CartesianProduct", "BroadcastNestedLoopJoin"):
