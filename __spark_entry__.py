@@ -859,7 +859,7 @@ def _q_jaccard_pairs(spark, sf_dir):
 
 
 def _q_simhash(spark, sf_dir):
-    return simhash_signatures(_docs(spark, sf_dir)).select(
+    return simhash_signatures(_docs(spark, sf_dir, spread=False)).select(
         F.col("id").alias("doc_id"), "simhash"
     )
 
@@ -1098,7 +1098,7 @@ def _q_sequence_manifest(spark, sf_dir):
     span's offset inside the sequence. The SQL twin reproduces the
     exclusive prefix sum and the span arithmetic with generate_series."""
     spans = pack_sequences(
-        _docs(spark, sf_dir), seq_len=_SEQ_LEN, part_cols=("lang",)
+        _docs(spark, sf_dir, spread=False), seq_len=_SEQ_LEN, part_cols=("lang",)
     )
     return spans.select(
         "lang",

@@ -59,7 +59,7 @@ COMMUNITY_TOP_SUMMARIES = 200  # reference summary/leiden.py:10-151 LIMIT 200
 COMMUNITY_GAMMA = 1.0          # Leiden resolution (reference gds.leiden gamma)
 # ≤ this many projected edges → exact driver-side Leiden kernel (the
 # reference's gds.leiden is likewise in-JVM single-machine); above it, the
-# distributed weighted-LPA + contraction approximation runs
+# distributed LPA-seeded modularity local-move + contraction loop runs
 COMMUNITY_DRIVER_THRESHOLD = 2_000_000
 SLLPA_DRIVER_THRESHOLD = 50_000  # ≤ this many edges and vertices → driver SLLPA sweeps
 
@@ -76,9 +76,6 @@ CANON_DRIVER_THRESHOLD = 200_000
 # one driver kernel over the collect_if_fits table; above it, distributed loops
 DRIVER_MAX_EDGES = 1_000_000
 
-# ---- misc ---------------------------------------------------------------------
-SEED = 42
-
 
 @dataclass(frozen=True)
 class PipelineConfig:
@@ -94,13 +91,6 @@ class PipelineConfig:
     max_gleanings: int = MAX_GLEANINGS
     community_max_levels: int = COMMUNITY_MAX_LEVELS
     community_max_iter: int = COMMUNITY_MAX_ITER
-    seed: int = SEED
-    # community detector for the BUILD/INCREMENTAL plans: 'auto' = the
-    # size-adaptive modularity detector (detect_communities);
-    # 'lpa' = weighted label propagation — COMPONENT-LOCAL, which lets the
-    # incremental plan re-detect only delta-touched components
-    # (communities.incremental_communities) instead of the whole graph
-    community_method: str = "auto"
     # auto-vs-manual edit resolution (reference config/settings.py
     # conflict_strategy; manual_edit_manager.resolve_conflicts:363-477)
     conflict_strategy: str = "manual_first"

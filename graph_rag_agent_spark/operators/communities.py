@@ -8,13 +8,14 @@ mentioning chunks and LLM-summarizes the top 200
 Spark rebuild — no GDS, no GraphFrames:
 - G1 projection    → undirected weighted edge aggregation:
                      (least, greatest) pair groupBy count.
-- G3 detection     → synchronous weighted label propagation (a deterministic
-                     Leiden-approximating local-move loop) as a driver-side
-                     DataFrame iteration with per-iteration localCheckpoint;
-                     hierarchy levels by contracting the graph on the found
-                     communities and re-running (maxLevels from config).
-                     Parity with GDS Leiden is structural (deterministic
-                     fixtures), not numeric — the P/R gate is on triples.
+- G3 detection     → size-adaptive: the exact Leiden kernel on the driver
+                     when the projection fits, else an LPA-seeded modularity
+                     local-move loop as a DataFrame iteration with
+                     per-iteration localCheckpoint; hierarchy levels by
+                     contracting the graph on the found communities and
+                     re-running (maxLevels from config). Parity with GDS
+                     Leiden is structural (deterministic fixtures), not
+                     numeric — the P/R gate is on triples.
 - G5 hierarchy     → per-entity communities array<bigint> via dense ids.
 - G6 rank          → join members → mentions → countDistinct(chunk_id).
 - G8/G9 summary    → template summarizer (pluggable; LLM in prod) over
@@ -29,7 +30,7 @@ are bounded by the top-K limit.
 
 from __future__ import annotations
 
-from typing import Iterator, List, Tuple
+from typing import Iterator, List
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
@@ -277,7 +278,6 @@ def detect_communities(
     edges: DataFrame,
     max_levels: int = COMMUNITY_MAX_LEVELS,
     max_iter: int = COMMUNITY_MAX_ITER,
-    method: str = "auto",
     gamma: float = COMMUNITY_GAMMA,
     driver_threshold_edges: int = COMMUNITY_DRIVER_THRESHOLD,
 ) -> DataFrame:
@@ -285,48 +285,37 @@ def detect_communities(
     each level 0..L (reference leiden.py writeProperty='communities').
 
     SIZE-ADAPTIVE like the reference (gds.leiden runs inside the Neo4j JVM —
-    single-machine): projected graphs ≤ `driver_threshold_edges` run the
-    exact deterministic Leiden kernel (modularity local-move + constrained
-    refinement + aggregation, functions/leiden_kernel.py) on the driver;
-    larger graphs use the DISTRIBUTED modularity local-move + contraction
-    loop (`modularity_local_move` — the same gain rule as the kernel's
-    phase 1, parity-gated vs the kernel in pytest). `method='lpa'` forces
-    the plain weighted-LPA variant; 'leiden' forces the kernel."""
+    single-machine): when the projected edges and the vertices both fit
+    `driver_threshold_edges` (one `collect_if_fits` probe each), the exact
+    deterministic Leiden kernel (modularity local-move + constrained
+    refinement + aggregation, functions/leiden_kernel.py) runs on the
+    driver; otherwise the DISTRIBUTED modularity local-move + contraction
+    loop runs, LPA-seeded at level 0 (`modularity_local_move` — the same
+    gain rule as the kernel's phase 1, parity-gated vs the kernel in
+    pytest)."""
     verts = nodes.select(F.col("entity_id").alias("id"))
     wedges = weighted_projection(edges).transform(loop_checkpoint)
 
-    if method != "lpa":
-        # edge AND vertex set must both fit — a graph can have few edges
-        # but a huge isolated-node population
-        t = driver_threshold_edges
-        e_tab = collect_if_fits(wedges.select("s", "d", "weight"), t, "leiden edges")
-        v_tab = None if e_tab is None else collect_if_fits(verts, t, "leiden vertices")
-        if method == "leiden" and v_tab is None:
-            # forcing the driver kernel on a graph the probe says does NOT
-            # fit would collect the whole projected graph onto the driver
-            # (r4 judge flag) — refuse instead of OOMing at 10^9 edges
-            raise ValueError(
-                "method='leiden' forces the driver kernel but the projected "
-                f"graph exceeds driver_threshold_edges={t} "
-                "(counts-first fit probe). Use method='auto' for the "
-                "distributed path, or raise driver_threshold_edges if the "
-                "driver genuinely has the memory."
-            )
-        if v_tab is not None:
-            from graph_rag_agent_spark.functions.leiden_kernel import leiden_levels
+    # edge AND vertex set must both fit — a graph can have few edges but a
+    # huge isolated-node population
+    t = driver_threshold_edges
+    e_tab = collect_if_fits(wedges.select("s", "d", "weight"), t, "leiden edges")
+    v_tab = None if e_tab is None else collect_if_fits(verts, t, "leiden vertices")
+    if v_tab is not None:
+        from graph_rag_agent_spark.functions.leiden_kernel import leiden_levels
 
-            edge_list = [(s, d, float(w)) for s, d, w in zip(*e_tab.to_pydict().values())]
-            node_ids = v_tab.column("id").to_pylist()
-            levels = leiden_levels(
-                node_ids, edge_list, gamma=gamma,
-                max_levels=max_levels, max_sweeps=max_iter,
-            )
-            rows = [
-                (v, [int(lv[v]) for lv in levels]) for v in sorted(node_ids)
-            ]
-            return local_frame(
-                nodes.sparkSession, rows, "entity_id string, communities array<bigint>"
-            )
+        edge_list = [(s, d, float(w)) for s, d, w in zip(*e_tab.to_pydict().values())]
+        node_ids = v_tab.column("id").to_pylist()
+        levels = leiden_levels(
+            node_ids, edge_list, gamma=gamma,
+            max_levels=max_levels, max_sweeps=max_iter,
+        )
+        rows = [
+            (v, [int(lv[v]) for lv in levels]) for v in sorted(node_ids)
+        ]
+        return local_frame(
+            nodes.sparkSession, rows, "entity_id string, communities array<bigint>"
+        )
 
     # ---- distributed Leiden-shaped hierarchy loop ----
     # Full phase structure per level (mirrors the kernel, leiden_levels):
@@ -350,21 +339,17 @@ def detect_communities(
     cur_verts = verts
     agg_init = None
     for level in range(max_levels):
-        if method == "lpa":
-            labels = label_propagation(cur_verts, wedges, max_iter=max_iter)
-        else:
-            # LPA converges fast; the modularity sweeps refine its
-            # partition toward the kernel's objective (≥ 0.95× gated)
-            seed = (
-                agg_init
-                if agg_init is not None
-                else label_propagation(cur_verts, wedges, max_iter=max_iter)
-            )
-            labels = modularity_local_move(
-                cur_verts, wedges, gamma=gamma, max_iter=max_iter,
-                init_labels=seed,
-            )
-        labels = labels.transform(loop_checkpoint)
+        # LPA converges fast; the modularity sweeps refine its partition
+        # toward the kernel's objective (≥ 0.95× gated)
+        seed = (
+            agg_init
+            if agg_init is not None
+            else label_propagation(cur_verts, wedges, max_iter=max_iter)
+        )
+        labels = modularity_local_move(
+            cur_verts, wedges, gamma=gamma, max_iter=max_iter,
+            init_labels=seed,
+        ).transform(loop_checkpoint)
 
         # dense 0-based ids per level (gds consecutiveIds) — distributed
         # rank assignment (operators/ids), never an unpartitioned
@@ -380,13 +365,10 @@ def detect_communities(
         )
 
         if level + 1 < max_levels:
-            if method == "lpa":
-                refined = labels  # plain LPA: contract on the partition
-            else:
-                refined = modularity_local_move(
-                    cur_verts, wedges, gamma=gamma, max_iter=max_iter,
-                    constraint_labels=labels,
-                )
+            refined = modularity_local_move(
+                cur_verts, wedges, gamma=gamma, max_iter=max_iter,
+                constraint_labels=labels,
+            )
             # aggregate vertex per refined community = min member id
             rep = refined.groupBy("label").agg(F.min("id").alias("rep"))
             rmap = (
@@ -417,16 +399,15 @@ def detect_communities(
                 .transform(loop_checkpoint)
             )
             cur_verts = rep.select(F.col("rep").alias("id"))
-            if method != "lpa":
-                # aggregate level starts from the UNREFINED partition
-                # (Traag alg. 1): each refined rep inherits its members'
-                # shared `labels` community (min = deterministic pick)
-                agg_init = (
-                    rmap.join(labels, on="id")
-                    .groupBy("rep")
-                    .agg(F.min("label").alias("label"))
-                    .select(F.col("rep").alias("id"), "label")
-                )
+            # aggregate level starts from the UNREFINED partition (Traag
+            # alg. 1): each refined rep inherits its members' shared
+            # `labels` community (min = deterministic pick)
+            agg_init = (
+                rmap.join(labels, on="id")
+                .groupBy("rep")
+                .agg(F.min("label").alias("label"))
+                .select(F.col("rep").alias("id"), "label")
+            )
 
     out = per_level[0]
     for ent in per_level[1:]:
@@ -562,17 +543,6 @@ def overlapping_label_propagation(
         .withColumn("strength", F.col("hits") / F.col("_total"))
         .filter(F.col("strength") >= min_association)
         .select("id", "label", F.round("strength", 6).alias("strength"))
-    )
-
-
-def lpa_entity_communities(membership: DataFrame) -> DataFrame:
-    """LPA flat membership (id, label[, ...]) → the (entity_id, communities)
-    hierarchy shape detect_communities emits, as a single-level hierarchy —
-    lets the build/incremental plans swap the component-local LPA detector
-    in behind the same downstream membership/rank/summarize stages."""
-    return membership.select(
-        F.col("id").alias("entity_id"),
-        F.array(F.col("label").cast("string")).alias("communities"),
     )
 
 
@@ -796,7 +766,6 @@ def incremental_communities(
     new_wedges: DataFrame,
     old_membership: DataFrame,
     detect_fn,
-    id_col: str = "id",
     collect_stats: bool = False,
 ) -> DataFrame:
     """Scoped incremental community re-detection for the daily-delta
@@ -878,9 +847,9 @@ def incremental_communities(
     )
 
     redetected = detect_fn(refreshed_ids, scoped)
-    retained = old_membership.join(
-        refreshed_ids.withColumnRenamed("id", id_col), on=id_col, how="left_anti"
-    ).join(verts.withColumnRenamed("id", id_col), on=id_col, how="left_semi")
+    retained = old_membership.join(refreshed_ids, on="id", how="left_anti").join(
+        verts, on="id", how="left_semi"
+    )
 
     global INCR_COMM_LAST
     if collect_stats:

@@ -80,30 +80,35 @@ def temperature_sample(
     Membership is the same engine-portable pure-function-of-the-id rule as
     ``stratified_sample`` (first 8 md5 hex chars under a per-stratum
     threshold), but the thresholds are DERIVED from the corpus counts
-    inside the plan: two tiny stratum-level aggregates (counts, then the
-    K minimum) broadcast back onto the doc stream — no driver collect, no
+    inside the plan: two tiny aggregates (stratum counts, then their
+    one-row gather) broadcast back onto the doc stream — no driver collect, no
     RNG, reproducible across runs/partitionings/cluster sizes.
 
     Scale shape: ONE count shuffle over ≤|strata| keys (map-side partial
     aggregation — the hot stratum never concentrates rows; skewed stratum
-    sizes are the POINT, that's what α corrects), then the whole
-    n_total → q → K → rate derivation runs as a window chain OVER THE
-    |strata|-ROW COUNT FRAME in a single plan — the windows are
-    partition-less but bounded by construction at |strata| rows (domains,
-    not documents; a chained-aggregate formulation instead re-scans the
-    corpus once per derived quantity — measured 23 exchanges vs 4).
-    Finally one broadcast join puts the rates back on the doc stream and
-    a map-only codegen filter decides membership."""
-    wall = Window.partitionBy()
+    sizes are the POINT, that's what α corrects), then the |strata| counts
+    gather into ONE row (a global collect_list — domains, not documents)
+    whose array functions run the whole n_total → q → K → rate derivation
+    in a single plan, with no partition-less window and no join (a
+    chained-aggregate formulation instead re-scans the corpus once per
+    derived quantity — measured 23 exchanges vs 4). Finally one broadcast
+    join puts the rates back on the doc stream and a map-only codegen
+    filter decides membership."""
+    def total(field):  # Σ over the gathered strata
+        return F.aggregate("_s", F.lit(0.0), lambda acc, x: acc + x[field])
+
     rates = (
         docs.groupBy(strata_col)
         .agg(F.count("*").cast("double").alias("n_s"))
-        .withColumn(
-            "q_raw",
-            F.pow(F.col("n_s") / F.sum("n_s").over(wall), F.lit(float(alpha))),
-        )
-        .withColumn("q", F.col("q_raw") / F.sum("q_raw").over(wall))
-        .withColumn("k", F.min(F.col("n_s") / F.col("q")).over(wall))
+        .agg(F.collect_list(F.struct(strata_col, "n_s")).alias("_s"))
+        .withColumn("_s", F.transform("_s", lambda x: x.withField(
+            "q_raw", F.pow(x["n_s"] / total("n_s"), F.lit(float(alpha)))
+        )))
+        .withColumn("_s", F.transform("_s", lambda x: x.withField(
+            "q", x["q_raw"] / total("q_raw")
+        )))
+        .withColumn("k", F.array_min(F.transform("_s", lambda x: x["n_s"] / x["q"])))
+        .select(F.inline("_s"), "k")
         .withColumn(
             "rate", F.least(F.lit(1.0), F.col("q") * F.col("k") / F.col("n_s"))
         )

@@ -258,7 +258,7 @@ def _jaccard_profile_pairs(
     J = inter/(|A|+|B|−inter) in float64 — the identical IEEE division the
     JVM/oracle perform on the same exact integers. Qualifying PROFILE pairs
     (≪ doc pairs on saturating corpora) come back through Arrow; two
-    (block, rn)-keyed joins expand members to doc pairs at output size, and
+    profile-id-keyed joins expand members to doc pairs at output size, and
     same-profile docs pair at J = 1.0 without any verification. Only
     reachable behind the caller's Σm²·V flop probe — never the default."""
     keys = [*block_cols, "_lb"]
@@ -278,6 +278,12 @@ def _jaccard_profile_pairs(
                 Window.partitionBy(*keys).orderBy(F.col("_ws"))
             ),
         )
+        # one long per profile — the matmul tasks emit these instead of the
+        # (possibly wide string) block values per pair (narrow types across
+        # the Arrow boundary), and they are the single 8-byte key of the
+        # member expansion. Unique, not dense, and fixed by the checkpoint,
+        # so no global ranking window is needed
+        .withColumn("_g", F.monotonically_increasing_id())
         .localCheckpoint(eager=True)  # matmul chunks + both member joins
     )
     # exact regime check on the (already materialized) profile table: ONE
@@ -308,32 +314,17 @@ def _jaccard_profile_pairs(
             return None
         if flop_budget is not None and pair_ops * max(vocab, 1) > flop_budget:
             return None
-    # dense int block id: the matmul tasks emit (bid<<38 | rn) packed longs
-    # instead of repeating the (possibly wide string) block values per pair
-    # — narrower Arrow transfer and ONE 8-byte join key for the expansion
-    # (guide §2.3: narrow types across the boundary). The single-partition
-    # window runs over #blocks rows only (≪ profiles under the gate).
-    blocks = (
-        prof.select(*keys)
-        .distinct()
-        .withColumn(
-            "_bid", F.row_number().over(Window.orderBy(*keys)) - 1
-        )
-    )
-    profb = prof.join(F.broadcast(blocks), on=keys).select(
-        "_bid", "_rn", "_ws", "_members", "_n"
-    )
     chunked = (
-        profb.withColumn("_ck", ((F.col("_rn") - 1) / chunk_rows).cast("int"))
-        .groupBy("_bid", "_ck")
-        .agg(F.collect_list(F.struct("_rn", "_ws")).alias("_items"))
+        prof.withColumn("_ck", ((F.col("_rn") - 1) / chunk_rows).cast("int"))
+        .groupBy(*keys, "_ck")
+        .agg(F.collect_list(F.struct("_g", "_ws")).alias("_items"))
     )
     a, b = chunked.alias("a"), chunked.alias("b")
     paired = a.join(
         b,
-        on=[F.col("a._bid") == F.col("b._bid"), F.col("a._ck") <= F.col("b._ck")],
+        on=[F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+        + [F.col("a._ck") <= F.col("b._ck")],
     ).select(
-        F.col("a._bid").alias("_bid"),
         F.col("a._ck").alias("_ca"),
         F.col("b._ck").alias("_cb"),
         F.col("a._items").alias("_ia"),
@@ -342,16 +333,14 @@ def _jaccard_profile_pairs(
 
     def pair_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for bid, ca, cb, ia, ib in zip(
-                pdf["_bid"], pdf["_ca"], pdf["_cb"], pdf["_ia"], pdf["_ib"]
-            ):
+            for ca, cb, ia, ib in zip(pdf["_ca"], pdf["_cb"], pdf["_ia"], pdf["_ib"]):
                 same = ca == cb
-                rn_a = np.array([r["_rn"] for r in ia], dtype=np.int64)
+                g_a = np.array([r["_g"] for r in ia], dtype=np.int64)
                 sets_a = [r["_ws"] for r in ia]
                 if same:
-                    rn_b, sets_b = rn_a, sets_a
+                    g_b, sets_b = g_a, sets_a
                 else:
-                    rn_b = np.array([r["_rn"] for r in ib], dtype=np.int64)
+                    g_b = np.array([r["_g"] for r in ib], dtype=np.int64)
                     sets_b = [r["_ws"] for r in ib]
                 vocab: dict = {}
                 for s in sets_a:
@@ -382,22 +371,14 @@ def _jaccard_profile_pairs(
                 ii, jj = np.nonzero(hit)
                 if len(ii) == 0:
                     continue
-                packed_base = np.int64(bid) << np.int64(38)
                 yield pd.DataFrame(
-                    {
-                        "_ga": packed_base | rn_a[ii],
-                        "_gb": packed_base | rn_b[jj],
-                        "jaccard": jac[ii, jj],
-                    }
+                    {"_ga": g_a[ii], "_gb": g_b[jj], "jaccard": jac[ii, jj]}
                 )
 
     gp = paired.mapInPandas(
         pair_batches, schema="_ga bigint, _gb bigint, jaccard double"
     )
-    mem = profb.select(
-        (F.shiftleft(F.col("_bid").cast("long"), 38) + F.col("_rn")).alias("_g"),
-        F.explode("_members").alias("_id"),
-    )
+    mem = prof.select("_g", F.explode("_members").alias("_id"))
     # members table = one slim row per doc; broadcast it when provably
     # small so the (possibly huge) pair stream is never shuffled at all
     mema = mem.select(F.col("_g").alias("_ka"), F.col("_id").alias("_ida"))

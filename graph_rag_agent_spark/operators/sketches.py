@@ -31,7 +31,6 @@ def kmv_distinct(
     id_col: str,
     k: int = 256,
     hash_fn: str = "md5",
-    local_prereduce: bool = False,
 ) -> DataFrame:
     """→ (group, n_retained, estimate): deterministic KMV distinct-count
     estimate per group; groups with fewer than k distinct ids report the
@@ -63,29 +62,6 @@ def kmv_distinct(
         .distinct()
         .withColumn("_h", h)
     )
-    if local_prereduce:
-        # optional pre-reduce for HUGE groups: the per-group bottom-k
-        # window clusters ALL distinct ids into #groups partitions — with
-        # a handful of groups that is a handful of tasks sorting
-        # everything (guide §2.5: low-cardinality partition keys). A row
-        # outside the bottom-k of its (group, id-hash bucket) cannot be in
-        # the group's bottom-k, so a bucketed local window (parallelism =
-        # groups × buckets, scale-adaptive) shrinks the final per-group
-        # sort to ≤ k·buckets rows. Exact: (h, id) is a total order, and
-        # the global bottom-k survives bucket-local filtering. OFF by
-        # default: at bench scale (≤10⁶-row groups) the extra exchange
-        # measurably costs more than the small sorts it saves (A/B in
-        # OPTIMIZATION_r06.md); flip it on when per-group distinct counts
-        # are large enough that #groups single-threaded sorts dominate.
-        n_buckets = max(
-            1, int(df.sparkSession.sparkContext.defaultParallelism) * 4
-        )
-        wloc = Window.partitionBy(
-            group_col, F.pmod(F.xxhash64("_id"), F.lit(n_buckets))
-        ).orderBy(F.col("_h").asc(), F.col("_id").asc())
-        d = d.withColumn("_rl", F.row_number().over(wloc)).filter(
-            F.col("_rl") <= k
-        ).drop("_rl")
     w = Window.partitionBy(group_col).orderBy(F.col("_h").asc(), F.col("_id").asc())
     kept = d.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") <= k)
     return (

@@ -76,7 +76,6 @@ STAGES = {
     "mentions_raw": "parse_mentions", "entity_embeddings": "embed",
     "similar": "similar_join", "wcc": "wcc", "nodes": "canonicalize_nodes",
     "edges": "canonicalize_edges", "mentions": "canonicalize_mentions",
-    "lpa_membership": "communities_lpa",
     "entity_communities": "communities_detect",
     "communities": "communities_membership",
     "community_hierarchy": "communities_hierarchy",
@@ -151,48 +150,23 @@ def canonical_stage(nodes_raw, edges_raw, mentions_raw, cfg, materialize, existi
 
 
 def community_stages(nodes, edges, mentions, cfg, materialize, summarizer=None,
-                     prior_lpa=None, prior_summaries=None, prior_ranks=None) -> dict:
-    """canonical graph → communities, summaries and PageRank.
+                     prior_summaries=None, prior_ranks=None) -> dict:
+    """canonical graph → communities (detect_communities: driver Leiden
+    kernel or the distributed modularity loop, by projected size),
+    summaries and PageRank.
 
     The warm starts are the incremental run's, None on a full build:
-    `prior_lpa` = (old weighted projection, old lpa_membership) re-detects
-    only the delta-touched components; `prior_summaries` reuses the summary
-    of every community whose stringified info is unchanged; `prior_ranks`
-    seeds the PageRank fixpoint."""
+    `prior_summaries` reuses the summary of every community whose
+    stringified info is unchanged; `prior_ranks` seeds the PageRank
+    fixpoint. Detection itself re-runs over the whole graph: the modularity
+    gain divides by the global edge weight, so it is not component-local."""
     nodes = materialize("nodes", nodes)
     edges = materialize("edges", edges)
     mentions = materialize("mentions", mentions)
-    if cfg.community_method == "lpa":
-        # component-local detector: persists the flat membership so an
-        # incremental run can re-detect ONLY delta-touched components (the
-        # modularity default divides by the global 2m, so it re-detects
-        # wholesale)
-        from graph_rag_agent_spark.operators.communities import (
-            incremental_communities,
-            label_propagation,
-            lpa_entity_communities,
-        )
-
-        wedges = weighted_projection(edges).localCheckpoint(eager=True)
-
-        def detect(v, e):
-            return label_propagation(v, e, max_iter=cfg.community_max_iter)
-
-        if prior_lpa is not None:
-            lpa_memb = incremental_communities(prior_lpa[0], wedges, prior_lpa[1], detect)
-        else:
-            verts = (
-                wedges.select(F.col("s").alias("id"))
-                .unionByName(wedges.select(F.col("d").alias("id")))
-                .distinct()
-            )
-            lpa_memb = detect(verts, wedges)
-        entity_comms = lpa_entity_communities(materialize("lpa_membership", lpa_memb))
-    else:
-        entity_comms = detect_communities(
-            nodes, edges, max_levels=cfg.community_max_levels,
-            max_iter=cfg.community_max_iter,
-        )
+    entity_comms = detect_communities(
+        nodes, edges, max_levels=cfg.community_max_levels,
+        max_iter=cfg.community_max_iter,
+    )
     entity_comms = materialize("entity_communities", entity_comms)
     membership = materialize("communities", community_membership(entity_comms))
     materialize("community_hierarchy", community_hierarchy(entity_comms))

@@ -18,7 +18,6 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from graph_rag_agent_spark.config import PipelineConfig
-from graph_rag_agent_spark.operators.communities import weighted_projection
 from graph_rag_agent_spark.operators.consistency import repair, validation_report
 from graph_rag_agent_spark.operators.incremental import (
     detect_changes,
@@ -66,7 +65,11 @@ class IncrementalUpdatePipeline:
         and ``chunk_embeddings`` and ``graph_quality``. Refreshing the last
         two costs about 1.0-1.2 s and 1.9-2.6 s (warm, 4 cores, the 200-file
         benchmark corpus with a 2% delta of each kind) — roughly 15% of the
-        pass — so it is left to a separate, measured change."""
+        pass — so it is left to a separate, measured change.
+
+        Communities are re-detected over the whole new graph (the same
+        `detect_communities` call as a full build); summaries and PageRank
+        warm-start from the previous run's tables."""
         cat, cfg = self.catalog, self.config
         changes = detect_changes(corpus, cat.read("registry"))
         n_added = changes.added.count()
@@ -116,10 +119,9 @@ class IncrementalUpdatePipeline:
                 F.coalesce(F.col("manual_edit"), F.lit(False))
             ).localCheckpoint(eager=True)
 
-        # warm starts: the previous rank table (PageRank seed), summaries
+        # warm starts: the previous rank table (PageRank seed) and summaries
         # (content-addressed reuse: the summarizer runs only on communities
-        # whose stringified info changed) and, in LPA mode, the previous
-        # projection + membership (scoped re-detection)
+        # whose stringified info changed)
         prior_ranks = (
             cat.read("entity_pagerank").localCheckpoint(eager=True)
             if cat.exists("entity_pagerank") else None
@@ -129,13 +131,6 @@ class IncrementalUpdatePipeline:
             if self.summarizer is not None and cat.exists("community_summaries")
             else None
         )
-        prior_lpa = None
-        if (cfg.community_method == "lpa" and cat.exists("lpa_membership")
-                and prior_edges is not None):
-            prior_lpa = (
-                weighted_projection(prior_edges).localCheckpoint(eager=True),
-                cat.read("lpa_membership").localCheckpoint(eager=True),
-            )
 
         # --- N2: rebuild changed partitions only. Only chunk texts the
         # surviving docs lack are extracted and parsed; the rest of their
@@ -179,7 +174,7 @@ class IncrementalUpdatePipeline:
 
         community_stages(
             nodes, edges, result.mentions, cfg, save, summarizer=self.summarizer,
-            prior_lpa=prior_lpa, prior_summaries=prior_summaries, prior_ranks=prior_ranks,
+            prior_summaries=prior_summaries, prior_ranks=prior_ranks,
         )
         registry_stage(corpus, save)
         build.flush_metrics()

@@ -202,15 +202,13 @@ def test_summary_reuse_skips_legacy_prior_without_fingerprint(spark):
     assert all(row.summary.startswith("S2:") for row in run2)
 
 
-def test_plan_scoped_redetection_and_pagerank_warm_start(spark):
-    """r4 judge asks #4 + #8 (plan wiring): with community_method='lpa' an
-    incremental run re-detects only delta-touched components (retention
-    path exercised, asserted via INCR_COMM_LAST) and its end-state equals a
-    wholesale full rebuild; the PageRank stage warm-starts from the prior
-    rank table and reaches the identical fixpoint in fewer sweeps."""
+def test_plan_pagerank_warm_start_reaches_cold_fixpoint(spark):
+    """Plan wiring: the incremental run's PageRank stage warm-starts from
+    the prior rank table and reaches the same fixpoint as a cold full
+    rebuild of the new corpus, in no more sweeps; its communities equal the
+    rebuild's."""
     import tempfile
 
-    from graph_rag_agent_spark.config import PipelineConfig
     from graph_rag_agent_spark.functions.extractor import (
         KeywordCooccurrenceExtractor,
     )
@@ -224,9 +222,8 @@ def test_plan_scoped_redetection_and_pagerank_warm_start(spark):
     schema = "repo string, path string, commit string, lang string, content string"
     # corpus with DISJOINT per-group vocabularies (each group draws words
     # from its own 3-letter alphabet → no shared trigrams, no cross-group
-    # co-occurrence, no canonicalization merges): the projection has one
-    # connected component per group, so deleting a group-0 doc must
-    # refresh only group 0's component and RETAIN every other verbatim
+    # co-occurrence, no canonicalization merges): one connected component
+    # per group
     import pandas as pd
 
     alphabets = ["abc", "def", "ghi", "jkl", "mno", "pqr"]
@@ -242,61 +239,38 @@ def test_plan_scoped_redetection_and_pagerank_warm_start(spark):
     base = pd.DataFrame(
         rows, columns=["repo", "path", "commit", "lang", "content"]
     )
-    v2 = base.iloc[1:].copy()  # drop ONE group-0 doc: a component-local delta
-    cfg = PipelineConfig(community_method="lpa")
+    v2 = base.iloc[1:].copy()  # drop ONE group-0 doc
 
-    # force stats collection through the plan's incremental_communities call
-    orig = C.incremental_communities
-    C.incremental_communities = lambda *a, **k: orig(
-        *a, **{**k, "collect_stats": True}
-    )
-    try:
-        with tempfile.TemporaryDirectory(prefix="graft_scoped_") as wh1, \
-             tempfile.TemporaryDirectory(prefix="graft_whole_") as wh2:
-            cat1 = TableCatalog(spark, wh1)
-            ex = KeywordCooccurrenceExtractor()
-            BuildPipeline(spark, cat1, config=cfg, extractor=ex).run(
-                spark.createDataFrame(base, schema=schema)
-            )
-            res = IncrementalUpdatePipeline(spark, cat1, config=cfg, extractor=ex).run_once(
-                spark.createDataFrame(v2, schema=schema)
-            )
-            assert res["changed"]
-            stats = C.INCR_COMM_LAST
-            assert stats, "plan did not route through incremental_communities"
-            # the delta touched SOME components but retained others verbatim
-            assert stats["retained_rows"] > 0
-            total = cat1.read("lpa_membership").count()
-            assert stats["refreshed_vertices"] < total
+    with tempfile.TemporaryDirectory(prefix="graft_incr_") as wh1, \
+         tempfile.TemporaryDirectory(prefix="graft_full_") as wh2:
+        cat1 = TableCatalog(spark, wh1)
+        ex = KeywordCooccurrenceExtractor()
+        BuildPipeline(spark, cat1, extractor=ex).run(
+            spark.createDataFrame(base, schema=schema)
+        )
+        res = IncrementalUpdatePipeline(spark, cat1, extractor=ex).run_once(
+            spark.createDataFrame(v2, schema=schema)
+        )
+        assert res["changed"]
+        # warm start: prior table existed → fewer sweeps, same fixpoint
+        warm_iters = PR.LAST_ITERATIONS
+        incr_ranks = {
+            r.entity_id: r.pagerank for r in cat1.read("entity_pagerank").collect()
+        }
 
-            # warm start: prior table existed → fewer sweeps, same fixpoint
-            warm_iters = PR.LAST_ITERATIONS
-            incr_ranks = {
-                r.entity_id: r.pagerank
-                for r in cat1.read("entity_pagerank").collect()
-            }
-
-            cat2 = TableCatalog(spark, wh2)
-            BuildPipeline(spark, cat2, config=cfg, extractor=ex).run(
-                spark.createDataFrame(v2, schema=schema)
-            )
-            cold_iters = PR.LAST_ITERATIONS
-            full_ranks = {
-                r.entity_id: r.pagerank
-                for r in cat2.read("entity_pagerank").collect()
-            }
-            full_memb = {
-                (r.id, r.label) for r in cat2.read("lpa_membership").collect()
-            }
-            incr_memb = {
-                (r.id, r.label) for r in cat1.read("lpa_membership").collect()
-            }
-            # end-state ≡ wholesale (component-local detector theorem)
-            assert incr_memb == full_memb
-            # identical fixpoint (tol-mode, rounded to 6)
-            assert set(incr_ranks) == set(full_ranks)
-            for k in incr_ranks:
-                assert abs(incr_ranks[k] - full_ranks[k]) < 2e-6
-            assert warm_iters <= cold_iters
-    finally:
-        C.incremental_communities = orig
+        cat2 = TableCatalog(spark, wh2)
+        BuildPipeline(spark, cat2, extractor=ex).run(
+            spark.createDataFrame(v2, schema=schema)
+        )
+        cold_iters = PR.LAST_ITERATIONS
+        full_ranks = {
+            r.entity_id: r.pagerank for r in cat2.read("entity_pagerank").collect()
+        }
+        assert set(cat1.read("communities").collect()) == set(
+            cat2.read("communities").collect()
+        )
+        # identical fixpoint (tol-mode, rounded to 6)
+        assert set(incr_ranks) == set(full_ranks)
+        for k in incr_ranks:
+            assert abs(incr_ranks[k] - full_ranks[k]) < 2e-6
+        assert warm_iters <= cold_iters

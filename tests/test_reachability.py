@@ -9,7 +9,10 @@ name is used elsewhere passes.
 """
 
 import ast
+import dataclasses
 from pathlib import Path
+
+from graph_rag_agent_spark.config import PipelineConfig
 
 ROOT = Path(__file__).resolve().parent.parent
 PACKAGE = ROOT / "graph_rag_agent_spark"
@@ -92,3 +95,20 @@ def test_allowlist_names_only_unreached_definitions():
     referenced = _referenced_names()
     assert set(ALLOWED) <= defined, set(ALLOWED) - defined
     assert not set(ALLOWED) & referenced, set(ALLOWED) & referenced
+
+
+def test_every_pipeline_config_field_is_read():
+    """A `PipelineConfig` field that no code reads is a knob that changes
+    nothing. A field counts as read when some attribute load has its name
+    in the package, the entry file or the bench scripts, the code that
+    builds or receives a config; `tools/` and `perfbench/` never see one,
+    and their unrelated `.seed` attributes would hide an unread `seed`."""
+    read = set()
+    for path in _non_test_files():
+        if path.relative_to(ROOT).parts[0] in ("tools", "perfbench"):
+            continue
+        for sub in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(sub, ast.Attribute) and isinstance(sub.ctx, ast.Load):
+                read.add(sub.attr)
+    fields = {f.name for f in dataclasses.fields(PipelineConfig)}
+    assert fields <= read, f"PipelineConfig fields nothing reads: {sorted(fields - read)}"

@@ -71,25 +71,3 @@ def test_kmv_xxhash_production_path_error_bound(spark):
 
     with pytest.raises(ValueError, match="hash_fn"):
         kmv_distinct(events, "event_type", "event_id", hash_fn="sha1")
-
-
-def test_kmv_local_prereduce_is_exact(spark):
-    """The opt-in bucketed pre-reduction must not change the sketch: the
-    global bottom-k survives bucket-local filtering ((h, id) is a total
-    order), so estimates are identical for both hash paths."""
-    from graph_rag_agent_spark.operators.sketches import kmv_distinct
-
-    rows = [(f"g{i % 3}", f"id{i}") for i in range(500)]
-    df = spark.createDataFrame(rows, "grp string, ident string")
-    for hash_fn in ("md5", "xxhash64"):
-        plain = {
-            r.grp: (r.n_retained, r.estimate)
-            for r in kmv_distinct(df, "grp", "ident", k=32, hash_fn=hash_fn).collect()
-        }
-        pre = {
-            r.grp: (r.n_retained, r.estimate)
-            for r in kmv_distinct(
-                df, "grp", "ident", k=32, hash_fn=hash_fn, local_prereduce=True
-            ).collect()
-        }
-        assert plain == pre, hash_fn

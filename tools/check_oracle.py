@@ -9,10 +9,12 @@ from __future__ import annotations
 
 import hashlib
 import sys
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# this checkout's code, not whichever copy is installed or on PYTHONPATH
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from graph_rag_agent_spark.session import get_spark  # noqa: E402

@@ -18,9 +18,12 @@ import statistics
 import subprocess
 import sys
 
-PREP = r"""
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# each script starts with `ROOT = <this checkout>` so it imports this tree
+PREP = f"ROOT = {ROOT!r}\n" + r"""
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, ROOT)
 from graph_rag_agent_spark.session import get_spark
 from graph_rag_agent_spark.sources.corpus import generate_corpus
 
@@ -31,9 +34,9 @@ print("PREPARED")
 spark.stop()
 """
 
-WORKER = r"""
+WORKER = f"ROOT = {ROOT!r}\n" + r"""
 import sys, time, os
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, ROOT)
 from graph_rag_agent_spark.session import get_spark
 from graph_rag_agent_spark.plans.build import run_kg_build_in_memory
 from graph_rag_agent_spark.functions.extractor import ComputeWeightedExtractor
