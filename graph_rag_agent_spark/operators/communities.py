@@ -26,13 +26,19 @@ Spark rebuild — no GDS, no GraphFrames:
 Scale: label propagation is one shuffle per sweep (groupBy node, then
 groupBy (node,label)); the contracted levels are tiny. Rank and summaries
 are bounded by the top-K limit.
+
+Driver-sized graphs skip these operators: `community_tail_on_driver`
+builds the whole tail (detection through PageRank and graph_quality) from
+one Arrow snapshot, with the same rows.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, List
+import logging
+from typing import Iterator, List, Optional
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window, functions as F
 
 from graph_rag_agent_spark.config import (
@@ -41,10 +47,16 @@ from graph_rag_agent_spark.config import (
     COMMUNITY_MAX_ITER,
     COMMUNITY_MAX_LEVELS,
     COMMUNITY_TOP_SUMMARIES,
+    DRIVER_MAX_EDGES,
     SLLPA_DRIVER_THRESHOLD,
 )
+from graph_rag_agent_spark.functions import community_kernel as K
 from graph_rag_agent_spark.functions.iterative import loop_checkpoint
+from graph_rag_agent_spark.functions.leiden_kernel import leiden_levels
+from graph_rag_agent_spark.operators.pagerank import DAMPING, _driver_pagerank, entity_ranks
 from graph_rag_agent_spark.session import collect_if_fits, local_frame
+
+log = logging.getLogger(__name__)
 
 
 def weighted_projection(edges: DataFrame) -> DataFrame:
@@ -273,6 +285,18 @@ def modularity_local_move(
     return labels.select("id", "label")
 
 
+ENTITY_COMMUNITIES_DDL = "entity_id string, communities array<bigint>"
+
+
+def _leiden_rows(node_ids, edge_rows, gamma, max_levels, max_iter) -> list:
+    """The exact driver Leiden kernel → (entity_id, [community id per
+    level]) rows, by entity id."""
+    levels = leiden_levels(
+        node_ids, edge_rows, gamma=gamma, max_levels=max_levels, max_sweeps=max_iter,
+    )
+    return [(v, [int(lv[v]) for lv in levels]) for v in sorted(node_ids)]
+
+
 def detect_communities(
     nodes: DataFrame,
     edges: DataFrame,
@@ -302,20 +326,11 @@ def detect_communities(
     e_tab = collect_if_fits(wedges.select("s", "d", "weight"), t, "leiden edges")
     v_tab = None if e_tab is None else collect_if_fits(verts, t, "leiden vertices")
     if v_tab is not None:
-        from graph_rag_agent_spark.functions.leiden_kernel import leiden_levels
-
         edge_list = [(s, d, float(w)) for s, d, w in zip(*e_tab.to_pydict().values())]
-        node_ids = v_tab.column("id").to_pylist()
-        levels = leiden_levels(
-            node_ids, edge_list, gamma=gamma,
-            max_levels=max_levels, max_sweeps=max_iter,
+        rows = _leiden_rows(
+            v_tab.column("id").to_pylist(), edge_list, gamma, max_levels, max_iter
         )
-        rows = [
-            (v, [int(lv[v]) for lv in levels]) for v in sorted(node_ids)
-        ]
-        return local_frame(
-            nodes.sparkSession, rows, "entity_id string, communities array<bigint>"
-        )
+        return local_frame(nodes.sparkSession, rows, ENTITY_COMMUNITIES_DDL)
 
     # ---- distributed Leiden-shaped hierarchy loop ----
     # Full phase structure per level (mirrors the kernel, leiden_levels):
@@ -596,6 +611,12 @@ def community_rank(membership: DataFrame, mentions: DataFrame) -> DataFrame:
     )
 
 
+SUMMARIES_DDL = (
+    "community_id string, level int, rank bigint, "
+    "summary string, full_content string, summarizer_v string"
+)
+
+
 def summarizer_fingerprint(summarizer) -> str:
     """Stable identity of the G9 summarizer slot, baked into each summary
     row so content-addressed reuse (`prior=`) never serves a summary
@@ -709,6 +730,14 @@ def summarize_communities(
         full_content.alias("full_content"),
         F.lit(fp).alias("summarizer_v"),
     )
+    return _apply_summarizer(out, summarizer, fp, prior)
+
+
+def _apply_summarizer(out: DataFrame, summarizer, fp: str, prior: DataFrame) -> DataFrame:
+    """The G9 slot over template summary rows: None keeps the template;
+    otherwise `prior` rows of the same fingerprint `fp` are reused by
+    content and the summarizer runs Arrow-batched over the misses (see
+    `summarize_communities`)."""
     if summarizer is None:
         return out
 
@@ -747,18 +776,111 @@ def summarize_communities(
             pdf["summary"] = [summarizer(fc) for fc in pdf["full_content"]]
             yield pdf
 
-    summarized = out.mapInPandas(
-        run,
-        schema="community_id string, level int, rank bigint, "
-               "summary string, full_content string, summarizer_v string",
-    )
+    summarized = out.mapInPandas(run, schema=SUMMARIES_DDL)
     return summarized if hits is None else summarized.unionByName(hits)
 
 
-# observability for the last incremental_communities call (tests assert the
-# delta actually scoped the re-detection) — same pattern as
-# connected_components.LAST_DISTRIBUTED_ROUNDS / pagerank.LAST_PATH
-INCR_COMM_LAST: dict = {}
+def community_tail_on_driver(
+    nodes: DataFrame,
+    edges: DataFrame,
+    mentions: DataFrame,
+    chunks: DataFrame,
+    *,
+    max_levels: int = COMMUNITY_MAX_LEVELS,
+    max_iter: int = COMMUNITY_MAX_ITER,
+    pagerank_tol: Optional[float] = None,
+    pagerank_iter: int = 5,
+    prior_ranks: DataFrame = None,
+    summarizer=None,
+    prior_summaries: DataFrame = None,
+    driver_threshold: int = DRIVER_MAX_EDGES,
+) -> Optional[dict]:
+    """The whole community tail of a driver-sized canonical graph from ONE
+    snapshot → {table: frame} for entity_communities, communities,
+    community_hierarchy, community_summaries, entity_pagerank and
+    graph_quality, in that order; None when the graph does not fit, and
+    the distributed operators run instead.
+
+    The reference runs this tail (gds.leiden, community rank and
+    summaries, PageRank) inside one Neo4j JVM. Here one ``collect_if_fits``
+    probe (`driver_threshold` rows) each fetches nodes, edges, mentions,
+    the chunk ids and the prior rank table across the Arrow boundary; the
+    tables are then built by the exact driver kernels (``leiden_levels``,
+    ``pagerank._driver_pagerank``) and the row functions of
+    functions/community_kernel.py, with no further Spark job. Each table
+    equals its distributed twin's rows: the tail runs only where
+    `detect_communities` and `pagerank` would pick their driver kernels
+    too (projected edges and vertices ≤ COMMUNITY_DRIVER_THRESHOLD,
+    symmetrized projection ≤ DRIVER_MAX_EDGES). The summarizer slot stays
+    an Arrow-batched executor stage (`_apply_summarizer`)."""
+    probes = {
+        "nodes": nodes.select("entity_id", "entity_type"),
+        "edges": edges.select("subj", "pred", "obj"),
+        "mentions": mentions.select("chunk_id", "entity_id"),
+        "chunk ids": chunks.select("chunk_id"),
+    }
+    if prior_ranks is not None:
+        probes["prior ranks"] = prior_ranks.select(*prior_ranks.columns[:2])
+    snap = {}
+    for what, df in probes.items():
+        snap[what] = collect_if_fits(df, driver_threshold, f"graph {what}")
+        if snap[what] is None:
+            return None
+    node_rows, edge_rows, mention_rows = (
+        list(zip(*snap[k].to_pydict().values())) for k in ("nodes", "edges", "mentions")
+    )
+    proj = K.projection_rows(edge_rows)
+    node_ids = [e for e, _ in node_rows]
+    prior = snap.get("prior ranks")
+    fits = (
+        max(len(proj), len(node_ids)) <= COMMUNITY_DRIVER_THRESHOLD
+        and 2 * len(proj) <= DRIVER_MAX_EDGES
+        and (prior is None or prior.num_rows <= DRIVER_MAX_EDGES)
+    )
+    log.info(
+        "community tail: %d projected pairs, %d vertices -> %s",
+        len(proj), len(node_ids), "driver" if fits else "distributed",
+    )
+    if not fits:
+        return None
+
+    spark = nodes.sparkSession
+    ec_rows = _leiden_rows(node_ids, proj, COMMUNITY_GAMMA, max_levels, max_iter)
+    memb = K.membership_rows(ec_rows)
+    fp = summarizer_fingerprint(summarizer)
+    summaries = local_frame(spark, K.summary_rows(
+        memb, node_rows, edge_rows, K.rank_rows(memb, mention_rows),
+        COMMUNITY_TOP_SUMMARIES, fp,
+    ), SUMMARIES_DDL)
+    # pagerank_projection's input: the symmetrized projection and its
+    # endpoints, in a fixed order
+    sym = sorted(proj + [(d, s, w) for s, d, w in proj])
+    src, dst, w = ([r[i] for r in sym] for i in range(3))
+    tables = {
+        "edges": pa.table({"src": src, "dst": dst, "w": w}),
+        "vertices": pa.table({"id": sorted(set(src))}),
+    }
+    if prior is not None:
+        tables["initial ranks"] = prior
+    pr = _driver_pagerank(
+        spark, tables, damping=DAMPING, n_iter=pagerank_iter, tol=pagerank_tol
+    )
+    return {
+        "entity_communities": local_frame(spark, ec_rows, ENTITY_COMMUNITIES_DDL),
+        "communities": local_frame(
+            spark, memb, "community_id string, level int, member_id string"
+        ),
+        "community_hierarchy": local_frame(
+            spark, K.hierarchy_rows(ec_rows),
+            "level int, child_community_id string, parent_community_id string",
+        ),
+        "community_summaries": _apply_summarizer(summaries, summarizer, fp, prior_summaries),
+        "entity_pagerank": entity_ranks(pr),
+        "graph_quality": local_frame(spark, K.quality_rows(
+            node_rows, edge_rows, mention_rows,
+            snap["chunk ids"].column(0).to_pylist(), memb,
+        ), "metric string, value double"),
+    }
 
 
 def incremental_communities(
@@ -766,7 +888,6 @@ def incremental_communities(
     new_wedges: DataFrame,
     old_membership: DataFrame,
     detect_fn,
-    collect_stats: bool = False,
 ) -> DataFrame:
     """Scoped incremental community re-detection for the daily-delta
     pipeline: re-run ``detect_fn`` ONLY on the connected components the
@@ -850,14 +971,4 @@ def incremental_communities(
     retained = old_membership.join(refreshed_ids, on="id", how="left_anti").join(
         verts, on="id", how="left_semi"
     )
-
-    global INCR_COMM_LAST
-    if collect_stats:
-        INCR_COMM_LAST = {
-            "touched_vertices": touched.count(),
-            "refreshed_vertices": refreshed_ids.count(),
-            "retained_rows": retained.count(),
-        }
-    else:
-        INCR_COMM_LAST = {}
     return redetected.unionByName(retained.select(*redetected.columns))

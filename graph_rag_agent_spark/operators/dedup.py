@@ -242,9 +242,9 @@ def _jaccard_profile_pairs(
     base: DataFrame,
     threshold: float,
     block_cols: tuple,
+    vocab_bound: int,
+    flop_budget: float,
     chunk_rows: int = 1024,
-    vocab_bound: int | None = None,
-    flop_budget: float | None = None,
 ) -> DataFrame | None:
     """Exact jaccard pairs over distinct (block, word-set) PROFILES.
 
@@ -303,17 +303,14 @@ def _jaccard_profile_pairs(
         .first()
     )
     pair_ops, n_docs = stats["p"] or 0, stats["nd"] or 0
-    if vocab_bound is not None or flop_budget is not None:
-        vocab = (
-            prof.select(F.explode("_ws").alias("_w"))
-            .agg(F.countDistinct("_w").alias("v"))
-            .first()["v"]
-            or 0
-        )
-        if vocab_bound is not None and vocab > vocab_bound:
-            return None
-        if flop_budget is not None and pair_ops * max(vocab, 1) > flop_budget:
-            return None
+    vocab = (
+        prof.select(F.explode("_ws").alias("_w"))
+        .agg(F.countDistinct("_w").alias("v"))
+        .first()["v"]
+        or 0
+    )
+    if vocab > vocab_bound or pair_ops * max(vocab, 1) > flop_budget:
+        return None
     chunked = (
         prof.withColumn("_ck", ((F.col("_rn") - 1) / chunk_rows).cast("int"))
         .groupBy(*keys, "_ck")

@@ -47,6 +47,8 @@ from graph_rag_agent_spark.config import DRIVER_MAX_EDGES
 from graph_rag_agent_spark.functions.iterative import loop_checkpoint
 from graph_rag_agent_spark.session import collect_if_fits, local_frame
 
+DAMPING = 0.85
+
 # which path the last pagerank() call took — observability for tests,
 # same pattern as connected_components.LAST_DISTRIBUTED_ROUNDS
 LAST_PATH = ""
@@ -60,7 +62,7 @@ def pagerank(
     vertices: DataFrame,
     edges: DataFrame,
     *,
-    damping: float = 0.85,
+    damping: float = DAMPING,
     n_iter: int = 5,
     tol: Optional[float] = None,
     vertex_col: str = "id",
@@ -303,7 +305,7 @@ def _driver_pagerank(
 def pagerank_projection(
     projection: DataFrame,
     *,
-    damping: float = 0.85,
+    damping: float = DAMPING,
     n_iter: int = 5,
     tol: Optional[float] = None,
     reset: Optional[DataFrame] = None,
@@ -338,6 +340,11 @@ def pagerank_projection(
         reset=reset,
         initial_ranks=initial_ranks,
     )
+    return entity_ranks(pr)
+
+
+def entity_ranks(pr: DataFrame) -> DataFrame:
+    """(id, pagerank) → the (entity_id, pagerank) table, rounded to 6."""
     return pr.select(
         F.col("id").alias("entity_id"), F.round("pagerank", 6).alias("pagerank")
     )

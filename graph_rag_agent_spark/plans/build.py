@@ -8,7 +8,12 @@ four callers:
   chunk_stage → extract_stage → graph_stage (records → occurrences /
   edges_raw → nodes_raw / mentions_raw) → canonical_stage (embed +
   canonicalize) → community_stages (detect → memberships + hierarchy →
-  rank → summaries → PageRank) → registry_stage
+  rank → summaries → PageRank → graph_quality) → registry_stage
+
+community_stages builds its whole tail on the driver from one Arrow
+snapshot of the canonical graph when that graph fits the driver gate
+(`communities.community_tail_on_driver`), and with the distributed
+operators otherwise; the tables are equal either way.
 
 Each stage hands its outputs to a ``materialize(name, df) -> df`` callable
 that decides where they live:
@@ -51,6 +56,7 @@ from graph_rag_agent_spark.operators.communities import (
     community_hierarchy,
     community_membership,
     community_rank,
+    community_tail_on_driver,
     detect_communities,
     summarize_communities,
     weighted_projection,
@@ -149,41 +155,65 @@ def canonical_stage(nodes_raw, edges_raw, mentions_raw, cfg, materialize, existi
     )
 
 
-def community_stages(nodes, edges, mentions, cfg, materialize, summarizer=None,
+def community_stages(nodes, edges, mentions, chunks, cfg, materialize, summarizer=None,
                      prior_summaries=None, prior_ranks=None) -> dict:
-    """canonical graph → communities (detect_communities: driver Leiden
-    kernel or the distributed modularity loop, by projected size),
-    summaries and PageRank.
+    """canonical graph → communities, summaries, PageRank and
+    graph_quality; → every table it materialized, by name.
+
+    A graph that fits the driver gate is fetched ONCE
+    (`community_tail_on_driver`: one `collect_if_fits` probe each of
+    nodes, edges, mentions, the chunk ids and the prior ranks), and every
+    tail table is built from that snapshot on the driver — the reference
+    likewise runs this tail inside one Neo4j JVM. Above the gate the
+    distributed operators run: detect_communities (driver Leiden kernel or
+    the distributed modularity loop, by projected size) → memberships +
+    hierarchy → rank → summaries → PageRank → graph_quality_report. Both
+    paths give the same rows.
 
     The warm starts are the incremental run's, None on a full build:
     `prior_summaries` reuses the summary of every community whose
     stringified info is unchanged; `prior_ranks` seeds the PageRank
     fixpoint. Detection itself re-runs over the whole graph: the modularity
     gain divides by the global edge weight, so it is not component-local."""
-    nodes = materialize("nodes", nodes)
-    edges = materialize("edges", edges)
-    mentions = materialize("mentions", mentions)
-    entity_comms = detect_communities(
+    out = {}
+
+    def save(name, df):
+        out[name] = materialize(name, df)
+        return out[name]
+
+    nodes, edges, mentions = (
+        save("nodes", nodes), save("edges", edges), save("mentions", mentions)
+    )
+    tail = community_tail_on_driver(
+        nodes, edges, mentions, chunks,
+        max_levels=cfg.community_max_levels, max_iter=cfg.community_max_iter,
+        pagerank_tol=cfg.pagerank_tol, pagerank_iter=cfg.pagerank_max_iter,
+        prior_ranks=prior_ranks, summarizer=summarizer, prior_summaries=prior_summaries,
+    )
+    if tail is not None:
+        for name, df in tail.items():
+            save(name, df)
+        return out
+
+    entity_comms = save("entity_communities", detect_communities(
         nodes, edges, max_levels=cfg.community_max_levels,
         max_iter=cfg.community_max_iter,
-    )
-    entity_comms = materialize("entity_communities", entity_comms)
-    membership = materialize("communities", community_membership(entity_comms))
-    materialize("community_hierarchy", community_hierarchy(entity_comms))
+    ))
+    membership = save("communities", community_membership(entity_comms))
+    save("community_hierarchy", community_hierarchy(entity_comms))
     rank = community_rank(membership, mentions)
-    summaries = materialize("community_summaries", summarize_communities(
+    save("community_summaries", summarize_communities(
         membership, nodes, edges, rank, summarizer=summarizer, prior=prior_summaries,
     ))
     # entity PageRank (tol-mode fixpoint) — the table the next incremental
     # run warm-starts from
-    materialize("entity_pagerank", pagerank_projection(
+    save("entity_pagerank", pagerank_projection(
         weighted_projection(edges), tol=cfg.pagerank_tol,
         n_iter=cfg.pagerank_max_iter, initial_ranks=prior_ranks,
     ))
-    return {
-        "nodes": nodes, "edges": edges, "mentions": mentions,
-        "communities": membership, "community_summaries": summaries,
-    }
+    # graph-quality metrics (reference evaluation framework analogue)
+    save("graph_quality", graph_quality_report(nodes, edges, mentions, chunks, membership))
+    return out
 
 
 def registry_stage(corpus, materialize):
@@ -311,7 +341,7 @@ class BuildPipeline:
         save("similar", result.similar)
         save("wcc", result.wcc)
         out = community_stages(
-            result.nodes, result.edges, result.mentions, cfg, save,
+            result.nodes, result.edges, result.mentions, chunks, cfg, save,
             summarizer=self.summarizer,
         )
 
@@ -323,10 +353,6 @@ class BuildPipeline:
         if existing_cemb is not None:
             chunk_embs = chunk_embs.localCheckpoint(eager=True)
         save("chunk_embeddings", chunk_embs)
-        # graph-quality metrics (reference evaluation framework analogue)
-        save("graph_quality", graph_quality_report(
-            out["nodes"], out["edges"], out["mentions"], chunks, out["communities"]
-        ))
         # registry snapshot for incremental diffs (N1)
         registry_stage(corpus, save)
 

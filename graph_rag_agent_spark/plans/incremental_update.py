@@ -62,14 +62,15 @@ class IncrementalUpdatePipeline:
         Every table a full build writes is refreshed except these, which
         keep describing the previous corpus: ``corpus`` (the registry holds
         its hashes), canonicalization's diagnostic ``similar`` and ``wcc``,
-        and ``chunk_embeddings`` and ``graph_quality``. Refreshing the last
-        two costs about 1.0-1.2 s and 1.9-2.6 s (warm, 4 cores, the 200-file
-        benchmark corpus with a 2% delta of each kind) — roughly 15% of the
-        pass — so it is left to a separate, measured change.
+        and ``chunk_embeddings``. Refreshing ``chunk_embeddings`` costs
+        about 1.0-1.2 s (warm, 4 cores, the 200-file benchmark corpus with
+        a 2% delta of each kind), so it is left to a separate, measured
+        change.
 
-        Communities are re-detected over the whole new graph (the same
-        `detect_communities` call as a full build); summaries and PageRank
-        warm-start from the previous run's tables."""
+        The community tail is a full build's (`community_stages`):
+        communities are re-detected over the whole new graph, summaries
+        and PageRank warm-start from the previous run's tables, and
+        ``graph_quality`` is rebuilt from the same graph snapshot."""
         cat, cfg = self.catalog, self.config
         changes = detect_changes(corpus, cat.read("registry"))
         n_added = changes.added.count()
@@ -173,7 +174,7 @@ class IncrementalUpdatePipeline:
             edges = upsert_edges(manual_edges, edges)
 
         community_stages(
-            nodes, edges, result.mentions, cfg, save, summarizer=self.summarizer,
+            nodes, edges, result.mentions, chunks, cfg, save, summarizer=self.summarizer,
             prior_summaries=prior_summaries, prior_ranks=prior_ranks,
         )
         registry_stage(corpus, save)

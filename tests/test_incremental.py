@@ -1,13 +1,17 @@
 """Incremental build: registry diff, refcount GC, incremental ≡ full rebuild
 (reference N1-N7)."""
 
+import functools
+import logging
 import tempfile
 
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from graph_rag_agent_spark.config import MAX_TEXT_LENGTH
+from graph_rag_agent_spark.config import MAX_TEXT_LENGTH, PipelineConfig
+from graph_rag_agent_spark.operators import communities as C
+from graph_rag_agent_spark.plans import build as B
 
 from graph_rag_agent_spark.operators.incremental import (
     detect_changes,
@@ -15,7 +19,11 @@ from graph_rag_agent_spark.operators.incremental import (
     latest_wins,
     upsert_nodes,
 )
-from graph_rag_agent_spark.plans.build import BuildPipeline, run_kg_build_in_memory
+from graph_rag_agent_spark.plans.build import (
+    BuildPipeline,
+    community_stages,
+    run_kg_build_in_memory,
+)
 from graph_rag_agent_spark.plans.incremental_update import IncrementalUpdatePipeline
 from graph_rag_agent_spark.sources.catalog import TableCatalog
 from graph_rag_agent_spark.sources.corpus import CORPUS_COLUMNS, generate_corpus_pdf
@@ -105,14 +113,15 @@ def test_upsert_and_latest_wins(spark):
 EQUIVALENT_TABLES = (
     "chunks", "occurrences", "nodes_raw", "edges_raw", "mentions_raw",
     "nodes", "edges", "mentions", "entity_communities", "communities",
-    "community_hierarchy", "community_summaries", "entity_pagerank", "registry",
+    "community_hierarchy", "community_summaries", "entity_pagerank",
+    "graph_quality", "registry",
 )
 INCREMENTAL_STAGES = {
     "chunk", "parse_records", "parse_occurrences", "parse_edges",
     "parse_nodes", "parse_mentions", "embed", "embed_failures",
     "canonicalize_nodes", "canonicalize_edges", "canonicalize_mentions",
     "communities_detect", "communities_membership", "communities_hierarchy",
-    "communities_summarize", "pagerank", "registry",
+    "communities_summarize", "pagerank", "graph_quality", "registry",
 }
 
 
@@ -286,3 +295,125 @@ def test_latest_wins_skips_nested_map_tiebreakers(spark):
     )
     out = latest_wins(df, keys=["id"], ts_col="last_updated").collect()
     assert len(out) == 1 and out[0].payload == "b"
+
+
+# ---- the community tail: one driver snapshot ≡ the distributed operators --
+
+TAIL_TABLES = (
+    "entity_communities", "communities", "community_hierarchy",
+    "community_summaries", "entity_pagerank", "graph_quality",
+)
+
+
+def _versioned_summarizer():
+    """A named summarizer with a version; defined in a factory so
+    cloudpickle ships the class by value to the Python workers."""
+
+    class Summarizer:
+        version = "tail-parity-v1"
+
+        def __call__(self, full_content):
+            return f"{len(full_content)} chars"
+
+    return Summarizer()
+
+
+def _tail_rows(spark, monkeypatch, caplog, gate, build):
+    """Run `build(catalog)` with the driver tail's gate at `gate` (None: its
+    default) → (the six tail tables' stable rows, the set of paths the
+    graph snapshot probes logged)."""
+    tail = C.community_tail_on_driver
+    if gate is not None:
+        tail = functools.partial(tail, driver_threshold=gate)
+    monkeypatch.setattr(B, "community_tail_on_driver", tail)
+    caplog.clear()
+    with caplog.at_level(logging.INFO, logger="graph_rag_agent_spark.session"), \
+         tempfile.TemporaryDirectory(prefix="graft_tail_") as wh:
+        cat = TableCatalog(spark, wh)
+        build(cat)
+        rows = {t: _stable_rows(cat.read(t)) for t in TAIL_TABLES}
+    paths = {
+        m.rsplit(" -> ", 1)[1] for m in caplog.messages
+        if m.startswith("collect_if_fits: graph ")
+    }
+    return rows, paths
+
+
+def _full_build(rows, summarizer=None):
+    def build(cat):
+        spark = cat.spark
+        BuildPipeline(spark, cat, summarizer=summarizer).run(
+            spark.createDataFrame(rows, CORPUS_SCHEMA)
+        )
+    return build
+
+
+def _warm_start(cat):
+    """A base build, then one incremental pass over an edited corpus."""
+    spark, summarizer = cat.spark, _versioned_summarizer()
+    base = generate_corpus_pdf(20, seed=42)
+    v2 = base.iloc[2:].copy()
+    v2.loc[v2.index[:2], "content"] = v2.loc[v2.index[:2], "content"] + _EDIT
+    BuildPipeline(spark, cat, summarizer=summarizer).run(_corpus_df(spark, base))
+    res = IncrementalUpdatePipeline(spark, cat, summarizer=summarizer).run_once(
+        _corpus_df(spark, v2)
+    )
+    assert res["changed"]
+
+
+TAIL_CASES = {
+    "seed42_40": _full_build(
+        list(generate_corpus_pdf(40, seed=42).itertuples(index=False, name=None))
+    ),
+    **{f"hostile_{c}": _full_build(HOSTILE[c][0]) for c in HOSTILE},
+    "versioned_summarizer": _full_build(
+        list(generate_corpus_pdf(20, seed=7).itertuples(index=False, name=None)),
+        summarizer=_versioned_summarizer(),
+    ),
+    "incremental_warm_start": _warm_start,
+}
+
+
+@pytest.mark.parametrize("case", sorted(TAIL_CASES))
+def test_driver_tail_equals_distributed_tail(spark, monkeypatch, caplog, case):
+    """The community tail built from one driver snapshot gives the
+    distributed operators' rows for all six tail tables; gate 0 forces the
+    distributed path, which an empty graph still fits."""
+    build = TAIL_CASES[case]
+    driver, driver_paths = _tail_rows(spark, monkeypatch, caplog, None, build)
+    forced, forced_paths = _tail_rows(spark, monkeypatch, caplog, 0, build)
+    assert driver_paths == {"driver"}
+    assert forced_paths == ({"driver"} if case == "hostile_empty" else {"distributed"})
+    for table in TAIL_TABLES:
+        assert driver[table] == forced[table], table
+    if case == "hostile_empty":
+        # below any row count: the empty graph takes the distributed path
+        forced, forced_paths = _tail_rows(spark, monkeypatch, caplog, -1, build)
+        assert forced_paths == {"distributed"}
+        assert forced == driver
+
+
+def test_community_tail_job_budget(spark, tmp_path):
+    """One `community_stages` call on a driver-sized graph runs a fixed,
+    small number of Spark jobs: one probe per snapshot table (nodes,
+    edges, mentions, chunk ids) and one write per tail table. The
+    canonical inputs are already catalog tables (read before the count
+    starts), so only the tail's own jobs count. A slide back to
+    per-operator probes and distributed aggregates (about 56 jobs) fails
+    it without timing anything."""
+    cat = TableCatalog(spark, str(tmp_path / "wh"))
+    BuildPipeline(spark, cat).run(_corpus_df(spark, generate_corpus_pdf(40, seed=42)))
+    inputs = ("nodes", "edges", "mentions")
+    tables = [cat.read(t) for t in (*inputs, "chunks")]
+
+    def materialize(name, df):
+        return df if name in inputs else cat.write(df, name)
+
+    sc, group = spark.sparkContext, "community_tail_job_budget"
+    sc.setJobGroup(group, "one community_stages call")
+    try:
+        community_stages(*tables, PipelineConfig(), materialize)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 12, len(jobs)

@@ -25,6 +25,18 @@ def _detect(v, e):
     return C.overlapping_label_propagation(v, e, max_iter=3, min_association=0.2)
 
 
+class _Recording:
+    """`_detect` that records the vertex set of every call, so a test can
+    assert which components the delta re-detected."""
+
+    def __init__(self):
+        self.scopes = []
+
+    def __call__(self, v, e):
+        self.scopes.append({r.id for r in v.collect()})
+        return _detect(v, e)
+
+
 def _verts(spark, edges_df):
     return (
         edges_df.select(F.col("s").alias("id"))
@@ -47,7 +59,8 @@ def test_scoped_equals_full_and_retains_untouched(spark):
     new = _wedges(spark, TRI_A + TRI_B + [("b1", "b4", 1.0), ("b2", "b4", 1.0)])
 
     old_memb = _detect(_verts(spark, old), old).localCheckpoint(eager=True)
-    inc = C.incremental_communities(old, new, old_memb, _detect, collect_stats=True)
+    detect = _Recording()
+    inc = C.incremental_communities(old, new, old_memb, detect)
     inc_rows = _rows(inc)
 
     # the theorem: scoped incremental == full re-detection, row-identical
@@ -60,9 +73,9 @@ def test_scoped_equals_full_and_retains_untouched(spark):
     assert inc_a == old_a and old_a
 
     # and the delta actually scoped the re-detection to component B
-    assert C.INCR_COMM_LAST["refreshed_vertices"] == 4  # b1..b4
-    assert C.INCR_COMM_LAST["touched_vertices"] == 3  # b1, b2, b4
-    assert C.INCR_COMM_LAST["retained_rows"] == len(old_a)
+    assert detect.scopes == [{"b1", "b2", "b3", "b4"}]
+    retained = {t for t in inc_rows if t[0] not in detect.scopes[0]}
+    assert len(retained) == len(old_a)
 
 
 def test_vertex_losing_every_edge_drops_out(spark):
@@ -80,8 +93,9 @@ def test_weight_change_refreshes_its_component(spark):
     old = _wedges(spark, TRI_A + TRI_B)
     new = _wedges(spark, TRI_A + [("b1", "b2", 5.0)] + TRI_B[1:])
     old_memb = _detect(_verts(spark, old), old)
-    inc = C.incremental_communities(old, new, old_memb, _detect, collect_stats=True)
-    assert C.INCR_COMM_LAST["refreshed_vertices"] == 3  # b1..b3
+    detect = _Recording()
+    inc = C.incremental_communities(old, new, old_memb, detect)
+    assert detect.scopes == [{"b1", "b2", "b3"}]
     assert _rows(inc) == _rows(_detect(_verts(spark, new), new))
 
 
