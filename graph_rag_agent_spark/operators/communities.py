@@ -785,11 +785,8 @@ def community_tail_on_driver(
     edges: DataFrame,
     mentions: DataFrame,
     chunks: DataFrame,
+    cfg,
     *,
-    max_levels: int = COMMUNITY_MAX_LEVELS,
-    max_iter: int = COMMUNITY_MAX_ITER,
-    pagerank_tol: Optional[float] = None,
-    pagerank_iter: int = 5,
     prior_ranks: DataFrame = None,
     summarizer=None,
     prior_summaries: DataFrame = None,
@@ -799,24 +796,44 @@ def community_tail_on_driver(
     snapshot → {table: frame} for entity_communities, communities,
     community_hierarchy, community_summaries, entity_pagerank and
     graph_quality, in that order; None when the graph does not fit, and
-    the distributed operators run instead.
+    the distributed operators run instead. `cfg` is the build's
+    PipelineConfig (Leiden levels and sweeps, PageRank tol and sweeps).
 
     The reference runs this tail (gds.leiden, community rank and
     summaries, PageRank) inside one Neo4j JVM. Here one ``collect_if_fits``
-    probe (`driver_threshold` rows) each fetches nodes, edges, mentions,
+    probe (`driver_threshold` rows) each fetches edges, mentions, nodes,
     the chunk ids and the prior rank table across the Arrow boundary; the
     tables are then built by the exact driver kernels (``leiden_levels``,
     ``pagerank._driver_pagerank``) and the row functions of
     functions/community_kernel.py, with no further Spark job. Each table
     equals its distributed twin's rows: the tail runs only where
     `detect_communities` and `pagerank` would pick their driver kernels
-    too (projected edges and vertices ≤ COMMUNITY_DRIVER_THRESHOLD,
-    symmetrized projection ≤ DRIVER_MAX_EDGES). The summarizer slot stays
-    an Arrow-batched executor stage (`_apply_summarizer`)."""
+    too. The edges come first and the symmetrized projection is checked
+    before anything else is fetched, so a graph above the gate costs one
+    probe. The summarizer slot stays an Arrow-batched executor stage
+    (`_apply_summarizer`)."""
+    # every probe is capped at driver_threshold ≤ DRIVER_MAX_EDGES ≤
+    # COMMUNITY_DRIVER_THRESHOLD, so the projection (≤ the edge rows) and
+    # the vertices fit the Leiden gate, and the prior ranks PageRank's;
+    # only the symmetrized projection can still exceed DRIVER_MAX_EDGES
+    assert driver_threshold <= DRIVER_MAX_EDGES <= COMMUNITY_DRIVER_THRESHOLD
+    edge_tab = collect_if_fits(
+        edges.select("subj", "pred", "obj"), driver_threshold, "graph edges"
+    )
+    if edge_tab is None:
+        return None
+    edge_rows = list(zip(*edge_tab.to_pydict().values()))
+    proj = K.projection_rows(edge_rows)
+    fits = 2 * len(proj) <= DRIVER_MAX_EDGES
+    log.info(
+        "community tail: %d projected pairs -> %s",
+        len(proj), "driver" if fits else "distributed",
+    )
+    if not fits:
+        return None
     probes = {
-        "nodes": nodes.select("entity_id", "entity_type"),
-        "edges": edges.select("subj", "pred", "obj"),
         "mentions": mentions.select("chunk_id", "entity_id"),
+        "nodes": nodes.select("entity_id", "entity_type"),
         "chunk ids": chunks.select("chunk_id"),
     }
     if prior_ranks is not None:
@@ -826,26 +843,15 @@ def community_tail_on_driver(
         snap[what] = collect_if_fits(df, driver_threshold, f"graph {what}")
         if snap[what] is None:
             return None
-    node_rows, edge_rows, mention_rows = (
-        list(zip(*snap[k].to_pydict().values())) for k in ("nodes", "edges", "mentions")
+    node_rows, mention_rows = (
+        list(zip(*snap[k].to_pydict().values())) for k in ("nodes", "mentions")
     )
-    proj = K.projection_rows(edge_rows)
-    node_ids = [e for e, _ in node_rows]
-    prior = snap.get("prior ranks")
-    fits = (
-        max(len(proj), len(node_ids)) <= COMMUNITY_DRIVER_THRESHOLD
-        and 2 * len(proj) <= DRIVER_MAX_EDGES
-        and (prior is None or prior.num_rows <= DRIVER_MAX_EDGES)
-    )
-    log.info(
-        "community tail: %d projected pairs, %d vertices -> %s",
-        len(proj), len(node_ids), "driver" if fits else "distributed",
-    )
-    if not fits:
-        return None
 
     spark = nodes.sparkSession
-    ec_rows = _leiden_rows(node_ids, proj, COMMUNITY_GAMMA, max_levels, max_iter)
+    ec_rows = _leiden_rows(
+        [e for e, _ in node_rows], proj, COMMUNITY_GAMMA,
+        cfg.community_max_levels, cfg.community_max_iter,
+    )
     memb = K.membership_rows(ec_rows)
     fp = summarizer_fingerprint(summarizer)
     summaries = local_frame(spark, K.summary_rows(
@@ -860,10 +866,10 @@ def community_tail_on_driver(
         "edges": pa.table({"src": src, "dst": dst, "w": w}),
         "vertices": pa.table({"id": sorted(set(src))}),
     }
-    if prior is not None:
-        tables["initial ranks"] = prior
+    if "prior ranks" in snap:
+        tables["initial ranks"] = snap["prior ranks"]
     pr = _driver_pagerank(
-        spark, tables, damping=DAMPING, n_iter=pagerank_iter, tol=pagerank_tol
+        spark, tables, damping=DAMPING, n_iter=cfg.pagerank_max_iter, tol=cfg.pagerank_tol
     )
     return {
         "entity_communities": local_frame(spark, ec_rows, ENTITY_COMMUNITIES_DDL),

@@ -162,7 +162,8 @@ def community_stages(nodes, edges, mentions, chunks, cfg, materialize, summarize
 
     A graph that fits the driver gate is fetched ONCE
     (`community_tail_on_driver`: one `collect_if_fits` probe each of
-    nodes, edges, mentions, the chunk ids and the prior ranks), and every
+    edges, mentions, nodes, the chunk ids and the prior ranks; a graph
+    whose projection is too large stops after the edges), and every
     tail table is built from that snapshot on the driver — the reference
     likewise runs this tail inside one Neo4j JVM. Above the gate the
     distributed operators run: detect_communities (driver Leiden kernel or
@@ -185,10 +186,8 @@ def community_stages(nodes, edges, mentions, chunks, cfg, materialize, summarize
         save("nodes", nodes), save("edges", edges), save("mentions", mentions)
     )
     tail = community_tail_on_driver(
-        nodes, edges, mentions, chunks,
-        max_levels=cfg.community_max_levels, max_iter=cfg.community_max_iter,
-        pagerank_tol=cfg.pagerank_tol, pagerank_iter=cfg.pagerank_max_iter,
-        prior_ranks=prior_ranks, summarizer=summarizer, prior_summaries=prior_summaries,
+        nodes, edges, mentions, chunks, cfg, prior_ranks=prior_ranks,
+        summarizer=summarizer, prior_summaries=prior_summaries,
     )
     if tail is not None:
         for name, df in tail.items():
