@@ -372,29 +372,16 @@ def _q_top_chunks_for_seeds(spark, sf_dir):
     """Q1 retrieval: seeds = top-5 raw-graph degree entities; chunks ranked
     by distinct seed mentions. Chunk key = sha256 of chunk text (sha1 chunk
     ids are not reproducible in DuckDB 1.0)."""
+    from graph_rag_agent_spark.operators.search import top_chunks_for_seeds
+
     kg = _sf(spark, sf_dir)
-    chunks, mentions = kg["chunks"], kg["mentions_raw"]
-    triples = kg["edges_raw"].select("subj", "pred", "obj").distinct()
-    degree = (
-        triples.select(F.col("subj").alias("entity_id"))
-        .unionAll(triples.select(F.col("obj").alias("entity_id")))
-        .groupBy("entity_id")
-        .agg(F.count("*").alias("degree"))
+    seeds = (
+        _q_kg_entity_degree(spark, sf_dir)
+        .orderBy(F.desc("degree"), F.asc("entity_id"))
+        .limit(5)
     )
-    seeds = degree.orderBy(F.desc("degree"), F.asc("entity_id")).limit(5)
-    chunk_sha = chunks.select(
-        "chunk_id", F.sha2("text", 256).alias("chunk_sha")
-    ).dropDuplicates(["chunk_id"])
-    freq = (
-        mentions.join(F.broadcast(seeds.select("entity_id")), on="entity_id", how="left_semi")
-        .groupBy("chunk_id")
-        .agg(F.countDistinct("entity_id").alias("freq"))
-    )
-    return (
-        freq.join(chunk_sha, on="chunk_id")
-        .orderBy(F.desc("freq"), F.asc("chunk_sha"))
-        .limit(3)
-        .select("chunk_sha", "freq")
+    return top_chunks_for_seeds(kg["mentions_raw"], kg["chunks"], seeds, limit=3).select(
+        "chunk_sha", "freq"
     )
 
 

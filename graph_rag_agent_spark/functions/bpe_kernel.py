@@ -58,20 +58,3 @@ def bpe_merges(
         vocab = out
     return merges
 
-
-def apply_merges(word: str, merges: Iterable[Tuple[int, str, str, int]]) -> List[str]:
-    """Segment one word with a learned merge table (greedy in merge-rank
-    order — the standard BPE tokenizer application rule)."""
-    sym: List[str] = list(word) + [END]
-    for _, left, right, _ in sorted(merges):
-        res: List[str] = []
-        i = 0
-        while i < len(sym):
-            if i + 1 < len(sym) and sym[i] == left and sym[i + 1] == right:
-                res.append(left + right)
-                i += 2
-            else:
-                res.append(sym[i])
-                i += 1
-        sym = res
-    return sym

@@ -15,7 +15,6 @@ per-chunk repair pass (entity_extractor.py:282-293).
 
 from __future__ import annotations
 
-import math
 import re
 from typing import Callable, List
 
@@ -264,48 +263,6 @@ def apply_gleanings(texts: List[str], firsts: List[str], extractor: Extractor,
         extract_with_gleanings(t, f, extractor, max_gleanings)
         for t, f in zip(texts, firsts)
     ]
-
-
-class TruncatingGleaningExtractor:
-    """Deterministic model of an imperfect first LLM pass, for tests.
-
-    ``__call__`` returns only the first ``ceil(fraction * n)`` of the base
-    extractor's wire records (the \"missed entities\" failure mode gleaning
-    exists to fix); ``glean`` returns up to ``per_pass`` records absent from
-    the prior output; ``needs_more`` reports whether any remain. With enough
-    passes, gleaning provably reconverges to the base extractor's output.
-    """
-
-    def __init__(self, base: Extractor = None, fraction: float = 0.5,
-                 per_pass: int = 1_000_000):
-        self.base = base or DeterministicCodeExtractor()
-        self.fraction = fraction
-        self.per_pass = per_pass
-        self.calls = {"first": 0, "glean": 0, "needs_more": 0}
-
-    def _records(self, text: str) -> List[str]:
-        full = self.base(text)
-        return [r for r in full.split(RECORD_DELIMITER) if r.strip()]
-
-    def __call__(self, text: str) -> str:
-        self.calls["first"] += 1
-        recs = self._records(text)
-        if not recs:
-            return ""
-        keep = max(1, math.ceil(len(recs) * max(min(self.fraction, 1.0), 0.0)))
-        return join_records(recs[:keep])
-
-    def _missing(self, text: str, prior: str) -> List[str]:
-        have = {r.strip() for r in (prior or "").split(RECORD_DELIMITER)}
-        return [r for r in self._records(text) if r not in have]
-
-    def glean(self, text: str, prior: str) -> str:
-        self.calls["glean"] += 1
-        return join_records(self._missing(text, prior)[: self.per_pass])
-
-    def needs_more(self, text: str, prior: str) -> bool:
-        self.calls["needs_more"] += 1
-        return bool(self._missing(text, prior))
 
 
 def _extract_joined(batch_text: str, extractor: Extractor) -> str:

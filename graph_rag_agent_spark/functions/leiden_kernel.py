@@ -117,30 +117,6 @@ def _partition(
     return comm
 
 
-def modularity(
-    edges: Iterable[Edge], comm: Dict[str, int], gamma: float = 1.0
-) -> float:
-    """Q = Σ_c [Σin_c/m2 - gamma·(Σtot_c/m2)²] over the undirected graph."""
-    adj, selfw = _build_adj(edges)
-    nodes = set(adj) | set(selfw)
-    k = {v: sum(adj.get(v, {}).values()) + 2.0 * selfw.get(v, 0.0) for v in nodes}
-    m2 = sum(k.values())
-    if m2 <= 0:
-        return 0.0
-    s_in: Dict[int, float] = defaultdict(float)
-    s_tot: Dict[int, float] = defaultdict(float)
-    for v in nodes:
-        s_tot[comm[v]] += k[v]
-        s_in[comm[v]] += 2.0 * selfw.get(v, 0.0)
-    for u in adj:
-        for v, w in adj[u].items():
-            if u < v and comm[u] == comm[v]:
-                s_in[comm[u]] += 2.0 * w
-    return sum(
-        s_in[c] / m2 - gamma * (s_tot[c] / m2) ** 2 for c in s_tot
-    )
-
-
 def leiden_levels(
     nodes: Iterable[str],
     edges: Iterable[Edge],

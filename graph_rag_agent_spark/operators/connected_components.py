@@ -29,12 +29,16 @@ Scale notes:
 
 from __future__ import annotations
 
+import logging
+
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from graph_rag_agent_spark.config import CC_MAX_ITERATIONS, DRIVER_MAX_EDGES
 from graph_rag_agent_spark.functions.iterative import loop_checkpoint
 from graph_rag_agent_spark.session import collect_if_fits, local_frame
+
+log = logging.getLogger(__name__)
 
 
 def connected_components(
@@ -89,11 +93,6 @@ def _driver_union_find(vertices: DataFrame, edges: pa.Table, vertex_col: str) ->
     )
 
 
-# rounds the last _distributed_cc call took to converge — observability for
-# the log-diameter contract (tests assert a 2000-node path needs ≤ 15)
-LAST_DISTRIBUTED_ROUNDS = 0
-
-
 def _distributed_cc(
     vertices: DataFrame,
     edges: DataFrame,
@@ -105,8 +104,9 @@ def _distributed_cc(
     """→ (id, component) where component = min vertex id (string order)
     reachable in the undirected graph. Vertices with no edges keep their own
     id as component. Rounds ≈ log₂(diameter): each round is one 1-hop
-    min-label propagation + one pointer-doubling jump (see module doc)."""
-    global LAST_DISTRIBUTED_ROUNDS
+    min-label propagation + one pointer-doubling jump (see module doc).
+    Logs ``connected components: distributed path, <n> rounds`` at INFO
+    (tests assert a 2000-node path needs ≤ 15)."""
     # undirected: both directions once
     sym = (
         edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
@@ -122,7 +122,8 @@ def _distributed_cc(
         F.col(vertex_col).alias("id"), F.col(vertex_col).alias("component")
     ).transform(loop_checkpoint)
 
-    for i in range(max_iterations):
+    rounds = 0
+    for rounds in range(1, max_iterations + 1):
         # step 1: min label in the closed neighborhood (1 hop)
         neighbor_min = (
             sym.join(labels.withColumnRenamed("id", "b"), on="b", how="inner")
@@ -160,9 +161,9 @@ def _distributed_cc(
             F.sum(F.when(F.col("_changed"), 1).otherwise(0)).alias("n")
         ).collect()[0]["n"]
         labels = new_labels.drop("_changed")
-        LAST_DISTRIBUTED_ROUNDS = i + 1
         if not changed:
             break
+    log.info("connected components: distributed path, %d rounds", rounds)
     return labels
 
 

@@ -13,7 +13,6 @@ from __future__ import annotations
 from typing import Dict, Tuple
 
 from pyspark.sql import DataFrame, Window, functions as F
-from pyspark.sql import types as T
 
 from graph_rag_agent_spark.session import local_frame
 
@@ -641,69 +640,3 @@ def learn_bpe(
         docs.sparkSession, merges, "rank int, left string, right string, pair_count long"
     )
 
-
-def bpe_tokenize(
-    docs: DataFrame,
-    merges: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """→ (doc_id, n_subwords, subwords): segment every document with a
-    learned BPE merge table (``learn_bpe`` output) — the application half
-    of tokenizer training, and the real token counter a trainer budget
-    uses (whitespace counts under-estimate subword token counts).
-
-    Scale shape: the merge table is vocabulary-sized (≤ n_merges rows) —
-    COLLECTED ONCE on the driver and closed over by an Arrow-batched
-    ``mapInPandas`` (broadcast-by-closure, the same pattern as the
-    extractor's wire rules); segmentation is per-row Python over Arrow
-    batches with a per-task word→subwords memo (a Zipf corpus re-segments
-    few distinct words), so the stage is map-only — no shuffle, no join,
-    embarrassingly parallel at any corpus size."""
-    import pandas as pd
-
-    table = [
-        (r.rank, r.left, r.right, r.pair_count)
-        for r in merges.select("rank", "left", "right", "pair_count").collect()
-    ]
-    table.sort()
-
-    def run(batches):
-        from graph_rag_agent_spark.functions.bpe_kernel import apply_merges
-
-        memo: dict = {}
-
-        def seg(word: str):
-            if len(memo) > 2_000_000:  # bound long-lived task memory
-                memo.clear()
-            out = memo.get(word)
-            if out is None:
-                out = apply_merges(word, table)
-                memo[word] = out
-            return out
-
-        for pdf in batches:
-            subs = []
-            for text in pdf[text_col].fillna(""):
-                toks: list = []
-                for w in text.lower().split():
-                    toks.extend(seg(w))
-                subs.append(toks)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "n_subwords": [len(t) for t in subs],
-                    "subwords": subs,
-                }
-            )
-
-    # derive the id field from the input schema so string ids (chunk_id
-    # sha1s elsewhere in the repo) pass through instead of miscasting
-    out_schema = T.StructType(
-        [
-            docs.schema[id_col],
-            T.StructField("n_subwords", T.LongType()),
-            T.StructField("subwords", T.ArrayType(T.StringType())),
-        ]
-    )
-    return docs.select(id_col, text_col).mapInPandas(run, schema=out_schema)

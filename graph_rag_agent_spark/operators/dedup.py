@@ -416,9 +416,9 @@ def simhash_signatures(
 ) -> DataFrame:
     """→ (id, simhash bigint): 64-bit simhash over word features — the
     PRODUCTION path: one numpy pass per Arrow batch (mapInPandas), no
-    intermediate row explosion. Bit-exact twin of simhash_signatures_sql
-    (same md5-first-8-bytes word hash, same ±1 bit votes), equality-gated
-    in pytest and DuckDB-oracle-checked through the same SQL.
+    intermediate row explosion. Bit-exact twin of the SQL form in
+    tests/helpers.py (same md5-first-8-bytes word hash, same ±1 bit votes),
+    equality-gated in pytest and DuckDB-oracle-checked through the same SQL.
 
     Scale shape: a pure map — zero shuffles, O(Σ|distinct words|) work; the
     SQL form explodes one row per (doc, word, bit) = 64×Σ|words| rows
@@ -474,39 +474,6 @@ def simhash_signatures(
         F.col(id_col).cast("string").alias("id"), F.col(text_col).alias("text")
     )
     return base.mapInPandas(sig_batches, schema="id string, simhash bigint")
-
-
-def simhash_signatures_sql(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """SQL-form oracle twin of simhash_signatures: 64-bit simhash over word
-    features in pure DataFrame arithmetic — per-word 64-bit hash = first 8
-    bytes of md5(word) (hex nibbles decoded in-expression — md5 exists in
-    both Spark and ANSI-SQL engines, so the signature is
-    DuckDB-oracle-checkable, unlike xxhash64), per-bit ±1 votes summed,
-    sign → bit. No Python, but 64× row explosion — correctness cross-check
-    only, never the production path."""
-    words = docs.select(
-        F.col(id_col).cast("string").alias("id"),
-        F.explode(_word_set(text_col)).alias("w"),
-    ).withColumn("hex", F.substring(F.md5("w"), 1, 16))
-    # one row per (doc, bit): bit b of the 64-bit value lives in hex char
-    # 16 - b/4 (chars are MSB-first), nibble bit b%4; vote = +1 if set
-    bits = words.select(
-        "id", "hex", F.explode(F.sequence(F.lit(0), F.lit(63))).alias("bit")
-    ).withColumn(
-        "digit",
-        F.expr("conv(substring(hex, 16 - cast(bit / 4 as int), 1), 16, 10)").cast("int"),
-    ).withColumn(
-        "vote",
-        F.when(F.expr("(digit >> (bit % 4)) & 1") == 1, 1).otherwise(-1),
-    )
-    votes = bits.groupBy("id", "bit").agg(F.sum("vote").alias("v"))
-    return votes.groupBy("id").agg(
-        F.sum(
-            F.when(F.col("v") > 0, F.expr("shiftleft(1L, bit)")).otherwise(0)
-        ).alias("simhash")
-    )
 
 
 def simhash_near_duplicates(

@@ -34,10 +34,14 @@ vertex/pair keys; AQE handles residual skew.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, functions as F
 
 from graph_rag_agent_spark.config import DRIVER_MAX_EDGES
 from graph_rag_agent_spark.session import collect_if_fits, local_frame
+
+log = logging.getLogger(__name__)
 
 
 def _undirected(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
@@ -241,11 +245,6 @@ def graph_quality_report(
     )
 
 
-# rounds the last distributed k_core call took — observability (tests
-# assert the bounded-round contract on the gated data)
-KCORE_LAST_ROUNDS = 0
-
-
 def k_core(
     edges: DataFrame,
     k: int = 2,
@@ -268,8 +267,8 @@ def k_core(
     above it, a distributed loop of one join + one degree
     aggregation per round (``loop_checkpoint`` each, convergence checked
     with a cheap count — rounds are bounded by ``max_rounds``, the form
-    the SQL oracle unrolls; the gated data converges well inside it,
-    KCORE_LAST_ROUNDS-asserted). At 10⁹ vertices each round is two
+    the SQL oracle unrolls; each run logs ``k_core: distributed path, <n>
+    rounds`` at INFO). At 10⁹ vertices each round is two
     key-partitioned shuffles over the shrinking alive set — no global
     structure, no quadratic join."""
     from graph_rag_agent_spark.functions.iterative import loop_checkpoint
@@ -293,12 +292,12 @@ def k_core(
         ]
         return local_frame(edges.sparkSession, rows, "entity_id string, core_degree int")
 
-    global KCORE_LAST_ROUNDS
     sym = pairs.select(F.col("a").alias("s"), F.col("b").alias("d")).unionByName(
         pairs.select(F.col("b").alias("s"), F.col("a").alias("d"))
     ).transform(loop_checkpoint)
     alive = sym.select(F.col("s").alias("id")).distinct().transform(loop_checkpoint)
-    for i in range(max_rounds):
+    rounds = 0
+    for rounds in range(1, max_rounds + 1):
         deg = (
             sym.join(alive.withColumnRenamed("id", "s"), on="s")
             .join(alive.withColumnRenamed("id", "d"), on="d")
@@ -306,12 +305,12 @@ def k_core(
             .agg(F.count("*").alias("deg"))
         )
         nxt = deg.filter(F.col("deg") >= k).select("id").transform(loop_checkpoint)
-        KCORE_LAST_ROUNDS = i + 1
         before = alive.count()
         after = nxt.count()
         alive = nxt
         if after == before:
             break
+    log.info("k_core: distributed path, %d rounds", rounds)
     deg = (
         sym.join(alive.withColumnRenamed("id", "s"), on="s")
         .join(alive.withColumnRenamed("id", "d"), on="d")

@@ -227,42 +227,3 @@ def upsert_edges(existing: DataFrame, updates: DataFrame) -> DataFrame:
     kept = existing.join(updates.select(*keys).dropDuplicates(keys), on=keys, how="left_anti")
     return kept.unionByName(updates.select(existing.columns))
 
-
-def latest_wins(df: DataFrame, keys: list, ts_col: str = "last_updated") -> DataFrame:
-    """N5: timestamp-based merge — keep the newest row per key
-    (incremental_graph_builder.py:455-524).
-
-    The timestamp alone is not a total order: two rows with equal
-    (key, ts) but different payloads would be picked arbitrarily, making
-    incremental-vs-full-rebuild equivalence run-dependent. All remaining
-    ORDERABLE columns serve as ascending tiebreakers, so the winner is a
-    pure function of the data up to one residual caveat: rows tying on
-    (keys, ts) and every orderable column but differing only in an
-    excluded map-typed column are still picked arbitrarily (ordering by a
-    serialized form of the map would impose a spurious order the engine
-    itself refuses to define)."""
-    from pyspark.sql import Window
-
-    # map-bearing types are not orderable in Spark — anywhere in the tree:
-    # a bare map, an array<map>, or a struct with a map field all raise
-    # AnalysisException in ORDER BY. Every fully map-free type (incl.
-    # arrays and structs) sorts lexicographically.
-    from pyspark.sql.types import ArrayType, MapType, StructType
-
-    def _has_map(dt) -> bool:
-        if isinstance(dt, MapType):
-            return True
-        if isinstance(dt, ArrayType):
-            return _has_map(dt.elementType)
-        if isinstance(dt, StructType):
-            return any(_has_map(f.dataType) for f in dt.fields)
-        return False
-
-    unorderable = {f.name for f in df.schema.fields if _has_map(f.dataType)}
-    rest = [
-        c for c in df.columns if c not in keys and c != ts_col and c not in unorderable
-    ]
-    w = Window.partitionBy(*keys).orderBy(
-        F.desc(ts_col), *[F.asc(c) for c in rest]
-    )
-    return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")

@@ -104,33 +104,6 @@ def preserve_manual_edits(
     ).drop("_touched")
 
 
-def detect_manual_edits(nodes: DataFrame, edges: DataFrame | None = None) -> DataFrame:
-    """Reference detect_manual_edits (:169-270): → one-row stats frame
-    (manual_entities, protected_entities, manual_relationships)."""
-    nodes = ensure_edit_columns(nodes)
-    # coalesce: sum over an empty table is NULL, the stats row should say 0
-    stats = nodes.agg(
-        F.coalesce(F.sum(F.col("manual_edit").cast("long")), F.lit(0)).alias(
-            "manual_entities"
-        ),
-        F.coalesce(F.sum(F.col("protected").cast("long")), F.lit(0)).alias(
-            "protected_entities"
-        ),
-    )
-    # edge stat folded into the same (lazy) result frame: the former
-    # driver-side .count() issued a second eager job per stats call
-    # (round-5 verdict What's-wrong #3); a one-row cross join keeps the
-    # whole report a single action for the consumer
-    if edges is not None and "manual_edit" in edges.columns:
-        rel = edges.agg(
-            F.coalesce(
-                F.sum(F.col("manual_edit").cast("long")), F.lit(0)
-            ).alias("manual_relationships")
-        )
-        return stats.crossJoin(rel)
-    return stats.withColumn("manual_relationships", F.lit(0).cast("long"))
-
-
 def resolve_conflicts(
     existing: DataFrame,
     updates: DataFrame,

@@ -39,6 +39,7 @@ Scale notes (10⁹-vertex co-occurrence graph):
 
 from __future__ import annotations
 
+import logging
 from typing import Optional
 
 from pyspark.sql import DataFrame, functions as F
@@ -49,13 +50,7 @@ from graph_rag_agent_spark.session import collect_if_fits, local_frame
 
 DAMPING = 0.85
 
-# which path the last pagerank() call took — observability for tests,
-# same pattern as connected_components.LAST_DISTRIBUTED_ROUNDS
-LAST_PATH = ""
-# iterations the last tol-mode call actually ran — lets tests assert that
-# a warm start (initial_ranks from a previous build) converges in fewer
-# sweeps than cold on an incrementally-updated graph
-LAST_ITERATIONS = 0
+log = logging.getLogger(__name__)
 
 
 def pagerank(
@@ -87,7 +82,7 @@ def pagerank(
     incremental warm start for the daily-delta pipeline: the damped power
     iteration converges to the same unique fixpoint from any start, so
     after a small graph update, starting from yesterday's ranks cuts the
-    tol-mode sweep count (pytest-asserted via ``LAST_ITERATIONS``).
+    tol-mode sweep count (pytest-asserted via the logged iteration count).
     Missing vertices start at their teleport mass; the vector is
     renormalized to total mass 1.
 
@@ -98,8 +93,8 @@ def pagerank(
     actions per damped iteration — at entity-graph sizes the distributed
     loop is pure scheduler overhead); otherwise the distributed
     two-shuffle-per-iteration loop runs. Both paths implement the
-    identical recurrence (equality pytest-gated)."""
-    global LAST_PATH
+    identical recurrence (equality pytest-gated). Each run logs
+    ``pagerank: <driver|distributed> path, <n> iterations`` at INFO."""
     verts = vertices.select(F.col(vertex_col).alias("id")).distinct()
     w = (
         F.col(weight_col).cast("double")
@@ -121,11 +116,9 @@ def pagerank(
         if tables[what] is None:
             break
     else:
-        LAST_PATH = "driver"
         return _driver_pagerank(
             vertices.sparkSession, tables, damping=damping, n_iter=n_iter, tol=tol
         )
-    LAST_PATH = "distributed"
 
     # out-weight normalization, once: nw = w / W(src)
     outw = g.groupBy("src").agg(F.sum("w").alias("tw"))
@@ -175,10 +168,8 @@ def pagerank(
     else:
         ranks = base.select("id", F.col("reset_m").alias("rank"))
     d = float(damping)
-    global LAST_ITERATIONS
-    LAST_ITERATIONS = 0
-    for _ in range(n_iter):
-        LAST_ITERATIONS += 1
+    it = 0
+    for it in range(1, n_iter + 1):
         contrib = (
             g_norm.join(ranks.withColumnRenamed("id", "src"), on="src")
             .groupBy(F.col("dst").alias("id"))
@@ -218,6 +209,7 @@ def pagerank(
                 break
         else:
             ranks = new_ranks
+    log.info("pagerank: distributed path, %d iterations", it)
     return ranks.withColumnRenamed("rank", "pagerank")
 
 
@@ -282,10 +274,8 @@ def _driver_pagerank(
         r = r / total
     else:
         r = m.copy()
-    global LAST_ITERATIONS
-    LAST_ITERATIONS = 0
-    for _ in range(n_iter):
-        LAST_ITERATIONS += 1
+    it = 0
+    for it in range(1, n_iter + 1):
         dangling = float(r[no_out].sum()) if has_dangling else 0.0
         contrib = np.zeros(n)
         if kept:
@@ -295,6 +285,7 @@ def _driver_pagerank(
         r = new_r
         if tol is not None and delta < tol:
             break
+    log.info("pagerank: driver path, %d iterations", it)
     return local_frame(
         spark,
         [(v, float(r[i])) for i, v in enumerate(vert_ids)],
@@ -321,7 +312,7 @@ def pagerank_projection(
     ``tol``/``initial_ranks`` pass through to ``pagerank`` — the
     incremental plan warm-starts from the previous run's rank table
     (``initial_ranks``) in tol mode, converging in fewer sweeps to the
-    same fixpoint (LAST_ITERATIONS pytest-gated)."""
+    same fixpoint (the logged iteration count is pytest-gated)."""
     sym = projection.select(
         F.col("s").alias("src"), F.col("d").alias("dst"), "weight"
     ).unionByName(

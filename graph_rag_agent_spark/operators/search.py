@@ -43,15 +43,19 @@ def seed_entities_by_similarity(
 def top_chunks_for_seeds(
     mentions: DataFrame, chunks: DataFrame, seeds: DataFrame, limit: int = TOP_CHUNKS
 ) -> DataFrame:
-    """Chunks mentioning the most seed entities, freq desc (Q1)."""
+    """→ (chunk_sha, freq, text): the chunks mentioning the most distinct
+    seed entities, ordered by (freq desc, chunk_sha asc) (Q1). chunk_sha =
+    sha256(text) is the cross-engine chunk key; chunk_id = sha1(text), so
+    one chunk_id is one chunk_sha."""
     freq = (
-        mentions.join(seeds.select("entity_id"), on="entity_id", how="left_semi")
+        mentions.join(F.broadcast(seeds.select("entity_id")), on="entity_id", how="left_semi")
         .groupBy("chunk_id")
         .agg(F.countDistinct("entity_id").alias("freq"))
     )
     return (
         freq.join(chunks.select("chunk_id", "text").dropDuplicates(["chunk_id"]), on="chunk_id")
-        .orderBy(F.desc("freq"), F.asc("chunk_id"))
+        .select(F.sha2("text", 256).alias("chunk_sha"), "freq", "text")
+        .orderBy(F.desc("freq"), F.asc("chunk_sha"))
         .limit(limit)
     )
 
@@ -287,28 +291,11 @@ def local_search_context(
     (negated numeric ranks + id tiebreaks) and resolved via
     ``array_sort``-over-``collect_list`` — no partition-less window, no
     driver loop; every input branch is the already-proven top-k plan.
-    Chunk identity is sha256(text) (the cross-engine chunk key used
-    throughout); empty sections emit no row."""
-    # chunk section: freq per chunk sha over seed mentions, then text
-    freq = (
-        mentions.join(F.broadcast(seeds.select("entity_id")), on="entity_id", how="left_semi")
-        .groupBy("chunk_id")
-        .agg(F.countDistinct("entity_id").alias("freq"))
-    )
-    sha_text = chunks.select(
-        "chunk_id", F.sha2("text", 256).alias("chunk_sha"), "text"
-    ).dropDuplicates(["chunk_id"])
-    chunk_top = (
-        freq.join(sha_text, on="chunk_id")
-        .groupBy("chunk_sha")
-        .agg(F.max("freq").alias("freq"), F.min("text").alias("text"))
-        .orderBy(F.desc("freq"), F.asc("chunk_sha"))
-        .limit(top_chunks)
-        .select(
-            F.lit("chunk").alias("section"),
-            F.struct((-F.col("freq")).alias("k1"), F.col("chunk_sha").alias("k2")).alias("sort_key"),
-            F.col("text").alias("content"),
-        )
+    Empty sections emit no row."""
+    chunk_top = top_chunks_for_seeds(mentions, chunks, seeds, limit=top_chunks).select(
+        F.lit("chunk").alias("section"),
+        F.struct((-F.col("freq")).alias("k1"), F.col("chunk_sha").alias("k2")).alias("sort_key"),
+        F.col("text").alias("content"),
     )
     comm = top_communities_for_seeds(
         membership, summaries, mentions, seeds, limit=top_communities

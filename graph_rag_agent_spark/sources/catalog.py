@@ -108,15 +108,3 @@ class TableCatalog:
         self.drop(name)
         self.write(out, name, partition_by=partition_by)
         self.drop(tmp)
-
-    def delete_keys(self, name: str, keys_df: DataFrame, keys: List[str]) -> None:
-        """DELETE FROM name WHERE key IN keys_df."""
-        if not self.exists(name):
-            return
-        target = self.read(name)
-        kept = target.join(keys_df.select(*keys).dropDuplicates(keys), on=keys, how="left_anti")
-        tmp = name + "__tmp"
-        out = self.write(kept, tmp).localCheckpoint(eager=True)
-        self.drop(name)
-        self.write(out, name)
-        self.drop(tmp)

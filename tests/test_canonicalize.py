@@ -59,11 +59,13 @@ def test_connected_components(spark):
     assert sorted(set(wccs.values())) == [0, 1]
 
 
-def test_distributed_cc_log_diameter_convergence(spark):
+def test_distributed_cc_log_diameter_convergence(spark, caplog):
     """The distributed loop must be diameter-INDEPENDENT: pointer doubling
     makes label jumps compose, so a 2000-node path (diameter 1999) converges
     in ~log2 rounds — hop-at-a-time propagation would need ~2000."""
-    from graph_rag_agent_spark.operators import connected_components as cc_mod
+    import logging
+
+    from helpers import logged_loops
 
     n = 2000
     ids = [f"v{i:04d}" for i in range(n)]
@@ -71,10 +73,12 @@ def test_distributed_cc_log_diameter_convergence(spark):
     edges = spark.createDataFrame(
         list(zip(ids, ids[1:])), "src string, dst string"
     )
-    labels = connected_components(verts, edges, driver_threshold=0).collect()
+    logger = "graph_rag_agent_spark.operators.connected_components"
+    with caplog.at_level(logging.INFO, logger=logger):
+        labels = connected_components(verts, edges, driver_threshold=0).collect()
     assert all(r.component == "v0000" for r in labels)
     assert len(labels) == n
-    assert cc_mod.LAST_DISTRIBUTED_ROUNDS <= 15
+    assert logged_loops(caplog, "connected components")[-1][1] <= 15
 
 
 def test_local_subblocks_salt_hot_prefixes():

@@ -100,7 +100,8 @@ def test_leiden_recovers_ring_of_cliques(spark):
 
 
 def test_leiden_modularity_not_below_lpa(spark):
-    from graph_rag_agent_spark.functions.leiden_kernel import leiden_levels, modularity
+    from graph_rag_agent_spark.functions.leiden_kernel import leiden_levels
+    from helpers import modularity
 
     nodes_l, rows = _ring_of_cliques(n_cliques=6, size=4)
     edges = _edges(spark, rows)
@@ -192,7 +193,7 @@ def test_distributed_lpa_path_modularity_parity_gate(spark):
     most 5% modularity versus the kernel on the same seed-42 fixture — the
     documented approximation is bounded, not silent (gate tightened from
     0.9x after the refinement phase landed)."""
-    from graph_rag_agent_spark.functions.leiden_kernel import modularity
+    from helpers import modularity
 
     nodes_l, rows = _ring_of_cliques(n_cliques=8, size=5)
     edges = _edges(spark, rows)
@@ -328,7 +329,8 @@ def test_modularity_sweeps_improve_on_lpa_seed(spark):
     this adversarial fixture (the kernel's singleton-order assembly of the
     path community is unreachable by any seeded synchronous local move —
     measured 0.894× here, 1.0× on ring-of-cliques)."""
-    from graph_rag_agent_spark.functions.leiden_kernel import leiden_levels, modularity
+    from graph_rag_agent_spark.functions.leiden_kernel import leiden_levels
+    from helpers import modularity
     from graph_rag_agent_spark.operators.communities import modularity_local_move
 
     rows = []

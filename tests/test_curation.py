@@ -407,15 +407,13 @@ def test_ngram_stats_tf_df_and_unigrams(spark):
 
 
 def test_bpe_kernel_classic_fixture():
-    """The Sennrich worked example: 'est' assembles first (freq 9), then
-    'low'; segmentation of an unseen word reuses learned subwords."""
-    from graph_rag_agent_spark.functions.bpe_kernel import apply_merges, bpe_merges
+    """The Sennrich worked example: 'est' assembles first (freq 9)."""
+    from graph_rag_agent_spark.functions.bpe_kernel import bpe_merges
 
     wc = [("low", 5), ("lower", 2), ("newest", 6), ("widest", 3)]
     m = bpe_merges(wc, 10)
     assert [(r[1], r[2]) for r in m[:3]] == [("e", "s"), ("es", "t"), ("est", "</w>")]
     assert m[0][3] == 9  # newest(6) + widest(3)
-    assert apply_merges("lowest", m)[0] == "low"
     # deterministic: same input → identical table
     assert bpe_merges(wc, 10) == m
     # early stop: fully merged vocab ends the loop
@@ -437,41 +435,3 @@ def test_learn_bpe_distributed_reduction(spark):
     # min_count=2 drops 'rare'; the kernel sees the same table either way
     want = bpe_merges([("low", 5), ("lower", 2), ("newest", 6), ("widest", 3)], 5)
     assert got == want
-
-
-def test_bpe_tokenize_applies_learned_merges(spark):
-    from graph_rag_agent_spark.functions.bpe_kernel import apply_merges, bpe_merges
-    from graph_rag_agent_spark.operators.curation import bpe_tokenize, learn_bpe
-
-    docs = spark.createDataFrame(
-        [(1, "low low low low low lower lower"),
-         (2, "newest newest newest newest newest newest"),
-         (3, "widest widest widest")],
-        "doc_id long, text string",
-    )
-    merges = learn_bpe(docs, n_merges=8, min_count=1)
-    out = {r.doc_id: r for r in bpe_tokenize(docs, merges).collect()}
-    table = bpe_merges([("low", 5), ("lower", 2), ("newest", 6), ("widest", 3)], 8)
-    # doc 1 = 5×low + 2×lower, segmented per word by the same kernel
-    want = apply_merges("low", table) * 5 + apply_merges("lower", table) * 2
-    assert list(out[1].subwords) == want
-    assert out[1].n_subwords == len(want)
-    # a fully-merged frequent word becomes a single symbol + marker fold
-    assert out[2].n_subwords <= 6 * 2
-
-
-def test_bpe_tokenize_string_id_column(spark):
-    """ADVICE r4: output id field name/type must derive from id_col — the
-    repo's chunk ids are sha1 STRINGS, not longs."""
-    from graph_rag_agent_spark.operators.curation import bpe_tokenize, learn_bpe
-
-    docs = spark.createDataFrame(
-        [("c-aaa", "low low low lower"), ("c-bbb", "newest newest newest")],
-        "chunk_id string, text string",
-    )
-    merges = learn_bpe(docs, n_merges=4, min_count=1)
-    out = bpe_tokenize(docs, merges, id_col="chunk_id")
-    assert out.schema["chunk_id"].dataType.simpleString() == "string"
-    rows = {r.chunk_id: r for r in out.collect()}
-    assert set(rows) == {"c-aaa", "c-bbb"}
-    assert rows["c-aaa"].n_subwords == len(rows["c-aaa"].subwords) > 0

@@ -198,10 +198,8 @@ def test_poisoned_chunk_degrades_per_row(spark, tiny_corpus):
 def test_gleaning_reconverges_to_base_output():
     """An imperfect first pass (half the records) plus gleaning passes must
     reproduce the single-pass extractor's full record set, order-stable."""
-    from graph_rag_agent_spark.functions.extractor import (
-        TruncatingGleaningExtractor,
-        extract_with_gleanings,
-    )
+    from graph_rag_agent_spark.functions.extractor import extract_with_gleanings
+    from helpers import TruncatingGleaningExtractor
 
     base = DeterministicCodeExtractor()
     ext = TruncatingGleaningExtractor(base, fraction=0.5)
@@ -215,10 +213,8 @@ def test_gleaning_reconverges_to_base_output():
 def test_gleaning_multi_pass_and_needs_more_stop():
     """per_pass=2 forces several continuation calls; once complete,
     needs_more halts the loop before the pass budget is spent."""
-    from graph_rag_agent_spark.functions.extractor import (
-        TruncatingGleaningExtractor,
-        extract_with_gleanings,
-    )
+    from graph_rag_agent_spark.functions.extractor import extract_with_gleanings
+    from helpers import TruncatingGleaningExtractor
 
     base = DeterministicCodeExtractor()
     n_records = len(base(SAMPLE).split("\n"))
@@ -244,9 +240,7 @@ def test_extract_chunks_applies_gleanings(spark):
     """End-to-end: the Spark extraction stage with a truncating extractor and
     gleaning enabled matches the complete extractor bit-for-bit; with
     gleaning disabled the records are a strict subset."""
-    from graph_rag_agent_spark.functions.extractor import (
-        TruncatingGleaningExtractor,
-    )
+    from helpers import TruncatingGleaningExtractor
 
     corpus = spark.createDataFrame(
         [("r", "a.py", "c1", "python", SAMPLE)],

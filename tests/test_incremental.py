@@ -16,7 +16,6 @@ from graph_rag_agent_spark.plans import build as B
 from graph_rag_agent_spark.operators.incremental import (
     detect_changes,
     gc_deleted_docs,
-    latest_wins,
     upsert_nodes,
 )
 from graph_rag_agent_spark.plans.build import (
@@ -83,7 +82,7 @@ def test_gc_refcount(spark):
     assert {r.chunk_id for r in m2.collect()} == {"ch2"}
 
 
-def test_upsert_and_latest_wins(spark):
+def test_upsert_nodes_replaces_matched_and_inserts_new(spark):
     existing = spark.createDataFrame(
         [("A", "class", "old")], "entity_id string, entity_type string, description string"
     )
@@ -93,20 +92,6 @@ def test_upsert_and_latest_wins(spark):
     )
     got = {r.entity_id: r.description for r in upsert_nodes(existing, updates).collect()}
     assert got == {"A": "new", "B": "b"}
-
-    ts = spark.createDataFrame(
-        [("k", 1, "old"), ("k", 2, "new")], "key string, last_updated int, v string"
-    )
-    assert latest_wins(ts, ["key"]).collect()[0].v == "new"
-
-    # timestamp TIES resolve deterministically (remaining columns break the
-    # tie) — shuffle order must not pick the winner
-    tie = spark.createDataFrame(
-        [("k", 2, "b"), ("k", 2, "a"), ("k", 1, "z")],
-        "key string, last_updated int, v string",
-    ).repartition(8)
-    for _ in range(3):
-        assert latest_wins(tie, ["key"]).collect()[0].v == "a"
 
 
 # every table a full build and an incremental pass both write
@@ -277,24 +262,6 @@ def test_catalog_upsert_matches_merge_into_semantics(spark, tmp_path):
     # upsert into a non-existent table = CREATE + INSERT
     cat.upsert("t2", source, keys=["repo", "path"])
     assert cat.read("t2").count() == 2
-
-
-def test_latest_wins_skips_nested_map_tiebreakers(spark):
-    """ADVICE r5: nested unorderable types (array<map>, struct with a map
-    field) must be excluded from the tiebreaker ORDER BY exactly like a
-    top-level map — previously they would raise AnalysisException."""
-    from graph_rag_agent_spark.operators.incremental import latest_wins
-
-    df = spark.createDataFrame(
-        [
-            ("k1", 2, "b", [{"x": 1}], {"m": {"y": "z"}}),
-            ("k1", 1, "a", [{"x": 2}], {"m": {"y": "w"}}),
-        ],
-        "id string, last_updated int, payload string, "
-        "am array<map<string,int>>, sm struct<m: map<string,string>>",
-    )
-    out = latest_wins(df, keys=["id"], ts_col="last_updated").collect()
-    assert len(out) == 1 and out[0].payload == "b"
 
 
 # ---- the community tail: one driver snapshot ≡ the distributed operators --

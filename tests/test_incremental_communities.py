@@ -217,22 +217,23 @@ def test_summary_reuse_skips_legacy_prior_without_fingerprint(spark):
     assert all(row.summary.startswith("S2:") for row in run2)
 
 
-def test_plan_pagerank_warm_start_reaches_cold_fixpoint(spark):
+def test_plan_pagerank_warm_start_reaches_cold_fixpoint(spark, caplog):
     """Plan wiring: the incremental run's PageRank stage warm-starts from
     the prior rank table and reaches the same fixpoint as a cold full
     rebuild of the new corpus, in no more sweeps; its communities equal the
     rebuild's."""
+    import logging
     import tempfile
 
     from graph_rag_agent_spark.functions.extractor import (
         KeywordCooccurrenceExtractor,
     )
-    from graph_rag_agent_spark.operators import pagerank as PR
     from graph_rag_agent_spark.plans.build import BuildPipeline
     from graph_rag_agent_spark.plans.incremental_update import (
         IncrementalUpdatePipeline,
     )
     from graph_rag_agent_spark.sources.catalog import TableCatalog
+    from helpers import logged_loops
 
     schema = "repo string, path string, commit string, lang string, content string"
     # corpus with DISJOINT per-group vocabularies (each group draws words
@@ -257,7 +258,8 @@ def test_plan_pagerank_warm_start_reaches_cold_fixpoint(spark):
     v2 = base.iloc[1:].copy()  # drop ONE group-0 doc
 
     with tempfile.TemporaryDirectory(prefix="graft_incr_") as wh1, \
-         tempfile.TemporaryDirectory(prefix="graft_full_") as wh2:
+         tempfile.TemporaryDirectory(prefix="graft_full_") as wh2, \
+         caplog.at_level(logging.INFO, logger="graph_rag_agent_spark.operators.pagerank"):
         cat1 = TableCatalog(spark, wh1)
         ex = KeywordCooccurrenceExtractor()
         BuildPipeline(spark, cat1, extractor=ex).run(
@@ -268,7 +270,7 @@ def test_plan_pagerank_warm_start_reaches_cold_fixpoint(spark):
         )
         assert res["changed"]
         # warm start: prior table existed → fewer sweeps, same fixpoint
-        warm_iters = PR.LAST_ITERATIONS
+        warm_iters = logged_loops(caplog, "pagerank")[-1][1]
         incr_ranks = {
             r.entity_id: r.pagerank for r in cat1.read("entity_pagerank").collect()
         }
@@ -277,7 +279,7 @@ def test_plan_pagerank_warm_start_reaches_cold_fixpoint(spark):
         BuildPipeline(spark, cat2, extractor=ex).run(
             spark.createDataFrame(v2, schema=schema)
         )
-        cold_iters = PR.LAST_ITERATIONS
+        cold_iters = logged_loops(caplog, "pagerank")[-1][1]
         full_ranks = {
             r.entity_id: r.pagerank for r in cat2.read("entity_pagerank").collect()
         }

@@ -272,16 +272,17 @@ def _edgeless_outputs(spark, threshold):
     }
 
 
-def test_edgeless_graph_same_on_both_paths(spark):
+def test_edgeless_graph_same_on_both_paths(spark, caplog):
     """An empty edge frame fetches as a 0-row table, which is falsy; every
     gate must still take its driver path and agree with the distributed
     one."""
-    from graph_rag_agent_spark.operators import pagerank as prmod
+    from helpers import logged_loops
 
-    driver = _edgeless_outputs(spark, None)
-    assert prmod.LAST_PATH == "driver"
-    distributed = _edgeless_outputs(spark, 0)
-    assert prmod.LAST_PATH == "distributed"
+    with caplog.at_level(logging.INFO, logger="graph_rag_agent_spark.operators.pagerank"):
+        driver = _edgeless_outputs(spark, None)
+        assert logged_loops(caplog, "pagerank")[-1][0] == "driver"
+        distributed = _edgeless_outputs(spark, 0)
+        assert logged_loops(caplog, "pagerank")[-1][0] == "distributed"
     assert driver == distributed
     assert driver["connected_components"] == [(n, n) for n in ("Alpha", "Bravo", "Charlie")]
     assert driver["seed_hop_distance"] == [("Alpha", 0)]

@@ -214,47 +214,3 @@ def test_pipeline_preserves_manual_edits_through_incremental_run(spark):
                     assert victim not in after or (
                         after[victim].description != "HAND-EDITED"
                     )
-
-
-def test_detect_manual_edits_stats(spark):
-    nodes = mark_manual_edits(
-        _nodes(spark, [("a", "t", "d"), ("b", "t", "d"), ("c", "t", "d")]),
-        spark.createDataFrame([("a",), ("b",)], "entity_id string"),
-    )
-    edges = spark.createDataFrame(
-        [("a", "p", "b", "d", 1.0, "ch1", True),
-         ("b", "p", "c", "d", 1.0, "ch2", False)],
-        "subj string, pred string, obj string, description string, "
-        "weight double, chunk_id string, manual_edit boolean",
-    )
-    from graph_rag_agent_spark.operators.manual_edits import detect_manual_edits
-
-    row = detect_manual_edits(nodes, edges).collect()[0]
-    assert (row.manual_entities, row.protected_entities,
-            row.manual_relationships) == (2, 0, 1)
-
-
-def test_detect_manual_edits_is_lazy_single_action(spark):
-    """Round-6: the edge stat is folded into the stats frame — building the
-    report must run NO job (the pre-r6 form issued an eager edge .count()
-    per call); all three stats arrive through the consumer's one action."""
-    nodes = mark_manual_edits(
-        _nodes(spark, [("a", "t", "d"), ("b", "t", "d")]),
-        spark.createDataFrame([("a",)], "entity_id string"),
-    )
-    edges = spark.createDataFrame(
-        [("a", "p", "b", "d", 1.0, "ch1", True)],
-        "subj string, pred string, obj string, description string, "
-        "weight double, chunk_id string, manual_edit boolean",
-    )
-    from graph_rag_agent_spark.operators.manual_edits import detect_manual_edits
-
-    sc = spark.sparkContext
-    sc.setJobGroup("me_lazy_probe", "detect_manual_edits build")
-    try:
-        df = detect_manual_edits(nodes, edges)
-        assert sc.statusTracker().getJobIdsForGroup("me_lazy_probe") == []
-        row = df.collect()[0]
-    finally:
-        sc.setJobGroup(None, None)
-    assert (row.manual_entities, row.manual_relationships) == (1, 1)

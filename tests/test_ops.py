@@ -249,10 +249,8 @@ def test_simhash_fast_equals_sql_form(spark):
     """The production one-pass numpy simhash must be bit-exact with the
     SQL-form oracle twin (which explodes 64 rows per (doc, word) and is
     kept only for DuckDB checkability)."""
-    from graph_rag_agent_spark.operators.dedup import (
-        simhash_signatures,
-        simhash_signatures_sql,
-    )
+    from graph_rag_agent_spark.operators.dedup import simhash_signatures
+    from helpers import simhash_signatures_sql
 
     docs = spark.createDataFrame(
         [

@@ -2,11 +2,16 @@
 personalization semantics, plus numpy power-iteration parity on a random
 graph (the same shared-kernel strategy the Leiden/CC suites use)."""
 
+import logging
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from graph_rag_agent_spark.operators.pagerank import pagerank, pagerank_projection
+from helpers import logged_loops
+
+PAGERANK_LOG = "graph_rag_agent_spark.operators.pagerank"
 
 
 def _ranks(df):
@@ -81,10 +86,8 @@ def test_personalized_localizes_to_seeds(spark):
     assert sum(out.values()) == pytest.approx(1.0, abs=1e-9)
 
 
-def test_driver_and_distributed_paths_agree(spark):
+def test_driver_and_distributed_paths_agree(spark, caplog):
     # same random weighted digraph through BOTH paths — identical ranks
-    from graph_rag_agent_spark.operators import pagerank as prmod
-
     rng = np.random.default_rng(11)
     n = 20
     rows = []
@@ -96,22 +99,21 @@ def test_driver_and_distributed_paths_agree(spark):
     v = spark.createDataFrame([(f"u{i:02d}",) for i in range(n)], "id string")
     seeds = spark.createDataFrame([("u00",), ("u01",)], "id string")
     for reset in (None, seeds):
-        drv = _ranks(pagerank(v, e, n_iter=5, weight_col="w", reset=reset))
-        assert prmod.LAST_PATH == "driver"
-        dist = _ranks(
-            pagerank(v, e, n_iter=5, weight_col="w", reset=reset, driver_threshold=0)
-        )
-        assert prmod.LAST_PATH == "distributed"
+        with caplog.at_level(logging.INFO, logger=PAGERANK_LOG):
+            drv = _ranks(pagerank(v, e, n_iter=5, weight_col="w", reset=reset))
+            assert logged_loops(caplog, "pagerank")[-1][0] == "driver"
+            dist = _ranks(
+                pagerank(v, e, n_iter=5, weight_col="w", reset=reset, driver_threshold=0)
+            )
+            assert logged_loops(caplog, "pagerank")[-1][0] == "distributed"
         for k in drv:
             assert drv[k] == pytest.approx(dist[k], abs=1e-12)
 
 
-def test_warm_start_converges_faster_after_delta(spark):
+def test_warm_start_converges_faster_after_delta(spark, caplog):
     # incremental pipeline: yesterday's ranks warm-start today's run after
     # a small graph delta → fewer tol-mode sweeps than a cold start, and
     # both converge to the same fixpoint (unique regardless of init)
-    from graph_rag_agent_spark.operators import pagerank as prmod
-
     rng = np.random.default_rng(3)
     n = 60
     base_edges = []
@@ -125,10 +127,11 @@ def test_warm_start_converges_faster_after_delta(spark):
 
     delta_edges = base_edges + [("w00", "w59"), ("w07", "w41")]
     e1 = spark.createDataFrame(delta_edges, "src string, dst string")
-    cold = _ranks(pagerank(v, e1, n_iter=60, tol=1e-10))
-    cold_iters = prmod.LAST_ITERATIONS
-    warm = _ranks(pagerank(v, e1, n_iter=60, tol=1e-10, initial_ranks=prev))
-    warm_iters = prmod.LAST_ITERATIONS
+    with caplog.at_level(logging.INFO, logger=PAGERANK_LOG):
+        cold = _ranks(pagerank(v, e1, n_iter=60, tol=1e-10))
+        cold_iters = logged_loops(caplog, "pagerank")[-1][1]
+        warm = _ranks(pagerank(v, e1, n_iter=60, tol=1e-10, initial_ranks=prev))
+        warm_iters = logged_loops(caplog, "pagerank")[-1][1]
     assert warm_iters < cold_iters
     for k in cold:
         assert warm[k] == pytest.approx(cold[k], abs=1e-8)
