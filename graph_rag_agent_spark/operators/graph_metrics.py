@@ -297,6 +297,7 @@ def k_core(
     ).transform(loop_checkpoint)
     alive = sym.select(F.col("s").alias("id")).distinct().transform(loop_checkpoint)
     rounds = 0
+    before = alive.count()
     for rounds in range(1, max_rounds + 1):
         deg = (
             sym.join(alive.withColumnRenamed("id", "s"), on="s")
@@ -305,11 +306,11 @@ def k_core(
             .agg(F.count("*").alias("deg"))
         )
         nxt = deg.filter(F.col("deg") >= k).select("id").transform(loop_checkpoint)
-        before = alive.count()
         after = nxt.count()
         alive = nxt
         if after == before:
             break
+        before = after
     log.info("k_core: distributed path, %d rounds", rounds)
     deg = (
         sym.join(alive.withColumnRenamed("id", "s"), on="s")

@@ -22,15 +22,17 @@ All diffs are key-partitioned joins; nothing is collected to the driver.
 
 from __future__ import annotations
 
+import uuid
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 
 class ChangeSet(NamedTuple):
     added: DataFrame      # corpus rows of documents new since the registry snapshot
     modified: DataFrame   # corpus rows of documents whose content changed
     deleted: DataFrame    # (repo, path) of registry documents gone from the corpus
+    counts: dict          # change -> rows of added/modified, keys of deleted
 
 
 def detect_changes(corpus: DataFrame, registry: DataFrame) -> ChangeSet:
@@ -47,7 +49,11 @@ def detect_changes(corpus: DataFrame, registry: DataFrame) -> ChangeSet:
     unchanged corpus finds no change.
 
     The per-key verdict is one shuffle, checkpointed: an incremental run
-    reads each side of the change set several times."""
+    reads each side of the change set several times. ``counts`` comes from
+    the same checkpoint job, through an Observation: a key's ``_shas`` has
+    one entry per corpus row with non-null content, so summing its size
+    over the added (modified) keys counts ``added`` (``modified``)
+    exactly, and ``deleted`` counts its keys."""
     def hashes(df: DataFrame, sha: F.Column, cur: bool) -> DataFrame:
         return df.select("repo", "path", sha.alias("_sha"), F.lit(cur).alias("_cur"))
 
@@ -67,7 +73,14 @@ def detect_changes(corpus: DataFrame, registry: DataFrame) -> ChangeSet:
         .when(F.size("_shas") == 0, "deleted")
         .when(F.col("_shas") != F.col("_reg_shas"), "modified")
         .alias("_change"),
-    ).filter(F.col("_change").isNotNull()).localCheckpoint(eager=True)
+        F.size("_shas").alias("_rows"),
+    ).filter(F.col("_change").isNotNull())
+    obs = Observation(f"changes_{uuid.uuid4().hex[:8]}")
+    counted = {"added": F.col("_rows"), "modified": F.col("_rows"), "deleted": F.lit(1)}
+    verdict = verdict.observe(obs, *(
+        F.coalesce(F.sum(F.when(F.col("_change") == change, n)), F.lit(0)).alias(change)
+        for change, n in counted.items()
+    )).localCheckpoint(eager=True)
 
     def keys(change: str) -> DataFrame:
         return verdict.filter(F.col("_change") == change).select("repo", "path")
@@ -77,6 +90,7 @@ def detect_changes(corpus: DataFrame, registry: DataFrame) -> ChangeSet:
         added=rows.join(keys("added"), on=["repo", "path"], how="left_semi"),
         modified=rows.join(keys("modified"), on=["repo", "path"], how="left_semi"),
         deleted=keys("deleted"),
+        counts={change: int(n) for change, n in obs.get.items()},
     )
 
 

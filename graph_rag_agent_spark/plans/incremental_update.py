@@ -2,7 +2,7 @@
 
 Order mirrors the reference: detect changes → rebuild changed partitions →
 GC deleted docs → refresh embeddings (anti-join incremental) →
-consistency validate/repair → re-detect communities.
+consistency validate, then repair on violations → re-detect communities.
 
 The incremental-only steps live here; they feed plans/build.py's shared
 stages, which materialize every table through BuildPipeline's catalog saver
@@ -18,7 +18,11 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from graph_rag_agent_spark.config import PipelineConfig
-from graph_rag_agent_spark.operators.consistency import repair, validation_report
+from graph_rag_agent_spark.operators.consistency import (
+    REPAIRED_CHECKS,
+    repair,
+    validation_report,
+)
 from graph_rag_agent_spark.operators.incremental import (
     detect_changes,
     upsert_edges,
@@ -73,11 +77,8 @@ class IncrementalUpdatePipeline:
         ``graph_quality`` is rebuilt from the same graph snapshot."""
         cat, cfg = self.catalog, self.config
         changes = detect_changes(corpus, cat.read("registry"))
-        n_added = changes.added.count()
-        n_modified = changes.modified.count()
-        n_deleted = changes.deleted.count()
-        stats = {"added": n_added, "modified": n_modified, "deleted": n_deleted}
-        if not (n_added or n_modified or n_deleted):
+        stats = dict(changes.counts)
+        if not any(stats.values()):
             return {**stats, "changed": False}
         build = BuildPipeline(self.spark, cat, cfg, run_id=self.run_id)
         save = build._save
@@ -151,11 +152,16 @@ class IncrementalUpdatePipeline:
         )
         raw = graph_stage(results, save, kept_records)
 
-        # --- N8 consistency repair: a no-op on a consistent delta. The
-        # repaired frames feed embed + canonicalize, whose actions and
-        # table writes would each re-run the repair joins
-        report = validation_report(*raw, chunks)
-        raw = [df.localCheckpoint(eager=True) for df in repair(*raw, chunks)]
+        # --- N8 consistency: validate, then repair on violations. With no
+        # dangling mention, orphan entity or missing edge endpoint, repair
+        # is the identity, so the written tables feed embed + canonicalize
+        # as they are. Otherwise the repaired frames are checkpointed:
+        # canonicalize's actions and table writes would each re-run the
+        # repair joins
+        validation = {r.check: r.violation_count
+                      for r in validation_report(*raw, chunks).collect()}
+        if any(validation[c] for c in REPAIRED_CHECKS):
+            raw = [df.localCheckpoint(eager=True) for df in repair(*raw, chunks)]
 
         existing = cat.read("entity_embeddings") if cat.exists("entity_embeddings") else None
         result = canonical_stage(*raw, cfg, save, existing)
@@ -184,5 +190,5 @@ class IncrementalUpdatePipeline:
             "changed": True,
             "preserved_edits": int(n_preserved),
             "conflicts_resolved": int(n_conflicts),
-            "validation": {r.check: r.violation_count for r in report.collect()},
+            "validation": validation,
         }

@@ -7,7 +7,11 @@ has no Iceberg runtime jars, so the catalog dispatches:
   (``spark.sql.catalog.<name>`` set, jars on classpath) → ``writeTo``
   V2 API with ``MERGE INTO`` upserts;
 - else → partitioned parquet under a warehouse dir with the same table
-  semantics (upsert emulated as anti-join + union-rewrite).
+  semantics (upsert emulated as anti-join + union-rewrite). Each table
+  directory also holds ``_schema.json``, the written frame's schema, so a
+  read passes it to ``spark.read.schema`` and starts no schema-inference
+  job (Spark's file index skips ``_``-prefixed files). A directory without
+  it, from an older writer, is read with an inferred schema.
 
 Every pipeline stage goes through this layer, so pointing the session at a
 real Iceberg catalog changes storage without touching operator code.
@@ -15,10 +19,14 @@ real Iceberg catalog changes storage without touching operator code.
 
 from __future__ import annotations
 
+import json
 import os
 from typing import List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+SCHEMA_FILE = "_schema.json"
 
 
 class TableCatalog:
@@ -56,8 +64,9 @@ class TableCatalog:
     # -- IO ----------------------------------------------------------------
     def write(self, df: DataFrame, name: str, partition_by: Optional[List[str]] = None,
               mode: str = "overwrite") -> DataFrame:
-        """Write the table; → the table as written. Parquet reads it back
-        with the frame's own schema, which starts no schema-inference job."""
+        """Write the table; → the table as written. Parquet stores the
+        frame's schema beside the data and reads it back with that schema,
+        which starts no schema-inference job."""
         if self.iceberg_catalog:
             writer = df.writeTo(self._qualified(name)).using("iceberg")
             if mode == "overwrite":
@@ -69,12 +78,21 @@ class TableCatalog:
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(self._path(name))
+        with open(os.path.join(self._path(name), SCHEMA_FILE), "w") as fh:
+            fh.write(df.schema.json())
         return self.spark.read.schema(df.schema).parquet(self._path(name))
 
     def read(self, name: str) -> DataFrame:
+        """The table, lazily. Parquet with a stored schema starts no job."""
         if self.iceberg_catalog:
             return self.spark.read.table(self._qualified(name))
-        return self.spark.read.parquet(self._path(name))
+        path = self._path(name)
+        try:
+            with open(os.path.join(path, SCHEMA_FILE)) as fh:
+                schema = StructType.fromJson(json.load(fh))
+        except FileNotFoundError:
+            return self.spark.read.parquet(path)
+        return self.spark.read.schema(schema).parquet(path)
 
     def drop(self, name: str) -> None:
         if self.iceberg_catalog:
@@ -87,7 +105,13 @@ class TableCatalog:
     def upsert(self, name: str, source: DataFrame, keys: List[str],
                partition_by: Optional[List[str]] = None) -> None:
         """MERGE INTO on keys. Iceberg: real MERGE; parquet: anti-join the
-        target against the source keys, union, rewrite (same end state)."""
+        target against the source keys, union, rewrite (same end state).
+
+        The parquet rewrite overwrites the table from a local checkpoint of
+        the merged rows (parquet can't overwrite its own input), with no
+        temp table. It is not atomic: until the write finishes, the
+        checkpoint holds the only copy of the merged rows, so a crash
+        during it loses the table."""
         if self.iceberg_catalog:
             source.createOrReplaceTempView("_upsert_src")
             cond = " AND ".join(f"t.{k} = s.{k}" for k in keys)
@@ -100,11 +124,7 @@ class TableCatalog:
             self.write(source, name, partition_by=partition_by)
             return
         target = self.read(name)
-        kept = target.join(source.select(*keys).dropDuplicates(keys), on=keys, how="left_anti")
+        # an anti-join never multiplies its left rows: no key dedup needed
+        kept = target.join(source.select(*keys), on=keys, how="left_anti")
         merged = kept.unionByName(source.select(*target.columns))
-        # rewrite through a temp dir: parquet can't overwrite its own input
-        tmp = name + "__tmp"
-        out = self.write(merged, tmp, partition_by=partition_by).localCheckpoint(eager=True)
-        self.drop(name)
-        self.write(out, name, partition_by=partition_by)
-        self.drop(tmp)
+        self.write(merged.localCheckpoint(eager=True), name, partition_by=partition_by)

@@ -3,6 +3,7 @@
 
 import functools
 import logging
+import os
 import tempfile
 
 import pandas as pd
@@ -11,7 +12,9 @@ from pyspark.sql import functions as F
 
 from graph_rag_agent_spark.config import MAX_TEXT_LENGTH, PipelineConfig
 from graph_rag_agent_spark.operators import communities as C
+from graph_rag_agent_spark.operators.consistency import repair
 from graph_rag_agent_spark.plans import build as B
+from graph_rag_agent_spark.plans import incremental_update as IU
 
 from graph_rag_agent_spark.operators.incremental import (
     detect_changes,
@@ -20,11 +23,12 @@ from graph_rag_agent_spark.operators.incremental import (
 )
 from graph_rag_agent_spark.plans.build import (
     BuildPipeline,
+    canonical_stage,
     community_stages,
     run_kg_build_in_memory,
 )
 from graph_rag_agent_spark.plans.incremental_update import IncrementalUpdatePipeline
-from graph_rag_agent_spark.sources.catalog import TableCatalog
+from graph_rag_agent_spark.sources.catalog import SCHEMA_FILE, TableCatalog
 from graph_rag_agent_spark.sources.corpus import CORPUS_COLUMNS, generate_corpus_pdf
 
 CORPUS_SCHEMA = "repo string, path string, commit string, lang string, content string"
@@ -32,6 +36,27 @@ CORPUS_SCHEMA = "repo string, path string, commit string, lang string, content s
 
 def _corpus_df(spark, pdf):
     return spark.createDataFrame(pdf, schema=CORPUS_SCHEMA)
+
+
+def _jobs(spark, group, fn):
+    """-> (fn(), the number of Spark jobs it ran), counted in a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _change_counts(changes):
+    """ChangeSet.counts by its definition: rows of added and modified,
+    keys of deleted."""
+    return {
+        "added": changes.added.count(),
+        "modified": changes.modified.count(),
+        "deleted": changes.deleted.count(),
+    }
 
 
 def test_detect_changes(spark):
@@ -54,6 +79,7 @@ def test_detect_changes(spark):
     assert {r.path for r in ch.added.collect()} == {"d.py"}
     assert {r.path for r in ch.modified.collect()} == {"b.py"}
     assert {r.path for r in ch.deleted.collect()} == {"c.py"}
+    assert ch.counts == _change_counts(ch) == {"added": 1, "modified": 1, "deleted": 1}
 
 
 def test_gc_refcount(spark):
@@ -120,16 +146,30 @@ def _stable_rows(df):
     return sorted(tuple(r) for r in df.select(*cols).collect())
 
 
-def test_incremental_equals_full_rebuild(spark):
+def _base_and_delta():
+    """-> (a 40-file corpus, the same corpus with 5 files dropped, 3
+    modified and 4 added), as pandas frames."""
     base = generate_corpus_pdf(40, seed=42)
-    # v2: drop 5 docs, modify 3, add 4 new ones
     v2 = base.iloc[5:].copy()
     v2.loc[v2.index[:3], "content"] = (
         v2.loc[v2.index[:3], "content"] + "\n\nclass AddedThing(DataLoader):\n    pass\n"
     )
     extra = generate_corpus_pdf(60, seed=43).iloc[-4:]
-    v2 = pd.concat([v2, extra], ignore_index=True)
+    return base, pd.concat([v2, extra], ignore_index=True)
 
+
+# `test_run_once_job_budget`'s bound: 67 jobs measured on 4 cores, plus a
+# margin
+RUN_ONCE_JOBS = 70
+
+NO_VIOLATIONS = {
+    "orphan_entities": 0, "dangling_mentions": 0, "empty_chunks": 0,
+    "broken_chains": 0, "edge_endpoints_missing": 0,
+}
+
+
+def test_incremental_equals_full_rebuild(spark):
+    base, v2 = _base_and_delta()
     with tempfile.TemporaryDirectory(prefix="graft_incr_") as wh1, \
          tempfile.TemporaryDirectory(prefix="graft_full_") as wh2:
         cat1 = TableCatalog(spark, wh1)
@@ -138,6 +178,9 @@ def test_incremental_equals_full_rebuild(spark):
         res = incr.run_once(_corpus_df(spark, v2))
         assert res["changed"]
         assert res["added"] == 4 and res["modified"] == 3 and res["deleted"] == 5
+        # parsing adds every relationship endpoint as an occurrence: a
+        # pipeline-made delta never reaches the repair branch
+        assert res["validation"] == NO_VIOLATIONS
         # one lineage row per stage the pass materialized
         stages = {
             r.stage for r in cat1.read("build_metrics")
@@ -220,6 +263,8 @@ def test_hostile_corpus_fixed_point_and_incremental_equals_full(spark, case):
         BuildPipeline(spark, cat1).run(v1)
         _assert_in_memory_build_matches(spark, v1, cat1)
         assert IncrementalUpdatePipeline(spark, cat1).run_once(v1)["changed"] is False
+        changes = detect_changes(v2, cat1.read("registry"))
+        assert changes.counts == _change_counts(changes)
         res = IncrementalUpdatePipeline(spark, cat1).run_once(v2)
         assert res["changed"] and res["added"] + res["modified"] > 0
         assert IncrementalUpdatePipeline(spark, cat1).run_once(v2)["changed"] is False
@@ -262,6 +307,34 @@ def test_catalog_upsert_matches_merge_into_semantics(spark, tmp_path):
     # upsert into a non-existent table = CREATE + INSERT
     cat.upsert("t2", source, keys=["repo", "path"])
     assert cat.read("t2").count() == 2
+
+
+def test_catalog_read_uses_stored_schema(spark, tmp_path):
+    """A parquet table's schema is stored beside it, so `read` starts no
+    job and gives what schema inference gives; a directory without the
+    schema file still reads, and `upsert` leaves no temp table behind."""
+    cat = TableCatalog(spark, str(tmp_path / "wh"))
+    cat.write(spark.createDataFrame(
+        [("r1", "p1", 1, [0.5, 1.5], "2026-01-01 00:00:00"), ("r2", None, None, None, None)],
+        "repo string, path string, n bigint, v array<double>, ts string",
+    ).withColumn("ts", F.to_timestamp("ts")), "t")
+    path = str(tmp_path / "wh" / "t")
+
+    got, jobs = _jobs(spark, "catalog_read", lambda: cat.read("t"))
+    assert jobs == 0
+    inferred = spark.read.parquet(path)
+    assert got.dtypes == inferred.dtypes
+    assert sorted(got.collect()) == sorted(inferred.collect())
+
+    os.remove(os.path.join(path, SCHEMA_FILE))
+    assert cat.read("t").dtypes == inferred.dtypes
+    assert sorted(cat.read("t").collect()) == sorted(inferred.collect())
+
+    cat.upsert("t", got.filter(F.col("repo") == "r1").withColumn("n", F.lit(7).cast("bigint")),
+               keys=["repo"])
+    assert sorted(os.listdir(tmp_path / "wh")) == ["t"]
+    assert os.path.exists(os.path.join(path, SCHEMA_FILE))
+    assert {r.repo: r.n for r in cat.read("t").collect()} == {"r1": 7, "r2": None}
 
 
 # ---- the community tail: one driver snapshot ≡ the distributed operators --
@@ -376,11 +449,58 @@ def test_community_tail_job_budget(spark, tmp_path):
     def materialize(name, df):
         return df if name in inputs else cat.write(df, name)
 
-    sc, group = spark.sparkContext, "community_tail_job_budget"
-    sc.setJobGroup(group, "one community_stages call")
-    try:
-        community_stages(*tables, PipelineConfig(), materialize)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert len(jobs) <= 12, len(jobs)
+    _, jobs = _jobs(spark, "community_tail_job_budget", lambda: community_stages(
+        *tables, PipelineConfig(), materialize
+    ))
+    assert jobs <= 12, jobs
+
+
+def test_run_once_job_budget(spark, tmp_path):
+    """One `run_once` of a 12-file delta on a 40-file base runs a bounded
+    number of Spark jobs. Counting the changes with a `count()` per frame
+    (8 more), inferring the schema on each catalog read (9 more), or
+    checkpointing the repair of a consistent delta (15 more) fails it
+    without timing anything."""
+    base, v2 = _base_and_delta()
+    cat = TableCatalog(spark, str(tmp_path / "wh"))
+    BuildPipeline(spark, cat).run(_corpus_df(spark, base))
+    corpus = _corpus_df(spark, v2)
+    res, jobs = _jobs(spark, "run_once_job_budget", lambda: IncrementalUpdatePipeline(
+        spark, cat
+    ).run_once(corpus))
+    assert res["changed"]
+    assert jobs <= RUN_ONCE_JOBS, jobs
+
+
+def test_run_once_repairs_violations(spark, monkeypatch, tmp_path):
+    """A delta whose graph holds an orphan entity, a dangling mention and
+    an edge with a missing endpoint is validated, then repaired: the
+    report counts each one, and the written canonical tables are the ones
+    built from what `repair` yields on the same frames."""
+    injected = []
+
+    def graph_stage_with_violations(results, materialize, kept_records=None):
+        nodes, edges, mentions = B.graph_stage(results, materialize, kept_records)
+        injected[:] = [df.localCheckpoint(eager=True) for df in (
+            nodes.unionByName(nodes.limit(1).withColumn("entity_id", F.lit("ORPHAN"))),
+            edges.unionByName(edges.limit(1).withColumn("subj", F.lit("GHOST"))),
+            mentions.unionByName(
+                mentions.limit(1).withColumn("chunk_id", F.lit("NO_SUCH_CHUNK"))
+            ),
+        )]
+        return injected
+
+    monkeypatch.setattr(IU, "graph_stage", graph_stage_with_violations)
+    base, v2 = _base_and_delta()
+    cat = TableCatalog(spark, str(tmp_path / "wh"))
+    BuildPipeline(spark, cat).run(_corpus_df(spark, base))
+    res = IncrementalUpdatePipeline(spark, cat).run_once(_corpus_df(spark, v2))
+    assert res["validation"] == {
+        **NO_VIOLATIONS,
+        "orphan_entities": 1, "dangling_mentions": 1, "edge_endpoints_missing": 1,
+    }
+    want = canonical_stage(
+        *repair(*injected, cat.read("chunks")), PipelineConfig(), lambda name, df: df
+    )
+    for table in ("nodes", "edges", "mentions"):
+        assert _stable_rows(cat.read(table)) == _stable_rows(getattr(want, table)), table
