@@ -18,7 +18,6 @@ from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from graph_rag_agent_spark.config import PipelineConfig
 from graph_rag_agent_spark.functions.extractor import KeywordCooccurrenceExtractor
 from graph_rag_agent_spark.operators.dedup import (
     dedup_groups,
@@ -194,9 +193,9 @@ def _kg(spark: SparkSession, key: str, corpus) -> dict:
     joins the dict once _canonical has run."""
     def make():
         tables: dict = {}
-        cfg, record = PipelineConfig(), partial(_record, tables)
-        chunks = chunk_stage(corpus(spark), cfg, record)
-        graph_stage(extract_stage(chunks, cfg, KeywordCooccurrenceExtractor()), record)
+        record = partial(_record, tables)
+        chunks = chunk_stage(corpus(spark), record)
+        graph_stage(extract_stage(chunks, KeywordCooccurrenceExtractor()), record)
         return tables
 
     return _memo(spark, f"kg:{key}", make)
@@ -210,8 +209,7 @@ def _canonical(spark: SparkSession, key: str, corpus):
     def make():
         kg = _kg(spark, key, corpus)
         res = canonical_stage(
-            kg["nodes_raw"], kg["edges_raw"], kg["mentions_raw"],
-            PipelineConfig(), partial(_record, kg),
+            kg["nodes_raw"], kg["edges_raw"], kg["mentions_raw"], partial(_record, kg)
         )
         return res._replace(
             edges=res.edges.localCheckpoint(eager=True),

@@ -8,7 +8,7 @@ Arrow-UDF pipelines over partitioned Iceberg/parquet tables. See SURVEY.md
 for the operator-by-operator mapping.
 
 Layout:
-    config         — chunking/canonicalization/community thresholds, PipelineConfig
+    config         — every build knob as a module constant (the operators' defaults)
     session        — SparkSession factory tuned for the pipeline
     functions/     — pure deterministic kernels (tokenizer, wire format, embedder, ...)
     sources/       — corpus generator, table catalog (Iceberg-or-parquet), registry

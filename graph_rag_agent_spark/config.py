@@ -1,14 +1,15 @@
-"""Pipeline configuration.
+"""Pipeline configuration: every build knob, declared once.
 
 Mirrors the *semantics* of the reference's ``config/settings.py`` knobs
 (reference: /root/reference/graphrag_agent/config/settings.py:98-136,241-249)
-re-keyed for a source-code corpus. All values are deterministic constants so
-the Spark pipeline and the pure-Python oracle agree bit-for-bit.
+re-keyed for a source-code corpus. Like the reference's, they are module
+constants: each operator defaults its keyword argument to one, and the
+build stages call the operators with those defaults. All values are
+deterministic so the Spark pipeline and the pure-Python oracle agree
+bit-for-bit.
 """
 
 from __future__ import annotations
-
-from dataclasses import dataclass
 
 # ---- chunking (reference settings.py:98-100) --------------------------------
 CHUNK_SIZE = 500          # tokens per chunk window
@@ -18,13 +19,10 @@ SENTENCE_SNAP_SLACK = 100  # end may snap forward to a sentence end within +100 
 
 # sentence-end tokens for the snap logic (reference text_chunker.py:268-270)
 SENTENCE_END_TOKENS = ("。", "！", "？")
-# sentence punctuation used by the large-paragraph splitter (text_chunker.py:119)
-SPLIT_PUNCT = "。！？.!?"
 
 # ---- extraction wire format (reference entity_extractor.py:44-46) -----------
 TUPLE_DELIMITER = " : "
 RECORD_DELIMITER = "\n"
-COMPLETION_DELIMITER = "\n\n"
 BATCH_SEPARATOR = "\n" + "-" * 50 + "\n"   # entity_extractor.py:264
 EXTRACTION_BATCH_CAP = 100                 # settings.py BATCH_SIZE analogue
 EXTRACTION_BATCH_CHAR_BUDGET = 10_000      # dynamic batch = budget / avg_chunk_chars
@@ -41,16 +39,13 @@ UNKNOWN_ENTITY_DESCRIPTION = "No additional data"
 
 # ---- embeddings (reference entity_indexer.py:170,189-205) --------------------
 EMBEDDING_DIM = 64        # deterministic hash-projection embedder dimension
-EMBEDDING_BATCH = 1024    # Arrow batch rows per embed call
 
 # ---- canonicalization (reference settings.py:101,147-155,241-249) -----------
 SIMILARITY_CUTOFF = 0.9   # cosine threshold for SIMILAR edges (KNN cutoff)
 SIMILARITY_TOPK = 10      # per-entity cap on SIMILAR edges
 WORD_EDIT_DISTANCE = 3    # levenshtein(lower(a), lower(b)) < 3 → duplicate candidates
-ALIGNMENT_MIN_GROUP = 2   # groups of >= 2 share a canonical id
 CONFLICT_JACCARD = 0.5    # rel-type-set Jaccard below this = conflict
 BLOCK_SALT_THRESHOLD = 2000   # blocks larger than this get salted sub-blocks
-BLOCK_SALT_FACTOR = 16        # number of salt buckets for hot blocks
 
 # ---- communities -------------------------------------------------------------
 COMMUNITY_MAX_LEVELS = 2      # reference leiden.py fallback maxLevels=2
@@ -62,10 +57,13 @@ COMMUNITY_GAMMA = 1.0          # Leiden resolution (reference gds.leiden gamma)
 # distributed LPA-seeded modularity local-move + contraction loop runs
 COMMUNITY_DRIVER_THRESHOLD = 2_000_000
 SLLPA_DRIVER_THRESHOLD = 50_000  # ≤ this many edges and vertices → driver SLLPA sweeps
+# the build's entity_pagerank: tol-mode fixpoint, which an incremental run
+# warm-starts from the previous run's rank table
+PAGERANK_TOL = 1e-6
+PAGERANK_MAX_ITER = 100
 
 # ---- connected components -----------------------------------------------------
 CC_MAX_ITERATIONS = 50    # safety bound; similarity clusters have tiny diameter
-CC_CHECKPOINT_EVERY = 3   # localCheckpoint cadence to cut lineage
 # ≤ this many entities → whole canonical-map computation on the driver
 # (shared numpy/union-find kernels; the GDS-in-memory analogue). Above it,
 # the distributed blocked-join + DataFrame-CC path runs.
@@ -75,26 +73,3 @@ CANON_DRIVER_THRESHOLD = 200_000
 # ≤ this many edges (and vertices) → CC, PageRank, hop BFS and k-core run as
 # one driver kernel over the collect_if_fits table; above it, distributed loops
 DRIVER_MAX_EDGES = 1_000_000
-
-
-@dataclass(frozen=True)
-class PipelineConfig:
-    """Bundled knobs passed through the build plan; defaults above."""
-
-    chunk_size: int = CHUNK_SIZE
-    overlap: int = OVERLAP
-    max_text_length: int = MAX_TEXT_LENGTH
-    embedding_dim: int = EMBEDDING_DIM
-    similarity_cutoff: float = SIMILARITY_CUTOFF
-    similarity_topk: int = SIMILARITY_TOPK
-    word_edit_distance: int = WORD_EDIT_DISTANCE
-    max_gleanings: int = MAX_GLEANINGS
-    community_max_levels: int = COMMUNITY_MAX_LEVELS
-    community_max_iter: int = COMMUNITY_MAX_ITER
-    # auto-vs-manual edit resolution (reference config/settings.py
-    # conflict_strategy; manual_edit_manager.resolve_conflicts:363-477)
-    conflict_strategy: str = "manual_first"
-    # warm-start PageRank from the previous run's rank table on
-    # incremental runs (pagerank initial_ranks; tol-mode)
-    pagerank_tol: float = 1e-6
-    pagerank_max_iter: int = 100

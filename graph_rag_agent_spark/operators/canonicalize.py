@@ -190,6 +190,20 @@ def duplicate_groups(labels: DataFrame, max_edit_distance: int = WORD_EDIT_DISTA
     return comp.select(F.col("id").alias("entity_id"), F.col("component").alias("group_id"))
 
 
+def _remap_endpoints(edges: DataFrame, bmap: DataFrame) -> DataFrame:
+    """Rewrite each edge's subj and obj through the (broadcast) map
+    `bmap`(entity_id → canonical_id); an unmapped endpoint keeps its id,
+    and the self-loops a merge creates are dropped."""
+    return (
+        edges.join(bmap.withColumnRenamed("entity_id", "subj").withColumnRenamed("canonical_id", "_cs"), on="subj", how="left")
+        .join(bmap.withColumnRenamed("entity_id", "obj").withColumnRenamed("canonical_id", "_co"), on="obj", how="left")
+        .withColumn("subj", F.coalesce("_cs", "subj"))
+        .withColumn("obj", F.coalesce("_co", "obj"))
+        .drop("_cs", "_co")
+        .filter(F.col("subj") != F.col("obj"))
+    )
+
+
 def apply_canonical_map(
     nodes: DataFrame, edges: DataFrame, mentions: DataFrame, cmap: DataFrame
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -225,12 +239,7 @@ def apply_canonical_map(
     )
 
     new_edges = (
-        edges.join(bmap.withColumnRenamed("entity_id", "subj").withColumnRenamed("canonical_id", "_cs"), on="subj", how="left")
-        .join(bmap.withColumnRenamed("entity_id", "obj").withColumnRenamed("canonical_id", "_co"), on="obj", how="left")
-        .withColumn("subj", F.coalesce("_cs", "subj"))
-        .withColumn("obj", F.coalesce("_co", "obj"))
-        .drop("_cs", "_co")
-        .filter(F.col("subj") != F.col("obj"))  # merges can create self-loops; drop
+        _remap_endpoints(edges, bmap)
         .groupBy("subj", "pred", "obj")
         .agg(
             F.min("description").alias("description"),
@@ -433,17 +442,7 @@ def canonicalize(
 
     # phase A degrees: distinct triples after the (lazy) phase-M mapping
     bmerge = F.broadcast(merge_map)
-    edges_m = (
-        edges.join(bmerge.withColumnRenamed("entity_id", "subj").withColumnRenamed("canonical_id", "_cs"), on="subj", how="left")
-        .join(bmerge.withColumnRenamed("entity_id", "obj").withColumnRenamed("canonical_id", "_co"), on="obj", how="left")
-        .select(
-            F.coalesce("_cs", "subj").alias("subj"),
-            "pred",
-            F.coalesce("_co", "obj").alias("obj"),
-        )
-        .filter(F.col("subj") != F.col("obj"))
-        .dropDuplicates(["subj", "pred", "obj"])
-    )
+    edges_m = _remap_endpoints(edges, bmerge).select("subj", "pred", "obj").dropDuplicates()
     surviving_labels = labels.join(bmerge, on="entity_id", how="left_anti")
     disambig_map = disambiguation_map(
         surviving_labels, edges_m, resolver=resolver
@@ -506,17 +505,7 @@ def _canonicalize_driver(
     map_schema = "entity_id string, canonical_id string"
     mm_df = local_frame(spark, sorted(mm.items()), map_schema)
     bmerge = F.broadcast(mm_df)
-    edges_m = (
-        edges.join(bmerge.withColumnRenamed("entity_id", "subj").withColumnRenamed("canonical_id", "_cs"), on="subj", how="left")
-        .join(bmerge.withColumnRenamed("entity_id", "obj").withColumnRenamed("canonical_id", "_co"), on="obj", how="left")
-        .select(
-            F.coalesce("_cs", "subj").alias("subj"),
-            "pred",
-            F.coalesce("_co", "obj").alias("obj"),
-        )
-        .filter(F.col("subj") != F.col("obj"))
-        .dropDuplicates(["subj", "pred", "obj"])
-    )
+    edges_m = _remap_endpoints(edges, bmerge).select("subj", "pred", "obj").dropDuplicates()
     degrees = {r.entity_id: r.degree for r in degree_table(edges_m).collect()}
 
     dmap = disambig_map_of(wcc, mm, degrees, resolver=resolver)

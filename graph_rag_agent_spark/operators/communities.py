@@ -48,6 +48,8 @@ from graph_rag_agent_spark.config import (
     COMMUNITY_MAX_LEVELS,
     COMMUNITY_TOP_SUMMARIES,
     DRIVER_MAX_EDGES,
+    PAGERANK_MAX_ITER,
+    PAGERANK_TOL,
     SLLPA_DRIVER_THRESHOLD,
 )
 from graph_rag_agent_spark.functions import community_kernel as K
@@ -785,7 +787,6 @@ def community_tail_on_driver(
     edges: DataFrame,
     mentions: DataFrame,
     chunks: DataFrame,
-    cfg,
     *,
     prior_ranks: DataFrame = None,
     summarizer=None,
@@ -796,8 +797,7 @@ def community_tail_on_driver(
     snapshot → {table: frame} for entity_communities, communities,
     community_hierarchy, community_summaries, entity_pagerank and
     graph_quality, in that order; None when the graph does not fit, and
-    the distributed operators run instead. `cfg` is the build's
-    PipelineConfig (Leiden levels and sweeps, PageRank tol and sweeps).
+    the distributed operators run instead.
 
     The reference runs this tail (gds.leiden, community rank and
     summaries, PageRank) inside one Neo4j JVM. Here one ``collect_if_fits``
@@ -850,7 +850,7 @@ def community_tail_on_driver(
     spark = nodes.sparkSession
     ec_rows = _leiden_rows(
         [e for e, _ in node_rows], proj, COMMUNITY_GAMMA,
-        cfg.community_max_levels, cfg.community_max_iter,
+        COMMUNITY_MAX_LEVELS, COMMUNITY_MAX_ITER,
     )
     memb = K.membership_rows(ec_rows)
     fp = summarizer_fingerprint(summarizer)
@@ -869,7 +869,7 @@ def community_tail_on_driver(
     if "prior ranks" in snap:
         tables["initial ranks"] = snap["prior ranks"]
     pr = _driver_pagerank(
-        spark, tables, damping=DAMPING, n_iter=cfg.pagerank_max_iter, tol=cfg.pagerank_tol
+        spark, tables, damping=DAMPING, n_iter=PAGERANK_MAX_ITER, tol=PAGERANK_TOL
     )
     return {
         "entity_communities": local_frame(spark, ec_rows, ENTITY_COMMUNITIES_DDL),

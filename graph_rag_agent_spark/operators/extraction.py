@@ -43,12 +43,14 @@ def extract_chunks(
     chunks: DataFrame,
     extractor: Optional[Extractor] = None,
     cache: Optional[DataFrame] = None,
-    max_gleanings: Optional[int] = None,
+    max_gleanings: int = MAX_GLEANINGS,
 ) -> DataFrame:
     """chunks → (chunk_id, raw_result); one row per distinct chunk text.
 
     `cache` is an existing extraction_cache(chunk_sha1, raw_result) table;
-    hits skip the extractor entirely (reference cache pre-check E3).
+    hits skip the extractor entirely (reference cache pre-check E3). Its
+    writers keep `chunk_sha1` unique (one row per distinct chunk on a full
+    build, an upsert on that key incrementally), so it is joined as is.
 
     `max_gleanings` bounds GraphRAG-style continuation passes for extractors
     exposing ``glean(text, prior)``; the passes run inside the same Arrow
@@ -56,14 +58,10 @@ def extract_chunks(
     gleaning happened before the row was cached.
     """
     extractor = extractor or DeterministicCodeExtractor()
-    if max_gleanings is None:
-        max_gleanings = MAX_GLEANINGS
     selected = chunks.select("chunk_id", "text")
 
     if cache is not None:
-        cache = cache.select(
-            F.col("chunk_sha1").alias("chunk_id"), F.col("raw_result")
-        ).dropDuplicates(["chunk_id"])
+        cache = cache.select(F.col("chunk_sha1").alias("chunk_id"), "raw_result")
         distinct = selected.dropDuplicates(["chunk_id"])
         misses = distinct.join(cache, on="chunk_id", how="left_anti")
         hits = distinct.join(cache, on="chunk_id", how="inner").select(

@@ -10,6 +10,9 @@ four callers:
   canonicalize) → community_stages (detect → memberships + hierarchy →
   rank → summaries → PageRank → graph_quality) → registry_stage
 
+The stages take frames and a materializer, no config: each calls its
+operators with their keyword defaults, the constants of config.py.
+
 community_stages builds its whole tail on the driver from one Arrow
 snapshot of the canonical graph when that graph fits the driver gate
 (`communities.community_tail_on_driver`), and with the distributed
@@ -49,7 +52,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
-from graph_rag_agent_spark.config import PipelineConfig
+from graph_rag_agent_spark.config import PAGERANK_MAX_ITER, PAGERANK_TOL
 from graph_rag_agent_spark.operators.canonicalize import canonicalize
 from graph_rag_agent_spark.operators.chunker import chunk_documents
 from graph_rag_agent_spark.operators.communities import (
@@ -102,21 +105,19 @@ def salted_corpus_repartition(corpus: DataFrame, n_partitions: int) -> DataFrame
 
 
 # -- stages ----------------------------------------------------------------
-def chunk_stage(corpus, cfg, materialize, kept_chunks=None):
+def chunk_stage(corpus, materialize, kept_chunks=None):
     """corpus → chunks. `kept_chunks` (incremental): the surviving docs'
     chunks, which join the changed docs' in the table."""
-    chunks = chunk_documents(corpus, cfg.chunk_size, cfg.overlap, cfg.max_text_length)
+    chunks = chunk_documents(corpus)
     if kept_chunks is not None:
         chunks = chunks.unionByName(kept_chunks)
     return materialize("chunks", chunks)
 
 
-def extract_stage(chunks, cfg, extractor=None, cache=None):
+def extract_stage(chunks, extractor=None, cache=None):
     """chunks → (chunk_id, raw_result), lazy. `cache` is the
     extraction_cache table; its hits skip the extractor."""
-    return extract_chunks(
-        chunks, extractor=extractor, cache=cache, max_gleanings=cfg.max_gleanings
-    )
+    return extract_chunks(chunks, extractor=extractor, cache=cache)
 
 
 def graph_stage(results, materialize, kept_records=None):
@@ -140,22 +141,18 @@ def graph_stage(results, materialize, kept_records=None):
     return nodes_raw, edges_raw, mentions_raw
 
 
-def canonical_stage(nodes_raw, edges_raw, mentions_raw, cfg, materialize, existing=None):
+def canonical_stage(nodes_raw, edges_raw, mentions_raw, materialize, existing=None):
     """embed → canonicalize; → CanonicalizationResult (lazy). `existing` is
     the prior entity_embeddings table; unchanged texts keep their vectors."""
-    embeddings = embed_entities(nodes_raw, existing=existing, dim=cfg.embedding_dim)
+    embeddings = embed_entities(nodes_raw, existing=existing)
     if existing is not None:
         # materialize before overwriting the table being lazily read
         embeddings = embeddings.localCheckpoint(eager=True)
     embeddings = materialize("entity_embeddings", embeddings)
-    return canonicalize(
-        nodes_raw, edges_raw, mentions_raw, embeddings,
-        cutoff=cfg.similarity_cutoff, topk=cfg.similarity_topk,
-        max_edit_distance=cfg.word_edit_distance,
-    )
+    return canonicalize(nodes_raw, edges_raw, mentions_raw, embeddings)
 
 
-def community_stages(nodes, edges, mentions, chunks, cfg, materialize, summarizer=None,
+def community_stages(nodes, edges, mentions, chunks, materialize, summarizer=None,
                      prior_summaries=None, prior_ranks=None) -> dict:
     """canonical graph → communities, summaries, PageRank and
     graph_quality; → every table it materialized, by name.
@@ -186,7 +183,7 @@ def community_stages(nodes, edges, mentions, chunks, cfg, materialize, summarize
         save("nodes", nodes), save("edges", edges), save("mentions", mentions)
     )
     tail = community_tail_on_driver(
-        nodes, edges, mentions, chunks, cfg, prior_ranks=prior_ranks,
+        nodes, edges, mentions, chunks, prior_ranks=prior_ranks,
         summarizer=summarizer, prior_summaries=prior_summaries,
     )
     if tail is not None:
@@ -194,10 +191,7 @@ def community_stages(nodes, edges, mentions, chunks, cfg, materialize, summarize
             save(name, df)
         return out
 
-    entity_comms = save("entity_communities", detect_communities(
-        nodes, edges, max_levels=cfg.community_max_levels,
-        max_iter=cfg.community_max_iter,
-    ))
+    entity_comms = save("entity_communities", detect_communities(nodes, edges))
     membership = save("communities", community_membership(entity_comms))
     save("community_hierarchy", community_hierarchy(entity_comms))
     rank = community_rank(membership, mentions)
@@ -207,8 +201,8 @@ def community_stages(nodes, edges, mentions, chunks, cfg, materialize, summarize
     # entity PageRank (tol-mode fixpoint) — the table the next incremental
     # run warm-starts from
     save("entity_pagerank", pagerank_projection(
-        weighted_projection(edges), tol=cfg.pagerank_tol,
-        n_iter=cfg.pagerank_max_iter, initial_ranks=prior_ranks,
+        weighted_projection(edges), tol=PAGERANK_TOL,
+        n_iter=PAGERANK_MAX_ITER, initial_ranks=prior_ranks,
     ))
     # graph-quality metrics (reference evaluation framework analogue)
     save("graph_quality", graph_quality_report(nodes, edges, mentions, chunks, membership))
@@ -239,13 +233,12 @@ def _checkpoint(name: str, df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True) if name in IN_MEMORY_CHECKPOINTS else df
 
 
-def run_kg_build_in_memory(spark, corpus, config=None, extractor=None):
+def run_kg_build_in_memory(spark, corpus, extractor=None):
     """BuildPipeline's stages through canonicalize, with localCheckpoint
     stage boundaries instead of catalog writes — the benchmarking path."""
-    cfg = config or PipelineConfig()
-    chunks = chunk_stage(corpus, cfg, _checkpoint)
-    raw = graph_stage(extract_stage(chunks, cfg, extractor), _checkpoint)
-    return canonical_stage(*raw, cfg, _checkpoint)
+    chunks = chunk_stage(corpus, _checkpoint)
+    raw = graph_stage(extract_stage(chunks, extractor), _checkpoint)
+    return canonical_stage(*raw, _checkpoint)
 
 
 class BuildPipeline:
@@ -253,14 +246,12 @@ class BuildPipeline:
         self,
         spark: SparkSession,
         catalog: TableCatalog,
-        config: Optional[PipelineConfig] = None,
         extractor=None,
         run_id: Optional[str] = None,
         summarizer=None,
     ):
         self.spark = spark
         self.catalog = catalog
-        self.config = config or PipelineConfig()
         self.extractor = extractor
         self.summarizer = summarizer
         self.run_id = run_id or uuid.uuid4().hex[:12]
@@ -308,7 +299,7 @@ class BuildPipeline:
 
         The corpus is repartitioned by repo-hash first (hot-repo skew: one
         repo can hold half the rows — salting by hash spreads its files)."""
-        cat, cfg, save = self.catalog, self.config, self._save
+        cat, save = self.catalog, self._save
         self._t0 = time.time()
 
         if resume and cat.exists("corpus"):
@@ -320,10 +311,10 @@ class BuildPipeline:
         if resume and cat.exists("chunks"):
             chunks = cat.read("chunks")
         else:
-            chunks = chunk_stage(corpus, cfg, save)
+            chunks = chunk_stage(corpus, save)
 
         cache = cat.read("extraction_cache") if cat.exists("extraction_cache") else None
-        results = extract_stage(chunks, cfg, self.extractor, cache)
+        results = extract_stage(chunks, self.extractor, cache)
         if cache is not None:
             # materialize before overwriting the parquet we are lazily reading
             results = results.localCheckpoint(eager=True)
@@ -336,11 +327,11 @@ class BuildPipeline:
         existing = (
             cat.read("entity_embeddings") if (resume and cat.exists("entity_embeddings")) else None
         )
-        result = canonical_stage(*raw, cfg, save, existing)
+        result = canonical_stage(*raw, save, existing)
         save("similar", result.similar)
         save("wcc", result.wcc)
         out = community_stages(
-            result.nodes, result.edges, result.mentions, chunks, cfg, save,
+            result.nodes, result.edges, result.mentions, chunks, save,
             summarizer=self.summarizer,
         )
 
@@ -348,7 +339,7 @@ class BuildPipeline:
         existing_cemb = (
             cat.read("chunk_embeddings") if (resume and cat.exists("chunk_embeddings")) else None
         )
-        chunk_embs = embed_chunks(chunks, existing=existing_cemb, dim=cfg.embedding_dim)
+        chunk_embs = embed_chunks(chunks, existing=existing_cemb)
         if existing_cemb is not None:
             chunk_embs = chunk_embs.localCheckpoint(eager=True)
         save("chunk_embeddings", chunk_embs)

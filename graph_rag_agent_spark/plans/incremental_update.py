@@ -13,11 +13,9 @@ parquet emulation otherwise), one build_metrics lineage row per stage.
 from __future__ import annotations
 
 import uuid
-from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from graph_rag_agent_spark.config import PipelineConfig
 from graph_rag_agent_spark.operators.consistency import (
     REPAIRED_CHECKS,
     repair,
@@ -49,13 +47,16 @@ class IncrementalUpdatePipeline:
         self,
         spark: SparkSession,
         catalog: TableCatalog,
-        config: Optional[PipelineConfig] = None,
         extractor=None,
         summarizer=None,
+        conflict_strategy: str = "manual_first",
     ):
+        """`conflict_strategy` resolves a manually edited node the rebuild
+        also emits: "manual_first" keeps the edit, "auto_first" the
+        rebuilt row (reference manual_edit_manager.resolve_conflicts)."""
         self.spark = spark
         self.catalog = catalog
-        self.config = config or PipelineConfig()
+        self.conflict_strategy = conflict_strategy
         self.extractor = extractor
         self.summarizer = summarizer
         self.run_id = uuid.uuid4().hex[:12]
@@ -65,8 +66,9 @@ class IncrementalUpdatePipeline:
 
         Every table a full build writes is refreshed except these, which
         keep describing the previous corpus: ``corpus`` (the registry holds
-        its hashes), canonicalization's diagnostic ``similar`` and ``wcc``,
-        and ``chunk_embeddings``. Refreshing ``chunk_embeddings`` costs
+        its hashes) and ``chunk_embeddings``. Canonicalization's
+        diagnostic ``similar`` and ``wcc`` are rewritten from the whole
+        new graph, as a full build does. Refreshing ``chunk_embeddings`` costs
         about 1.0-1.2 s (warm, 4 cores, the 200-file benchmark corpus with
         a 2% delta of each kind), so it is left to a separate, measured
         change.
@@ -75,12 +77,12 @@ class IncrementalUpdatePipeline:
         communities are re-detected over the whole new graph, summaries
         and PageRank warm-start from the previous run's tables, and
         ``graph_quality`` is rebuilt from the same graph snapshot."""
-        cat, cfg = self.catalog, self.config
+        cat = self.catalog
         changes = detect_changes(corpus, cat.read("registry"))
         stats = dict(changes.counts)
         if not any(stats.values()):
             return {**stats, "changed": False}
-        build = BuildPipeline(self.spark, cat, cfg, run_id=self.run_id)
+        build = BuildPipeline(self.spark, cat, run_id=self.run_id)
         save = build._save
 
         # --- snapshot the prior state this run reads AND overwrites, before
@@ -138,12 +140,12 @@ class IncrementalUpdatePipeline:
         # surviving docs lack are extracted and parsed; the rest of their
         # graph rows are already in kept_records.
         chunks = chunk_stage(
-            changes.added.unionByName(changes.modified), cfg, save, kept_chunks
+            changes.added.unionByName(changes.modified), save, kept_chunks
         )
         cache = cat.read("extraction_cache") if cat.exists("extraction_cache") else None
         results = extract_stage(
             chunks.join(kept_ids, on="chunk_id", how="left_anti"),
-            cfg, self.extractor, cache,
+            self.extractor, cache,
         ).localCheckpoint(eager=True)
         cat.upsert(
             "extraction_cache",
@@ -164,7 +166,9 @@ class IncrementalUpdatePipeline:
             raw = [df.localCheckpoint(eager=True) for df in repair(*raw, chunks)]
 
         existing = cat.read("entity_embeddings") if cat.exists("entity_embeddings") else None
-        result = canonical_stage(*raw, cfg, save, existing)
+        result = canonical_stage(*raw, save, existing)
+        save("similar", result.similar)
+        save("wcc", result.wcc)
         nodes, edges = result.nodes, result.edges
         n_conflicts = 0
         if manual_nodes is not None:
@@ -172,7 +176,7 @@ class IncrementalUpdatePipeline:
             # overwritten — upsert_nodes routes through resolve_conflicts
             # with the configured strategy; manual rows the rebuild dropped
             # are re-inserted (protected from GC)
-            nodes = upsert_nodes(manual_nodes, nodes, conflict_strategy=cfg.conflict_strategy)
+            nodes = upsert_nodes(manual_nodes, nodes, conflict_strategy=self.conflict_strategy)
             n_conflicts = manual_nodes.join(
                 result.nodes.select("entity_id"), on="entity_id", how="left_semi"
             ).count()
@@ -180,7 +184,7 @@ class IncrementalUpdatePipeline:
             edges = upsert_edges(manual_edges, edges)
 
         community_stages(
-            nodes, edges, result.mentions, chunks, cfg, save, summarizer=self.summarizer,
+            nodes, edges, result.mentions, chunks, save, summarizer=self.summarizer,
             prior_summaries=prior_summaries, prior_ranks=prior_ranks,
         )
         registry_stage(corpus, save)

@@ -10,7 +10,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from graph_rag_agent_spark.config import MAX_TEXT_LENGTH, PipelineConfig
+from graph_rag_agent_spark.config import MAX_TEXT_LENGTH
 from graph_rag_agent_spark.operators import communities as C
 from graph_rag_agent_spark.operators.consistency import repair
 from graph_rag_agent_spark.plans import build as B
@@ -123,14 +123,15 @@ def test_upsert_nodes_replaces_matched_and_inserts_new(spark):
 # every table a full build and an incremental pass both write
 EQUIVALENT_TABLES = (
     "chunks", "occurrences", "nodes_raw", "edges_raw", "mentions_raw",
-    "nodes", "edges", "mentions", "entity_communities", "communities",
-    "community_hierarchy", "community_summaries", "entity_pagerank",
-    "graph_quality", "registry",
+    "similar", "wcc", "nodes", "edges", "mentions", "entity_communities",
+    "communities", "community_hierarchy", "community_summaries",
+    "entity_pagerank", "graph_quality", "registry",
 )
 INCREMENTAL_STAGES = {
     "chunk", "parse_records", "parse_occurrences", "parse_edges",
     "parse_nodes", "parse_mentions", "embed", "embed_failures",
-    "canonicalize_nodes", "canonicalize_edges", "canonicalize_mentions",
+    "similar_join", "wcc", "canonicalize_nodes", "canonicalize_edges",
+    "canonicalize_mentions",
     "communities_detect", "communities_membership", "communities_hierarchy",
     "communities_summarize", "pagerank", "graph_quality", "registry",
 }
@@ -168,15 +169,24 @@ NO_VIOLATIONS = {
 }
 
 
+def _assert_cache_keys_unique(cat):
+    """extract_chunks joins the extraction_cache without deduplicating it:
+    every writer must keep `chunk_sha1` unique."""
+    cache = cat.read("extraction_cache")
+    assert cache.count() == cache.select("chunk_sha1").distinct().count()
+
+
 def test_incremental_equals_full_rebuild(spark):
     base, v2 = _base_and_delta()
     with tempfile.TemporaryDirectory(prefix="graft_incr_") as wh1, \
          tempfile.TemporaryDirectory(prefix="graft_full_") as wh2:
         cat1 = TableCatalog(spark, wh1)
         BuildPipeline(spark, cat1).run(_corpus_df(spark, base))
+        _assert_cache_keys_unique(cat1)
         incr = IncrementalUpdatePipeline(spark, cat1)
         res = incr.run_once(_corpus_df(spark, v2))
         assert res["changed"]
+        _assert_cache_keys_unique(cat1)
         assert res["added"] == 4 and res["modified"] == 3 and res["deleted"] == 5
         # parsing adds every relationship endpoint as an occurrence: a
         # pipeline-made delta never reaches the repair branch
@@ -450,7 +460,7 @@ def test_community_tail_job_budget(spark, tmp_path):
         return df if name in inputs else cat.write(df, name)
 
     _, jobs = _jobs(spark, "community_tail_job_budget", lambda: community_stages(
-        *tables, PipelineConfig(), materialize
+        *tables, materialize
     ))
     assert jobs <= 12, jobs
 
@@ -500,7 +510,7 @@ def test_run_once_repairs_violations(spark, monkeypatch, tmp_path):
         "orphan_entities": 1, "dangling_mentions": 1, "edge_endpoints_missing": 1,
     }
     want = canonical_stage(
-        *repair(*injected, cat.read("chunks")), PipelineConfig(), lambda name, df: df
+        *repair(*injected, cat.read("chunks")), lambda name, df: df
     )
     for table in ("nodes", "edges", "mentions"):
         assert _stable_rows(cat.read(table)) == _stable_rows(getattr(want, table)), table

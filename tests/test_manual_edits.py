@@ -7,7 +7,6 @@ import tempfile
 
 from pyspark.sql import functions as F
 
-from graph_rag_agent_spark.config import PipelineConfig
 from graph_rag_agent_spark.operators.incremental import (
     gc_deleted_docs,
     upsert_edges,
@@ -168,8 +167,7 @@ def test_pipeline_preserves_manual_edits_through_incremental_run(spark):
     for strategy, manual_wins in (("manual_first", True), ("auto_first", False)):
         with tempfile.TemporaryDirectory(prefix="graft_manual_") as wh:
             cat = TableCatalog(spark, wh)
-            cfg = PipelineConfig(conflict_strategy=strategy)
-            BuildPipeline(spark, cat, config=cfg).run(_corpus_df(spark, base))
+            BuildPipeline(spark, cat).run(_corpus_df(spark, base))
             nodes = cat.read("nodes")
             # pick an entity mentioned by the first doc (it will be deleted)
             first = base.iloc[0]
@@ -195,7 +193,7 @@ def test_pipeline_preserves_manual_edits_through_incremental_run(spark):
 
             # v2 drops the first doc entirely (GC pressure on the victim)
             v2 = base.iloc[1:].copy()
-            res = IncrementalUpdatePipeline(spark, cat, config=cfg).run_once(
+            res = IncrementalUpdatePipeline(spark, cat, conflict_strategy=strategy).run_once(
                 _corpus_df(spark, v2)
             )
             assert res["changed"] and res["preserved_edits"] >= 1

@@ -10,13 +10,11 @@ name is used elsewhere passes.
 """
 
 import ast
-import dataclasses
 from pathlib import Path
-
-from graph_rag_agent_spark.config import PipelineConfig
 
 ROOT = Path(__file__).resolve().parent.parent
 PACKAGE = ROOT / "graph_rag_agent_spark"
+CONFIG = PACKAGE / "config.py"
 
 # name → why it stays although the scan sees only tests reach it
 ALLOWED = {
@@ -55,6 +53,18 @@ def _defs(tree):
     return out
 
 
+def _name_of(node):
+    """The name a `Name`, `Attribute` or import alias refers to; None for
+    any other node."""
+    if isinstance(node, ast.Name):
+        return node.id
+    if isinstance(node, ast.Attribute):
+        return node.attr
+    if isinstance(node, ast.alias):
+        return node.name.rsplit(".", 1)[-1]
+    return None
+
+
 def _referenced_names() -> set:
     names = set()
     for path in _non_test_files():
@@ -65,15 +75,8 @@ def _referenced_names() -> set:
             for sub in ast.walk(d):
                 owner.setdefault(id(sub), set()).add(d.name)
         for sub in ast.walk(tree):
-            if isinstance(sub, ast.Name):
-                name = sub.id
-            elif isinstance(sub, ast.Attribute):
-                name = sub.attr
-            elif isinstance(sub, ast.alias):
-                name = sub.name.rsplit(".", 1)[-1]
-            else:
-                continue
-            if name not in owner.get(id(sub), ()):
+            name = _name_of(sub)
+            if name is not None and name not in owner.get(id(sub), ()):
                 names.add(name)
     return names
 
@@ -113,18 +116,20 @@ def test_package_has_no_global_statement():
     assert not found, "global statements in the package:\n" + "\n".join(found)
 
 
-def test_every_pipeline_config_field_is_read():
-    """A `PipelineConfig` field that no code reads is a knob that changes
-    nothing. A field counts as read when some attribute load has its name
-    in the package, the entry file or the bench scripts, the code that
-    builds or receives a config; `tools/` and `perfbench/` never see one,
-    and their unrelated `.seed` attributes would hide an unread `seed`."""
-    read = set()
-    for path in _non_test_files():
-        if path.relative_to(ROOT).parts[0] in ("tools", "perfbench"):
-            continue
-        for sub in ast.walk(ast.parse(path.read_text(), str(path))):
-            if isinstance(sub, ast.Attribute) and isinstance(sub.ctx, ast.Load):
-                read.add(sub.attr)
-    fields = {f.name for f in dataclasses.fields(PipelineConfig)}
-    assert fields <= read, f"PipelineConfig fields nothing reads: {sorted(fields - read)}"
+def test_every_config_constant_is_read():
+    """A `config.py` constant that no other code reads is a knob that
+    changes nothing, and its comment describes behaviour the code may not
+    have. Each top-level assignment in `config.py` needs a reference (as
+    above) in another file of the package, the entry file, the bench
+    scripts, `tools/` or `perfbench/`."""
+    constants = {
+        t.id
+        for node in ast.parse(CONFIG.read_text()).body if isinstance(node, ast.Assign)
+        for t in node.targets if isinstance(t, ast.Name)
+    }
+    read = {
+        _name_of(sub)
+        for path in _non_test_files() if path != CONFIG
+        for sub in ast.walk(ast.parse(path.read_text(), str(path)))
+    }
+    assert constants <= read, f"config.py constants nothing reads: {sorted(constants - read)}"
