@@ -118,8 +118,8 @@ class ComputeWeightedExtractor:
     so throughput benchmarks see the real pipeline's cost profile. Output is
     identical to the wrapped extractor."""
 
-    def __init__(self, base: Extractor = None, us_per_char: float = 2.0):
-        self.base = base or DeterministicCodeExtractor()
+    def __init__(self, us_per_char: float = 2.0):
+        self.base = DeterministicCodeExtractor()
         self.us_per_char = us_per_char
 
     def __call__(self, text: str) -> str:
@@ -134,12 +134,11 @@ class ComputeWeightedExtractor:
 
 class KeywordCooccurrenceExtractor:
     """Rule-based extractor for prose/bag-of-words corpora (the driver's
-    ``documents`` table): entities = distinct words of ≥ `min_len` chars in
+    ``documents`` table): entities = distinct words of ≥ 4 chars in
     first-occurrence order, relationships = consecutive entity co-occurrence.
     Same wire-format contract as the code extractor; deterministic."""
 
-    def __init__(self, min_len: int = 4):
-        self.min_len = min_len
+    def __init__(self):
         self._word_re = re.compile(r"[A-Za-z_]\w*")
 
     def __call__(self, text: str) -> str:
@@ -148,7 +147,7 @@ class KeywordCooccurrenceExtractor:
         seen_set: set = set()
         for w in self._word_re.findall(text or ""):
             lw = w.lower()
-            if len(lw) >= self.min_len and lw not in seen_set:
+            if len(lw) >= 4 and lw not in seen_set:
                 seen_set.add(lw)
                 seen.append(lw)
                 records.append(emit_entity(lw, "term", f"term {lw}"))
@@ -159,12 +158,12 @@ class KeywordCooccurrenceExtractor:
         return join_records(records)
 
 
-def dynamic_batch_size(chunk_lengths: List[int], cap: int = EXTRACTION_BATCH_CAP) -> int:
+def dynamic_batch_size(chunk_lengths: List[int]) -> int:
     """Reference's dynamic micro-batch sizing (entity_extractor.py:236-240)."""
     if not chunk_lengths:
         return 1
     avg = sum(chunk_lengths) / len(chunk_lengths)
-    return max(1, min(cap, int(EXTRACTION_BATCH_CHAR_BUDGET / (avg + 1))))
+    return max(1, min(EXTRACTION_BATCH_CAP, int(EXTRACTION_BATCH_CHAR_BUDGET / (avg + 1))))
 
 
 def extract_batch(texts: List[str], extractor: Extractor) -> List[str]:

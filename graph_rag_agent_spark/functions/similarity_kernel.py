@@ -25,20 +25,15 @@ from graph_rag_agent_spark.config import (
 from graph_rag_agent_spark.functions.blocking import BLOCK_PREFIX_LEN, block_key, normalize_name
 
 
-def local_subblocks(
-    norms: Sequence[str],
-    threshold: int,
-    base_prefix: int = BLOCK_PREFIX_LEN,
-    max_prefix: int = 16,
-):
+def local_subblocks(norms: Sequence[str], threshold: int):
     """Split one block's row indices by progressively longer normalized-name
     prefixes until every sub-block fits under `threshold` — deterministic
     skew salting that never separates true near-duplicates (they share long
     prefixes). Yields lists of indices."""
-    stack = [(list(range(len(norms))), base_prefix)]
+    stack = [(list(range(len(norms))), BLOCK_PREFIX_LEN)]
     while stack:
         idxs, plen = stack.pop()
-        if len(idxs) <= threshold or plen >= max_prefix:
+        if len(idxs) <= threshold or plen >= 16:
             yield idxs
             continue
         by_prefix: Dict[str, List[int]] = {}
@@ -57,14 +52,13 @@ def pairs_for_block(
     embs: np.ndarray,
     cutoff: float = SIMILARITY_CUTOFF,
     topk: int = SIMILARITY_TOPK,
-    threshold: int = BLOCK_SALT_THRESHOLD,
 ) -> List[Tuple[str, str, float]]:
     """Per-node topK cosine pairs (score ≥ cutoff) within one block,
     re-split locally when oversized. A pair survives if it is in the topK
     of either endpoint (GDS KNN writeback semantics). Deterministic order:
     (src, dst) ascending, src < dst."""
     out: List[Tuple[str, str, float]] = []
-    for idxs in local_subblocks(norms, threshold):
+    for idxs in local_subblocks(norms, BLOCK_SALT_THRESHOLD):
         n = len(idxs)
         if n < 2:
             continue
@@ -96,7 +90,6 @@ def pairs_all(
     embs: np.ndarray,
     cutoff: float = SIMILARITY_CUTOFF,
     topk: int = SIMILARITY_TOPK,
-    threshold: int = BLOCK_SALT_THRESHOLD,
 ) -> List[Tuple[str, str, float]]:
     """Block the full entity set by block_key, then pairs_for_block each —
     the single-machine path (driver fast path and the Python oracle)."""
@@ -112,7 +105,7 @@ def pairs_all(
                 [ids[i] for i in idxs],
                 [normalize_name(ids[i]) for i in idxs],
                 embs[idxs],
-                cutoff, topk, threshold,
+                cutoff, topk,
             )
         )
     return out

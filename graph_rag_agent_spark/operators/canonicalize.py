@@ -38,10 +38,9 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, Window, functions as F
 
 from graph_rag_agent_spark.config import (
-    BLOCK_SALT_THRESHOLD,
     CANON_DRIVER_THRESHOLD,
+    CONFLICT_JACCARD,
     SIMILARITY_CUTOFF,
-    SIMILARITY_TOPK,
     WORD_EDIT_DISTANCE,
 )
 from graph_rag_agent_spark.functions.blocking import BLOCK_PREFIX_LEN
@@ -68,10 +67,7 @@ def _norm_col(col: str) -> F.Column:
     return F.regexp_replace(F.lower(F.col(col)), _NORMALIZE_PATTERN, "")
 
 
-def assign_blocks(
-    embeddings: DataFrame,
-    base_prefix: int = BLOCK_PREFIX_LEN,
-) -> DataFrame:
+def assign_blocks(embeddings: DataFrame) -> DataFrame:
     """entity_embeddings → + (block, _norm) columns: block = prefix of the
     normalized entity name (∅ for empty). Oversized-block salting happens
     LOCALLY inside the similarity task (_local_subblocks) — no extra Spark
@@ -79,17 +75,12 @@ def assign_blocks(
     return embeddings.withColumn("_norm", _norm_col("entity_id")).withColumn(
         "block",
         F.when(F.length("_norm") == 0, F.lit("∅")).otherwise(
-            F.substring("_norm", 1, base_prefix)
+            F.substring("_norm", 1, BLOCK_PREFIX_LEN)
         ),
     )
 
 
-def similar_edges(
-    embeddings: DataFrame,
-    cutoff: float = SIMILARITY_CUTOFF,
-    topk: int = SIMILARITY_TOPK,
-    threshold: int = BLOCK_SALT_THRESHOLD,
-) -> DataFrame:
+def similar_edges(embeddings: DataFrame, cutoff: float = SIMILARITY_CUTOFF) -> DataFrame:
     """entity_embeddings(entity_id, embedding) → SIMILAR(src, dst, score).
 
     Within each block (oversized blocks re-split locally by longer prefixes
@@ -107,7 +98,7 @@ def similar_edges(
         embs = np.stack([np.asarray(e, dtype=np.float64) for e in pdf["embedding"]])
         rows = pairs_for_block(
             list(pdf["entity_id"]), list(pdf["_norm"]), embs,
-            cutoff=cutoff, topk=topk, threshold=threshold,
+            cutoff=cutoff,
         )
         return pd.DataFrame(rows, columns=["src", "dst", "score"]).astype(
             {"src": str, "dst": str, "score": float}
@@ -142,7 +133,7 @@ def wcc_labels(embeddings: DataFrame, similar: DataFrame) -> DataFrame:
     )
 
 
-def duplicate_groups(labels: DataFrame, max_edit_distance: int = WORD_EDIT_DISTANCE) -> DataFrame:
+def duplicate_groups(labels: DataFrame) -> DataFrame:
     """Within-wcc edit-distance pairing → merged candidate groups (D4/D6).
 
     → (entity_id, group_id) for entities belonging to a multi-member group;
@@ -168,14 +159,14 @@ def duplicate_groups(labels: DataFrame, max_edit_distance: int = WORD_EDIT_DISTA
         # skips the O(len²) levenshtein for most pairs of a hot component
         .filter(
             F.abs(F.length("a.entity_id") - F.length("b.entity_id"))
-            < max_edit_distance
+            < WORD_EDIT_DISTANCE
         )
         # bounded levenshtein (threshold=d-1 → -1 when above): O(d·len)
         # per pair instead of O(len²) — distance < d ⟺ result ≥ 0
         .filter(
             F.levenshtein(
                 F.lower("a.entity_id"), F.lower("b.entity_id"),
-                max_edit_distance - 1,
+                WORD_EDIT_DISTANCE - 1,
             )
             >= 0
         )
@@ -307,20 +298,15 @@ def disambiguation_map(
     )
 
 
-def alignment_conflicts(
-    canonical_map: DataFrame, edges: DataFrame, threshold: float = None
-) -> DataFrame:
+def alignment_conflicts(canonical_map: DataFrame, edges: DataFrame) -> DataFrame:
     """D12 conflict detection (entity_alignment.py:81-123): within each
     alignment group, pairwise Jaccard of the members' outgoing rel-type
-    sets; a pair below the threshold is a conflict.
+    sets; a pair below CONFLICT_JACCARD is a conflict.
 
     → (canonical_id, entity_a, entity_b, jaccard, conflict). D13 resolution
     is the max-degree rule already applied by disambiguation_map (the
     reference's deterministic fallback when the LLM adjudicator is absent).
     """
-    from graph_rag_agent_spark.config import CONFLICT_JACCARD
-
-    threshold = CONFLICT_JACCARD if threshold is None else threshold
     # group members = mapped entities + their canonical representative
     members = canonical_map.select("canonical_id", "entity_id").unionByName(
         canonical_map.select("canonical_id").distinct().withColumn(
@@ -350,7 +336,7 @@ def alignment_conflicts(
             F.col("a.entity_id").alias("entity_a"),
             F.col("b.entity_id").alias("entity_b"),
             F.round(jac, 6).alias("jaccard"),
-            (jac < threshold).alias("conflict"),
+            (jac < CONFLICT_JACCARD).alias("conflict"),
         )
     )
 
@@ -372,8 +358,6 @@ def canonicalize(
     mentions: DataFrame,
     embeddings: DataFrame,
     cutoff: float = SIMILARITY_CUTOFF,
-    topk: int = SIMILARITY_TOPK,
-    max_edit_distance: int = WORD_EDIT_DISTANCE,
     driver_threshold_entities: int = CANON_DRIVER_THRESHOLD,
     adjudicator=None,
     resolver=None,
@@ -411,16 +395,15 @@ def canonicalize(
     )
     if emb is not None:
         return _canonicalize_driver(
-            spark, nodes, edges, mentions, emb, cutoff, topk,
-            max_edit_distance, adjudicator, resolver,
+            spark, nodes, edges, mentions, emb, cutoff, adjudicator, resolver,
         )
 
-    similar = similar_edges(embeddings, cutoff=cutoff, topk=topk).transform(loop_checkpoint)
+    similar = similar_edges(embeddings, cutoff=cutoff).transform(loop_checkpoint)
     labels = wcc_labels(embeddings, similar).transform(loop_checkpoint)
 
     # phase M: edit-distance duplicate groups within wcc → merge rep (D5:
     # min id, or one adjudicator call per group)
-    groups = duplicate_groups(labels, max_edit_distance=max_edit_distance)
+    groups = duplicate_groups(labels)
     if adjudicator is None:
         merge_map = groups.filter(F.col("entity_id") != F.col("group_id")).select(
             "entity_id", F.col("group_id").alias("canonical_id")
@@ -485,8 +468,6 @@ def _canonicalize_driver(
     mentions: DataFrame,
     emb: pa.Table,
     cutoff: float,
-    topk: float,
-    max_edit_distance: int,
     adjudicator=None,
     resolver=None,
 ) -> CanonicalizationResult:
@@ -498,9 +479,9 @@ def _canonicalize_driver(
         np.array(emb.column("embedding").to_pylist(), dtype=np.float64)
         if ids else np.zeros((0, 1), np.float64)
     )
-    pairs = pairs_all(ids, embs, cutoff=cutoff, topk=topk)
+    pairs = pairs_all(ids, embs, cutoff=cutoff)
     wcc = wcc_of(ids, [(a, b) for a, b, _ in pairs])
-    mm = merge_map_of(wcc, max_edit_distance=max_edit_distance, adjudicator=adjudicator)
+    mm = merge_map_of(wcc, adjudicator=adjudicator)
 
     map_schema = "entity_id string, canonical_id string"
     mm_df = local_frame(spark, sorted(mm.items()), map_schema)

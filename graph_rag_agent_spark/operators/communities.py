@@ -121,7 +121,6 @@ def label_propagation(
 def modularity_local_move(
     vertices: DataFrame,
     wedges: DataFrame,
-    gamma: float = COMMUNITY_GAMMA,
     max_iter: int = COMMUNITY_MAX_ITER,
     init_labels: DataFrame = None,
     constraint_labels: DataFrame = None,
@@ -134,7 +133,7 @@ def modularity_local_move(
     each neighboring community c (the kernel's exact rule,
     functions/leiden_kernel._local_move):
 
-        gain(v→c) = w(v, c) − gamma · k_v · tot'(c) / m2
+        gain(v→c) = w(v, c) − COMMUNITY_GAMMA · k_v · tot'(c) / m2
 
     with tot'(cv) excluding v itself for the stay option; v adopts the
     argmax (ties → smallest label). Synchronous whole-graph updates can
@@ -250,7 +249,7 @@ def modularity_local_move(
             )
             .withColumn(
                 "_gain",
-                F.col("w_in") - F.lit(gamma) * F.col("k") * F.col("_tot_adj") / F.lit(m2),
+                F.col("w_in") - F.lit(COMMUNITY_GAMMA) * F.col("k") * F.col("_tot_adj") / F.lit(m2),
             )
         )
         w = Window.partitionBy("id").orderBy(F.desc("_gain"), F.asc("clabel"))
@@ -290,11 +289,11 @@ def modularity_local_move(
 ENTITY_COMMUNITIES_DDL = "entity_id string, communities array<bigint>"
 
 
-def _leiden_rows(node_ids, edge_rows, gamma, max_levels, max_iter) -> list:
+def _leiden_rows(node_ids, edge_rows, max_levels, max_iter) -> list:
     """The exact driver Leiden kernel → (entity_id, [community id per
     level]) rows, by entity id."""
     levels = leiden_levels(
-        node_ids, edge_rows, gamma=gamma, max_levels=max_levels, max_sweeps=max_iter,
+        node_ids, edge_rows, gamma=COMMUNITY_GAMMA, max_levels=max_levels, max_sweeps=max_iter,
     )
     return [(v, [int(lv[v]) for lv in levels]) for v in sorted(node_ids)]
 
@@ -304,7 +303,6 @@ def detect_communities(
     edges: DataFrame,
     max_levels: int = COMMUNITY_MAX_LEVELS,
     max_iter: int = COMMUNITY_MAX_ITER,
-    gamma: float = COMMUNITY_GAMMA,
     driver_threshold_edges: int = COMMUNITY_DRIVER_THRESHOLD,
 ) -> DataFrame:
     """→ (entity_id, communities array<bigint>) — per-entity community id at
@@ -330,7 +328,7 @@ def detect_communities(
     if v_tab is not None:
         edge_list = [(s, d, float(w)) for s, d, w in zip(*e_tab.to_pydict().values())]
         rows = _leiden_rows(
-            v_tab.column("id").to_pylist(), edge_list, gamma, max_levels, max_iter
+            v_tab.column("id").to_pylist(), edge_list, max_levels, max_iter
         )
         return local_frame(nodes.sparkSession, rows, ENTITY_COMMUNITIES_DDL)
 
@@ -364,8 +362,7 @@ def detect_communities(
             else label_propagation(cur_verts, wedges, max_iter=max_iter)
         )
         labels = modularity_local_move(
-            cur_verts, wedges, gamma=gamma, max_iter=max_iter,
-            init_labels=seed,
+            cur_verts, wedges, max_iter=max_iter, init_labels=seed,
         ).transform(loop_checkpoint)
 
         # dense 0-based ids per level (gds consecutiveIds) — distributed
@@ -383,8 +380,7 @@ def detect_communities(
 
         if level + 1 < max_levels:
             refined = modularity_local_move(
-                cur_verts, wedges, gamma=gamma, max_iter=max_iter,
-                constraint_labels=labels,
+                cur_verts, wedges, max_iter=max_iter, constraint_labels=labels,
             )
             # aggregate vertex per refined community = min member id
             rep = refined.groupBy("label").agg(F.min("id").alias("rep"))
@@ -849,8 +845,7 @@ def community_tail_on_driver(
 
     spark = nodes.sparkSession
     ec_rows = _leiden_rows(
-        [e for e, _ in node_rows], proj, COMMUNITY_GAMMA,
-        COMMUNITY_MAX_LEVELS, COMMUNITY_MAX_ITER,
+        [e for e, _ in node_rows], proj, COMMUNITY_MAX_LEVELS, COMMUNITY_MAX_ITER,
     )
     memb = K.membership_rows(ec_rows)
     fp = summarizer_fingerprint(summarizer)

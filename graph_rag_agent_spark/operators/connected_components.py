@@ -47,7 +47,6 @@ def connected_components(
     vertex_col: str = "id",
     src_col: str = "src",
     dst_col: str = "dst",
-    max_iterations: int = CC_MAX_ITERATIONS,
     driver_threshold: int = DRIVER_MAX_EDGES,
 ) -> DataFrame:
     """→ (id, component) with component = min reachable vertex id.
@@ -63,7 +62,7 @@ def connected_components(
     )
     if table is not None:
         return _driver_union_find(vertices, table, vertex_col)
-    return _distributed_cc(vertices, edges, vertex_col, src_col, dst_col, max_iterations)
+    return _distributed_cc(vertices, edges, vertex_col, src_col, dst_col)
 
 
 def _driver_union_find(vertices: DataFrame, edges: pa.Table, vertex_col: str) -> DataFrame:
@@ -99,7 +98,6 @@ def _distributed_cc(
     vertex_col: str = "id",
     src_col: str = "src",
     dst_col: str = "dst",
-    max_iterations: int = CC_MAX_ITERATIONS,
 ) -> DataFrame:
     """→ (id, component) where component = min vertex id (string order)
     reachable in the undirected graph. Vertices with no edges keep their own
@@ -123,7 +121,7 @@ def _distributed_cc(
     ).transform(loop_checkpoint)
 
     rounds = 0
-    for rounds in range(1, max_iterations + 1):
+    for rounds in range(1, CC_MAX_ITERATIONS + 1):
         # step 1: min label in the closed neighborhood (1 hop)
         neighbor_min = (
             sym.join(labels.withColumnRenamed("id", "b"), on="b", how="inner")

@@ -138,8 +138,6 @@ def pack_shards(
     docs: DataFrame,
     token_budget: int,
     part_cols: Tuple[str, ...] = ("lang",),
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n_buckets: int = 0,
 ) -> DataFrame:
     """→ docs + (n_tokens, shard_id): assign documents to ~token_budget-sized
@@ -159,19 +157,19 @@ def pack_shards(
     pack within (group, bucket), which preserves the budget guarantee per
     shard while distributing the sort.
     """
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = F.split(F.trim(F.col("text")), r"\s+")
     out = docs.withColumn("n_tokens", F.size(toks))
     keys = [F.col(c) for c in part_cols]
     if n_buckets > 0:
         out = out.withColumn(
             "_bucket",
-            F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 8), 16, 10)
+            F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
             .cast("long") % n_buckets,
         )
         keys.append(F.col("_bucket"))
     w = (
         Window.partitionBy(*keys)
-        .orderBy(F.col(id_col))
+        .orderBy(F.col("doc_id"))
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     prev = F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
@@ -185,8 +183,6 @@ def pack_sequences(
     docs: DataFrame,
     seq_len: int,
     part_cols: Tuple[str, ...] = ("lang",),
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n_buckets: int = 0,
 ) -> DataFrame:
     """→ one row per (document, training sequence) SPAN: the
@@ -213,19 +209,19 @@ def pack_sequences(
     ``n_buckets > 0`` at 10⁹+ docs to distribute each group's sort over
     deterministic md5 buckets (sequences then pack within
     (group, bucket))."""
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = F.split(F.trim(F.col("text")), r"\s+")
     out = docs.withColumn("n_tokens", F.size(toks))
     keys = [F.col(c) for c in part_cols]
     if n_buckets > 0:
         out = out.withColumn(
             "_bucket",
-            F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 8), 16, 10)
+            F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
             .cast("long") % n_buckets,
         )
         keys.append(F.col("_bucket"))
     w = (
         Window.partitionBy(*keys)
-        .orderBy(F.col(id_col))
+        .orderBy(F.col("doc_id"))
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     L = F.lit(int(seq_len))
@@ -284,12 +280,8 @@ PII_PATTERNS = {
 }
 
 
-def redact_pii(
-    docs: DataFrame,
-    text_col: str = "text",
-    kinds: Tuple[str, ...] = ("email", "ipv4", "phone"),
-) -> DataFrame:
-    """→ docs with ``text_col`` PII-scrubbed in place + one ``n_<kind>``
+def redact_pii(docs: DataFrame) -> DataFrame:
+    """→ docs with ``text`` PII-scrubbed in place + one ``n_<kind>``
     match-count column per kind — the pre-training privacy pass (emails,
     IPv4s, phone numbers → ``<EMAIL>``/``<IPV4>``/``<PHONE>`` placeholders,
     counts kept for corpus-level PII-density reporting). Kinds apply in
@@ -301,28 +293,18 @@ def redact_pii(
     codegen (no UDF, no shuffle); at 100 TB this rides the same scan as the
     other row-local quality signals.
     """
-    kinds = tuple(kinds)
-    unknown = set(kinds) - set(PII_PATTERNS)
-    if unknown:
-        raise ValueError(f"unknown PII kinds: {sorted(unknown)}")
     out = docs
-    scrubbed = F.col(text_col)
-    for kind in PII_PATTERNS:  # canonical order, not caller order
-        if kind not in kinds:
-            continue
+    scrubbed = F.col("text")
+    for kind in PII_PATTERNS:
         out = out.withColumn(
             f"n_{kind}", F.regexp_count(scrubbed, F.lit(PII_PATTERNS[kind]))
         )
         scrubbed = F.regexp_replace(scrubbed, PII_PATTERNS[kind], f"<{kind.upper()}>")
-    return out.withColumn(text_col, scrubbed)
+    return out.withColumn("text", scrubbed)
 
 
-def filter_blocked_sources(
-    docs: DataFrame,
-    blocked,
-    source_col: str = "source",
-) -> DataFrame:
-    """Drop every document whose ``source_col`` appears in ``blocked`` (a
+def filter_blocked_sources(docs: DataFrame, blocked) -> DataFrame:
+    """Drop every document whose ``source`` appears in ``blocked`` (a
     small DataFrame with a ``source`` column, or a plain list of values) —
     the domain/source blocklist step of a crawl-curation pipeline.
 
@@ -334,19 +316,18 @@ def filter_blocked_sources(
     """
     if not isinstance(blocked, DataFrame):
         blocked = local_frame(
-            docs.sparkSession, [(v,) for v in blocked], f"{source_col} string"
+            docs.sparkSession, [(v,) for v in blocked], "source string"
         )
-    bl = blocked.select(F.col(source_col).alias("_blocked_src")).distinct()
+    bl = blocked.select(F.col("source").alias("_blocked_src")).distinct()
     return docs.join(
         F.broadcast(bl),
-        docs[source_col] == F.col("_blocked_src"),
+        docs["source"] == F.col("_blocked_src"),
         "left_anti",
     )
 
 
 def _hashed_features(
-    docs: DataFrame, n_buckets: int, text_col: str, id_col: str,
-    keep_cols: Tuple[str, ...] = (),
+    docs: DataFrame, n_buckets: int, keep_cols: Tuple[str, ...] = ()
 ) -> DataFrame:
     """→ (doc_id, bucket): one row per unigram AND word-bigram POSITION
     (multiplicity kept — DSIR models feature counts, not sets), bucketed by
@@ -354,7 +335,7 @@ def _hashed_features(
     DuckDB ≡ `conv(substr(md5,1,8),16,10) % B` here). N-grams are built
     row-local with zip_with over sliced token arrays; the only explode is
     the final per-position flattening."""
-    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
+    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
     n = F.size(toks)
     bigrams = F.zip_with(
         F.slice(toks, 1, F.greatest(n - 1, F.lit(0))),
@@ -362,7 +343,7 @@ def _hashed_features(
         lambda a, b: F.concat(a, F.lit(" "), b),
     )
     return docs.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         *[F.col(c) for c in keep_cols],
         F.explode(F.concat(toks, bigrams)).alias("_f"),
     ).select(
@@ -380,8 +361,6 @@ def importance_weights(
     target: DataFrame | None = None,
     n_buckets: int = 16384,
     smoothing: float = 1.0,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     target_filter: F.Column | None = None,
 ) -> DataFrame:
     """DSIR — Data Selection via Importance Resampling (Xie et al. 2023):
@@ -414,8 +393,7 @@ def importance_weights(
     """
     if target_filter is not None:
         feats = _hashed_features(
-            docs.withColumn("_tgt", target_filter), n_buckets, text_col,
-            id_col, keep_cols=("_tgt",),
+            docs.withColumn("_tgt", target_filter), n_buckets, keep_cols=("_tgt",),
         ).localCheckpoint(eager=True)
         cnt = feats.groupBy("bucket").agg(
             F.count("*").alias("_cr"),
@@ -424,8 +402,8 @@ def importance_weights(
         raw_cnt = cnt.select("bucket", "_cr")
         tgt_cnt = cnt.filter(F.col("_ct") > 0).select("bucket", "_ct")
     else:
-        feats = _hashed_features(docs, n_buckets, text_col, id_col)
-        tgt_feats = _hashed_features(target, n_buckets, text_col, id_col)
+        feats = _hashed_features(docs, n_buckets)
+        tgt_feats = _hashed_features(target, n_buckets)
 
         raw_cnt = feats.groupBy("bucket").agg(F.count("*").alias("_cr"))
         tgt_cnt = tgt_feats.groupBy("bucket").agg(F.count("*").alias("_ct"))
@@ -459,8 +437,6 @@ def lm_perplexity(
     docs: DataFrame,
     reference: DataFrame,
     smoothing: float = 0.1,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """CCNet-style n-gram language-model quality filter (Wenzek et al.
     2020 — there a KenLM 5-gram; here an add-k-smoothed word BIGRAM model,
@@ -484,13 +460,13 @@ def lm_perplexity(
     one doc-keyed shuffle. No per-row Python.
     """
     def toks(df):
-        return F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
+        return F.split(F.trim(F.lower(F.col("text"))), r"\s+")
 
     def bigrams(df, out_id):
         t = toks(df)
         n = F.size(t)
         return df.select(
-            F.col(id_col).alias(out_id),
+            F.col("doc_id").alias(out_id),
             F.explode(
                 F.zip_with(
                     F.slice(t, 1, F.greatest(n - 1, F.lit(0))),
@@ -531,7 +507,7 @@ def lm_perplexity(
     short = (
         docs.filter(F.size(toks(docs)) < 2)
         .select(
-            F.col(id_col).alias("doc_id"),
+            F.col("doc_id"),
             F.lit(None).cast("double").alias("nll"),
             F.lit(0).cast("long").alias("n_bigrams"),
         )
@@ -539,18 +515,18 @@ def lm_perplexity(
     return scored.unionByName(short)
 
 
-def _distinct_shingles(docs: DataFrame, n: int, text_col: str, id_col: str, out_id: str) -> DataFrame:
+def _distinct_shingles(docs: DataFrame, n: int, out_id: str) -> DataFrame:
     """→ (out_id, shingle): the DISTINCT n-token shingles of each document,
     built row-local with zip_with over sliced token arrays (no explode until
     the final per-shingle flattening, and dedup happens inside the row so
     the exploded volume is bounded by distinct shingles, not positions)."""
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = F.split(F.trim(F.col("text")), r"\s+")
     sh = F.slice(toks, 1, F.greatest(F.size(toks) - (n - 1), F.lit(0)))
     for i in range(1, n):
         nxt = F.slice(toks, i + 1, F.greatest(F.size(toks) - (n - 1), F.lit(0)))
         sh = F.zip_with(sh, nxt, lambda a, b: F.concat(a, F.lit(" "), b))
     return (
-        docs.select(F.col(id_col).alias(out_id), F.explode(F.array_distinct(sh)).alias("shingle"))
+        docs.select(F.col("doc_id").alias(out_id), F.explode(F.array_distinct(sh)).alias("shingle"))
     )
 
 
@@ -560,8 +536,6 @@ def contamination_overlap(
     n: int = 3,
     min_shared: int = 2,
     max_df: int | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Benchmark-contamination check: → (doc_id, bench_id, n_shared) for
     every (training doc, benchmark doc) pair sharing ≥ ``min_shared``
@@ -579,8 +553,8 @@ def contamination_overlap(
     common to evidence contamination), mirrored exactly in the SQL oracle.
     Self-pairs (a benchmark doc drawn from the corpus itself) are excluded.
     """
-    c_sh = _distinct_shingles(corpus, n, text_col, id_col, "doc_id")
-    b_sh = _distinct_shingles(benchmark, n, text_col, id_col, "bench_id")
+    c_sh = _distinct_shingles(corpus, n, "doc_id")
+    b_sh = _distinct_shingles(benchmark, n, "bench_id")
     if max_df is not None:
         rare = (
             c_sh.groupBy("shingle")
@@ -602,8 +576,6 @@ def learn_bpe(
     docs: DataFrame,
     n_merges: int = 100,
     min_count: int = 1,
-    max_words: int = 1_000_000,
-    text_col: str = "text",
 ) -> DataFrame:
     """→ (rank, left, right, pair_count): a learned BPE merge table
     (Sennrich et al. 2016) — the tokenizer-training step of a pretraining
@@ -611,10 +583,10 @@ def learn_bpe(
 
     1. DISTRIBUTED corpus → word-frequency reduction: one word-keyed
        shuffle with map-side partial counts, ``min_count`` thresholding,
-       then a bounded (count desc, word asc) top-``max_words`` — a
+       then a bounded (count desc, word asc) top-10⁶ — a
        TakeOrderedAndProject, so the driver receives a vocabulary-sized
        table no matter the corpus size (10¹² docs reduce to the same
-       ≤max_words rows; this is the corpus-sized work).
+       ≤ 10⁶ rows; this is the corpus-sized work).
     2. DRIVER merge kernel over that table
        (functions/bpe_kernel.bpe_merges): deterministic most-frequent-pair
        merging with lexicographic tie-break — vocab-sized work, the same
@@ -624,7 +596,7 @@ def learn_bpe(
     total (count, word) order, and the kernel's tie-break is total."""
     from graph_rag_agent_spark.functions.bpe_kernel import bpe_merges
 
-    ws = F.explode(F.split(F.trim(F.lower(F.col(text_col))), r"\s+")).alias("w")
+    ws = F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("w")
     counts = (
         docs.select(ws)
         .filter(F.col("w") != "")
@@ -632,7 +604,7 @@ def learn_bpe(
         .agg(F.count("*").alias("c"))
         .filter(F.col("c") >= int(min_count))
         .orderBy(F.desc("c"), F.asc("w"))
-        .limit(int(max_words))
+        .limit(1_000_000)
     )
     table = [(r.w, r.c) for r in counts.collect()]
     merges = bpe_merges(table, n_merges)

@@ -29,13 +29,13 @@ from pyspark.sql import DataFrame, Window, functions as F
 # exact dedup
 # ---------------------------------------------------------------------------
 
-def exact_duplicates(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_duplicates(docs: DataFrame) -> DataFrame:
     """→ (content_sha256, dup_count, doc_ids) for texts appearing > 1 time."""
     return (
-        docs.groupBy(F.sha2(F.col(text_col), 256).alias("content_sha256"))
+        docs.groupBy(F.sha2(F.col("text"), 256).alias("content_sha256"))
         .agg(
             F.count("*").alias("dup_count"),
-            F.array_sort(F.collect_list(F.col(id_col).cast("string"))).alias("doc_ids"),
+            F.array_sort(F.collect_list(F.col("doc_id").cast("string"))).alias("doc_ids"),
         )
         .filter(F.col("dup_count") > 1)
     )
@@ -52,11 +52,6 @@ def _word_set(text_col: str) -> F.Column:
 def ngram_jaccard_pairs(
     docs: DataFrame,
     threshold: float = 0.8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    block_cols: tuple = ("lang",),
-    length_bucket: int = 100,
-    profile_vocab_bound: int = 4096,
     profile_flop_budget: float = 2e10,
 ) -> DataFrame:
     """→ (doc_a, doc_b, jaccard) for same-block pairs above threshold.
@@ -70,7 +65,7 @@ def ngram_jaccard_pairs(
     so the candidate join is on prefix tokens only — rare tokens by
     construction, never a quadratic (lang, length) block. Candidates then
     verify exact jaccard (array_intersect/array_union, JVM-side) and the
-    same-block constraints (block_cols + length(text)//length_bucket).
+    same-block constraints (lang + length(text)//100).
 
     Candidates are further pruned by PPJoin's lossless filters (Xiao et al.,
     "Efficient Similarity Joins for Near Duplicate Detection", WWW'08):
@@ -92,9 +87,8 @@ def ngram_jaccard_pairs(
     distinct-signature trick), compute pair similarity ONCE per profile
     pair with a blocked numpy bitmatrix matmul (guide §4.2), and expand
     members back to doc pairs at output size. Only taken when two cheap
-    approx probes prove the regime: corpus vocabulary ≤
-    `profile_vocab_bound` AND Σ_block(distinct profiles)² · vocab ≤
-    `profile_flop_budget` — i.e. profiles SATURATE (small closed
+    approx probes prove the regime: corpus vocabulary ≤ 4096 AND
+    Σ_block(distinct profiles)² · vocab ≤ `profile_flop_budget` — i.e. profiles SATURATE (small closed
     vocabulary), where the prefix join's candidate enumeration is maximally
     quadratic precisely because every token is frequent. On open-vocabulary
     corpora (any real 100 TB crawl) the probes fail and the prefix-filter
@@ -102,10 +96,10 @@ def ngram_jaccard_pairs(
     reachable without a measured bound, and both paths are exact (pytest
     equality-gated; same DuckDB oracle)."""
     base = docs.select(
-        F.col(id_col).cast("string").alias("id"),
-        *[F.col(c) for c in block_cols],
-        (F.length(text_col) / length_bucket).cast("int").alias("_lb"),
-        _word_set(text_col).alias("_words"),
+        F.col("doc_id").cast("string").alias("id"),
+        F.col("lang"),
+        (F.length("text") / 100).cast("int").alias("_lb"),
+        _word_set("text").alias("_words"),
     )
     if threshold > 0 and profile_flop_budget > 0:
         # gate probe (map-side partial agg over a deterministic 10% doc
@@ -125,17 +119,11 @@ def ngram_jaccard_pairs(
         # 0.05-rsd HLL: 10% headroom keeps a borderline under-estimate from
         # opening the gate a hair too wide (the exact in-path check is the
         # binding one anyway)
-        if 0 < vocab_est <= profile_vocab_bound * 1.1:
-            fast = _jaccard_profile_pairs(
-                base,
-                threshold,
-                block_cols,
-                vocab_bound=profile_vocab_bound,
-                flop_budget=profile_flop_budget,
-            )
+        if 0 < vocab_est <= 4096 * 1.1:
+            fast = _jaccard_profile_pairs(base, threshold, profile_flop_budget)
             if fast is not None:
                 return fast
-    toks = base.select("id", *block_cols, "_lb", F.explode("_words").alias("w"))
+    toks = base.select("id", "lang", "_lb", F.explode("_words").alias("w"))
     # document frequency as a window over the token exchange — the former
     # groupBy + join-back computed the token explode twice and shuffled it
     # twice (guide §2.4: share one exchange)
@@ -150,9 +138,7 @@ def ngram_jaccard_pairs(
         # collision can only ADD candidates, and every candidate is
         # re-verified below on exact words + block columns, so the output
         # is exactly the pre-hash output
-        .withColumn(
-            "_k", F.xxhash64("w", *[F.col(c) for c in block_cols], "_lb")
-        )
+        .withColumn("_k", F.xxhash64("w", "lang", "_lb"))
         # each row also carries the doc's EARLIER prefix-key array (global
         # (df, token) order, consistent across docs): the join below emits
         # a pair only at its FIRST shared prefix token, which replaces the
@@ -209,14 +195,14 @@ def ngram_jaccard_pairs(
     # distinct-valued), sparing the second per-pair hash-set build an
     # array_union would cost.
     side = base.select(
-        "id", *block_cols, "_lb",
+        "id", "lang", "_lb",
         F.transform("_words", lambda w: F.xxhash64(w)).alias("_wh"),
     )
     j = (
         cands.join(F.broadcast(side), cands["id_a"] == side["id"])
         .select(
             "id_a", "id_b",
-            *[F.col(c).alias(f"_a_{c}") for c in block_cols],
+            F.col("lang").alias("_a_lang"),
             F.col("_lb").alias("_a_lb"),
             F.col("_wh").alias("_wa"),
         )
@@ -224,9 +210,7 @@ def ngram_jaccard_pairs(
     )
     inter = F.size(F.array_intersect(F.col("_wa"), F.col("_wh")))
     union = F.size("_wa") + F.size("_wh") - inter
-    blocks_ok = F.col("_a_lb") == F.col("_lb")
-    for c in block_cols:
-        blocks_ok = blocks_ok & (F.col(f"_a_{c}") == F.col(c))
+    blocks_ok = (F.col("_a_lb") == F.col("_lb")) & (F.col("_a_lang") == F.col("lang"))
     return (
         j.filter(blocks_ok)
         .select(
@@ -241,18 +225,15 @@ def ngram_jaccard_pairs(
 def _jaccard_profile_pairs(
     base: DataFrame,
     threshold: float,
-    block_cols: tuple,
-    vocab_bound: int,
     flop_budget: float,
-    chunk_rows: int = 1024,
 ) -> DataFrame | None:
     """Exact jaccard pairs over distinct (block, word-set) PROFILES.
 
-    base: (id string, *block_cols, _lb int, _words array<string>). Output
+    base: (id string, lang, _lb int, _words array<string>). Output
     identical to the prefix-filter path: (doc_a < doc_b, jaccard ≥ t).
 
     Shape: one groupBy collapsing docs → profiles; per block, profiles are
-    row_number-chunked (≤ `chunk_rows` rows) and every chunk pair computes
+    row_number-chunked (≤ 1024 rows) and every chunk pair computes
     an exact |A∩B| count matrix as ONE 0/1-bitmatrix matmul (float32 —
     exact for counts ≤ 2²⁴; vocab is probe-bounded ≤ 4096 ≪ 2²⁴), then
     J = inter/(|A|+|B|−inter) in float64 — the identical IEEE division the
@@ -261,7 +242,7 @@ def _jaccard_profile_pairs(
     profile-id-keyed joins expand members to doc pairs at output size, and
     same-profile docs pair at J = 1.0 without any verification. Only
     reachable behind the caller's Σm²·V flop probe — never the default."""
-    keys = [*block_cols, "_lb"]
+    keys = ["lang", "_lb"]
     # null block values never pair under SQL equality (the slow path's
     # verify re-check and the oracle both use plain `=`), so a null-block
     # doc can be dropped outright
@@ -309,10 +290,10 @@ def _jaccard_profile_pairs(
         .first()["v"]
         or 0
     )
-    if vocab > vocab_bound or pair_ops * max(vocab, 1) > flop_budget:
+    if vocab > 4096 or pair_ops * max(vocab, 1) > flop_budget:
         return None
     chunked = (
-        prof.withColumn("_ck", ((F.col("_rn") - 1) / chunk_rows).cast("int"))
+        prof.withColumn("_ck", ((F.col("_rn") - 1) / 1024).cast("int"))
         .groupBy(*keys, "_ck")
         .agg(F.collect_list(F.struct("_g", "_ws")).alias("_items"))
     )
@@ -411,9 +392,7 @@ def _jaccard_profile_pairs(
 # simhash
 # ---------------------------------------------------------------------------
 
-def simhash_signatures(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def simhash_signatures(docs: DataFrame) -> DataFrame:
     """→ (id, simhash bigint): 64-bit simhash over word features — the
     PRODUCTION path: one numpy pass per Arrow batch (mapInPandas), no
     intermediate row explosion. Bit-exact twin of the SQL form in
@@ -470,14 +449,12 @@ def simhash_signatures(
                 sigs.append(sig)
             yield pd.DataFrame({"id": ids, "simhash": pd.Series(sigs, dtype="int64")})
 
-    base = docs.select(
-        F.col(id_col).cast("string").alias("id"), F.col(text_col).alias("text")
-    )
+    base = docs.select(F.col("doc_id").cast("string").alias("id"), "text")
     return base.mapInPandas(sig_batches, schema="id string, simhash bigint")
 
 
 def simhash_near_duplicates(
-    docs: DataFrame, max_hamming: int = 3, text_col: str = "text", id_col: str = "doc_id"
+    docs: DataFrame, max_hamming: int = 3
 ) -> DataFrame:
     """→ (doc_a, doc_b, hamming ≤ max_hamming). Bucketed by each of 4
     16-bit chunks (pigeonhole: distance ≤ 3 ⇒ some 16-bit chunk equal),
@@ -493,7 +470,7 @@ def simhash_near_duplicates(
     # the signature frame's ONLY consumer is the distinct-signature groupBy
     # below, so the Arrow pass pipelines straight into that checkpoint —
     # a separate signature materialization was one extra action + write
-    sigs = simhash_signatures(docs, text_col, id_col)
+    sigs = simhash_signatures(docs)
     gs = (
         sigs.groupBy("simhash")
         .agg(F.collect_list("id").alias("_members"))
@@ -592,18 +569,10 @@ def _minhash_params(k: int, seed: int = 42) -> tuple:
     return a, b
 
 
-def minhash_lsh_pairs(
-    docs: DataFrame,
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    seed: int = 42,
-) -> DataFrame:
+def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
     """→ candidate near-dup pairs (doc_a, doc_b) sharing ≥ 1 LSH band.
 
-    Word-shingle → K minhashes → B band keys → self-join on band key.
+    Word 3-shingle → K minhashes → B band keys → self-join on band key.
     With K=64, B=16 (rows/band = 4) the S-curve threshold sits at
     ≈ (1/16)^(1/4) ≈ 0.5 jaccard.
 
@@ -613,13 +582,13 @@ def minhash_lsh_pairs(
     slices, shingle hash `conv(substr(md5(s),1,8))`, the K mins as ONE
     partial-aggregating groupBy, band keys as in-row md5 folds of
     "band:m,m,m,m", and map-side combine on the only shuffle."""
-    assert num_hashes % bands == 0
+    num_hashes, bands, shingle = 64, 16, 3
     rows_per_band = num_hashes // bands
-    ha, hb = _minhash_params(num_hashes, seed)
+    ha, hb = _minhash_params(num_hashes)
 
     # mirrors the DuckDB CTE expression for expression (split(trim(lower)),
     # md5 first 8 hex chars, exact int64 affine mins, "band:…" md5 band keys)
-    ws = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
+    ws = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
     m = F.greatest(F.size(ws) - (shingle - 1), F.lit(0))
     zipped = F.arrays_zip(*[F.slice(ws, i + 1, m) for i in range(shingle)])
     grams = F.transform(
@@ -631,7 +600,7 @@ def minhash_lsh_pairs(
         F.array(F.lit(""))
     )
     hv = docs.select(
-        F.col(id_col).cast("string").alias("id"), F.explode(sh).alias("s")
+        F.col("doc_id").cast("string").alias("id"), F.explode(sh).alias("s")
     ).select(
         "id",
         (
@@ -672,13 +641,7 @@ def minhash_lsh_pairs(
     )
 
 
-def dedup_groups(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    pairs: DataFrame | None = None,
-    **lsh_kwargs,
-) -> DataFrame:
+def dedup_groups(docs: DataFrame, pairs: DataFrame | None = None) -> DataFrame:
     """→ (doc_id, group_id, keep): MinHash-LSH candidate pairs closed
     transitively into duplicate groups — the actual corpus-dedup stage a
     pre-training pipeline runs after pair generation (near-dup relations
@@ -694,7 +657,7 @@ def dedup_groups(
     either way.
     """
     if pairs is None:
-        pairs = minhash_lsh_pairs(docs, text_col=text_col, id_col=id_col, **lsh_kwargs)
+        pairs = minhash_lsh_pairs(docs)
     from graph_rag_agent_spark.operators.connected_components import (
         connected_components,
     )
@@ -721,8 +684,6 @@ def dedup_groups(
 def duplicate_spans(
     docs: DataFrame,
     window: int = 50,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_df: int | None = None,
     production_hash: bool = False,
 ) -> DataFrame:
@@ -753,8 +714,8 @@ def duplicate_spans(
     (same quadratic failure mode the contamination join caps); capped
     spans are reported via the optional lineage count, not silently.
     """
-    toks = F.split(F.trim(F.coalesce(F.col(text_col), F.lit(""))), r"\s+")
-    base = docs.select(F.col(id_col).cast("string").alias("doc_id"), toks.alias("toks"))
+    toks = F.split(F.trim(F.coalesce(F.col("text"), F.lit(""))), r"\s+")
+    base = docs.select(F.col("doc_id").cast("string").alias("doc_id"), toks.alias("toks"))
     # shingles as a zip of `window` shifted slices: the transform lambda
     # touches only struct fields, so projection collapse cannot inline the
     # tokenizing split() into a per-position slice (the previous
@@ -804,12 +765,7 @@ def duplicate_spans(
     )
 
 
-def strip_duplicate_spans(
-    docs: DataFrame,
-    spans: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def strip_duplicate_spans(docs: DataFrame, spans: DataFrame) -> DataFrame:
     """→ (doc_id, clean_text, n_removed): text with duplicate spans cut out.
 
     The removal half of exact-substring dedup: joins the span table
@@ -824,8 +780,8 @@ def strip_duplicate_spans(
     span_arr = spans.groupBy("doc_id").agg(
         F.collect_list(F.struct("span_start", "span_end")).alias("_spans")
     )
-    toks = F.split(F.trim(F.coalesce(F.col(text_col), F.lit(""))), r"\s+")
-    base = docs.select(F.col(id_col).cast("string").alias("doc_id"), toks.alias("toks"))
+    toks = F.split(F.trim(F.coalesce(F.col("text"), F.lit(""))), r"\s+")
+    base = docs.select(F.col("doc_id").cast("string").alias("doc_id"), toks.alias("toks"))
     joined = base.join(span_arr, "doc_id", "left").withColumn(
         "_kept",
         F.expr(

@@ -87,7 +87,6 @@ def _embed_rows(texts, dim: int, embedder=None) -> tuple:
 def embed_entities(
     nodes: DataFrame,
     existing: Optional[DataFrame] = None,
-    dim: int = EMBEDDING_DIM,
     embedder=None,
 ) -> DataFrame:
     """nodes(entity_id, description, ...) →
@@ -101,7 +100,7 @@ def embed_entities(
     `embedder` is the pluggable text→vector slot (an OpenAI-compatible
     client in the reference); failures zero-vector AND flag the row, not
     the task."""
-    ver = embedder_fingerprint(embedder, dim)
+    ver = embedder_fingerprint(embedder, EMBEDDING_DIM)
     cur = nodes.select(
         "entity_id",
         embedding_text_col().alias("_text"),
@@ -129,7 +128,7 @@ def embed_entities(
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            embs, failed = _embed_rows(pdf["_text"].fillna(""), dim, embedder)
+            embs, failed = _embed_rows(pdf["_text"].fillna(""), EMBEDDING_DIM, embedder)
             yield pd.DataFrame(
                 {
                     "entity_id": pdf["entity_id"],
@@ -153,7 +152,6 @@ def embed_entities(
 def embed_chunks(
     chunks: DataFrame,
     existing: Optional[DataFrame] = None,
-    dim: int = EMBEDDING_DIM,
     embedder=None,
 ) -> DataFrame:
     """I2: chunks(chunk_id, text) →
@@ -164,7 +162,7 @@ def embed_chunks(
     (reference chunk_indexer.py:54-120 embeds rows with embedding IS NULL);
     the stored embed_version additionally invalidates rows produced by a
     DIFFERENT embedder — same needs_reembedding semantics as entities."""
-    ver = embedder_fingerprint(embedder, dim)
+    ver = embedder_fingerprint(embedder, EMBEDDING_DIM)
     todo = chunks.select("chunk_id", "text")
     if existing is not None:
         if "embed_version" in existing.columns:
@@ -182,7 +180,7 @@ def embed_chunks(
         # equal chunk_ids land in one partition of the hash repartition
         # below, so the per-partition dedup is exact
         for pdf in first_chunk_rows(batches):
-            embs, failed = _embed_rows(pdf["text"].fillna(""), dim, embedder)
+            embs, failed = _embed_rows(pdf["text"].fillna(""), EMBEDDING_DIM, embedder)
             yield pd.DataFrame(
                 {
                     "chunk_id": pdf["chunk_id"],

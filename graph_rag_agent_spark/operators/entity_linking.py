@@ -13,8 +13,6 @@ on both Spark and DuckDB, so the string-recall stage is oracle-checkable.
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
-
 from pyspark.sql import DataFrame, functions as F
 
 RECALL_SIMILARITY = 0.7
@@ -28,21 +26,16 @@ def levenshtein_similarity(a: F.Column, b: F.Column) -> F.Column:
     return 1.0 - F.levenshtein(a, b) / F.greatest(F.length(a), F.length(b))
 
 
-def string_recall(
-    nodes: DataFrame,
-    mention: str,
-    min_similarity: float = RECALL_SIMILARITY,
-    topk: int = RECALL_TOPK,
-) -> DataFrame:
-    """→ (entity_id, string_sim) top-k candidates by levenshteinSimilarity
-    of the lowercased mention (reference recall stage)."""
+def string_recall(nodes: DataFrame, mention: str) -> DataFrame:
+    """→ (entity_id, string_sim): the top RECALL_TOPK candidates by
+    levenshteinSimilarity of the lowercased mention (reference recall stage)."""
     m = F.lit(mention.lower())
     sim = levenshtein_similarity(F.lower(F.col("entity_id")), m)
     return (
         nodes.select("entity_id", F.round(sim, 6).alias("string_sim"))
-        .filter(F.col("string_sim") >= min_similarity)
+        .filter(F.col("string_sim") >= RECALL_SIMILARITY)
         .orderBy(F.desc("string_sim"), F.asc("entity_id"))
-        .limit(topk)
+        .limit(RECALL_TOPK)
     )
 
 
@@ -50,21 +43,15 @@ def link_mention(
     nodes: DataFrame,
     embeddings: DataFrame,
     mention: str,
-    mention_embedding: Optional[Sequence[float]] = None,
-    min_similarity: float = RECALL_SIMILARITY,
-    topk: int = RECALL_TOPK,
-    accept: float = ACCEPT_SCORE,
 ) -> DataFrame:
     """→ at most one row (entity_id, string_sim, vector_sim, score) — the
-    linked entity, or zero rows (NIL) when the best rerank score < accept
+    linked entity, or zero rows (NIL) when the best rerank score < ACCEPT_SCORE
     (reference entity_disambiguation.py:95-114)."""
     from graph_rag_agent_spark.functions.embedder import embed_text
     from graph_rag_agent_spark.operators.similarity import cosine_col
 
-    candidates = string_recall(nodes, mention, min_similarity, topk)
-    if mention_embedding is None:
-        mention_embedding = [float(x) for x in embed_text(mention)]
-    q = F.array(*[F.lit(float(x)) for x in mention_embedding])
+    candidates = string_recall(nodes, mention)
+    q = F.array(*[F.lit(float(x)) for x in embed_text(mention)])
     scored = (
         candidates.join(embeddings.select("entity_id", "embedding"), on="entity_id", how="left")
         .withColumn(
@@ -84,5 +71,5 @@ def link_mention(
     return (
         scored.orderBy(F.desc("score"), F.asc("entity_id"))
         .limit(1)
-        .filter(F.col("score") >= accept)
+        .filter(F.col("score") >= ACCEPT_SCORE)
     )

@@ -39,6 +39,18 @@ from graph_rag_agent_spark.functions.extractor import (
 RESULTS_SCHEMA = "chunk_id string, raw_result string"
 
 
+def cache_rows(results: DataFrame) -> DataFrame:
+    """(chunk_id, raw_result) → extraction_cache rows (chunk_sha1,
+    raw_result). The table keeps the `chunk_sha1` name existing warehouses
+    hold; `cached_results` reads it back."""
+    return results.select(F.col("chunk_id").alias("chunk_sha1"), "raw_result")
+
+
+def cached_results(cache: DataFrame) -> DataFrame:
+    """extraction_cache rows → (chunk_id, raw_result)."""
+    return cache.select(F.col("chunk_sha1").alias("chunk_id"), "raw_result")
+
+
 def extract_chunks(
     chunks: DataFrame,
     extractor: Optional[Extractor] = None,
@@ -61,7 +73,7 @@ def extract_chunks(
     selected = chunks.select("chunk_id", "text")
 
     if cache is not None:
-        cache = cache.select(F.col("chunk_sha1").alias("chunk_id"), "raw_result")
+        cache = cached_results(cache)
         distinct = selected.dropDuplicates(["chunk_id"])
         misses = distinct.join(cache, on="chunk_id", how="left_anti")
         hits = distinct.join(cache, on="chunk_id", how="inner").select(

@@ -44,25 +44,20 @@ from graph_rag_agent_spark.session import collect_if_fits, local_frame
 log = logging.getLogger(__name__)
 
 
-def _undirected(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
-    """→ (a, b): distinct undirected pairs, self-loops dropped, a < b."""
+def _undirected(edges: DataFrame) -> DataFrame:
+    """→ (a, b): distinct undirected (subj, obj) pairs, self-loops dropped,
+    a < b."""
     return (
         edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("a"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
+            F.least(F.col("subj"), F.col("obj")).alias("a"),
+            F.greatest(F.col("subj"), F.col("obj")).alias("b"),
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
     )
 
 
-def graph_structure_report(
-    nodes: DataFrame,
-    edges: DataFrame,
-    node_col: str = "entity_id",
-    src_col: str = "subj",
-    dst_col: str = "obj",
-) -> DataFrame:
+def graph_structure_report(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """→ ONE row (n_nodes, n_triples, n_edges, density, connectivity,
     quality): the corpus-level graph-quality rollup (see module docstring
     for the reference mapping).
@@ -71,8 +66,8 @@ def graph_structure_report(
     a map-side-combined count — no wide shuffle); the only distinct is over
     edge endpoints, keyed on the vertex id.
     """
-    und = _undirected(edges, src_col, dst_col)
-    nn = nodes.select(F.countDistinct(node_col).alias("n_nodes"))
+    und = _undirected(edges)
+    nn = nodes.select(F.countDistinct("entity_id").alias("n_nodes"))
     nt = edges.agg(F.count("*").alias("n_triples"))
     ne = und.agg(F.count("*").alias("n_edges"))
     touched = (
@@ -96,18 +91,14 @@ def graph_structure_report(
     )
 
 
-def triangle_counts(
-    edges: DataFrame,
-    src_col: str = "subj",
-    dst_col: str = "obj",
-) -> DataFrame:
+def triangle_counts(edges: DataFrame) -> DataFrame:
     """→ (entity_id, degree, triangles, clustering): per-vertex triangle
     count and local clustering coefficient 2T/(deg·(deg−1)) over the
     undirected simple graph (multi-edges and self-loops dropped first).
     Every vertex incident to ≥1 edge is emitted (isolated vertices have no
     triangles by definition and carry no edge row to anchor them).
     """
-    und = _undirected(edges, src_col, dst_col)
+    und = _undirected(edges)
     deg = (
         und.select(F.col("a").alias("id"))
         .unionByName(und.select(F.col("b").alias("id")))
@@ -248,8 +239,6 @@ def graph_quality_report(
 def k_core(
     edges: DataFrame,
     k: int = 2,
-    src_col: str = "subj",
-    dst_col: str = "obj",
     max_rounds: int = 8,
     driver_threshold: int = DRIVER_MAX_EDGES,
 ) -> DataFrame:
@@ -273,7 +262,7 @@ def k_core(
     structure, no quadratic join."""
     from graph_rag_agent_spark.functions.iterative import loop_checkpoint
 
-    pairs = _undirected(edges, src_col, dst_col)
+    pairs = _undirected(edges)
 
     table = collect_if_fits(pairs, driver_threshold, "k_core pairs")
     if table is not None:
@@ -296,28 +285,26 @@ def k_core(
         pairs.select(F.col("b").alias("s"), F.col("a").alias("d"))
     ).transform(loop_checkpoint)
     alive = sym.select(F.col("s").alias("id")).distinct().transform(loop_checkpoint)
-    rounds = 0
-    before = alive.count()
-    for rounds in range(1, max_rounds + 1):
-        deg = (
-            sym.join(alive.withColumnRenamed("id", "s"), on="s")
-            .join(alive.withColumnRenamed("id", "d"), on="d")
+
+    def degrees(live: DataFrame) -> DataFrame:
+        """→ (id, deg): each vertex of `live` with its degree within `live`."""
+        return (
+            sym.join(live.withColumnRenamed("id", "s"), on="s")
+            .join(live.withColumnRenamed("id", "d"), on="d")
             .groupBy(F.col("s").alias("id"))
             .agg(F.count("*").alias("deg"))
         )
-        nxt = deg.filter(F.col("deg") >= k).select("id").transform(loop_checkpoint)
+
+    rounds = 0
+    before = alive.count()
+    for rounds in range(1, max_rounds + 1):
+        nxt = degrees(alive).filter(F.col("deg") >= k).select("id").transform(loop_checkpoint)
         after = nxt.count()
         alive = nxt
         if after == before:
             break
         before = after
     log.info("k_core: distributed path, %d rounds", rounds)
-    deg = (
-        sym.join(alive.withColumnRenamed("id", "s"), on="s")
-        .join(alive.withColumnRenamed("id", "d"), on="d")
-        .groupBy(F.col("s").alias("id"))
-        .agg(F.count("*").alias("deg"))
-    )
-    return deg.select(
+    return degrees(alive).select(
         F.col("id").alias("entity_id"), F.col("deg").cast("int").alias("core_degree")
     )

@@ -19,24 +19,17 @@ scale-killer #3).
 
 from __future__ import annotations
 
-from typing import Optional
-
 from pyspark.sql import DataFrame, Window, functions as F
 
 from graph_rag_agent_spark.session import local_frame
 
 
-def dense_ids(
-    distinct_df: DataFrame,
-    order_col: str,
-    id_col: str,
-    num_partitions: Optional[int] = None,
-) -> DataFrame:
+def dense_ids(distinct_df: DataFrame, order_col: str, id_col: str) -> DataFrame:
     """distinct_df (one row per key) → + ``id_col`` bigint: 0-based ids in
     ascending ``order_col`` order — exactly ``dense_rank() - 1`` of the
     unpartitioned-window formulation, with no single-partition exchange."""
     spark = distinct_df.sparkSession
-    n_part = num_partitions or spark.sparkContext.defaultParallelism
+    n_part = spark.sparkContext.defaultParallelism
     parted = distinct_df.repartitionByRange(n_part, F.col(order_col)).withColumn(
         "_pid", F.spark_partition_id()
     )

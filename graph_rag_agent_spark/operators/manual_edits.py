@@ -108,12 +108,11 @@ def resolve_conflicts(
     existing: DataFrame,
     updates: DataFrame,
     strategy: str = "manual_first",
-    key: str = "entity_id",
 ) -> DataFrame:
     """Reference resolve_conflicts (:363-477): merge an auto-generated
     update table into the existing nodes, honoring manual edits.
 
-    A CONFLICT is an existing row with ``manual_edit=true`` whose key also
+    A CONFLICT is an existing row with ``manual_edit=true`` whose entity_id also
     appears in ``updates``. Non-conflicting keys take the update (plain
     upsert); new keys insert. Conflicts resolve by ``strategy`` (module
     docstring). Output adds ``conflict_resolved``/``conflict_resolution``
@@ -124,20 +123,20 @@ def resolve_conflicts(
     if strategy not in CONFLICT_STRATEGIES:
         raise ValueError(f"unknown conflict_strategy {strategy!r}")
     existing = ensure_edit_columns(existing)
-    value_cols = [c for c in existing.columns if c != key]
-    upd_value_cols = [c for c in updates.columns if c != key]
+    value_cols = [c for c in existing.columns if c != "entity_id"]
+    upd_value_cols = [c for c in updates.columns if c != "entity_id"]
 
     e = existing.select(
-        key,
+        "entity_id",
         *[F.col(c).alias(f"_e_{c}") for c in value_cols],
         F.lit(True).alias("_has_e"),
     )
     u = updates.select(
-        key,
+        "entity_id",
         *[F.col(c).alias(f"_u_{c}") for c in upd_value_cols],
         F.lit(True).alias("_has_u"),
     )
-    j = e.join(u, on=key, how="full_outer")
+    j = e.join(u, on="entity_id", how="full_outer")
     conflict = (
         F.coalesce("_has_e", F.lit(False))
         & F.coalesce("_has_u", F.lit(False))
@@ -170,7 +169,7 @@ def resolve_conflicts(
             .otherwise(e_c)
         )
 
-    out_cols = [F.col(key)]
+    out_cols = [F.col("entity_id")]
     all_value_cols = list(dict.fromkeys(value_cols + upd_value_cols))
     for c in all_value_cols:
         out_cols.append(pick(c).alias(c))

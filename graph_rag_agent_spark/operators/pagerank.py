@@ -60,9 +60,6 @@ def pagerank(
     damping: float = DAMPING,
     n_iter: int = 5,
     tol: Optional[float] = None,
-    vertex_col: str = "id",
-    src_col: str = "src",
-    dst_col: str = "dst",
     weight_col: Optional[str] = None,
     reset: Optional[DataFrame] = None,
     initial_ranks: Optional[DataFrame] = None,
@@ -95,15 +92,13 @@ def pagerank(
     two-shuffle-per-iteration loop runs. Both paths implement the
     identical recurrence (equality pytest-gated). Each run logs
     ``pagerank: <driver|distributed> path, <n> iterations`` at INFO."""
-    verts = vertices.select(F.col(vertex_col).alias("id")).distinct()
+    verts = vertices.select("id").distinct()
     w = (
         F.col(weight_col).cast("double")
         if weight_col
         else F.lit(1.0)
     )
-    g = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst"), w.alias("w")
-    )
+    g = edges.select("src", "dst", w.alias("w"))
 
     probes = {"edges": g, "vertices": verts}
     if reset is not None:

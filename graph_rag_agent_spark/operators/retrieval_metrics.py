@@ -55,18 +55,13 @@ def _digit_matched(refs, retrs):
     )
 
 
-def retrieval_metrics(
-    samples: DataFrame,
-    query_col: str = "query_id",
-    retrieved_col: str = "retrieved",
-    reference_col: str = "reference",
-) -> DataFrame:
+def retrieval_metrics(samples: DataFrame) -> DataFrame:
     """(query_id, retrieved array<string>, reference array<string>) →
     (query_id, prec_matched, precision, util_matched, utilization) with the
     reference's exact rule arithmetic, rounded to 6 for cross-engine
     comparison."""
-    refs = _lower_arr(reference_col)
-    retrs = _lower_arr(retrieved_col)
+    refs = _lower_arr("reference")
+    retrs = _lower_arr("retrieved")
     n_ref = F.size(refs)
 
     matched = F.greatest(
@@ -100,7 +95,7 @@ def retrieval_metrics(
     )
 
     return samples.select(
-        F.col(query_col).alias("query_id"),
+        "query_id",
         matched.alias("prec_matched"),
         F.round(score, 6).alias("precision"),
         util_matched.alias("util_matched"),
@@ -136,12 +131,7 @@ def _tokens(norm):
     )
 
 
-def answer_metrics(
-    samples: DataFrame,
-    query_col: str = "query_id",
-    pred_col: str = "prediction",
-    gold_col: str = "golden",
-) -> DataFrame:
+def answer_metrics(samples: DataFrame) -> DataFrame:
     """The rule branches of the reference's answer evaluation
     (evaluation/metrics/answer_metrics.py; LLM branches out of scope):
 
@@ -160,8 +150,8 @@ def answer_metrics(
 
     Map-only: every rule is in-row string/array arithmetic — zero
     shuffle, zero Python, parallel over any number of eval rows."""
-    pred_raw = F.col(pred_col)
-    gold_raw = F.col(gold_col)
+    pred_raw = F.col("prediction")
+    gold_raw = F.col("golden")
     pn = _normalize_answer(pred_raw)
     gn = _normalize_answer(gold_raw)
     em = F.when(
@@ -201,18 +191,14 @@ def answer_metrics(
     )
 
     return samples.select(
-        F.col(query_col).alias("query_id"),
+        "query_id",
         F.round(em, 6).alias("exact_match"),
         F.round(sim, 6).alias("content_similarity"),
         F.round(f1, 6).alias("rule_f1"),
     )
 
 
-def reasoning_metrics(
-    samples: DataFrame,
-    query_col: str = "query_id",
-    answer_col: str = "answer",
-) -> DataFrame:
+def reasoning_metrics(samples: DataFrame) -> DataFrame:
     """Rule branches of the reference's deep-search evaluation
     (evaluation/metrics/deep_search_metrics.py; LLM branches out of
     scope):
@@ -238,7 +224,7 @@ def reasoning_metrics(
     # Python .strip() removes ALL whitespace; trim() in both engines is
     # space-only — regex-strip both ends instead (ASCII \s, both engines)
     thinking = F.regexp_replace(
-        F.regexp_extract(F.col(answer_col), r"(?s)<think>(.*?)</think>", 1),
+        F.regexp_extract(F.col("answer"), r"(?s)<think>(.*?)</think>", 1),
         r"^\s+|\s+$",
         "",
     )
@@ -265,7 +251,7 @@ def reasoning_metrics(
         + F.least(F.lit(0.1), F.lit(0.05) * ninfo.cast("double")),
     ).otherwise(F.lit(0.6))
     return samples.select(
-        F.col(query_col).alias("query_id"),
+        "query_id",
         F.when(has, nq).otherwise(F.lit(0)).alias("n_queries"),
         F.when(has, npara).otherwise(F.lit(0)).alias("n_paragraphs"),
         F.when(has, ninfo).otherwise(F.lit(0)).alias("n_info"),
@@ -274,11 +260,7 @@ def reasoning_metrics(
     )
 
 
-def agent_utilization_metrics(
-    samples: DataFrame,
-    query_col: str = "query_id",
-    answer_col: str = "answer",
-) -> DataFrame:
+def agent_utilization_metrics(samples: DataFrame) -> DataFrame:
     """The last two deep-search rule branches (deep_search_metrics.py):
 
     - IterativeImprovementMetric (:344-456 rule path): iterations = count
@@ -299,7 +281,7 @@ def agent_utilization_metrics(
     Map-only regex counting — zero shuffle, zero Python. →
     (query_id, n_iterations, iterative_improvement, kg_mentions,
     kg_utilization)."""
-    ans = F.col(answer_col)
+    ans = F.col("answer")
     thinking = F.regexp_replace(
         F.regexp_extract(ans, r"(?s)<think>(.*?)</think>", 1),
         r"^\s+|\s+$",
@@ -340,7 +322,7 @@ def agent_utilization_metrics(
         + F.least(F.lit(0.3), F.lit(0.05) * (erefs + rrefs).cast("double"))
     )
     return samples.select(
-        F.col(query_col).alias("query_id"),
+        "query_id",
         F.when(has, n_iter).otherwise(F.lit(0)).alias("n_iterations"),
         F.round(improvement, 6).alias("iterative_improvement"),
         F.when(has, mentions).otherwise(F.lit(0)).alias("kg_mentions"),
@@ -354,15 +336,7 @@ def agent_utilization_metrics(
 _KEY_PHRASE_RE = "\\b[\\w一-龥]{4,}\\b"
 
 
-def chunk_utilization(
-    samples: DataFrame,
-    chunks: DataFrame,
-    query_col: str = "query_id",
-    answer_col: str = "answer",
-    chunk_ids_col: str = "chunk_ids",
-    chunk_id_col: str = "chunk_id",
-    text_col: str = "text",
-) -> DataFrame:
+def chunk_utilization(samples: DataFrame, chunks: DataFrame) -> DataFrame:
     """ChunkUtilization's rule branch (reference retrieval_metrics.py:
     430-537, Neo4j-lookup path): per referenced chunk, key phrases =
     distinct ``\\b[\\w CJK]{4,}\\b`` matches in the chunk text; the chunk's
@@ -379,13 +353,11 @@ def chunk_utilization(
     matching as in-row higher-order exprs, one groupBy back per sample.
     → (query_id, n_chunks, chunk_utilization)."""
     exploded = samples.select(
-        F.col(query_col).alias("query_id"),
-        F.lower(F.col(answer_col)).alias("_ans"),
-        F.explode_outer(chunk_ids_col).alias("chunk_id"),
+        "query_id",
+        F.lower(F.col("answer")).alias("_ans"),
+        F.explode_outer("chunk_ids").alias("chunk_id"),
     )
-    ch = chunks.select(
-        F.col(chunk_id_col).alias("chunk_id"), F.col(text_col).alias("_text")
-    )
+    ch = chunks.select("chunk_id", F.col("text").alias("_text"))
     joined = exploded.join(ch, on="chunk_id", how="left")
     phrases = F.array_distinct(
         F.regexp_extract_all(F.col("_text"), F.lit(_KEY_PHRASE_RE), 0)

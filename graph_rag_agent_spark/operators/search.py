@@ -76,7 +76,6 @@ def top_communities_for_seeds(
     summaries: DataFrame,
     mentions: DataFrame,
     seeds: DataFrame,
-    limit: int = TOP_COMMUNITIES,
 ) -> DataFrame:
     """Communities containing seed entities, ordered by (rank, weight) desc."""
     hit = membership.join(
@@ -88,14 +87,12 @@ def top_communities_for_seeds(
         .join(weights, on="community_id", how="left")
         .fillna({"weight": 0})
         .orderBy(F.desc("rank"), F.desc("weight"), F.asc("community_id"))
-        .limit(limit)
+        .limit(TOP_COMMUNITIES)
         .select("community_id", "rank", "weight", "summary")
     )
 
 
-def seed_relationships(
-    edges: DataFrame, seeds: DataFrame, limit: int = TOP_RELATIONSHIPS
-) -> tuple[DataFrame, DataFrame]:
+def seed_relationships(edges: DataFrame, seeds: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(inside, outside) relationships by weight desc (Q1): inside = both
     endpoints are seeds, outside = exactly one endpoint is a seed."""
     s = seeds.select("entity_id")
@@ -115,8 +112,8 @@ def seed_relationships(
     # the oracle hash) fixture-dependent
     order = [F.desc("weight"), F.asc("subj"), F.asc("obj"), F.asc("pred")]
     return (
-        inside.orderBy(*order).limit(limit),
-        outside.orderBy(*order).limit(limit),
+        inside.orderBy(*order).limit(TOP_RELATIONSHIPS),
+        outside.orderBy(*order).limit(TOP_RELATIONSHIPS),
     )
 
 
@@ -248,7 +245,7 @@ def sampled_neighborhood(
     return sampled
 
 
-def _ordered_concat(parts: DataFrame, sep: str = "\n") -> DataFrame:
+def _ordered_concat(parts: DataFrame) -> DataFrame:
     """→ (section, content): per-section newline-join of ``content`` in
     ``sort_key`` ascending order, with NO window and NO driver collect —
     each section's parts are already top-k-bounded (≤ TOP_* rows), so the
@@ -256,7 +253,7 @@ def _ordered_concat(parts: DataFrame, sep: str = "\n") -> DataFrame:
     ordinary hash aggregation at any corpus size."""
     return parts.groupBy("section").agg(
         F.concat_ws(
-            sep,
+            "\n",
             F.transform(
                 F.array_sort(F.collect_list(F.struct("sort_key", "content"))),
                 lambda s: s["content"],
@@ -272,9 +269,6 @@ def local_search_context(
     membership: DataFrame,
     summaries: DataFrame,
     seeds: DataFrame,
-    top_chunks: int = TOP_CHUNKS,
-    top_communities: int = TOP_COMMUNITIES,
-    top_relationships: int = TOP_RELATIONSHIPS,
 ) -> DataFrame:
     """→ (section, content): the ASSEMBLED Q1 local-search context — the
     reference's actual retrieval deliverable (search/local_search.py:86-137
@@ -292,14 +286,12 @@ def local_search_context(
     ``array_sort``-over-``collect_list`` — no partition-less window, no
     driver loop; every input branch is the already-proven top-k plan.
     Empty sections emit no row."""
-    chunk_top = top_chunks_for_seeds(mentions, chunks, seeds, limit=top_chunks).select(
+    chunk_top = top_chunks_for_seeds(mentions, chunks, seeds).select(
         F.lit("chunk").alias("section"),
         F.struct((-F.col("freq")).alias("k1"), F.col("chunk_sha").alias("k2")).alias("sort_key"),
         F.col("text").alias("content"),
     )
-    comm = top_communities_for_seeds(
-        membership, summaries, mentions, seeds, limit=top_communities
-    ).select(
+    comm = top_communities_for_seeds(membership, summaries, mentions, seeds).select(
         F.lit("community").alias("section"),
         F.struct(
             (-F.col("rank").cast("long")).alias("k1"),
@@ -308,7 +300,7 @@ def local_search_context(
         ).alias("sort_key"),
         F.col("summary").alias("content"),
     )
-    inside, outside = seed_relationships(edges, seeds, limit=top_relationships)
+    inside, outside = seed_relationships(edges, seeds)
     rel = lambda df, side: df.select(
         F.lit(side).alias("section"),
         F.struct(
@@ -332,15 +324,15 @@ def local_search_context(
     return res
 
 
-def global_search_reduce_df(mapped: DataFrame, top_n: int = 20) -> DataFrame:
+def global_search_reduce_df(mapped: DataFrame) -> DataFrame:
     """→ (answer): Q3's reduce phase as a one-row DataFrame — the
-    deterministic newline-join of the first ``top_n`` intermediate answers
+    deterministic newline-join of the first 20 intermediate answers
     by community_id (the LLM-reduce slot's template path; the string form
     ``global_search_reduce`` collects this same row). Bounded
-    TakeOrderedAndProject feeds one global aggregate of ≤ top_n rows."""
+    TakeOrderedAndProject feeds one global aggregate of ≤ 20 rows."""
     return (
         mapped.orderBy(F.asc("community_id"))
-        .limit(top_n)
+        .limit(20)
         .groupBy()
         .agg(
             F.concat_ws(
@@ -381,11 +373,9 @@ def global_search_map(
     return at_level.mapInPandas(run, schema="community_id string, intermediate string")
 
 
-def global_search_reduce(mapped: DataFrame, top_n: int = 20) -> str:
+def global_search_reduce(mapped: DataFrame) -> str:
     """Q3 reduce phase: deterministic concatenation of the top intermediate
     results (the LLM-reduce slot). The only driver-side collect in the
-    query path, bounded by top_n."""
-    rows = (
-        mapped.orderBy(F.asc("community_id")).limit(top_n).collect()
-    )
+    query path, bounded at 20 rows."""
+    rows = mapped.orderBy(F.asc("community_id")).limit(20).collect()
     return "\n".join(r.intermediate for r in rows)

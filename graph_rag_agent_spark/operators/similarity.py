@@ -33,17 +33,15 @@ def cosine_col(a: F.Column, b: F.Column) -> F.Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-def _topk_rows(
-    ids: np.ndarray, mat: np.ndarray, k: int, row_chunk: int = 2048
-) -> List[tuple]:
+def _topk_rows(ids: np.ndarray, mat: np.ndarray, k: int) -> List[tuple]:
     """Exact per-row top-k cosine among the normalized rows of mat,
-    computed in ROW CHUNKS so peak memory is O(row_chunk × n) — one hot
+    computed in 2048-ROW CHUNKS so peak memory is O(2048 × n) — one hot
     block never materializes an n×n matrix. float64 throughout so scores
     agree with any double-precision oracle at 6 decimals. Ties break by
     neighbor id ascending (lexsort), self-pairs (same id) excluded."""
     rows: List[tuple] = []
-    for lo in range(0, len(ids), row_chunk):
-        hi = min(lo + row_chunk, len(ids))
+    for lo in range(0, len(ids), 2048):
+        hi = min(lo + 2048, len(ids))
         sims = mat[lo:hi] @ mat.T  # (chunk, n)
         for r in range(hi - lo):
             srow = sims[r]
@@ -84,8 +82,6 @@ def cosine_pairs_blocked(
     embeddings: DataFrame,
     threshold: float = 0.9,
     n_blocks: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     target_block_rows: int = DEFAULT_BLOCK_ROWS,
 ) -> DataFrame:
     """EXACT embedding-cosine near-duplicate pairs: all (a < b) with
@@ -97,8 +93,8 @@ def cosine_pairs_blocked(
     if n_blocks is None:
         n_blocks = _derive_n_blocks(embeddings.count(), target_block_rows)
     base = embeddings.select(
-        F.col(id_col).cast("string").alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("emb"),
+        F.col("vec_id").cast("string").alias("vec_id"),
+        F.col("embedding").cast("array<double>").alias("emb"),
     ).withColumn("blk", F.pmod(F.xxhash64("vec_id"), F.lit(n_blocks)).cast("int"))
     grouped = base.groupBy("blk").agg(
         F.collect_list(F.struct("vec_id", "emb")).alias("items")
@@ -137,13 +133,7 @@ def cosine_pairs_blocked(
     return paired.mapInPandas(pairs, schema="id_a string, id_b string, score double")
 
 
-def pairwise_topk_per_label(
-    embeddings: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-) -> DataFrame:
+def pairwise_topk_per_label(embeddings: DataFrame, k: int = 5) -> DataFrame:
     """Blocked all-pairs: per-label numpy cosine matrix → per-vector top-k
     neighbors within the label block (applyInPandas, vectorized matmul).
 
@@ -157,15 +147,15 @@ def pairwise_topk_per_label(
             return pd.DataFrame({"vec_id": [], "neighbor_id": [], "score": []}).astype(
                 {"vec_id": str, "neighbor_id": str, "score": float}
             )
-        ids = pdf[id_col].astype(str).to_numpy()
-        mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+        ids = pdf["vec_id"].astype(str).to_numpy()
+        mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
         norms = np.linalg.norm(mat, axis=1, keepdims=True)
         norms[norms == 0] = 1
         mat = mat / norms
         rows = _topk_rows(ids, mat, k)
         return pd.DataFrame(rows, columns=["vec_id", "neighbor_id", "score"])
 
-    return embeddings.groupBy(label_col).applyInPandas(
+    return embeddings.groupBy("label").applyInPandas(
         per_block, schema="vec_id string, neighbor_id string, score double"
     )
 
@@ -174,8 +164,6 @@ def semantic_dedup(
     embeddings: DataFrame,
     n_clusters: int = 8,
     threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     chunk: int = 1024,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): cluster-then-dedup.
@@ -209,8 +197,8 @@ def semantic_dedup(
     the training-data-pipeline extension alongside exact/minhash/simhash/
     jaccard/substring dedup."""
     base = embeddings.select(
-        F.col(id_col).cast("long").alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("emb"),
+        F.col("vec_id").cast("long").alias("vec_id"),
+        F.col("embedding").cast("array<double>").alias("emb"),
     )
     cent_rows = (
         base.orderBy(F.md5(F.col("vec_id").cast("string")), F.col("vec_id"))

@@ -31,7 +31,6 @@ def asof_join(
     key_col: str,
     ts_col: str,
     right_value_cols: Sequence[str],
-    suffix: str = "_matched",
 ) -> DataFrame:
     """→ left + (ts_matched, <col>_matched …): for every left row, the
     right row with the greatest ``ts_col`` ≤ the left row's per ``key_col``
@@ -77,9 +76,9 @@ def asof_join(
         .filter(F.col("_src") == 1)
         .drop("_src", "_rv")
     )
-    out = out.withColumn(ts_col + suffix, F.col("_m._r_ts"))
+    out = out.withColumn(ts_col + "_matched", F.col("_m._r_ts"))
     for c in right_value_cols:
-        out = out.withColumn(c + suffix, F.col(f"_m.{c}"))
+        out = out.withColumn(c + "_matched", F.col(f"_m.{c}"))
     return out.drop("_m")
 
 

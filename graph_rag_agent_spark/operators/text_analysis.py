@@ -17,34 +17,34 @@ LANG_MARKERS = {
 }
 
 
-def token_counts(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def token_counts(docs: DataFrame) -> DataFrame:
     """→ (doc_id, n_tokens, n_distinct_tokens, avg_token_len)."""
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = F.split(F.trim(F.col("text")), r"\s+")
     return docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         F.size(toks).alias("n_tokens"),
         F.size(F.array_distinct(toks)).alias("n_distinct_tokens"),
         (
-            F.length(F.regexp_replace(F.col(text_col), r"\s+", ""))
+            F.length(F.regexp_replace(F.col("text"), r"\s+", ""))
             / F.size(toks)
         ).alias("avg_token_len"),
     )
 
 
-def quality_scores(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def quality_scores(docs: DataFrame) -> DataFrame:
     """→ length / punctuation-ratio / stopword-ratio / distinct-ratio quality
     features + a boolean keep flag (the classic pre-training filters)."""
-    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
+    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
     n = F.size(toks)
     stop = F.array(*[F.lit(w) for w in LANG_MARKERS["en"]])
     n_stop = F.size(F.array_intersect(F.array_distinct(toks), stop))
     punct_ratio = (
-        F.length(F.regexp_replace(F.col(text_col), r"[\w\s]+", "")) / F.length(text_col)
+        F.length(F.regexp_replace(F.col("text"), r"[\w\s]+", "")) / F.length("text")
     )
     distinct_ratio = F.size(F.array_distinct(toks)) / n
     return docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.length(text_col).alias("n_chars"),
+        "doc_id",
+        F.length("text").alias("n_chars"),
         n.alias("n_tokens"),
         F.round(punct_ratio, 6).alias("punct_ratio"),
         F.round(distinct_ratio, 6).alias("distinct_ratio"),
@@ -53,15 +53,15 @@ def quality_scores(docs: DataFrame, text_col: str = "text", id_col: str = "doc_i
     )
 
 
-def language_id(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def language_id(docs: DataFrame) -> DataFrame:
     """→ (doc_id, pred_lang): argmax of marker-word hits, ties → first
     language code alphabetically, no hits → 'und'."""
-    toks = F.array_distinct(F.split(F.trim(F.lower(F.col(text_col))), r"\s+"))
+    toks = F.array_distinct(F.split(F.trim(F.lower(F.col("text"))), r"\s+"))
     scores = [
         F.size(F.array_intersect(toks, F.array(*[F.lit(w) for w in words]))).alias(f"_s_{code}")
         for code, words in sorted(LANG_MARKERS.items())
     ]
-    df = docs.select(F.col(id_col).alias("doc_id"), *scores)
+    df = docs.select("doc_id", *scores)
     best = F.greatest(*[F.col(f"_s_{c}") for c in sorted(LANG_MARKERS)])
     pred = F.when(best == 0, F.lit("und"))
     for code in sorted(LANG_MARKERS):
@@ -90,9 +90,7 @@ def _max_run_count(sorted_arr):
     return F.aggregate(sorted_arr, zero, step, lambda acc: acc["best"])
 
 
-def repetition_scores(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def repetition_scores(docs: DataFrame) -> DataFrame:
     """Gopher-style repetition signals per document (Rae et al. 2021 §A1.1):
 
     - ``top_unigram_frac``: tokens covered by the single most frequent token;
@@ -108,7 +106,7 @@ def repetition_scores(
     explode, no (doc, ngram) shuffle, so a 100 TB corpus pays exactly one
     scan. Per-doc cost is O(len · log len).
     """
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = F.split(F.trim(F.col("text")), r"\s+")
     n = F.size(toks)
     sep = F.lit(" ")  # whitespace-split tokens make a space separator unambiguous
     bigrams = F.zip_with(
@@ -133,7 +131,7 @@ def repetition_scores(
         F.round((n_tri - F.size(F.array_distinct(trigrams))) / n_tri, 6),
     ).otherwise(F.lit(0.0))
     return docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         top_uni.alias("top_unigram_frac"),
         top_bi.alias("top_bigram_frac"),
         dup_tri.alias("dup_trigram_frac"),
@@ -141,21 +139,17 @@ def repetition_scores(
     )
 
 
-def fingerprints(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def fingerprints(docs: DataFrame) -> DataFrame:
     """→ (doc_id, fingerprint): md5 of the whitespace/case-normalized text —
     the canonical dedup fingerprint (stable across engines)."""
-    normalized = F.regexp_replace(F.trim(F.lower(F.col(text_col))), r"\s+", " ")
-    return docs.select(
-        F.col(id_col).alias("doc_id"), F.md5(normalized).alias("fingerprint")
-    )
+    normalized = F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s+", " ")
+    return docs.select("doc_id", F.md5(normalized).alias("fingerprint"))
 
 
 def ngram_stats(
     docs: DataFrame,
     n: int = 2,
     k: int = 200,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """→ (term, tf, df): corpus-level word-n-gram statistics — term
     frequency (all occurrences) and document frequency, top-``k`` by
@@ -169,7 +163,7 @@ def ngram_stats(
     count(distinct id)); top-k is a TakeOrderedAndProject, never a global
     sort. All expressions JVM-side; the (tf desc, term asc) ordering is
     total, so the k-boundary is engine-exact."""
-    ws = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
+    ws = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
     if n == 1:
         grams = ws
     else:
@@ -183,7 +177,7 @@ def ngram_stats(
         grams = F.transform(
             zipped, lambda s: F.concat_ws(" ", *[s[str(i)] for i in range(n)])
         )
-    exploded = docs.select(F.col(id_col).alias("_id"), F.explode(grams).alias("term"))
+    exploded = docs.select(F.col("doc_id").alias("_id"), F.explode(grams).alias("term"))
     # blank/whitespace-only docs explode to [''] on the n=1 path (split of a
     # trimmed empty string); drop the empty term so the unigram output is a
     # clean vocabulary table, consistent with the n>=2 branch and learn_bpe

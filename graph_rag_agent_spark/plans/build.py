@@ -65,7 +65,11 @@ from graph_rag_agent_spark.operators.communities import (
     weighted_projection,
 )
 from graph_rag_agent_spark.operators.embeddings import embed_chunks, embed_entities
-from graph_rag_agent_spark.operators.extraction import extract_chunks
+from graph_rag_agent_spark.operators.extraction import (
+    cache_rows,
+    cached_results,
+    extract_chunks,
+)
 from graph_rag_agent_spark.operators.graph_metrics import graph_quality_report
 from graph_rag_agent_spark.operators.pagerank import pagerank_projection
 from graph_rag_agent_spark.operators.parsing import (
@@ -318,10 +322,7 @@ class BuildPipeline:
         if cache is not None:
             # materialize before overwriting the parquet we are lazily reading
             results = results.localCheckpoint(eager=True)
-        results = save(
-            "extraction_cache",
-            results.select(F.col("chunk_id").alias("chunk_sha1"), "raw_result"),
-        ).select(F.col("chunk_sha1").alias("chunk_id"), "raw_result")
+        results = cached_results(save("extraction_cache", cache_rows(results)))
 
         raw = graph_stage(results, save)
         existing = (

@@ -21,6 +21,7 @@ from graph_rag_agent_spark.operators.consistency import (
     repair,
     validation_report,
 )
+from graph_rag_agent_spark.operators.extraction import cache_rows
 from graph_rag_agent_spark.operators.incremental import (
     detect_changes,
     upsert_edges,
@@ -147,11 +148,7 @@ class IncrementalUpdatePipeline:
             chunks.join(kept_ids, on="chunk_id", how="left_anti"),
             self.extractor, cache,
         ).localCheckpoint(eager=True)
-        cat.upsert(
-            "extraction_cache",
-            results.select(F.col("chunk_id").alias("chunk_sha1"), "raw_result"),
-            keys=["chunk_sha1"],
-        )
+        cat.upsert("extraction_cache", cache_rows(results), keys=["chunk_sha1"])
         raw = graph_stage(results, save, kept_records)
 
         # --- N8 consistency: validate, then repair on violations. With no

@@ -1,4 +1,4 @@
-"""Table catalog: Iceberg when available, partitioned parquet otherwise.
+"""Table catalog: Iceberg when available, parquet otherwise.
 
 The north rule targets partitioned Iceberg graph tables. The sandbox image
 has no Iceberg runtime jars, so the catalog dispatches:
@@ -6,7 +6,7 @@ has no Iceberg runtime jars, so the catalog dispatches:
 - if the session has an Iceberg catalog configured
   (``spark.sql.catalog.<name>`` set, jars on classpath) → ``writeTo``
   V2 API with ``MERGE INTO`` upserts;
-- else → partitioned parquet under a warehouse dir with the same table
+- else → parquet under a warehouse dir with the same table
   semantics (upsert emulated as anti-join + union-rewrite). Each table
   directory also holds ``_schema.json``, the written frame's schema, so a
   read passes it to ``spark.read.schema`` and starts no schema-inference
@@ -62,8 +62,7 @@ class TableCatalog:
         )
 
     # -- IO ----------------------------------------------------------------
-    def write(self, df: DataFrame, name: str, partition_by: Optional[List[str]] = None,
-              mode: str = "overwrite") -> DataFrame:
+    def write(self, df: DataFrame, name: str, mode: str = "overwrite") -> DataFrame:
         """Write the table; → the table as written. Parquet stores the
         frame's schema beside the data and reads it back with that schema,
         which starts no schema-inference job."""
@@ -74,10 +73,7 @@ class TableCatalog:
             else:
                 writer.append()
             return self.read(name)
-        w = df.write.mode(mode)
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(self._path(name))
+        df.write.mode(mode).parquet(self._path(name))
         with open(os.path.join(self._path(name), SCHEMA_FILE), "w") as fh:
             fh.write(df.schema.json())
         return self.spark.read.schema(df.schema).parquet(self._path(name))
@@ -102,8 +98,7 @@ class TableCatalog:
 
         shutil.rmtree(self._path(name), ignore_errors=True)
 
-    def upsert(self, name: str, source: DataFrame, keys: List[str],
-               partition_by: Optional[List[str]] = None) -> None:
+    def upsert(self, name: str, source: DataFrame, keys: List[str]) -> None:
         """MERGE INTO on keys. Iceberg: real MERGE; parquet: anti-join the
         target against the source keys, union, rewrite (same end state).
 
@@ -121,10 +116,10 @@ class TableCatalog:
             )
             return
         if not self.exists(name):
-            self.write(source, name, partition_by=partition_by)
+            self.write(source, name)
             return
         target = self.read(name)
         # an anti-join never multiplies its left rows: no key dedup needed
         kept = target.join(source.select(*keys), on=keys, how="left_anti")
         merged = kept.unionByName(source.select(*target.columns))
-        self.write(merged.localCheckpoint(eager=True), name, partition_by=partition_by)
+        self.write(merged.localCheckpoint(eager=True), name)

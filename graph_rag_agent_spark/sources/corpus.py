@@ -144,8 +144,8 @@ def generate_corpus_pdf(n_rows: int, seed: int = 42) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=CORPUS_COLUMNS)
 
 
-def generate_corpus(spark, n_rows: int, seed: int = 42, partitions: int = 32):
+def generate_corpus(spark, n_rows: int):
     """Corpus as a Spark DataFrame (a driver frame, see session.local_frame)."""
-    pdf = generate_corpus_pdf(n_rows, seed)
+    pdf = generate_corpus_pdf(n_rows)
     schema = "repo string, path string, commit string, lang string, content string"
-    return local_frame(spark, pdf, schema).repartition(partitions, "repo", "path")
+    return local_frame(spark, pdf, schema).repartition(32, "repo", "path")

@@ -17,17 +17,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def windowed_event_counts(
-    events: DataFrame,
-    window: str = "5 minutes",
-    slide: str | None = None,
-    watermark: str = "10 minutes",
-) -> DataFrame:
+def windowed_event_counts(events: DataFrame, window: str = "5 minutes") -> DataFrame:
     """events(ts, event_type, value) → watermarked windowed counts/sums.
     Works identically on a static frame (tests) and a stream."""
-    src = events.withWatermark("ts", watermark) if events.isStreaming else events
-    win = F.window("ts", window, slide) if slide else F.window("ts", window)
-    return src.groupBy(win.alias("w"), "event_type").agg(
+    src = events.withWatermark("ts", "10 minutes") if events.isStreaming else events
+    return src.groupBy(F.window("ts", window).alias("w"), "event_type").agg(
         F.count("*").alias("n_events"),
         F.round(F.sum("value"), 6).alias("total_value"),
     ).select(
@@ -37,13 +31,8 @@ def windowed_event_counts(
     )
 
 
-def sessionized_event_counts(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    key_col: str = "user_id",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """events(ts, user_id, value) → per-key GAP SESSIONS: Spark's native
+def sessionized_event_counts(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
+    """events(ts, user_id, value) → per-user GAP SESSIONS: Spark's native
     ``session_window`` (dynamic-gap merging inside the aggregation — the
     stateful sessionization Structured Streaming runs with watermark-bounded
     state), evaluated identically on a static frame. A session's end is
@@ -52,9 +41,9 @@ def sessionized_event_counts(
     new-session flag), so the builtin's merge rule is value-checked, not
     assumed. Works on a stream (append mode after the watermark closes a
     session) and on batch."""
-    src = events.withWatermark("ts", watermark) if events.isStreaming else events
+    src = events.withWatermark("ts", "10 minutes") if events.isStreaming else events
     return (
-        src.groupBy(F.session_window("ts", gap).alias("w"), key_col)
+        src.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
         .agg(
             F.count("*").alias("n_events"),
             F.round(F.sum("value"), 6).alias("total_value"),
@@ -62,49 +51,39 @@ def sessionized_event_counts(
         .select(
             F.col("w.start").alias("session_start"),
             F.col("w.end").alias("session_end"),
-            key_col,
+            "user_id",
             "n_events",
             "total_value",
         )
     )
 
 
-def cascading_rollup(
-    events: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    value_col: str = "value",
-    resolutions: tuple = (300, 3600, 86400),
-) -> DataFrame:
-    """→ (resolution_s, window_start, key, n_events, total_value): the
+def cascading_rollup(events: DataFrame) -> DataFrame:
+    """→ (resolution_s, window_start, event_type, n_events, total_value): the
     hypertable continuous-aggregate cascade — the FINEST resolution
     aggregates the raw events once; every coarser level re-aggregates the
     PREVIOUS level's partials (count-of-counts / sum-of-sums, exact by
     associativity). Refreshing a day therefore touches 24 hourly partials
     instead of the raw rows — the property that makes multi-resolution
     rollups affordable at 100 TB (and the shape a Structured Streaming
-    foreachBatch refresh would write level-by-level). Resolutions must be
-    ascending and each a multiple of the previous (asserted); rounding
-    happens only at the output so cascaded sums stay bit-comparable to
-    direct aggregation."""
-    res = [int(r) for r in resolutions]
-    assert all(b % a == 0 for a, b in zip(res, res[1:])), (
-        "each resolution must be a multiple of the previous"
-    )
-    bucket = (F.floor(F.unix_timestamp(F.col(ts_col)) / res[0]) * res[0]).alias("_b")
-    level = events.groupBy(bucket, key_col).agg(
-        F.count("*").alias("_n"), F.sum(value_col).alias("_v")
+    foreachBatch refresh would write level-by-level). The resolutions (5
+    minutes, 1 hour, 1 day) each divide the next; rounding happens only at
+    the output so cascaded sums stay bit-comparable to direct aggregation."""
+    res = (300, 3600, 86400)
+    bucket = (F.floor(F.unix_timestamp(F.col("ts")) / res[0]) * res[0]).alias("_b")
+    level = events.groupBy(bucket, "event_type").agg(
+        F.count("*").alias("_n"), F.sum("value").alias("_v")
     )
     out = []
     for i, r in enumerate(res):
         if i > 0:
             level = level.groupBy(
-                (F.floor(F.col("_b") / r) * r).alias("_b"), key_col
+                (F.floor(F.col("_b") / r) * r).alias("_b"), "event_type"
             ).agg(F.sum("_n").alias("_n"), F.sum("_v").alias("_v"))
         out.append(level.select(
             F.lit(r).alias("resolution_s"),
             F.to_timestamp(F.col("_b")).alias("window_start"),
-            F.col(key_col),
+            F.col("event_type"),
             F.col("_n").cast("long").alias("n_events"),
             F.round("_v", 6).alias("total_value"),
         ))
